@@ -54,10 +54,10 @@ object Bench {
     // projection queries lose their entire payload (t08's quality battery
     // read 0.43 s at 64× while the real work is 10.2 s; q08's window was
     // optimized out completely) — while the DuckDB side of every
-    // comparison fetches full rows. This is the same count()-pruning trap
-    // ExprProbe documents; rounds ≤ 5 bench numbers for projection-shaped
-    // queries are under-measured (aggregate-shaped headliners were
-    // unaffected: grouping forces their upstream pipelines).
+    // comparison fetches full rows. Rounds ≤ 5 bench numbers for
+    // projection-shaped queries are under-measured by this trap
+    // (aggregate-shaped headliners were unaffected: grouping forces their
+    // upstream pipelines).
     def exec(q: graft.ops.QueryDef): Unit =
       q.run(spark, sfDir).queryExecution.toRdd.count()
     def once(q: graft.ops.QueryDef): Double = {

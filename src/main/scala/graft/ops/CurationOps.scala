@@ -389,11 +389,11 @@ object CurationOps {
                AS mean_surprisal
       FROM sc GROUP BY doc_id"""))
 
-  /** Feature-hash width of the quality classifier's weight table —
-    * the model-size dial (`-Dgraft.quality.width`): the vocabulary is
-    * unbounded at corpus scale, the model must not be, so tokens hash
-    * into a fixed bucket space (fastText's trick). */
-  private[graft] val qcWidth = sys.props.getOrElse("graft.quality.width", "4096").toInt
+  /** Feature-hash width of the quality classifier's weight table — the
+    * model size: the vocabulary is unbounded at corpus scale, the model
+    * must not be, so tokens hash into a fixed bucket space (fastText's
+    * trick). */
+  private[graft] val qcWidth = 4096
 
   /** t19 — hashed linear quality-classifier scoring, the learned stage
     * every public-web pretraining pipeline runs after the rule battery
@@ -1227,7 +1227,7 @@ object CurationOps {
     * dropped BEFORE the pair join (d21's hot-key rule) — the per-hash pair
     * expansion is bounded at cap², so one viral chunk cannot quadratically
     * explode the edge list. Never binds at the gate's 20 sources. */
-  private[graft] val pagerankCap = sys.props.getOrElse("graft.pagerank.cap", "256").toInt
+  private[graft] val pagerankCap = 256
 
   /** Content-sharing edge list (src, dst, w): a directed edge per ordered
     * pair of sources, weighted by how many DISTINCT 8-token chunks

@@ -18,19 +18,17 @@ import Q._
   */
 object DedupOps {
 
-  /** MinHash banding dials — bands (b) × rows-per-band (r) = signature
-    * size k, JVM-level (`-Dgraft.minhash.bands/-Dgraft.minhash.rows`,
-    * read once at load so engine SQL, oracle SQL, and the staged caches
-    * can never disagree within a run). The S-curve
-    * P(candidate | jaccard = j) = 1 − (1 − j^r)^b is THE dedup
-    * recall/cost dial: more bands (OR-terms) raise recall, more rows per
-    * band (AND-terms) suppress random-pair collisions. The default
-    * b=8 × r=2 catches j ≥ 0.8 near-dups with P ≥ 0.999 while a
-    * j = 0.2 random pair collides with P ≈ 0.3% — candidate load grows
-    * with b·(collision rate), so the committed SCALE.md row records the
-    * measured candidates at the default dial. */
-  private[graft] val minhashBands = sys.props.getOrElse("graft.minhash.bands", "8").toInt
-  private[graft] val minhashRows = sys.props.getOrElse("graft.minhash.rows", "2").toInt
+  /** MinHash banding — bands (b) × rows-per-band (r) = signature size
+    * k, shared by engine SQL, oracle SQL and the staged caches. The
+    * S-curve P(candidate | jaccard = j) = 1 − (1 − j^r)^b sets dedup
+    * recall against cost: more bands (OR-terms) raise recall, more rows
+    * per band (AND-terms) suppress random-pair collisions. b=8 × r=2
+    * catches j ≥ 0.8 near-dups with P ≥ 0.999 while a j = 0.2 random
+    * pair collides with P ≈ 0.3% — candidate load grows with
+    * b·(collision rate); SCALE.md records the measured candidates at
+    * this setting. */
+  private[graft] val minhashBands = 8
+  private[graft] val minhashRows = 2
   private[graft] val minhashK = minhashBands * minhashRows
 
   /** The ONE DuckDB spelling of documents → (doc_id, bj, bkey) LSH band
@@ -493,10 +491,9 @@ object DedupOps {
     * inside another, and at corpus scale they are exactly the keys that
     * turn the inverted-index self-join quadratic (a shingle shared by F
     * docs contributes up to F·(F−1) candidate rows). Dropping them bounds
-    * every join bucket — m10's stop-landmark rule applied to text. Read
-    * once at load (`-Dgraft.contain.cap`) so engine SQL, oracle SQL, and
-    * the staged caches can never disagree within a run. */
-  private[graft] val containCap = sys.props.getOrElse("graft.contain.cap", "512").toInt
+    * every join bucket — m10's stop-landmark rule applied to text. One
+    * constant shared by engine SQL, oracle SQL and the staged caches. */
+  private[graft] val containCap = 512
 
   /** d21: ASYMMETRIC containment dedup — "document A is substantially
     * quoted/embedded inside document B". Jaccard (d02/d04) is symmetric:
@@ -691,19 +688,17 @@ object DedupOps {
                       JOIN n nb ON cand.idb = nb.vec_id)
       SELECT ida AS vec_a, idb AS vec_b, cos FROM p WHERE cos >= 0.4"""))
 
-  /** Semantic-dedup centroid count (`-Dgraft.semdedup.centroids`, JVM
-    * load-time like [[minhashBands]] so engine SQL and oracle SQL can
-    * never disagree within a run). Work per corpus is N·k (assignment,
-    * row-wise — see the nearest_centroid note below) + N²/k (within-cell
-    * pairs): k is THE dial — it must grow with N to keep cells O(100).
-    * Honest caveat from the 64× experiment (128 k vectors, 21.8 s at
-    * k=64): ScaleData replicates vectors VERBATIM, so raising the dial
-    * adds duplicate centroid VALUES (ties resolve to the first replica)
-    * and cells cannot shrink on that synthetic corpus — the dial's
-    * effect needs distinct centroids, i.e. the s06 Lloyd refresh, which
-    * is where production k comes from. */
-  private[graft] val semCentroids =
-    sys.props.getOrElse("graft.semdedup.centroids", "64").toInt
+  /** Semantic-dedup centroid count, shared by engine SQL and oracle
+    * SQL. Work per corpus is N·k (assignment, row-wise — see the
+    * nearest_centroid note below) + N²/k (within-cell pairs), so k must
+    * grow with N to keep cells O(100). Honest caveat from the 64×
+    * experiment (128 k vectors, 21.8 s at k=64): unsalted ScaleData
+    * replicates vectors VERBATIM, so a larger k adds duplicate centroid
+    * VALUES (ties resolve to the first replica) and cells cannot shrink
+    * on that synthetic corpus — a larger k needs distinct centroids,
+    * i.e. the s06 Lloyd refresh, which is where production k comes
+    * from. */
+  private[graft] val semCentroids = 64
   private[graft] val semSeedPred =
     s"vec_id % 50 = 7 AND vec_id < ${50L * semCentroids}"
 
@@ -853,13 +848,8 @@ object DedupOps {
     * recursive-CTE oracle are unchanged. Measured at sf0.1: d24's
     * fixpoint 3.4–15.4 s → ~0.6 s, and the dispersion collapses with
     * the machinery. */
-  /** Hops chained per materialized fixpoint round (`-Dgraft.cc.unroll`,
-    * default 4; 1 restores hop-per-round — the A/B seam). */
-  private[graft] def ccUnroll: Int =
-    math.max(1, sys.props.getOrElse("graft.cc.unroll", "4").toInt)
-
-  private[graft] def ccDebug: Boolean =
-    sys.props.get("graft.cc.debug").contains("true")
+  /** Hops chained per materialized fixpoint round. */
+  private val ccUnroll = 4
 
   private[graft] def minLabelComponents(
       s: org.apache.spark.sql.SparkSession,
@@ -908,11 +898,10 @@ object DedupOps {
     // monotone non-increasing), so termination and the final labels
     // are exactly the one-hop fixpoint, at up to unroll−1 wasted
     // metadata-width hops past convergence
-    val unroll = ccUnroll
     while (changed > 0) {
       var stepped = cur
       var h = 1
-      while (h < unroll) { stepped = hop(stepped).mapValues(_._1); h += 1 }
+      while (h < ccUnroll) { stepped = hop(stepped).mapValues(_._1); h += 1 }
       val next = hop(stepped)
         // persist, NOT localCheckpoint: truncating lineage per round was
         // measured SLOWER here (3.2-4.7 s vs 2.1 s — the checkpoint
@@ -923,9 +912,7 @@ object DedupOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // one count() materializes the round AND detects convergence —
       // exact under task retries (it reads the persisted result)
-      val rt0 = System.nanoTime()
       changed = next.filter(_._2._2).count()
-      if (ccDebug) System.err.println(f"[cc] round parts=${part.numPartitions} changed=$changed ${(System.nanoTime() - rt0) / 1e9}%6.3f s")
       lastPersisted.unpersist(false)
       lastPersisted = next
       cur = next.mapValues(_._1)
@@ -1129,37 +1116,30 @@ object DedupOps {
     * hold rn=1 rows (each vector in exactly ONE cluster) and probes hold
     * distinct clusters per source, so (src, nb) pairs are unique by
     * construction. Same candidate set, same cosines, one join. */
-  /** The k-NN graph's K∝N production dial (round-13 verdict item 2,
-    * promoted to the DEFAULT story in round 15 per r14 verdict item 1):
-    * `-Dgraft.knngraph.trained=K` feeds the probe/member frames from a
-    * TRAINED quantizer (s06's Lloyd loop at an explicit centroid budget,
-    * via [[SimilarityOps.s06CentsWith]]) instead of s03's pinned |C| ≤ 64
-    * sample. At fixed |C| the candidate load is N²·P/|C| — the quadratic
-    * regime the committed 16× curve (4× data → 12.8×/16× time) made
-    * visible; with K∝N the expected cell size N/K is CONSTANT, so
-    * candidates are N·P·E[cell] — linear (measured: 64× salted 35.4 s
-    * trained vs 191.7 s fixed, growth 1.8× vs 8.8× per 4× data).
+  /** The k-NN graph's quantizer, a pure function of corpus size N —
+    * the K∝N rule (round 13, the default since round 15). Corpora with
+    * N ≥ 50 000 vectors feed the probe/member frames from a TRAINED
+    * quantizer (s06's Lloyd loop via [[SimilarityOps.s06CentsWith]]) at
+    * K = max(64, ⌈N / 125⌉) instead of s03's pinned |C| ≤ 64 sample.
+    * At fixed |C| the candidate load is N²·P/|C| — the quadratic regime
+    * the committed 16× curve (4× data → 12.8×/16× time) made visible;
+    * with K∝N the expected cell size N/K = 125 (the r14 measured
+    * operating point) is CONSTANT, so candidates are N·P·E[cell] —
+    * linear (measured: 64× salted 35.4 s trained vs 191.7 s fixed,
+    * growth 1.8× vs 8.8× per 4× data).
     *
-    * Resolution (the committed auto-select rule a deployment uses):
-    *  - `-Dgraft.knngraph.trained=<K>`: explicit trained K (the A/B seam);
-    *  - `-Dgraft.knngraph.trained=off`: force the fixed sampled quantizer;
-    *  - unset (DEFAULT): AUTO — corpora with
-    *    N ≥ `graft.knngraph.autoThreshold` (50 000) vectors train at
-    *    K = max(64, ⌈N / 125⌉) (E[cell] = 125, the measured operating
-    *    point); smaller corpora keep s03's sampled quantizer. The
-    *    threshold sits above every gate SF (sf0.1 = 5 000 vectors), so
-    *    gate rows stay bit-for-bit hash-identical to the DuckDB oracle —
-    *    the trained path is spec-gated instead (KnnGraphSpec: graph
-    *    validity + measured recall floor), because an oracle cannot run
-    *    Lloyd. Below the threshold the fixed path is also the FASTER one
-    *    (training cost dominates at small N); above it the quadratic
-    *    candidate load dominates everything — 16× salted (80 k vectors)
-    *    already crosses (19.9 s trained vs 21.7 s fixed). */
-  private[graft] def knnGraphAutoThreshold: Long =
-    sys.props.getOrElse("graft.knngraph.autoThreshold", "50000").toLong
-
-  /** E[cell] the auto rule targets — the r14 measured operating point. */
-  private[graft] val knnGraphCellTarget = 125L
+    * Below the threshold the result is None: s03's sampled quantizer.
+    * The threshold sits above every gate SF (sf0.1 = 2 000 vectors), so
+    * gate rows stay bit-for-bit hash-identical to the DuckDB oracle — the
+    * trained path is spec-gated instead (KnnGraphSpec: graph validity +
+    * measured recall floor), because an oracle cannot run Lloyd. Below
+    * the threshold the fixed path is also the FASTER one (training cost
+    * dominates at small N); above it the quadratic candidate load
+    * dominates everything — 16× salted (80 k vectors) already crosses
+    * (19.9 s trained vs 21.7 s fixed). */
+  private[graft] def knnQuantizerFor(n: Long): Option[Int] =
+    if (n < 50000L) None
+    else Some(math.max(64L, (n + 124L) / 125L).toInt)
 
   /** Per-dir memoized embeddings row count (round-15 advice: the
     * resolve + trained-assignment pair counted the corpus twice per
@@ -1173,108 +1153,19 @@ object DedupOps {
     embCountMemo.computeIfAbsent(d,
       _ => java.lang.Long.valueOf(table(s, d, "embeddings").count())).longValue()
 
-  /** Resolve the quantizer choice for the corpus at `d` (None = s03's
-    * fixed sampled statics; Some(k) = trained at K=k). The N probe is one
-    * memoized parquet count — footer-metadata cheap next to the graph
-    * build, and paid once per (JVM, dir). */
-  private[graft] def resolveKnnQuantizer(
-      s: org.apache.spark.sql.SparkSession, d: String): Option[Int] =
-    sys.props.get("graft.knngraph.trained") match {
-      case Some("off") => None
-      case Some("auto") | None =>
-        val n = embeddingsCount(s, d)
-        if (n >= knnGraphAutoThreshold)
-          Some(math.max(64L, (n + knnGraphCellTarget - 1) / knnGraphCellTarget).toInt)
-        else None
-      case Some(k) => Some(k.toInt)
-    }
-
   /** Test-visible diagnostic: which assignment stage the most recent
     * [[s15KnnFrameWith]] invocation CHOSE — `s15_hassign_*` hierarchical
     * two-level, `s15_hassignf_*` hierarchical-trained/flat-assigned (the
-    * spec seam), `s15_tassign2_*` legacy driver-grouped two-level,
-    * `s15_tassign_*` flat trained, `s03` fixed sampled. KnnGraphSpec
-    * asserts the path it believes it exercises actually ENGAGED
-    * (round-15 advice: the two-level equality test could pass vacuously
-    * through the silent flat fallback). Diagnostic only — no engine
-    * behavior reads it. */
+    * spec seam), `s15_tassign_*` flat trained, `s03` fixed sampled.
+    * KnnGraphSpec asserts the path it believes it exercises actually
+    * ENGAGED (round-15 advice: the two-level equality test could pass
+    * vacuously through the silent flat fallback). Diagnostic only — no
+    * engine behavior reads it. */
   private[graft] object KnnDiag { @volatile var lastAssignKey: String = "" }
-
-  /** `-Dgraft.knngraph.hierTrain=off` keeps round-15's flat sampled
-    * training at every K (the A/B seam); default ON = corpora at
-    * K ≥ twoLevelK train HIERARCHICALLY via [[hierCents]]. */
-  private[graft] def hierTrainEnabled: Boolean =
-    sys.props.getOrElse("graft.knngraph.hierTrain", "on") != "off"
 
   private[graft] def s15KnnFrame(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    s15KnnFrameWith(s, d, resolveKnnQuantizer(s, d))
-
-  /** Driver-side mini-Lloyd over the K-row centroid frame: groups the
-    * trained centroids into `g` supercells by cosine (3 rounds, seeds =
-    * every ⌈K/g⌉-th centroid in cid order, means accumulated in cid
-    * order — fully deterministic). This is a MODEL ARTIFACT computation
-    * (K·dims doubles — t19's ≤4096-row weight-table class, here K rows),
-    * never a corpus pass: the corpus-side cost it buys down is the N·K
-    * assignment fold. Returns (supercentroids, per-centroid group index).
-    * Empty groups keep their seed supercentroid and simply attract no
-    * members; callers drop them from the probe list. */
-  private[graft] def groupCentroids(
-      cents: Array[(Long, Array[Double])], g: Int, rounds: Int = 3)
-      : (Array[Array[Double]], Array[Int]) = {
-    val k = cents.length
-    val dims = cents(0)._2.length
-    val sorted = cents.sortBy(_._1)
-    val step = math.max(1, k / g)
-    val sups = Array.tabulate(g)(i => sorted(math.min(i * step, k - 1))._2.clone())
-    val asg = new Array[Int](k)
-    def norm(v: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < v.length) { acc += v(i) * v(i); i += 1 }
-      math.sqrt(acc)
-    }
-    for (_ <- 1 to rounds) {
-      val sn = sups.map(norm)
-      var c = 0
-      while (c < k) {
-        val v = sorted(c)._2; val vn = norm(v)
-        var best = 0; var bestCos = Double.NegativeInfinity
-        var gi = 0
-        while (gi < g) {
-          var acc = 0.0; var i = 0
-          while (i < dims) { acc += v(i) * sups(gi)(i); i += 1 }
-          val cos = acc / (vn * sn(gi))
-          if (cos > bestCos) { bestCos = cos; best = gi } // NaN never wins
-          gi += 1
-        }
-        asg(c) = best
-        c += 1
-      }
-      val sum = Array.fill(g)(new Array[Double](dims))
-      val cnt = new Array[Int](g)
-      c = 0
-      while (c < k) {
-        val v = sorted(c)._2; val a = asg(c); cnt(a) += 1
-        var i = 0
-        while (i < dims) { sum(a)(i) += v(i); i += 1 }
-        c += 1
-      }
-      var gi = 0
-      while (gi < g) {
-        if (cnt(gi) > 0) {
-          var i = 0
-          while (i < dims) { sups(gi)(i) = sum(gi)(i) / cnt(gi); i += 1 }
-        }
-        gi += 1
-      }
-    }
-    // asg is in SORTED-cid order; re-map to the caller's input order
-    val posByCid = sorted.map(_._1).zipWithIndex.toMap
-    val out = new Array[Int](k)
-    var c = 0
-    while (c < k) { out(c) = asg(posByCid(cents(c)._1)); c += 1 }
-    (sups, out)
-  }
+    s15KnnFrameWith(s, d, knnQuantizerFor(embeddingsCount(s, d)))
 
   /** Hierarchical two-stage Lloyd training — the N^1.5 respelling of the
     * K∝N quantizer (round-15 verdict item 1, the residual constant behind
@@ -1306,12 +1197,10 @@ object DedupOps {
     * the trained path has been spec-gated (not oracle-gated) since
     * round 13, and KnnGraphSpec measures its recall.
     *
-    * This also retires the driver-side mini-Lloyd ([[groupCentroids]],
-    * round-15's named 100 TB seam): the supercell model is now a
-    * DISTRIBUTED training output (G rows) and the grouping artifact
-    * (gid per cid) falls out of stage 2 — nothing K-sized ever lands on
-    * the driver. [[groupCentroids]] remains only under the
-    * `-Dgraft.knngraph.hierTrain=off` A/B seam.
+    * The supercell model is a DISTRIBUTED training output (G rows) and
+    * the grouping artifact (gid per cid) falls out of stage 2 — nothing
+    * K-sized ever lands on the driver (SCALE.md has the 64× audit
+    * against flat training).
     *
     * Returns (supercentroids (gid, gcv), sub-centroids (gid, cid, cv)) —
     * both staged; the second is checkpointed per Lloyd round exactly
@@ -1381,28 +1270,24 @@ object DedupOps {
     (sup, cents)
   }
 
-  /** Memoized driver-side supercell grouping for the LEGACY
-    * (`hierTrain=off` A/B) two-level path, keyed (dir, K, stride):
-    * re-invocations within a JVM re-register the K-row views from the
-    * memo instead of re-collecting the centroid frame and re-running the
-    * mini-Lloyd (round-15 advice — s15/d24/d27/d28 all re-enter this
-    * path even when the assignment stage itself is cache-hit). None =
-    * grouping degenerate (fewer than 2 usable groups) → flat. */
-  private val legacyGroupMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int),
-    Option[(Seq[(Long, Seq[Double])], Seq[(Long, Long, Seq[Double])])]]()
-
-  /** [[s15KnnFrame]] at an explicit quantizer choice — the spec/A-B seam
-    * (None = s03's sampled statics; Some(k) = trained centroids at K=k).
-    * Staged keys carry the variant so two choices never share a cache. */
+  /** [[s15KnnFrame]] at an explicit quantizer choice (None = s03's
+    * sampled statics; Some(k) = trained centroids at K=k). Staged keys
+    * carry the variant so two choices never share a cache.
+    * `twoLevelK` and `flatAssign` are test-only seams: specs lower
+    * `twoLevelK` to engage the hierarchical path on a gate corpus (or
+    * raise it past K for the flat trained path), and `flatAssign` keeps
+    * hierarchical training but assigns FLAT over all K sub-centroids —
+    * the spec seam that proves two-level assignment exact when top-2
+    * probing covers every group. */
   private[graft] def s15KnnFrameWith(
       s: org.apache.spark.sql.SparkSession, d: String,
-      trainedK: Option[Int]): org.apache.spark.sql.DataFrame = {
-    val (assignV, nV) = trainedK match {
+      trainedK: Option[Int], twoLevelK: Int = 1024,
+      flatAssign: Boolean = false): org.apache.spark.sql.DataFrame = {
+    val (assignV, nView, stageKey) = trainedK match {
       case None =>
         SimilarityOps.s03Statics(s, d)
         KnnDiag.lastAssignKey = "s03"
-        ("s03_assign", "s03_n")
+        ("s03_assign", "s03_n", "s15_knn")
       case Some(k) =>
         // trained coarse quantizer at an explicit K. Assignment is the
         // ROW-WISE top-P expression, not the CROSS JOIN + window: at the
@@ -1411,88 +1296,43 @@ object DedupOps {
         // shuffle for a per-row argmax-P) — `nearest_centroids` keeps it
         // a zero-shuffle scan pass over one ~K·dims broadcast row.
         //
-        // Round 15 (the 256× leg's named constant): training rides the
-        // vec_id%stride SAMPLE (~20 points per expected cell — the two
-        // Lloyd passes drop from N·K to (N/6)·K at E[cell]=125), and at
-        // K ≥ `graft.knngraph.twoLevelK` assignment goes TWO-LEVEL:
-        // nearest supercell over G≈√K supercentroids, then nearest
-        // centroid within the top-2 probed supercells — per-row cost
-        // falls from K·d to ~(G + 2·K/G)·d ≈ 3√K·d (~30× at K=10240),
-        // composed ENTIRELY from the existing expressions and two
-        // broadcast joins (zero new shuffles). Cell assignment becomes
-        // approximate at the supercell level (a vector's true nearest
-        // centroid can sit in an unprobed group) — the standard IVF
-        // trade, spec-gated like the rest of the trained path;
-        // KnnGraphSpec measures it.
-        //
-        // Round 16 (verdict item 1): at K ≥ twoLevelK TRAINING is
-        // hierarchical too ([[hierCents]] — G supercells first, then
-        // per-supercell sub-centroids, N^1.5 total, fully distributed),
-        // which also retires round-15's driver-side mini-Lloyd: the
-        // supercell model and grouping artifact are distributed training
-        // outputs now. `-Dgraft.knngraph.hierTrain=off` restores the
-        // round-15 flat sampled training + driver grouping (the A/B
-        // seam); `-Dgraft.knngraph.hierAssignFlat=true` keeps hier
-        // training but assigns FLAT over all K sub-centroids — the spec
-        // seam that proves two-level assignment exact when top-2 probing
-        // covers every group.
+        // Training rides the vec_id%stride SAMPLE (~20 points per
+        // expected cell — the two Lloyd passes drop from N·K to (N/6)·K
+        // at E[cell]=125). At K ≥ twoLevelK training is hierarchical
+        // ([[hierCents]] — G≈√K supercells first, then per-supercell
+        // sub-centroids, N^1.5 total, fully distributed) and assignment
+        // goes TWO-LEVEL: nearest supercell over the G supercentroids,
+        // then nearest centroid within the top-2 probed supercells —
+        // per-row cost falls from K·d to ~(G + 2·K/G)·d ≈ 3√K·d (~30× at
+        // K=10240), composed ENTIRELY from the existing expressions and
+        // two broadcast joins (zero new shuffles). Cell assignment
+        // becomes approximate at the supercell level (a vector's true
+        // nearest centroid can sit in an unprobed group) — the standard
+        // IVF trade, spec-gated like the rest of the trained path;
+        // KnnGraphSpec measures it, SCALE.md has the 64× edge overlap.
         val n = embeddingsCount(s, d)
         val stride = math.max(1L, n / (20L * k)).toInt
-        val twoLevelK =
-          sys.props.getOrElse("graft.knngraph.twoLevelK", "1024").toInt
         val P = SimilarityOps.ivfProbes
-        val (assignKey, variantTag) =
-          if (k >= twoLevelK && hierTrainEnabled) {
+        val assignKey =
+          if (k >= twoLevelK) {
             val (sup, cents) = hierCents(s, d, k, stride)
             val usedG = cents.select("gid").distinct().count()
-            val hierFlat =
-              sys.props.get("graft.knngraph.hierAssignFlat").contains("true")
-            if (usedG < 2 || hierFlat) {
+            if (usedG < 2 || flatAssign) {
               cents.selectExpr("cid", "cv").createOrReplaceTempView("s15_tc")
-              (s"s15_hassignf_${k}_s$stride", s"hf$stride")
+              s"s15_hassignf_${k}_s$stride"
             } else {
               cents.createOrReplaceTempView("s15_grpraw")
               sup.join(cents.select("gid").distinct(), "gid")
                 .selectExpr("gid", "gcv").createOrReplaceTempView("s15_supraw")
-              (s"s15_hassign_${k}_s$stride", s"h$stride")
+              s"s15_hassign_${k}_s$stride"
             }
           } else {
-            val cents = SimilarityOps
-              .s06CentsWith(s, d, k, s"s15_tc_${k}_s$stride", stride)
-            cents.createOrReplaceTempView("s15_tc")
-            val grouping =
-              if (k < twoLevelK) None
-              else legacyGroupMemo.computeIfAbsent((d, k, stride), _ => {
-                import s.implicits._
-                val local = cents.select($"cid", $"cv").collect()
-                  .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-                val g = math.ceil(math.sqrt(local.length.toDouble)).toInt
-                if (g < 2 || local.length < 4) None
-                else {
-                  val (sups, asg) = groupCentroids(local, g)
-                  val used = asg.distinct.sorted
-                  if (used.length < 2) None
-                  else Some((
-                    used.map(gi => (gi.toLong, sups(gi).toSeq)).toSeq,
-                    local.zip(asg).map { case ((cid, cv), gi) =>
-                      (gi.toLong, cid, cv.toSeq)
-                    }.toSeq))
-                }
-              })
-            grouping match {
-              case Some((supRows, grpRows)) =>
-                import s.implicits._
-                grpRows.toDF("gid", "cid", "cv")
-                  .createOrReplaceTempView("s15_grpraw")
-                supRows.toDF("gid", "gcv").createOrReplaceTempView("s15_supraw")
-                (s"s15_tassign2_${k}_s$stride", s"2l$stride")
-              case None =>
-                (s"s15_tassign_${k}_s$stride", s"fl$stride")
-            }
+            SimilarityOps.s06CentsWith(s, d, k, s"s15_tc_${k}_s$stride", stride)
+              .createOrReplaceTempView("s15_tc")
+            s"s15_tassign_${k}_s$stride"
           }
         KnnDiag.lastAssignKey = assignKey
-        val twoLevelAssign = assignKey.startsWith("s15_hassign_") ||
-          assignKey.startsWith("s15_tassign2")
+        val twoLevelAssign = assignKey.startsWith("s15_hassign_")
         stagedMaterialized(assignKey, d) {
           roundCheckpoint(
             if (twoLevelAssign) s.sql(s"""
@@ -1539,14 +1379,8 @@ object DedupOps {
                      CAST(pr.pos + 1 AS INT) AS rn
               FROM a LATERAL VIEW posexplode(nc) pr"""))
         }.createOrReplaceTempView("s15_tassign")
-        ("s15_tassign", s"s06_n@$variantTag")
+        ("s15_tassign", "s06_n", s"s15_knn@$assignKey")
     }
-    // the variant marker rides nV only for the STAGE KEY (flat vs
-    // two-level produce different graphs — they must never share a
-    // cache within a JVM); strip it before SQL use
-    val variant = if (nV.contains('@')) nV.substring(nV.indexOf('@') + 1) else ""
-    val nView = if (nV.contains('@')) nV.substring(0, nV.indexOf('@')) else nV
-    val stageKey = trainedK.fold("s15_knn")(k => s"s15_knn_t$k$variant")
     val knn = stagedMaterialized(stageKey, d) {
       roundCheckpoint(s.sql(s"""
         WITH qp AS (SELECT a.vec_id AS src, a.cluster, n.v AS qv, n.nrm AS qn

@@ -956,12 +956,13 @@ object MultimodalOps {
       // classes are non-identifying; dropping them bounds the worst
       // bucket's quadratic pair cost (metadata-width window count —
       // ck0 is already partitioned by gkey, so no extra exchange)
-      // staged: ck feeds the denominators and BOTH self-join sides;
-      // left lazy, the explode + pinned exchange + skew-cap window
-      // re-ran per reference (PlanAudit: 9 live Generates). The cached
-      // frame keeps ck0's gkey hash-partitioning, so the self-join
-      // below needs NO further exchange (the r16 checkpoint leaf lost
-      // it and the join re-shuffled both sides at scale)
+      // ck feeds the denominators and BOTH self-join sides, so it is
+      // an eager roundCheckpoint: left lazy, the explode + pinned
+      // exchange + skew-cap window re-ran per reference (PlanAudit: 9
+      // live Generates). The checkpoint leaf reports
+      // UnknownPartitioning (plans/r17/m10_audio_granule_neardup_after.txt),
+      // so ck0's gkey hash-partitioning does not survive it: at scale
+      // both sides of the self-join below re-exchange on gkey
       val ck = roundCheckpoint(ck0.withColumn("kc",
           count(lit(1)).over(org.apache.spark.sql.expressions.Window
             .partitionBy($"gkey")))
@@ -1128,14 +1129,13 @@ object MultimodalOps {
       n_frames: Long, energy_sum: Long, key_frame_idx: Long,
       key_frame_md5: String)
 
-  /** Shot-boundary sensitivity dial: a cut fires when the per-byte frame
+  /** Shot-boundary sensitivity: a cut fires when the per-byte frame
     * feature jumps by more than 1/`shotSensitivity` of the larger side
-    * (`-Dgraft.shot.sensitivity`, default 16 → a 6.25% relative jump).
-    * Measured on the gate corpus: 16 yields 64 cuts over 2640 frames at
-    * sf0.001 (healthy segmentation); 4 (25%) fires zero cuts, 32 (~3%)
-    * fires on 18% of frames (chatter). */
-  private[graft] val shotSensitivity =
-    sys.props.getOrElse("graft.shot.sensitivity", "16").toLong
+    * (16 → a 6.25% relative jump). Measured on the gate corpus: 16
+    * yields 64 cuts over 2640 frames at sf0.001 (healthy segmentation);
+    * 4 (25%) fires zero cuts, 32 (~3%) fires on 18% of frames
+    * (chatter). */
+  private[graft] val shotSensitivity = 16L
 
   /** Shot-boundary detection + keyframe selection — the video
     * preprocessing stage a multimodal training pipeline runs before
@@ -1269,12 +1269,11 @@ object MultimodalOps {
   final case class VadMeta(doc_id: Long, seg_idx: Long, start_frame: Long,
       n_frames: Long, seg_energy: Long)
 
-  /** Activity margin in percent over the document's mean frame energy
-    * (`-Dgraft.vad.margin`): a frame is ACTIVE iff its length-normalized
-    * energy is ≥ (100+margin)% of the doc mean. 0 = "above own mean" —
-    * the classic energy-gate VAD baseline; the dial exists because real
-    * speech corpora tune the gate to their noise floor. */
-  private[graft] val vadMargin = sys.props.getOrElse("graft.vad.margin", "0").toLong
+  /** Activity margin in percent over the document's mean frame energy:
+    * a frame is ACTIVE iff its length-normalized energy is
+    * ≥ (100+margin)% of the doc mean. 0 = "above own mean" — the classic
+    * energy-gate VAD baseline. */
+  private[graft] val vadMargin = 0L
 
   /** Voice-activity segmentation — the silence-trimming stage a speech
     * pipeline runs before transcription/alignment (energy-gate VAD,

@@ -734,9 +734,9 @@ object Relational {
     * parked a permanent 12.9× entry in the weak set for work the pattern
     * exists to avoid; this row is what a deployment actually pays per
     * refresh cycle. Both rows stay independently oracle-gated; the
-    * RefreshBench A/B (maintained state on disk, delta-only scan) is the
-    * stronger cluster-shape evidence — 1.76× over full recompute at
-    * 256×. */
+    * maintained-state A/B in SCALE.md (state on disk, delta-only scan)
+    * is the stronger cluster-shape evidence — 1.76× over full recompute
+    * at 256×. */
   val q67r = QueryDef(
     "q67_refresh",
     (s, d) => {

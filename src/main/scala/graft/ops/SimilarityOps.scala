@@ -225,8 +225,8 @@ object SimilarityOps {
       SELECT query_id, neighbor_id, cos, CAST(rn AS BIGINT) AS rn
       FROM r WHERE rn <= 5"""))
 
-  /** IVF probe count (`-Dgraft.ivf.probes`): queries search their
-    * `ivfProbes` nearest centroids' inverted lists. Measured recall@5 vs
+  /** IVF probe count: queries search their `ivfProbes` nearest
+    * centroids' inverted lists. Measured recall@5 vs
     * the s01 ground truth on the real (adversarial — see [[lshPlanes]])
     * embeddings, via the oracle spelling (bit-identical math):
     *
@@ -234,17 +234,16 @@ object SimilarityOps {
     *                    p=4 0.68 @ 40%; p=6 0.80 @ 61%
     *   sf0.1  (|C|=64): p=2 0.19 @ 5%;  p=4 0.30 @ 10%; p=6 0.45 @ 15%
     *
-    * p=4 is the shipped default: it clears the 0.55-mean bar at the gate
+    * p=4 is the shipped setting: it clears the 0.55-mean bar at the gate
     * SF with budget under half the corpus. The sf0.1 column is the honest
     * finding this table exists for: on near-random vectors a coarse
     * quantizer barely separates neighbors from background, so IVF's
     * recall-per-candidate is DOMINATED by the multi-table LSH (s02: 0.77
     * @ 35% at sf0.1) — pick s02 on corpora like this, s03 where real
-    * cluster structure exists (IVF recall rises steeply with structure;
-    * the dial is exposed precisely so a deployment can re-measure on its
-    * own data). SimilaritySpec pins the sf0.01 frontier so a dial or
+    * cluster structure exists (IVF recall rises steeply with structure).
+    * SimilaritySpec pins the sf0.01 frontier so a probe-count or
     * quantizer change that silently regresses it fails the build. */
-  private[graft] val ivfProbes = sys.props.getOrElse("graft.ivf.probes", "4").toInt
+  private[graft] val ivfProbes = 4
 
   /** IVF-flavored ANN: coarse quantizer = deterministically sampled
     * centroids (vec_id % 50 == 7, CAPPED at |C| ≤ 64 by `vec_id < 3200`
@@ -557,9 +556,9 @@ object SimilarityOps {
   /** [[s06Cents]] at an explicit centroid budget K — the K∝N seam the
     * s15 SCALE note names: the gate rows train at the pinned K=64
     * (`vec_id < 125·64 = 8000`, bit-identical to the original rule), and
-    * the k-NN graph's `-Dgraft.knngraph.trained=K` dial trains at a K
-    * chosen for CELL SIZE (K∝N ⇒ E[cell] = N/K stays constant as the
-    * corpus grows — the linear-regime leg of the candidate-load law).
+    * the k-NN graph's quantizer rule ([[DedupOps.knnQuantizerFor]])
+    * trains at a K chosen for CELL SIZE (K∝N ⇒ E[cell] = N/K stays
+    * constant as the corpus grows — the linear-regime leg of the candidate-load law).
     * Seeds stay the deterministic `vec_id % 125 = 0` ladder so the
     * training run is oracle-reproducible at any K. */
   /** `trainStride` (round 15, default 1 = every gate path bit-identical):
@@ -1131,9 +1130,9 @@ object SimilarityOps {
     *
     * Scale shape: both maintained legs are one broadcast (|C| ≤ 64
     * capped, an artifact not a corpus function) assignment pass over
-    * their slice + a cluster-keyed metadata-width aggregate; the refresh
-    * economics are RefreshBench's — delta-bound, while full recompute
-    * grows with the corpus. */
+    * their slice + a cluster-keyed metadata-width aggregate; refresh
+    * cost is delta-bound, while full recompute grows with the corpus
+    * (SCALE.md, "q67 maintained-refresh path measured ALONE"). */
   val s12 = QueryDef(
     "s12_ivf_incremental",
     (s, d) => {
@@ -1506,13 +1505,12 @@ object SimilarityOps {
       FROM r WHERE rn <= 5"""),
     headline = true)
 
-  /** s17's probe budget — deliberately its OWN dial, and smaller than
-    * s03's: the trained quantizer is supposed to need FEWER probes per
+  /** s17's probe budget — deliberately its OWN constant, and smaller
+    * than s03's: the trained quantizer is supposed to need FEWER probes per
     * unit recall (that is what training buys), and at the gate SF the
     * centroid count is small enough that s03's P=4 would probe every
     * cell and trivialize the comparison. */
-  private[graft] val trainedProbes =
-    sys.props.getOrElse("graft.ivf.trained.probes", "2").toInt
+  private[graft] val trainedProbes = 2
 
   /** IVF search on a TRAINED quantizer — the production shape the s15
     * SCALE note names: s03 quantizes with deterministically SAMPLED

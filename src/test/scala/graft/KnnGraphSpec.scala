@@ -9,13 +9,13 @@ class KnnGraphSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private val dir = "/root/testdata/sf0.001"
+  private val k = graft.ops.DedupOps.knnGraphK
   private lazy val edges =
     SparkEntry.queries("s15_knn_graph")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3),
         r.getBoolean(4)))
 
   test("adjacency shape: <=k neighbors per node, dense ranks, ordered cos") {
-    val k = graft.ops.DedupOps.knnGraphK
     val bySrc = edges.groupBy(_._1)
     assert(bySrc.nonEmpty)
     for ((src, es) <- bySrc) {
@@ -40,9 +40,11 @@ class KnnGraphSpec extends AnyFunSuite {
       "fixture must exercise both mutual and one-way edges")
   }
 
-  test("recall vs brute-force truth: measured, pinned, and honest") {
-    // ground truth from the raw vectors, computed driver-side
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+  /** Mean recall@k of `edges` (src, nb) against the exact top-k by
+    * cosine over the raw vectors at `d`, computed driver-side; also
+    * returns the node count. */
+  private def recallVsBruteForce(d: String, edges: Seq[(Long, Long)]): (Double, Int) = {
+    val vecs = spark.read.parquet(s"$d/embeddings.parquet")
       .collect().map { r =>
         r.getLong(r.fieldIndex("vec_id")) ->
           r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray
@@ -52,7 +54,6 @@ class KnnGraphSpec extends AnyFunSuite {
       while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
       d / (math.sqrt(na) * math.sqrt(nb))
     }
-    val k = graft.ops.DedupOps.knnGraphK
     val truth = vecs.map { case (id, v) =>
       id -> vecs.toSeq.filter(_._1 != id)
         .map { case (j, w) => (j, cos(v, w)) }
@@ -61,8 +62,12 @@ class KnnGraphSpec extends AnyFunSuite {
     val approx = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._2).toSet }
     val recalls = truth.toSeq.map { case (id, t) =>
       approx.getOrElse(id, Set.empty).intersect(t).size.toDouble / k }
-    val mean = recalls.sum / recalls.size
-    info(f"s15 cluster-bounded recall@$k vs brute force: $mean%.3f over ${recalls.size} nodes")
+    (recalls.sum / recalls.size, recalls.size)
+  }
+
+  test("recall vs brute-force truth: measured, pinned, and honest") {
+    val (mean, nodes) = recallVsBruteForce(dir, edges.map(e => (e._1, e._2)).toSeq)
+    info(f"s15 cluster-bounded recall@$k vs brute force: $mean%.3f over $nodes nodes")
     // the IVF approximation on the ADVERSARIAL testdata embeddings (true
     // neighbors at cos 0.27-0.45 over a 0.5-ish background — see
     // SimilarityOps.lshPlanes): P=4 probe-bounded candidates keep a
@@ -73,16 +78,15 @@ class KnnGraphSpec extends AnyFunSuite {
   }
 
   test("trained K-proportional quantizer path: valid graph, measured recall") {
-    // the `-Dgraft.knngraph.trained=K` dial (round-13 verdict item 2):
-    // same graph SQL, probe/member frames fed from s06's Lloyd loop at an
-    // explicit K instead of s03's pinned sample. At the gate corpus
+    // the trained quantizer path (round-13 verdict item 2): same graph
+    // SQL, probe/member frames fed from s06's Lloyd loop at an explicit K
+    // instead of s03's pinned sample. At the gate corpus
     // (500 vectors) K=4 keeps E[cell] = 125 — the constant-cell-size
     // geometry the 64× leg rides at K=256. The graph-shape invariants
     // must hold on this path too, and its recall is MEASURED against the
     // same brute-force truth (printed, floored loosely — the trained
     // quantizer at tiny K on adversarial embeddings is not the pinned
     // 0.55 frontier, it is the linear-regime plumbing being proven).
-    val k = graft.ops.DedupOps.knnGraphK
     val trained = graft.ops.DedupOps.s15KnnFrameWith(spark, dir, Some(4))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(trained.nonEmpty)
@@ -91,100 +95,23 @@ class KnnGraphSpec extends AnyFunSuite {
       assert(es.forall(_._2 != src), s"node $src self-loop")
       assert(es.map(_._2).distinct.length == es.length, s"node $src dup neighbor")
     }
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
-      .collect().map { r =>
-        r.getLong(r.fieldIndex("vec_id")) ->
-          r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray
-      }.toMap
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var i = 0; var d = 0.0; var na = 0.0; var nb = 0.0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val truth = vecs.map { case (id, v) =>
-      id -> vecs.toSeq.filter(_._1 != id)
-        .map { case (j, w) => (j, cos(v, w)) }
-        .sortBy { case (j, c) => (-c, j) }.take(k).map(_._1).toSet
-    }
-    val approx = trained.groupBy(_._1).map { case (s, es) => s -> es.map(_._2).toSet }
-    val recalls = truth.toSeq.map { case (id, t) =>
-      approx.getOrElse(id, Set.empty).intersect(t).size.toDouble / k }
-    val mean = recalls.sum / recalls.size
+    val (mean, _) = recallVsBruteForce(dir, trained.map(e => (e._1, e._2)).toSeq)
     info(f"s15 TRAINED-quantizer recall@$k at K=4 (E[cell]=125): $mean%.3f")
     assert(mean >= 0.30, f"trained-path recall collapsed: $mean%.3f")
   }
 
   test("auto-select rule: gate corpora stay fixed, large corpora train K∝N") {
-    // round-15 (r14 verdict item 1): unset dial = AUTO. Below the
-    // threshold the resolver keeps the fixed sampled quantizer (so every
-    // gate row stays hash-identical to the DuckDB oracle); at or above
-    // it, it trains at K = max(64, ceil(N / 125)). The threshold is
-    // exercised both ways by dialing it around the gate corpus' N=50.
-    assert(graft.ops.DedupOps.resolveKnnQuantizer(spark, dir).isEmpty,
+    // round-15 (r14 verdict item 1): the quantizer is a pure function of
+    // N. Below 50 000 vectors it keeps the fixed sampled quantizer (so
+    // every gate row stays hash-identical to the DuckDB oracle); at or
+    // above it, it trains at K = max(64, ceil(N / 125)).
+    import graft.ops.DedupOps.{embeddingsCount, knnQuantizerFor}
+    assert(knnQuantizerFor(embeddingsCount(spark, dir)).isEmpty,
       "gate corpus must resolve to the fixed sampled quantizer")
-    val saved = sys.props.remove("graft.knngraph.autoThreshold")
-    try {
-      sys.props("graft.knngraph.autoThreshold") = "10"
-      val k = graft.ops.DedupOps.resolveKnnQuantizer(spark, dir)
-      // N=50 at sf0.001 → ceil(50/125)=1, floored to 64
-      assert(k.contains(64), s"expected Some(64) under a 10-vector threshold, got $k")
-    } finally {
-      sys.props.remove("graft.knngraph.autoThreshold")
-      saved.foreach(v => sys.props("graft.knngraph.autoThreshold") = v.toString)
-    }
-    // explicit spellings still win over auto
-    val saved2 = sys.props.remove("graft.knngraph.trained")
-    try {
-      sys.props("graft.knngraph.trained") = "off"
-      assert(graft.ops.DedupOps.resolveKnnQuantizer(spark, dir).isEmpty)
-      sys.props("graft.knngraph.trained") = "640"
-      assert(graft.ops.DedupOps.resolveKnnQuantizer(spark, dir).contains(640))
-    } finally {
-      sys.props.remove("graft.knngraph.trained")
-      saved2.foreach(v => sys.props("graft.knngraph.trained") = v.toString)
-    }
-  }
-
-  test("legacy two-level assignment: ENGAGES, equals flat when all groups probed") {
-    // round-15: at K >= twoLevelK the trained path assigns via G≈√K
-    // driver-grouped supercells (top-2 probed) instead of the flat K
-    // fold. At sf0.01 the seed ladder yields 4 centroids → G=2, and
-    // top-2 probing covers EVERY group, so the two-level graph must
-    // EQUAL the flat trained graph — the plumbing (grouping, broadcast
-    // joins, row-wise merge comparator) is exercised with an exact
-    // expected answer. Partial-probe quality at scale is measured in
-    // SCALE.md (64× two-level vs flat edge overlap).
-    // Round-16 (r15 advice item 1): the fallback conditions (g < 2,
-    // degenerate grouping) make output equality alone VACUOUS — the
-    // engaged-path diagnostic is asserted so the test fails loudly if
-    // the two-level plumbing silently falls back to flat. hierTrain=off
-    // pins the round-15 legacy path; the hierarchical path has its own
-    // tests below.
-    val dir01 = "/root/testdata/sf0.01"
-    val saved = sys.props.remove("graft.knngraph.twoLevelK")
-    val savedH = sys.props.remove("graft.knngraph.hierTrain")
-    try {
-      sys.props("graft.knngraph.hierTrain") = "off"
-      sys.props("graft.knngraph.twoLevelK") = "1000000" // force flat
-      val flat = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4))
-        .collect().map(_.toString).sorted.toSeq
-      assert(graft.ops.DedupOps.KnnDiag.lastAssignKey.startsWith("s15_tassign_"),
-        s"expected flat assignment, engaged ${graft.ops.DedupOps.KnnDiag.lastAssignKey}")
-      sys.props("graft.knngraph.twoLevelK") = "2" // force two-level
-      val two = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4))
-        .collect().map(_.toString).sorted.toSeq
-      assert(graft.ops.DedupOps.KnnDiag.lastAssignKey.startsWith("s15_tassign2_"),
-        "two-level plumbing did NOT engage — the equality below would be vacuous " +
-          s"(engaged: ${graft.ops.DedupOps.KnnDiag.lastAssignKey})")
-      assert(two.nonEmpty, "two-level path produced no edges")
-      assert(two == flat,
-        s"two-level (all groups probed) must equal flat: ${two.size} vs ${flat.size} rows")
-    } finally {
-      sys.props.remove("graft.knngraph.twoLevelK")
-      sys.props.remove("graft.knngraph.hierTrain")
-      saved.foreach(v => sys.props("graft.knngraph.twoLevelK") = v.toString)
-      savedH.foreach(v => sys.props("graft.knngraph.hierTrain") = v.toString)
-    }
+    assert(knnQuantizerFor(49999L).isEmpty)
+    assert(knnQuantizerFor(50000L).contains(400))
+    assert(knnQuantizerFor(128000L).contains(1024)) // the 64x ScaleData corpus
+    assert(knnQuantizerFor(320000L).contains(2560))
   }
 
   test("hierarchical training: engages, two-level assignment exact vs flat-assigned") {
@@ -196,41 +123,31 @@ class KnnGraphSpec extends AnyFunSuite {
     //  (b) with G=2 used supercells, top-2 probing covers every group,
     //      so two-level assignment over the hier-trained centroids must
     //      EQUAL flat assignment over the SAME centroids (the
-    //      hierAssignFlat seam) — assignment exactness is proven
+    //      `flatAssign` seam) — assignment exactness is proven
     //      separately from training quality.
+    // `twoLevelK = 2` engages the hierarchical path at the gate corpus' K=4.
     val dir01 = "/root/testdata/sf0.01"
-    val saved = sys.props.remove("graft.knngraph.twoLevelK")
-    val savedF = sys.props.remove("graft.knngraph.hierAssignFlat")
-    try {
-      sys.props("graft.knngraph.twoLevelK") = "2"
-      sys.props("graft.knngraph.hierAssignFlat") = "true"
-      val flat = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4))
-        .collect().map(_.toString).sorted.toSeq
-      assert(graft.ops.DedupOps.KnnDiag.lastAssignKey.startsWith("s15_hassignf_"),
-        s"expected hier-flat seam, engaged ${graft.ops.DedupOps.KnnDiag.lastAssignKey}")
-      sys.props.remove("graft.knngraph.hierAssignFlat")
-      val two = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4))
-        .collect().map(_.toString).sorted.toSeq
-      assert(graft.ops.DedupOps.KnnDiag.lastAssignKey.startsWith("s15_hassign_"),
-        "hierarchical two-level did NOT engage — equality would be vacuous " +
-          s"(engaged: ${graft.ops.DedupOps.KnnDiag.lastAssignKey})")
-      assert(two.nonEmpty, "hierarchical path produced no edges")
-      assert(two == flat,
-        s"hier two-level (all groups probed) must equal hier flat-assigned: " +
-          s"${two.size} vs ${flat.size} rows")
-      // graph-shape invariants hold on the hier path too
-      val parsed = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      for ((src, es) <- parsed.groupBy(_._1)) {
-        assert(es.length <= graft.ops.DedupOps.knnGraphK)
-        assert(es.forall(_._2 != src), s"node $src self-loop")
-        assert(es.map(_._2).distinct.length == es.length, s"node $src dup neighbor")
-      }
-    } finally {
-      sys.props.remove("graft.knngraph.twoLevelK")
-      sys.props.remove("graft.knngraph.hierAssignFlat")
-      saved.foreach(v => sys.props("graft.knngraph.twoLevelK") = v.toString)
-      savedF.foreach(v => sys.props("graft.knngraph.hierAssignFlat") = v.toString)
+    val flat = graft.ops.DedupOps
+      .s15KnnFrameWith(spark, dir01, Some(4), twoLevelK = 2, flatAssign = true)
+      .collect().map(_.toString).sorted.toSeq
+    assert(graft.ops.DedupOps.KnnDiag.lastAssignKey.startsWith("s15_hassignf_"),
+      s"expected hier-flat seam, engaged ${graft.ops.DedupOps.KnnDiag.lastAssignKey}")
+    val two = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4), twoLevelK = 2)
+      .collect().map(_.toString).sorted.toSeq
+    assert(graft.ops.DedupOps.KnnDiag.lastAssignKey.startsWith("s15_hassign_"),
+      "hierarchical two-level did NOT engage — equality would be vacuous " +
+        s"(engaged: ${graft.ops.DedupOps.KnnDiag.lastAssignKey})")
+    assert(two.nonEmpty, "hierarchical path produced no edges")
+    assert(two == flat,
+      s"hier two-level (all groups probed) must equal hier flat-assigned: " +
+        s"${two.size} vs ${flat.size} rows")
+    // graph-shape invariants hold on the hier path too
+    val parsed = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4), twoLevelK = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    for ((src, es) <- parsed.groupBy(_._1)) {
+      assert(es.length <= k)
+      assert(es.forall(_._2 != src), s"node $src self-loop")
+      assert(es.map(_._2).distinct.length == es.length, s"node $src dup neighbor")
     }
   }
 
@@ -240,43 +157,15 @@ class KnnGraphSpec extends AnyFunSuite {
     // the other paths measure, plus bit-reproducibility across runs
     // (deterministic seeds, xxhash64 spread, fixed integer-scaled means).
     val dir01 = "/root/testdata/sf0.01"
-    val saved = sys.props.remove("graft.knngraph.twoLevelK")
-    try {
-      sys.props("graft.knngraph.twoLevelK") = "2"
-      val run1 = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4))
-        .collect().map(_.toString).sorted.toSeq
-      graft.ops.Q.releaseAllPersisted(spark)
-      val run2 = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4))
-        .collect().map(_.toString).sorted.toSeq
-      assert(run1 == run2, "hier training not deterministic across cold runs")
-      val edges2 = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val vecs = spark.read.parquet(s"$dir01/embeddings.parquet")
-        .collect().map { r =>
-          r.getLong(r.fieldIndex("vec_id")) ->
-            r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray
-        }.toMap
-      def cos(a: Array[Double], b: Array[Double]): Double = {
-        var i = 0; var d = 0.0; var na = 0.0; var nb = 0.0
-        while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-        d / (math.sqrt(na) * math.sqrt(nb))
-      }
-      val k = graft.ops.DedupOps.knnGraphK
-      val truth = vecs.map { case (id, v) =>
-        id -> vecs.toSeq.filter(_._1 != id)
-          .map { case (j, w) => (j, cos(v, w)) }
-          .sortBy { case (j, c) => (-c, j) }.take(k).map(_._1).toSet
-      }
-      val approx = edges2.groupBy(_._1).map { case (s, es) => s -> es.map(_._2).toSet }
-      val recalls = truth.toSeq.map { case (id, t) =>
-        approx.getOrElse(id, Set.empty).intersect(t).size.toDouble / k }
-      val mean = recalls.sum / recalls.size
-      info(f"s15 HIERARCHICAL recall@$k at K=4/G=2 (sf0.01): $mean%.3f")
-      assert(mean >= 0.25, f"hier-path recall collapsed: $mean%.3f")
-    } finally {
-      sys.props.remove("graft.knngraph.twoLevelK")
-      saved.foreach(v => sys.props("graft.knngraph.twoLevelK") = v.toString)
-    }
+    def hier() = graft.ops.DedupOps.s15KnnFrameWith(spark, dir01, Some(4), twoLevelK = 2)
+    val run1 = hier().collect().map(_.toString).sorted.toSeq
+    graft.ops.Q.releaseAllPersisted(spark)
+    val run2 = hier().collect().map(_.toString).sorted.toSeq
+    assert(run1 == run2, "hier training not deterministic across cold runs")
+    val edges2 = hier().collect().map(r => (r.getLong(0), r.getLong(1)))
+    val (mean, _) = recallVsBruteForce(dir01, edges2.toSeq)
+    info(f"s15 HIERARCHICAL recall@$k at K=4/G=2 (sf0.01): $mean%.3f")
+    assert(mean >= 0.25, f"hier-path recall collapsed: $mean%.3f")
   }
 
   test("deterministic across runs") {

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** `-Dgraft.profile=cluster` umbrella (round-14 verdict item 6): the
   * profile must actually ENGAGE each documented cluster spelling, an
   * explicit per-dial property must always beat the profile, and an
@@ -62,6 +64,25 @@ class ProfileSpec extends AnyFunSuite {
     // executor memory at 100 TB. Pin the loaded value so a future
     // profile edit that starts flipping it trips this spec.
     assert(graft.ops.DedupOps.d02VerifySpelling == "sets")
+  }
+
+  test("the engine reads exactly the nine documented -Dgraft.* properties") {
+    // every other algorithm setting is a constant next to the code that
+    // uses it; a new property must be added here AND to the Profile
+    // scaladoc / README dial table, never slip in unnoticed
+    val literal = "\"(graft\\.[A-Za-z0-9_.]+)\"".r
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
+    val files = java.nio.file.Files.walk(root)
+    val found = try {
+      files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap(f => literal.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1)))
+        .toSet
+    } finally files.close()
+    assert(found == Set("graft.profile", "graft.q18.bloom", "graft.q61.mask",
+      "graft.d02.verify", "graft.export.shards", "graft.pack.blockDocs",
+      "graft.bpe.rounds", "graft.bench.calibRef", "graft.repo.root"))
   }
 
   test("unknown profile fails loudly") {
