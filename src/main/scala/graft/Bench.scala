@@ -3,6 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val repoRoot = sys.props.get("graft.repo.root")
+      .orElse(sys.env.get("GRAFT_REPO_ROOT"))
+      .getOrElse(sys.props.getOrElse("user.dir", "."))
     val spark = Sessions.local()
     // Timing protocol (evolved over rounds 3-5 chasing dispersion):
     //  - Per-query ADJACENT warmup: each query warms immediately before
@@ -122,11 +125,7 @@ object Bench {
     val (calibQuietRef, calibRefSource) =
       sys.props.get("graft.bench.calibRef")
         .map(v => (v.toDouble, "prop")) getOrElse {
-        val f = java.nio.file.Paths.get(
-          sys.props.get("graft.repo.root")
-            .orElse(sys.env.get("GRAFT_REPO_ROOT"))
-            .getOrElse(sys.props.getOrElse("user.dir", ".")),
-          "tools", "bench_calib.json")
+        val f = java.nio.file.Paths.get(repoRoot, "tools", "bench_calib.json")
         val fromFile = try {
           val txt = new String(java.nio.file.Files.readAllBytes(f),
             java.nio.charset.StandardCharsets.UTF_8)
@@ -154,25 +153,18 @@ object Bench {
       """"loadavg1m":%.2f,"calib_sec":%.4f,"calib_ref":%.4f,"calib_ref_source":"%s","calib_drift":%.3f,"load_suspect":%b""",
       Double.box(loadavg1m), Double.box(calibSec), Double.box(calibQuietRef),
       calibRefSource, Double.box(calibDrift), Boolean.box(loadSuspect))
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$nRuns,$calib,"queries":${fmt(results)},"medians":${fmt(medians)},"spread":${fmt(spread)},"failed":$failed,"sf":"$sfDir"}"""
+    val host = String.format(java.util.Locale.ROOT,
+      """"nproc":%d,"cpus":"%s","heap_mb":%d,"git_head":"%s","full_run":%b""",
+      Int.box(Runtime.getRuntime.availableProcessors),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      Long.box(Runtime.getRuntime.maxMemory >> 20), gitHead(repoRoot),
+      Boolean.box(args.isEmpty))
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$nRuns,$calib,$host,"queries":${fmt(results)},"medians":${fmt(medians)},"spread":${fmt(spread)},"failed":$failed,"sf":"$sfDir"}"""
     println(line)
-    // Round-11 verdict item 6: the driver's BENCH_r{N}.json captured only
-    // a truncated stdout tail ("parsed": null two rounds running), so the
-    // medians were not machine-comparable across rounds. Write the full
-    // metric object to files too: a fixed /tmp path the driver can pick
-    // up whole, plus a repo-root copy the builder commits each round.
-    // The repo copy is resolved against an explicit root (round-12
-    // advice: a cwd-relative path silently lands elsewhere when the
-    // bench is launched outside the repo): GRAFT_REPO_ROOT env /
-    // graft.repo.root property, falling back to user.dir (sbt sets it
-    // to the project root). The absolute path is always logged.
-    val repoRoot = sys.props.get("graft.repo.root")
-      .orElse(sys.env.get("GRAFT_REPO_ROOT"))
-      .getOrElse(sys.props.getOrElse("user.dir", "."))
-    for (p <- Seq(
-           java.nio.file.Paths.get(
-             sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench_out.json")),
-           java.nio.file.Paths.get(repoRoot, "BENCH_SELF.json"))) {
+    // The full metric object also goes to files (a truncated stdout tail
+    // is not machine-comparable): see outputFiles. Absolute paths are
+    // always logged.
+    for (p <- outputFiles(args.toSeq, sys.env, repoRoot)) {
       val abs = p.toAbsolutePath
       try {
         java.nio.file.Files.write(abs,
@@ -183,4 +175,25 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** Where a bench run writes its metric line. Every run writes the side
+    * file (`SPARK_GRAFT_BENCH_OUT`, default `/tmp/bench_out.json`). Only a
+    * full headline run (no query filter) also writes the committed
+    * `BENCH_SELF.json` under `repoRoot`, so a subset run can never replace
+    * the baseline. The repo root is explicit (`graft.repo.root` property,
+    * `GRAFT_REPO_ROOT` env, else the working directory): a cwd-relative
+    * path lands elsewhere when the bench is launched outside the repo. */
+  def outputFiles(args: Seq[String], env: Map[String, String],
+      repoRoot: String): Seq[java.nio.file.Path] = {
+    val side = java.nio.file.Paths.get(
+      env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench_out.json"))
+    if (args.isEmpty) Seq(side, java.nio.file.Paths.get(repoRoot, "BENCH_SELF.json"))
+    else Seq(side)
+  }
+
+  /** The commit the bench ran, or "unknown" outside a git checkout. */
+  private def gitHead(repoRoot: String): String =
+    scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"),
+      new java.io.File(repoRoot)).!!(scala.sys.process.ProcessLogger(_ => ())).trim)
+      .getOrElse("unknown")
 }

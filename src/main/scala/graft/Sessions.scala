@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for engine session defaults so Verify, Bench, and tests agree. */
+/** One place for engine session defaults so Verify, Bench, and tests agree.
+  * Every session carries [[graft.functions.GraftExtensions]]: the native
+  * functions and the packed-key sort rule. */
 object Sessions {
 
   /** Master override for multi-JVM validation (round-14 verdict item 4):
@@ -18,6 +20,7 @@ object Sessions {
   def builder(cpus: String): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus)

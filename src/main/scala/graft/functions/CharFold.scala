@@ -59,10 +59,14 @@ case class CharFold(child: Expression, seed: Long)
 
 object GraftFunctions {
   /** Idempotent runtime registration of graft SQL functions on a session —
-    * same builder list as the [[GraftExtensions]] session-extension path. */
-  def register(spark: SparkSession): Unit =
+    * same builder list as the [[GraftExtensions]] session-extension path.
+    * Functions the session already has (every `graft.Sessions` session
+    * gets them from the extension) are left as they are. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     GraftExtensions.all.foreach { case (ident, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        ident.funcName, builder, "scala_udf")
+      if (!registry.functionExists(ident))
+        registry.createOrReplaceTempFunction(ident.funcName, builder, "scala_udf")
     }
+  }
 }

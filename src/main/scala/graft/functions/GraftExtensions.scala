@@ -4,14 +4,18 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** Session-extension entry point: registers graft's native functions at
-  * session build time (`spark.sql.extensions=graft.functions.GraftExtensions`
-  * or `.withExtensions(new GraftExtensions)`). [[GraftFunctions.register]]
-  * installs the SAME builder list on an already-running session — one
-  * source of truth, two registration paths. */
+/** Session-extension entry point: registers graft's native functions and
+  * the [[graft.plans.PackedKeySort]] query-stage preparation rule at session
+  * build time (`spark.sql.extensions=graft.functions.GraftExtensions` or
+  * `.withExtensions(new GraftExtensions)`, as `graft.Sessions.builder`
+  * does). [[GraftFunctions.register]] installs the SAME function builder
+  * list on an already-running session — one source of truth, two
+  * registration paths. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.all.foreach(e.injectFunction)
+    e.injectQueryStagePrepRule(_ => graft.plans.PackedKeySort)
+  }
 }
 
 object GraftExtensions {

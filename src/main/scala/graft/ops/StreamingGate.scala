@@ -213,12 +213,13 @@ object StreamingGate {
     val sch = Q.table(s, d, "documents").schema
     val inDir = tempDir("graft-q49-in")
     linkParts(d, "documents", inDir)
-    // replay: same bytes under a later name — batch 2 is all duplicates
+    // replay: same bytes under a later name — batch 2 is all duplicates.
+    // A copy, not a link: the later mtime that orders it second would
+    // otherwise be set through the link on the source file itself.
     val src = Paths.get(s"$d/documents.parquet").toAbsolutePath
     if (Files.isRegularFile(src)) {
       val replay = inDir.resolve("1_documents_replay.parquet")
-      try Files.createSymbolicLink(replay, src)
-      catch { case _: Throwable => Files.copy(src, replay) }
+      Files.copy(src, replay)
       Files.setLastModifiedTime(replay,
         FileTime.fromMillis(System.currentTimeMillis() + 60000))
     }

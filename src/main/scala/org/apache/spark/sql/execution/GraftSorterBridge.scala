@@ -1,0 +1,45 @@
+package org.apache.spark.sql.execution
+
+import org.apache.spark.{SparkEnv, TaskContext}
+import org.apache.spark.internal.config
+import org.apache.spark.memory.SparkOutOfMemoryError
+import org.apache.spark.util.collection.unsafe.sort.{PrefixComparators, RecordComparator, UnsafeExternalSorter}
+
+/** Bridge into sort internals that are private to Spark, for
+  * `graft.plans.PackedKeySortExec`: its radix sorter, configured from the
+  * same settings `UnsafeExternalRowSorter` reads, and the task's
+  * peak-execution-memory counter, which `SortExec` also feeds. */
+object GraftSorterBridge {
+  /** The initial pointer-array size every Spark sorter starts from. */
+  def DefaultInitialSize: Int =
+    SparkEnv.get.conf.get(config.SHUFFLE_SORT_INIT_BUFFER_SIZE).toInt
+
+  /** A record comparator that finds every pair equal. */
+  private val NoOrder = new java.util.function.Supplier[RecordComparator] {
+    override def get(): RecordComparator = new RecordComparator {
+      override def compare(l: AnyRef, lOff: Long, lLen: Int, r: AnyRef, rOff: Long, rLen: Int): Int = 0
+    }
+  }
+
+  /** A spillable sorter that radix-sorts records on an unsigned 64-bit
+    * prefix alone: records with equal prefixes come out in no particular
+    * order, from memory and from merged spills alike. Its pointer array
+    * starts at `initialSize`, or at Spark's default when the task cannot
+    * get that much memory up front. */
+  def radixSorter(initialSize: Int, pageSize: Long): UnsafeExternalSorter = {
+    val env = SparkEnv.get
+    val task = TaskContext.get()
+    def create(size: Int) = UnsafeExternalSorter.create(task.taskMemoryManager(),
+      env.blockManager, env.serializerManager, task, NoOrder,
+      new PrefixComparators.UnsignedPrefixComparator, size, pageSize,
+      env.conf.get(config.SHUFFLE_SPILL_NUM_ELEMENTS_FORCE_SPILL_THRESHOLD),
+      env.conf.get(config.SHUFFLE_SPILL_MAX_SIZE_FORCE_SPILL_THRESHOLD),
+      true)
+    try create(initialSize)
+    catch { case _: SparkOutOfMemoryError if initialSize > DefaultInitialSize =>
+      create(DefaultInitialSize) }
+  }
+
+  def incPeakExecutionMemory(bytes: Long): Unit =
+    TaskContext.get().taskMetrics().incPeakExecutionMemory(bytes)
+}

@@ -30,12 +30,15 @@ class PlanShapeSpec extends AnyFunSuite {
   import org.apache.spark.sql.execution.window.WindowExec
 
   /** Every node of the pre-execution physical plan (AQE unwrapped). */
-  private def nodes(name: String): Seq[SparkPlan] = {
+  private def nodes(name: String): Seq[SparkPlan] =
+    planNodes(SparkEntry.queries(name)(spark, dir))
+
+  private def planNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case _ => p +: p.children.flatMap(walk)
     }
-    walk(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+    walk(df.queryExecution.executedPlan)
   }
 
   /** The packing-shape pin, structurally: every window whose frame runs in
@@ -411,5 +414,50 @@ class PlanShapeSpec extends AnyFunSuite {
       s"t18 lost the vocabulary-side broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"t18 shuffles the token stream through a sort-merge join:\n$p")
+  }
+
+  // -- packed-key sorts (graft.plans.PackedKeySort) ------------------------
+
+  import graft.plans.PackedKeySortExec
+  import org.apache.spark.sql.execution.SortExec
+
+  /** Every window is fed by a packed-key sort (directly or through the
+    * projections and windows stacked on it), with no stock multi-key sort
+    * below; returns the windows. */
+  private def windowsOnPackedSorts(name: String): Seq[WindowExec] = {
+    val ws = nodes(name).collect { case w: WindowExec => w }
+    assert(ws.nonEmpty, s"$name lost its window")
+    ws.foreach { w =>
+      assert(w.exists(_.isInstanceOf[PackedKeySortExec]), s"$name: no PackedKeySort under\n$w")
+      val stock = w.collect { case s: SortExec if s.sortOrder.size >= 2 => s }
+      assert(stock.isEmpty, s"$name: stock multi-key sort left under the window:\n$w")
+    }
+    ws
+  }
+
+  test("q08 window sorts on the packed (l_suppkey, l_shipdate) prefix") {
+    val ws = windowsOnPackedSorts("q08_running_totals")
+    assert(ws.forall(_.child.isInstanceOf[PackedKeySortExec]), ws.mkString("\n"))
+  }
+
+  test("q60 running-min windows keep the packed-key sort") {
+    windowsOnPackedSorts("q60_conversion_funnel")
+  }
+
+  test("q06 plans no sort at all") {
+    assert(!nodes("q06_forecast_revenue").exists(p =>
+      p.isInstanceOf[SortExec] || p.isInstanceOf[PackedKeySortExec]))
+  }
+
+  test("single-key and string-led sorts stay SortExec; two int keys pack") {
+    import spark.implicits._
+    val df = spark.range(200).select(($"id" % 7).as("a"), ($"id" % 5).as("b"),
+      ($"id" % 3).cast("string").as("s")).repartition(3, $"a")
+    def sorts(cols: String*): Seq[SparkPlan] =
+      planNodes(df.sortWithinPartitions(cols.map(df.col): _*))
+        .filter(p => p.isInstanceOf[SortExec] || p.isInstanceOf[PackedKeySortExec])
+    assert(sorts("a").map(_.getClass) == Seq(classOf[SortExec]))
+    assert(sorts("s", "a").map(_.getClass) == Seq(classOf[SortExec]))
+    assert(sorts("a", "b").map(_.getClass) == Seq(classOf[PackedKeySortExec]))
   }
 }

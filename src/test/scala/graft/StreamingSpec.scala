@@ -246,6 +246,23 @@ class StreamingSpec extends AnyFunSuite {
       || !spark.conf.get(graft.streaming.StateStores.ProviderKey).contains("RocksDB"))
   }
 
+  test("q49 leaves its input file untouched (the replay is a copy)") {
+    // the replay file is dated a minute ahead so it batches second; staged
+    // as a link, that date landed on the source file through the link
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-q49-src")
+    val staging = dir.resolve("staging").toString
+    Seq("a  b", "A b", "c").toDF("text").coalesce(1).write.parquet(staging)
+    val part = Files.list(java.nio.file.Paths.get(staging)).iterator.asScala
+      .find(_.toString.endsWith(".parquet")).get
+    val src = Files.move(part, dir.resolve("documents.parquet"))
+    val before = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
+    Files.setLastModifiedTime(src, before)
+    assert(graft.ops.StreamingGate.q49.run(spark, dir.toString).count() == 2)
+    assert(Files.getLastModifiedTime(src) == before)
+  }
+
   test("q58 streaming near-dup: hits are strictly cross-batch; RocksDB run agrees") {
     // Owners must come from batch 0 (even doc_ids), dups from batch 1
     // (odd) — any same-batch emission means the bucket state leaked
