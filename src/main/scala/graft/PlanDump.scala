@@ -36,7 +36,6 @@ object PlanDump {
       write(s"${name}_${tag}_final.txt",
         try { df.queryExecution.toRdd.count(); explain() }
         catch { case e: Throwable => s"EXECUTION FAILED: ${e.getMessage}" })
-      graft.ops.Q.clearStaged()
       graft.ops.Q.releaseAllPersisted(spark)
     }
     spark.stop()

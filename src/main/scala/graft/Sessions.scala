@@ -58,6 +58,18 @@ object Sessions {
     } else b
   }
 
+  /** Run `body` with session conf `key` set to `value`, then restore the
+    * previous value, or unset the key when it was unset before. */
+  def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None    => s.conf.unset(key)
+    }
+  }
+
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

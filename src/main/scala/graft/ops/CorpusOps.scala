@@ -1468,7 +1468,7 @@ object CorpusOps {
       // left inline, CTE inlining re-runs the corpus histogram pass per
       // reference (PlanAudit caught exactly that: 2x live documents scan)
       // — checkpoint it as a LEAF, it is vocabulary-width
-      stagedMaterialized("q70_p", d) {
+      staged("q70_p", d) {
         roundCheckpoint(withViews(s, d, "documents")(s"""
           WITH dh AS (SELECT doc_id % 2 AS snap, tok, cnt
                       FROM (SELECT doc_id,

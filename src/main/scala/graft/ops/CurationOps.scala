@@ -789,7 +789,7 @@ object CurationOps {
       // checkpointed leaf: the fingerprint frame feeds the new/old split,
       // both near-dup join sides, and the output join — inlined, the
       // normalize+md5 pass re-ran per reference (PlanAudit: 12 live scans)
-      val fps = stagedMaterialized("d15_fps", d) {
+      val fps = staged("d15_fps", d) {
         roundCheckpoint(withViews(s, d, "documents")(s"""
           SELECT doc_id, md5($sNorm) AS fp FROM documents"""))
       }
@@ -1043,7 +1043,7 @@ object CurationOps {
       // match (PlanAudit round 12: the vocab pass tokenized the corpus
       // once per reference and the bigram stream rebuilt per consumer —
       // the materialized boundary this staging always intended)
-      stagedMaterialized("t11_v", d) {
+      staged("t11_v", d) {
         roundCheckpoint(withViews(s, d, "documents")(s"""
           SELECT word FROM (
             SELECT wd AS word, count(*) AS freq
@@ -1051,7 +1051,7 @@ object CurationOps {
                   FROM documents)
             GROUP BY wd ORDER BY freq DESC, word LIMIT $lmVocab)"""))
       }.createOrReplaceTempView("t11_v")
-      stagedMaterialized("t11_mb", d) {
+      staged("t11_mb", d) {
         roundCheckpoint(withViews(s, d, "documents")(s"""
           WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+', 0) AS ws
                      FROM documents),
@@ -1154,7 +1154,7 @@ object CurationOps {
     "d18_importance_select",
     (s, d) => {
       val targetIn = dsirTargets.map(t => s"'$t'").mkString("(", ", ", ")")
-      stagedMaterialized("d18_ng", d) {
+      staged("d18_ng", d) {
         roundCheckpoint(withViews(s, d, "documents")(s"""
           WITH w AS (SELECT doc_id, source,
                        regexp_extract_all(lower(text), '[a-z]+', 0) AS ws
@@ -1350,14 +1350,14 @@ object CurationOps {
   val q69 = QueryDef(
     "q69_source_pagerank",
     (s, d) => {
-      stagedMaterialized("q69_edges", d) {
+      staged("q69_edges", d) {
         roundCheckpoint(pagerankEdges(s, d, pagerankCap))
       }.createOrReplaceTempView("q69_edges")
       // the node set is ALSO a multiply-referenced CTE (cnt, r0, every
       // iteration, the readout — PlanAudit counted 9 live corpus scans
       // when it was left inline); as a leaf the iteration SQL touches
       // documents zero times
-      stagedMaterialized("q69_nodes", d) {
+      staged("q69_nodes", d) {
         roundCheckpoint(withViews(s, d, "documents")(
           "SELECT DISTINCT source FROM documents"))
       }.createOrReplaceTempView("q69_nodes")
@@ -1438,7 +1438,7 @@ object CurationOps {
   val d26 = QueryDef(
     "d26_split_leakage_audit",
     (s, d) => {
-      stagedMaterialized("d26_split", d) { roundCheckpoint(q54.run(s, d)) }
+      staged("d26_split", d) { roundCheckpoint(q54.run(s, d)) }
         .createOrReplaceTempView("d26_split")
       DedupOps.d02Pairs(s, d).createOrReplaceTempView("d26_pairs")
       graft.functions.GraftFunctions.register(s)

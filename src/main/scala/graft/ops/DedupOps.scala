@@ -438,7 +438,7 @@ object DedupOps {
   val d04 = QueryDef(
     "d04_ngram_jaccard",
     (s, d) => {
-      val g = stagedMaterialized("d04_g", d) {
+      val g = staged("d04_g", d) {
         roundCheckpoint(withViews(s, d, "documents")("""
           SELECT doc_id, lang, source, grams, minhash_sig(grams, 16) AS sg FROM
             (SELECT doc_id, lang, source, shingle_set(text, 2) AS grams
@@ -539,7 +539,7 @@ object DedupOps {
       // normalize → distinct 3-shingles → md5, exploded to (rep, h) and
       // checkpointed — a LogicalRDD leaf, so the class-freq aggregate and
       // the self-join below re-read rows, never re-derive the explode
-      val g = stagedMaterialized("d21_g", d) {
+      val g = staged("d21_g", d) {
         roundCheckpoint(withViews(s, d, "documents")(s"""
           WITH cls AS (SELECT min(doc_id) AS rep, count(*) AS members,
                               min_by(text, doc_id) AS rtext
@@ -628,7 +628,7 @@ object DedupOps {
   // the view-hop consumers (d05/d16/d17) were re-normalizing per
   // reference (PlanAudit: 6 live embeddings scans in d05)
   private[graft] def normEmbeddings(s: org.apache.spark.sql.SparkSession, d: String) =
-    stagedMaterialized("d05_n", d) {
+    staged("d05_n", d) {
       roundCheckpoint(withViews(s, d, "embeddings")("""
         WITH e AS (SELECT vec_id, label,
                      transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -1214,7 +1214,7 @@ object DedupOps {
     val sup = SimilarityOps
       .s06CentsWith(s, d, g, s"s15_hsup_${k}_g${g}_s$strideG", strideG)
       .selectExpr("cid AS gid", "cv AS gcv")
-    val cents = stagedMaterialized(s"s15_hc_${k}_s$stride", d) {
+    val cents = staged(s"s15_hc_${k}_s$stride", d) {
       sup.createOrReplaceTempView("s15_hsup")
       s.sql(s"SELECT vec_id, v, nrm FROM s06_n WHERE vec_id % $stride = 0")
         .createOrReplaceTempView("s15_htrain")
@@ -1261,10 +1261,10 @@ object DedupOps {
           SELECT gid, cid,
                  transform(sort_array(collect_list(struct(dim, mc))), x -> x.mc) AS cv
           FROM m GROUP BY gid, cid"""))
-        org.apache.spark.sql.GraftSqlBridge.releaseCheckpointBlocks(cur)
+        releaseCheckpointBlocks(cur, blocking = false)
         cur = next
       }
-      org.apache.spark.sql.GraftSqlBridge.releaseCheckpointBlocks(asg)
+      releaseCheckpointBlocks(asg, blocking = false)
       cur
     }
     (sup, cents)
@@ -1333,7 +1333,7 @@ object DedupOps {
           }
         KnnDiag.lastAssignKey = assignKey
         val twoLevelAssign = assignKey.startsWith("s15_hassign_")
-        stagedMaterialized(assignKey, d) {
+        staged(assignKey, d) {
           roundCheckpoint(
             if (twoLevelAssign) s.sql(s"""
               WITH sup AS (SELECT collect_list(named_struct(
@@ -1381,7 +1381,7 @@ object DedupOps {
         }.createOrReplaceTempView("s15_tassign")
         ("s15_tassign", "s06_n", s"s15_knn@$assignKey")
     }
-    val knn = stagedMaterialized(stageKey, d) {
+    val knn = staged(stageKey, d) {
       roundCheckpoint(s.sql(s"""
         WITH qp AS (SELECT a.vec_id AS src, a.cluster, n.v AS qv, n.nrm AS qn
                     FROM $assignV a JOIN $nView n ON n.vec_id = a.vec_id
@@ -1552,7 +1552,7 @@ object DedupOps {
   private[graft] def s15SurvivorKnn(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     SimilarityOps.s03Statics(s, d)
-    stagedMaterialized("d27_rknn", d) {
+    staged("d27_rknn", d) {
       roundCheckpoint(s.sql(s"""
         WITH sn AS (SELECT vec_id, v, nrm FROM s03_n WHERE NOT ($d27TombPred)),
         c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM sn

@@ -938,10 +938,12 @@ object MultimodalOps {
       // r17: staged cache instead of an eager localCheckpoint — same
       // build-once guarantee (direct DataFrame reuse, so the fragment
       // match is exact), but materialization folds into the first
-      // consuming job instead of a separate barrier job, and the cache
-      // PRESERVES output partitioning where the checkpoint leaf
-      // surfaced UnknownPartitioning (StageProfile r17: the two
-      // checkpoint barriers alone were ~0.9 s of m10's 3.8 s at sf0.1)
+      // consuming job instead of a separate barrier job, and a BUILT
+      // cache preserves output partitioning where the checkpoint leaf
+      // surfaces UnknownPartitioning (a consumer planned before the
+      // first build sees UnknownPartitioning too; both pinned in
+      // PlanShapeSpec). StageProfile r17: the two checkpoint barriers
+      // alone were ~0.9 s of m10's 3.8 s at sf0.1
       val cls = staged("m10_cls", d) {
         audioGranules(s, media)
           .groupBy($"dg")

@@ -114,11 +114,15 @@ object Q {
   def oDateStr(expr: String): String =
     s"strftime(cast(($expr) as date), '%Y-%m-%d')"
 
-  /** Memoized, cached stage intermediates keyed by (name, data dir).
+  /** Memoized stage intermediates keyed by (name, data dir, session).
     * Composed queries (d06 reusing d02's pairs, q40 reusing d06) share ONE
-    * cached copy instead of re-deriving and re-caching per call — without
-    * this, repeated runs leak orphaned InMemoryRelations (a DataFrame's
-    * cache survives view replacement until explicitly unpersisted). */
+    * materialized copy instead of re-deriving it per call. `staged` caches
+    * what `build` returns unless that frame is itself a checkpoint (its
+    * analyzed plan is a checkpointed `LogicalRDD`, what [[roundCheckpoint]]
+    * returns): such a frame is already materialized and is memoized as
+    * it is, so an `InMemoryRelation` never wraps a checkpoint. Either way
+    * [[clearStaged]] releases what the entry holds: the cache, or the
+    * checkpoint's blocks. */
   private val stagedMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
@@ -135,58 +139,19 @@ object Q {
       existing
     } else {
       if (existing != null) stagedMemo.remove(k, existing)
-      val built = build.cache()
+      val frame = build
+      val built = if (checkpointOf(frame).isDefined) frame else frame.cache()
       val prev = stagedMemo.putIfAbsent(k, built)
       if (prev == null) built
-      else { built.unpersist(); prev } // lost a benign race; use the winner
+      else { unstage(built, blocking = false); prev } // lost a benign race; use the winner
     }
   }
 
-  /** [[staged]] without the extra `.cache()`: for intermediates that are
-    * ALREADY materialized (checkpoints), where wrapping an
-    * InMemoryRelation on top would discard the checkpoint's preserved
-    * output partitioning (the one property fusedBase exists to keep —
-    * InMemoryRelation.withOutput loses the partitioning attributes on
-    * Spark 4.1). Without memoization every call re-built and
-    * re-checkpointed a fresh copy whose blocks outlived the call; the
-    * memoized copy is shared per (key, dir, session) and its blocks are
-    * swept by [[releaseAllPersisted]] like any checkpoint. */
-  def stagedMaterialized(key: String, dir: String)(build: => DataFrame): DataFrame = {
-    val session = SparkSession.active
-    val k = s"$key|$dir|${System.identityHashCode(session)}"
-    val existing = stagedMemo.get(k)
-    if (existing != null && !existing.sparkSession.sparkContext.isStopped) {
-      existing
-    } else {
-      if (existing != null) stagedMemo.remove(k, existing)
-      val built = build
-      val prev = stagedMemo.putIfAbsent(k, built)
-      if (prev == null) { materializedKeys.add(k); built }
-      else {
-        // lost a benign race: the loser was eagerly checkpointed and is
-        // tracked by NOTHING — release its blocks now (staged()'s rule;
-        // without this a concurrent fusedBase pair pins a full events
-        // copy until releaseAllPersisted)
-        try checkpointRdd(built).foreach(_.unpersist(blocking = false))
-        catch { case _: Throwable => () }
-        prev
-      }
-    }
-  }
-
-  /** Keys of [[stagedMaterialized]] entries: their frames are backed by
-    * (local)checkpoint RDD BLOCKS, which `DataFrame.unpersist` does not
-    * release — [[clearStaged]] unpersists the underlying LogicalRDD for
-    * these so a clear never orphans a full checkpointed copy (round-10
-    * advice item). */
-  private val materializedKeys =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The checkpoint RDD behind a materialized frame (LogicalRDD leaf),
-    * if any. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+  /** Release a memoized frame: its checkpoint blocks or its cache. */
+  private def unstage(df: DataFrame, blocking: Boolean): Unit =
+    checkpointOf(df) match {
+      case Some(rdd) => rdd.unpersist(blocking)
+      case None      => df.unpersist(blocking)
     }
 
   /** Unpersist and forget every memoized intermediate (cold-cache runs).
@@ -194,18 +159,11 @@ object Q {
     * blocks are still draining while the new run fills the store, and the
     * eviction/GC churn showed up as an unattributable 60% bench swing. */
   def clearStaged(): Unit = {
-    stagedMemo.forEach { (k, df) =>
-      try if (!df.sparkSession.sparkContext.isStopped) {
-        df.unpersist(blocking = true)
-        // checkpointed frames: the blocks live on the LogicalRDD, which
-        // plan-level unpersist cannot see
-        if (materializedKeys.contains(k))
-          checkpointRdd(df).foreach(_.unpersist(blocking = true))
-      }
+    stagedMemo.forEach { (_, df) =>
+      try if (!df.sparkSession.sparkContext.isStopped) unstage(df, blocking = true)
       catch { case _: Throwable => () }
     }
     stagedMemo.clear()
-    materializedKeys.clear()
   }
 
   /** Drop EVERY persisted RDD still registered with the context — staged
@@ -235,16 +193,9 @@ object Q {
     * per-round barrier cost the same way. Single-pass queries must NOT run
     * under this: a 64×-scale profile showed the advisory target coalescing
     * q18's 178 MB reduce onto 3 of 32 cores (see [[graft.Sessions]]). */
-  def withAdvisoryCoalesce[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+  def withAdvisoryCoalesce[T](s: SparkSession)(body: => T): T =
+    graft.Sessions.withConf(s,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")(body)
 
   /** Per-round lineage truncation for iterative algorithms (d06 label
     * propagation, s06 Lloyd iterations). Each round must read the previous
@@ -261,6 +212,30 @@ object Q {
   def roundCheckpoint(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
     else df.localCheckpoint(true)
+
+  /** The checkpointed RDD when `df` ITSELF is a checkpoint — its analyzed
+    * plan's root is a `LogicalRDD` over a checkpointed RDD, the shape
+    * [[roundCheckpoint]] returns. Root-only, deliberately: a frame that
+    * merely READS a checkpoint (s06's round-0 centroids select from the
+    * shared checkpointed `normalized` leaf) is not one, and releasing the
+    * leaf it reads killed that shared checkpoint for every later consumer
+    * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). A plain `createDataFrame(rdd,
+    * schema)` root is not checkpointed either. */
+  private def checkpointOf(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD if l.rdd.isCheckpointed =>
+        Some(l.rdd)
+      case _ => None
+    }
+
+  /** Drop the blocks behind a checkpointed frame (see [[checkpointOf]];
+    * no-op for any other frame). Nothing else unpersists them until the
+    * ContextCleaner notices the RDD is unreachable — too late for
+    * iterative loops that supersede a round per iteration. Only call
+    * this when the frame will never be read again: checkpoint lineage is
+    * truncated, so released blocks are NOT recomputable. */
+  def releaseCheckpointBlocks(df: DataFrame, blocking: Boolean): Unit =
+    checkpointOf(df).foreach(_.unpersist(blocking))
 
   /** Register the named driver tables as temp views (plus graft SQL
     * functions) and run a Spark-SQL statement against them. */

@@ -87,15 +87,15 @@ object SimilarityOps {
   /** Normalized double vectors with norms, staged once per data dir and
     * shared by every similarity query (s01 broadcast side + corpus side,
     * s05 centroid seeding + assignment). */
-  // stagedMaterialized + checkpoint, NOT staged: these frames are
-  // consumed through temp views by SQL that references them 2-13x, and
+  // staged as a checkpoint, NOT a cache: these frames are consumed
+  // through temp views by SQL that references them 2-13x, and
   // a view hop over a cached lambda/Generate-bearing plan defeats
   // CacheManager's fragment match on Spark 4.1 (PlanAudit round 12: the
   // "cached" normalization recomputed per reference — s10 re-normalized
   // the corpus 13x). A checkpointed LogicalRDD is a LEAF: nothing to
   // re-derive, nothing for DeduplicateRelations to trip over.
   private def normalized(s: org.apache.spark.sql.SparkSession, d: String) =
-    stagedMaterialized("s01_n", d) {
+    staged("s01_n", d) {
       roundCheckpoint(withViews(s, d, "embeddings")("""
         WITH e AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                    FROM embeddings)
@@ -262,14 +262,14 @@ object SimilarityOps {
     * by the batch gate row and the s11 streaming twin, ONE definition. */
   private[graft] def s03Statics(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val n = stagedMaterialized("s03_n", d) {
+    val n = staged("s03_n", d) {
       roundCheckpoint(withViews(s, d, "embeddings")("""
         WITH e AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                    FROM embeddings)
         SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM e"""))
     }
     n.createOrReplaceTempView("s03_n")
-    val assign = stagedMaterialized("s03_assign", d) {
+    val assign = staged("s03_assign", d) {
       s.sql(s"""
         WITH c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM s03_n
                    WHERE vec_id % 50 = 7 AND vec_id < 3200),
@@ -354,16 +354,16 @@ object SimilarityOps {
   val s04 = QueryDef(
     "s04_ann_recall",
     (s, d) => {
-      // Both searches share the staged normalized-vector cache (by design
-      // — one copy of the corpus), which makes this comparison a self-join
+      // Both searches share the staged normalized-vector checkpoint (by
+      // design — one copy of the corpus), which makes this comparison a self-join
       // over the same relations; Spark's DeduplicateRelations trips an
       // analyzer bug (UnresolvedException: invalid call to exprId) on that
-      // shape. Each result is only |Q|·k rows, so an eager localCheckpoint
+      // shape. Each result is only |Q|·k rows, so an eager checkpoint
       // truncates the shared lineage for free — and is the honest shape
       // anyway: the eval join must compare MATERIALIZED search results,
       // never re-derive the searches inside its own plan.
-      s01.run(s, d).localCheckpoint(true).createOrReplaceTempView("s04_bf")
-      s02.run(s, d).localCheckpoint(true).createOrReplaceTempView("s04_lsh")
+      roundCheckpoint(s01.run(s, d)).createOrReplaceTempView("s04_bf")
+      roundCheckpoint(s02.run(s, d)).createOrReplaceTempView("s04_lsh")
       s.sql("""
         SELECT b.query_id,
                CAST(count(l.neighbor_id) AS BIGINT) AS n_hit,
@@ -580,14 +580,14 @@ object SimilarityOps {
           .createOrReplaceTempView("s06_train")
         "s06_train"
       }
-    stagedMaterialized(stageKey, d) {
+    staged(stageKey, d) {
       var cents = s.sql(
         s"SELECT vec_id AS cid, v AS cv FROM s06_n WHERE vec_id % 125 = 0 AND vec_id < ${125L * k}")
       withAdvisoryCoalesce(s) {
         for (_ <- 1 to lloydRounds) {
           cents.createOrReplaceTempView("s06_c")
           val next = roundCheckpoint(sRound(s, trainView))
-          org.apache.spark.sql.GraftSqlBridge.releaseCheckpointBlocks(cents)
+          releaseCheckpointBlocks(cents, blocking = false)
           cents = next
         }
       }
@@ -771,7 +771,7 @@ object SimilarityOps {
   val s08 = QueryDef(
     "s08_knn_quantized",
     (s, d) => {
-      s01.run(s, d).localCheckpoint(true).createOrReplaceTempView("s08_bf")
+      roundCheckpoint(s01.run(s, d)).createOrReplaceTempView("s08_bf")
       // the code index: ONE fused pass per vector (int8_quantize native
       // expression — the SQL spelling is 5 interpreted array walks; the
       // two are pinned bit-identical in QuantizeSpec). No qd > 0 filter
@@ -1022,7 +1022,7 @@ object SimilarityOps {
       // SEVEN times below (codebooks, codes, queries, both exact-rerank
       // sides) and as an inlined CTE the corpus was re-normalized and
       // re-quantized per reference (PlanAudit: 13 live embeddings scans)
-      stagedMaterialized("s10_e", d) {
+      staged("s10_e", d) {
         roundCheckpoint(withViews(s, d, "embeddings")("""
           WITH v0 AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                       FROM embeddings),
@@ -1140,7 +1140,7 @@ object SimilarityOps {
       // assignment passes (base/delta/full — the full pass is the
       // operator's own recompute proof, deliberate); as an inlined CTE
       // the corpus re-normalized per reference (PlanAudit: 6 live scans)
-      stagedMaterialized("s12_n", d) {
+      staged("s12_n", d) {
         roundCheckpoint(withViews(s, d, "embeddings")(s"""
           WITH e AS (SELECT vec_id,
                        transform(embedding, x -> CAST(x AS DOUBLE)) AS v,

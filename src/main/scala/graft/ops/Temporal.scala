@@ -505,27 +505,24 @@ object Temporal {
   }
 
   /** Build + register the shared co-partitioned events base for the fused
-    * pass.
+    * pass, staged once per (dir, session) and shared by q65 and
+    * fusedEventSuite.
     *
     * Checkpoint (not cache): the materialized base must survive re-analysis
     * under a temp view, and LogicalRDD rewrites its preserved partitioning
-    * to the fresh attribute ids — InMemoryRelation does not (its
-    * withOutput loses the partitioning attrs and throws on Spark 4.1).
-    * AQE off for the base build only: AdaptiveSparkPlanExec reports
-    * UnknownPartitioning, so a checkpoint taken under AQE forgets the
-    * hash partitioning and every branch re-exchanges — the one plan
-    * property this operator exists to share. AQE adds nothing to a plain
-    * repartition+sort anyway; branch queries still run under it. */
+    * to the fresh attribute ids. A built cache of this exact repartition +
+    * sortWithinPartitions shape plans every branch without a user_id
+    * exchange, but q60, q61 and q62 then throw at run time
+    * (NoSuchElementException: key not found: user_id, from
+    * InMemoryRelation.withOutput when AQE re-plans the branch; probed on
+    * Spark 4.1 at sf0.001). AQE off for the base build only: the
+    * checkpoint leaf of an AQE plan reports UnknownPartitioning (pinned in
+    * PlanShapeSpec), so every branch would re-exchange on user_id — the
+    * one plan property this operator exists to share. AQE adds nothing to
+    * a plain repartition+sort anyway; branch queries still run under it. */
   private def fusedBase(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     graft.functions.GraftFunctions.register(s)
-    // memoized WITHOUT an extra cache() (stagedMaterialized): q65 and
-    // fusedEventSuite share one checkpointed base per (dir, session)
-    // instead of materializing a fresh full-events copy per call, and an
-    // InMemoryRelation wrapper would lose the preserved partitioning
-    val base = Q.stagedMaterialized("fused_base", d) {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = s.conf.get(key)
-      s.conf.set(key, "false")
+    val base = Q.staged("fused_base", d) {
       // project BEFORE the exchange (guide §2.3): the four branch
       // statements (q60Sql..q63Sql) read only (user_id, ts, event_id,
       // event_type) — `value`/`props` rode the user_id shuffle AND the
@@ -534,13 +531,14 @@ object Temporal {
       // column present at the barrier is paid in full (this is the
       // round-15-named q65 constant — 807 MB materialized + re-read at
       // 256× — shrunk at the source).
-      try roundCheckpoint(
-        Q.events(s, d)
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"))
-          .repartition(col("user_id"))
-          .sortWithinPartitions(col("user_id"), col("ts"), col("event_id")))
-      finally s.conf.set(key, prev)
+      graft.Sessions.withConf(s, "spark.sql.adaptive.enabled", "false") {
+        roundCheckpoint(
+          Q.events(s, d)
+            .select(col("event_id"), col("ts"), col("user_id"),
+              col("event_type"))
+            .repartition(col("user_id"))
+            .sortWithinPartitions(col("user_id"), col("ts"), col("event_id")))
+      }
     }
     // SCOPED view name (round-10 verdict item 5): registering the
     // repartitioned+sorted base as the session-wide `events` view meant

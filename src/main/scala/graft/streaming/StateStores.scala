@@ -28,14 +28,7 @@ object StateStores {
     * to the pipeline, not leaked into the session. */
   def withProvider[T](s: SparkSession, providerClass: Option[String])(body: => T): T =
     providerClass match {
-      case None => body
-      case Some(cls) =>
-        val prev = s.conf.getOption(ProviderKey)
-        s.conf.set(ProviderKey, cls)
-        try body
-        finally prev match {
-          case Some(v) => s.conf.set(ProviderKey, v)
-          case None    => s.conf.unset(ProviderKey)
-        }
+      case None      => body
+      case Some(cls) => graft.Sessions.withConf(s, ProviderKey, cls)(body)
     }
 }

@@ -9,28 +9,4 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Drop the persisted blocks behind a (local)checkpointed Dataset.
-    * A checkpointed Dataset's plan is a `LogicalRDD` over blocks that
-    * nothing unpersists until the ContextCleaner notices the RDD is
-    * unreachable — too late for iterative algorithms that supersede a
-    * round per iteration. Only call this when the Dataset will never be
-    * read again: localCheckpoint lineage is truncated, so lost blocks are
-    * NOT recomputable.
-    *
-    * ROOT-only, deliberately: release the blocks only when the Dataset
-    * ITSELF is the checkpoint (plan root = LogicalRDD, the exact shape
-    * `Q.roundCheckpoint` returns). A full-plan traversal released every
-    * LogicalRDD the frame merely READS — when s06's round-0 centroid
-    * frame became a SELECT over the shared checkpointed `normalized`
-    * leaf (round 12), the old spelling silently killed that shared
-    * checkpoint's blocks and every later consumer died with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. An iterative round's own frame
-    * is always a root LogicalRDD, so nothing legitimate is lost. */
-  def releaseCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

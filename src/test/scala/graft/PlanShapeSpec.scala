@@ -460,4 +460,61 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(sorts("s", "a").map(_.getClass) == Seq(classOf[SortExec]))
     assert(sorts("a", "b").map(_.getClass) == Seq(classOf[PackedKeySortExec]))
   }
+
+  /** The hash-partitioned frame both barrier leaves are built from. */
+  private def keyed(): org.apache.spark.sql.DataFrame =
+    spark.range(0, 2000).selectExpr("id % 97 AS k", "id AS v")
+      .repartition(8, org.apache.spark.sql.functions.col("k"))
+
+  private def leafAndExchanges(df: org.apache.spark.sql.DataFrame): (SparkPlan, Int) = {
+    val leaf = planNodes(df).filter(_.children.isEmpty) match {
+      case Seq(l) => l
+      case ls => fail(s"expected one leaf, got ${ls.mkString(", ")}")
+    }
+    val exchanges = planNodes(df.groupBy("k").count()).count(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
+    (leaf, exchanges)
+  }
+
+  test("under AQE a checkpoint leaf forgets its hash partitioning; a built cache leaf keeps it") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val (ckLeaf, ckExchanges) = leafAndExchanges(graft.ops.Q.roundCheckpoint(keyed()))
+    assert(ckLeaf.outputPartitioning.isInstanceOf[UnknownPartitioning], ckLeaf)
+    assert(ckExchanges == 1, "a groupBy on the checkpoint's key must re-exchange")
+    val cached = keyed().cache()
+    try {
+      cached.createOrReplaceTempView("leaf_probe_cached")
+      // a cache not yet built reports nothing either: its plan is still
+      // an unexecuted adaptive plan
+      val (lazyLeaf, lazyExchanges) = leafAndExchanges(spark.table("leaf_probe_cached"))
+      assert(lazyLeaf.isInstanceOf[InMemoryTableScanExec], lazyLeaf)
+      assert(lazyLeaf.outputPartitioning.isInstanceOf[UnknownPartitioning], lazyLeaf)
+      assert(lazyExchanges == 1)
+      cached.count()
+      val (cacheLeaf, cacheExchanges) = leafAndExchanges(spark.table("leaf_probe_cached"))
+      cacheLeaf.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.numPartitions == 8)
+          assert(h.expressions.collect { case a: AttributeReference => a.name } == Seq("k"))
+        case other => fail(s"built cache leaf reports $other")
+      }
+      assert(cacheExchanges == 0, "a groupBy on the built cache's key must not re-exchange")
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("staged keeps a checkpoint as its leaf and caches any other frame") {
+    import org.apache.spark.storage.StorageLevel
+    val ck = graft.ops.Q.staged("leaf_probe_ck", dir) { graft.ops.Q.roundCheckpoint(keyed()) }
+    val viaRdd = graft.ops.Q.staged("leaf_probe_rdd", dir) {
+      val df = keyed()
+      spark.createDataFrame(df.rdd, df.schema)
+    }
+    try {
+      assert(ck.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      assert(ck.storageLevel == StorageLevel.NONE, "a checkpoint was cached on top")
+      assert(viaRdd.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      assert(viaRdd.storageLevel != StorageLevel.NONE, "a createDataFrame root was not cached")
+    } finally graft.ops.Q.clearStaged()
+  }
 }

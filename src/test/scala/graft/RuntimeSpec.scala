@@ -136,6 +136,14 @@ class RuntimeSpec extends AnyFunSuite {
     val tf = StageRuntime.spawn("fast", fast)
     val ts = StageRuntime.spawn("slow", slow)
     val d = new Daemon(Seq(tf, ts), pollEvery = 20.millis)
+    // wait until 'slow' is inside its delayed schedule(): if 'fast' ends
+    // before 'slow' has bootstrapped, the dismissal takes the
+    // no-resources-no-teardown path (runtime.rs:247-253) and the stage
+    // rightly never tears down — not the drain this test asserts
+    val ready = System.nanoTime() + 10.seconds.toNanos
+    while (slow.scheduleCount.get() == 0 && System.nanoTime() < ready)
+      Thread.sleep(5)
+    assert(slow.scheduleCount.get() > 0)
     val t0 = System.nanoTime()
     d.block()
     val ms = (System.nanoTime() - t0) / 1e6

@@ -192,19 +192,25 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("clearStaged releases stagedMaterialized checkpoint blocks (no leak)") {
-    // round-10 advice: clearStaged unpersisted InMemoryRelations but not
-    // the localCheckpoint RDD blocks behind stagedMaterialized frames
-    // (fused_base) — each clear orphaned a full checkpointed events copy
+    // a staged frame whose root is a checkpoint holds localCheckpoint RDD
+    // blocks that a plan-level unpersist cannot see: q65's fused base (a
+    // full events copy) and d02's pair list must both be released (the
+    // title keeps the name of the checkpointing stager, now `Q.staged`)
     val dir = "/root/testdata/sf0.001"
-    graft.ops.Q.clearStaged()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    SparkEntry.queries("q65_fused_event_suite")(spark, dir).collect()
-    val during = spark.sparkContext.getPersistentRDDs.keySet
-    assert((during -- before).nonEmpty, "q65 left no checkpoint to test against")
-    graft.ops.Q.clearStaged()
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
-      s"clearStaged leaked persisted RDDs: ids ${(after -- before).mkString(",")}")
+    val inputs = Seq[() => Unit](
+      () => SparkEntry.queries("q65_fused_event_suite")(spark, dir).collect(),
+      () => graft.ops.DedupOps.d02Pairs(spark, dir).collect())
+    for (run <- inputs) {
+      graft.ops.Q.clearStaged()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      run()
+      val during = spark.sparkContext.getPersistentRDDs.keySet
+      assert((during -- before).nonEmpty, "the input left no checkpoint to test against")
+      graft.ops.Q.clearStaged()
+      val after = spark.sparkContext.getPersistentRDDs.keySet
+      assert((after -- before).isEmpty,
+        s"clearStaged leaked persisted RDDs: ids ${(after -- before).mkString(",")}")
+    }
   }
 
   test("a gate query run AFTER q65 sees pristine events (fused view is scoped)") {
