@@ -469,58 +469,43 @@ object MultimodalOps {
     * Scale: state is one (owner, 64-char hash) row per DISTINCT live band
     * key ≪ corpus; per batch one band-key shuffle of the new docs only.
     * Unbounded deployments bound the registry exactly like q58 (RocksDB
-    * provider + processing-time TTL); the bounded gate run uses
-    * NoTimeout. */
+    * provider + the arrival-time TTL of [[StreamingGate.neardupHits]]);
+    * the bounded gate run uses NoTimeout. */
   private[graft] def perceptualHitsStream(
       s: SparkSession, inDir: java.nio.file.Path,
       sch: org.apache.spark.sql.types.StructType,
       provider: Option[String]): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.functions.col
-    val media = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      .select(col("doc_id"), col("text").cast("binary").as("payload"),
-        col("source"))
-    val bands = perceptualHash(s, media)
-      .selectExpr("doc_id", "ahash",
-        s"explode(transform(sequence(0, ${m06Bands - 1}), " +
-          "i -> struct(CAST(i AS BIGINT) AS bi, " +
-          "substring(ahash, i*8+1, 8) AS bv))) AS b")
-      .selectExpr("doc_id", "b.bi AS bi", "b.bv AS bv", "ahash")
-      .as[PBandRow]
-    val hits = bands.groupByKey(r => (r.bi, r.bv))
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[PBandRow],
-         st: org.apache.spark.sql.streaming.GroupState[POwner]) =>
-          val rs = rows.toSeq
-          if (st.exists) {
-            val o = st.get
-            rs.filter(r => hammingStr(r.ahash, o.ahash) <= m06MaxHam)
-              .map(_.doc_id).sorted.iterator
-              .map(id => PerceptualHit(key._1, o.owner, id))
-          } else {
-            val first = rs.minBy(_.doc_id)
-            st.update(POwner(first.doc_id, first.ahash))
-            Iterator.empty
-          }
-      }
-    val outDir = StreamingGate.tempDir("graft-m07-out").toString
-    val ckpt = StreamingGate.tempDir("graft-m07-ckpt").toString
-    graft.streaming.StateStores.withProvider(s, provider) {
-      val q = hits.toDF().writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    StreamingGate.replay(s, inDir, sch, provider) { docs =>
+      val media = docs.select(col("doc_id"),
+        col("text").cast("binary").as("payload"), col("source"))
+      perceptualHash(s, media)
+        .selectExpr("doc_id", "ahash",
+          s"explode(transform(sequence(0, ${m06Bands - 1}), " +
+            "i -> struct(CAST(i AS BIGINT) AS bi, " +
+            "substring(ahash, i*8+1, 8) AS bv))) AS b")
+        .selectExpr("doc_id", "b.bi AS bi", "b.bv AS bv", "ahash")
+        .as[PBandRow]
+        .groupByKey(r => (r.bi, r.bv))
+        .flatMapGroupsWithState(
+          org.apache.spark.sql.streaming.OutputMode.Append,
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+          (key: (Long, String), rows: Iterator[PBandRow],
+           st: org.apache.spark.sql.streaming.GroupState[POwner]) =>
+            val rs = rows.toSeq
+            if (st.exists) {
+              val o = st.get
+              rs.filter(r => hammingStr(r.ahash, o.ahash) <= m06MaxHam)
+                .map(_.doc_id).sorted.iterator
+                .map(id => PerceptualHit(key._1, o.owner, id))
+            } else {
+              val first = rs.minBy(_.doc_id)
+              st.update(POwner(first.doc_id, first.ahash))
+              Iterator.empty
+            }
+        }
     }
-    // explicit schema: a zero-hit run leaves only _spark_metadata in the
-    // sink dir, and schema inference would throw on a semantically-empty
-    // (and oracle-matching) result
-    s.read.schema(org.apache.spark.sql.Encoders.product[PerceptualHit].schema)
-      .parquet(outDir)
   }
 
   private[graft] def perceptualStream(

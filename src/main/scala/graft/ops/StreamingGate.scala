@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
@@ -52,6 +52,42 @@ object StreamingGate {
     val p = Files.createTempDirectory(prefix)
     tempDirs.add(p)
     p
+  }
+
+  /** A staged input dir as a file stream: one file per micro-batch, taken
+    * in file-mtime order (the staging helpers set the mtimes). */
+  private[graft] def fileStream(
+      s: SparkSession, inDir: Path, sch: StructType): DataFrame =
+    s.readStream.schema(sch).option("maxFilesPerTrigger", "1")
+      .parquet(inDir.toString)
+
+  /** The sink (`out/`) and checkpoint (`ckpt/`) paths of one stream run's
+    * scratch dir. */
+  private[graft] def sinkDirs(dir: Path): (String, String) =
+    (dir.resolve("out").toString, dir.resolve("ckpt").toString)
+
+  /** The one bounded-replay runner every parquet-sink gate stream ends in:
+    * `plan` turns the [[fileStream]] over `inDir` into the stream's output,
+    * which is drained into `dir`'s sink under `Trigger.AvailableNow` and
+    * the state-store `provider` ([[graft.streaming.StateStores]]), then
+    * read back with the stream's own schema, not by inference from the
+    * sink files. The streaming job runs here, at DataFrame construction;
+    * a second call on the same `dir` restarts from its checkpoint. */
+  private[graft] def replay(
+      s: SparkSession, inDir: Path, sch: StructType,
+      provider: Option[String] = None, dir: Path = tempDir("graft-stream"))(
+      plan: DataFrame => Dataset[_]): DataFrame = {
+    val out = plan(fileStream(s, inDir, sch)).toDF()
+    val (sink, ckpt) = sinkDirs(dir)
+    graft.streaming.StateStores.withProvider(s, provider) {
+      out.writeStream.format("parquet")
+        .option("path", sink).option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    s.read.schema(out.schema).parquet(sink)
   }
 
   private val SENTINEL = "__sentinel__"
@@ -129,30 +165,18 @@ object StreamingGate {
     "q42_streaming_hourly",
     (s, d) => {
       import s.implicits._
-      val sch = Q.table(s, d, "events").schema
-      val inDir = stageInput(s, d)
-      val outDir = tempDir("graft-q42-out").toString
-      val ckpt = tempDir("graft-q42-ckpt").toString
-      // maxFilesPerTrigger=1 keeps the sentinels in their own batches:
+      // one file per batch keeps the sentinels in their own batches:
       // watermark emission in Append mode is always one batch behind the
       // data that advanced it
-      val raw = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
-      // same encoding normalization as Q.events (batch side)
-      val ev = Q.normalizeTs(raw)
-      val q = ev
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window($"ts", "1 hour"), $"event_type")
-        .agg(count(lit(1)).as("n"), Q.sumd($"value").as("sum_value"))
-        .select(Q.tsStr($"window.start").as("hour"), $"event_type", $"n", $"sum_value")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outDir).where($"event_type" =!= SENTINEL)
+      replay(s, stageInput(s, d), Q.table(s, d, "events").schema) { raw =>
+        // same encoding normalization as Q.events (batch side)
+        Q.normalizeTs(raw)
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window($"ts", "1 hour"), $"event_type")
+          .agg(count(lit(1)).as("n"), Q.sumd($"value").as("sum_value"))
+          .select(Q.tsStr($"window.start").as("hour"), $"event_type", $"n",
+            $"sum_value")
+      }.where($"event_type" =!= SENTINEL)
     },
     // the batch q21 SQL verbatim — streaming and batch must agree exactly
     Some(s"""
@@ -192,17 +216,6 @@ object StreamingGate {
              count(*) AS n_events, ${Q.oSumd("value")} AS sum_value
       FROM g GROUP BY user_id, sid"""))
 
-  /** Streaming exact deduplication in the hard gate: file stream over the
-    * documents parquet → content digest → stateful `dropDuplicates` →
-    * parquet sink, `Trigger.AvailableNow`. The input is replayed as a
-    * SECOND file with `maxFilesPerTrigger=1`, so batch 2 is 100%
-    * duplicates of batch 1 — the dedup state must genuinely carry across
-    * batches (a single-batch run would prove nothing), and the distinct
-    * set is unchanged by the replay. Output is the distinct
-    * digest SET — deterministic regardless of which arrival won — so the
-    * oracle is plain batch `SELECT DISTINCT`. No watermark: the gate input
-    * is bounded; an unbounded deployment would bound the state with
-    * `dropDuplicatesWithinWatermark` instead, same plan otherwise. */
   /** q49's dedup stream, parameterized on the state-store provider (the
     * [[graft.streaming.StateStores]] seam): the gate runs the session
     * default; StreamingSpec runs the SAME pipeline under RocksDB — at
@@ -223,24 +236,22 @@ object StreamingGate {
       Files.setLastModifiedTime(replay,
         FileTime.fromMillis(System.currentTimeMillis() + 60000))
     }
-    val outDir = tempDir("graft-q49-out").toString
-    val ckpt = tempDir("graft-q49-ckpt").toString
-    graft.streaming.StateStores.withProvider(s, provider) {
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
-        .select(expr(s"md5(${Q.sNorm})").as("fp"))
-        .dropDuplicates("fp")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    replay(s, inDir, sch, provider) {
+      _.select(expr(s"md5(${Q.sNorm})").as("fp")).dropDuplicates("fp")
     }
-    s.read.parquet(outDir)
   }
 
+  /** Streaming exact deduplication in the hard gate: file stream over the
+    * documents parquet → content digest → stateful `dropDuplicates` →
+    * parquet sink, `Trigger.AvailableNow`. The input is replayed as a
+    * SECOND file with `maxFilesPerTrigger=1`, so batch 2 is 100%
+    * duplicates of batch 1 — the dedup state must genuinely carry across
+    * batches (a single-batch run would prove nothing), and the distinct
+    * set is unchanged by the replay. Output is the distinct
+    * digest SET — deterministic regardless of which arrival won — so the
+    * oracle is plain batch `SELECT DISTINCT`. No watermark: the gate input
+    * is bounded; an unbounded deployment would bound the state with
+    * `dropDuplicatesWithinWatermark` instead, same plan otherwise. */
   val q49 = QueryDef(
     "q49_streaming_dedup",
     (s, d) => dedupStream(s, d, None),
@@ -261,17 +272,16 @@ object StreamingGate {
     (s, d) => {
       import s.implicits._
       val ev = Q.events(s, d) // batch read, ns→us normalized
-      val pDir = tempDir("graft-q53-p").toString
-      val cDir = tempDir("graft-q53-c").toString
+      val pDir = tempDir("graft-q53-p")
+      val cDir = tempDir("graft-q53-c")
       ev.where($"event_type" === "purchase").coalesce(1)
-        .write.mode("overwrite").parquet(pDir)
+        .write.mode("overwrite").parquet(pDir.toString)
       // two click files => two source batches => cross-batch join state
       val clicks = ev.where($"event_type" === "click")
       clicks.where($"event_id" % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(cDir)
+        .write.mode("append").parquet(cDir.toString)
       clicks.where($"event_id" % 2 =!= 0).coalesce(1)
-        .write.mode("append").parquet(cDir)
-      val pSch = s.read.parquet(pDir).schema
+        .write.mode("append").parquet(cDir.toString)
       // Watermark delay must exceed the EVENT-TIME SPAN of the replay, not
       // a deployment-realistic lateness: batch N's late-record filter uses
       // the watermark from before batch N-1, so with a short delay a third
@@ -280,27 +290,18 @@ object StreamingGate {
       // events table spans ~1 month; 90 days keeps every possible batch
       // split correct. An unbounded deployment would use its real lateness
       // bound here — the plan is identical.
-      val purchases = s.readStream.schema(pSch).parquet(pDir)
+      val purchases = fileStream(s, pDir, ev.schema)
         .select($"event_id".as("p_id"), $"user_id".as("p_user"), $"ts".as("p_ts"))
         .withWatermark("p_ts", "90 days")
-      val clickStream = s.readStream.schema(pSch)
-        .option("maxFilesPerTrigger", "1").parquet(cDir)
-        .select($"event_id".as("c_id"), $"user_id".as("c_user"), $"ts".as("c_ts"))
-        .withWatermark("c_ts", "90 days")
-      val joined = purchases.join(clickStream,
-        expr("p_user = c_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"))
-      val outDir = tempDir("graft-q53-out").toString
-      val ckpt = tempDir("graft-q53-ckpt").toString
-      val q = joined
-        .select($"p_id", $"c_id", $"p_user".as("user_id"),
-          Q.tsStr($"p_ts").as("purchase_ts"), Q.tsStr($"c_ts").as("click_ts"))
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outDir)
+      replay(s, cDir, ev.schema) { clicks =>
+        val clickStream = clicks
+          .select($"event_id".as("c_id"), $"user_id".as("c_user"), $"ts".as("c_ts"))
+          .withWatermark("c_ts", "90 days")
+        purchases.join(clickStream,
+            expr("p_user = c_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"))
+          .select($"p_id", $"c_id", $"p_user".as("user_id"),
+            Q.tsStr($"p_ts").as("purchase_ts"), Q.tsStr($"c_ts").as("click_ts"))
+      }
     },
     Some(s"""
       WITH e AS (SELECT event_id, user_id, cast(ts as timestamp) AS ts,
@@ -312,10 +313,38 @@ object StreamingGate {
         AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts"""))
 
   /** One LSH band-key group's streaming state: the first-arriving
-    * (min-id within its batch) document owning this bucket. */
-  private[graft] case class BandRow(doc_id: Long, bj: Long, bkey: String)
+    * (min-id within its batch) document owning this bucket. A band row
+    * carries its input file's arrival time, the TTL clock. */
+  private[graft] case class BandRow(
+      doc_id: Long, bj: Long, bkey: String, arrival: java.sql.Timestamp)
   private[graft] case class BucketOwner(owner: Long)
   private[graft] case class DupHit(bj: Long, owner_doc: Long, dup_doc: Long)
+
+  /** Stage `table` into a fresh streaming input dir as two doc_id-parity
+    * batches with ordered names + mtimes and `maxFilesPerTrigger=1` on
+    * the reader — batch membership is a pure function of the DATA
+    * (batch = doc_id % 2), which is what makes a cross-batch streaming
+    * operator's output oracle-checkable. Shared by q58, m07, s11, d20,
+    * d23, q71 and d28. */
+  private[graft] def stageParityBatches(
+      s: SparkSession, d: String, table: String,
+      parity: String = "doc_id % 2"): Path = {
+    val rows = Q.table(s, d, table)
+    val inDir = tempDir(s"graft-$table-parity-in")
+    def writeBatch(par: Int, name: String, mtPlus: Long): Unit = {
+      val tmp = tempDir(s"graft-$table-parity-b")
+      rows.where(expr(parity) === par).coalesce(1)
+        .write.mode("overwrite").parquet(tmp.toString)
+      val part = parquetParts(tmp).head
+      val dest = inDir.resolve(name)
+      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dest,
+        FileTime.fromMillis(System.currentTimeMillis() + mtPlus))
+    }
+    writeBatch(0, "0_even.parquet", 0)
+    writeBatch(1, "1_odd.parquet", 60000)
+    inDir
+  }
 
   /** Streaming NEAR-duplicate suppression — the ingest-time twin of d02:
     * documents arrive in batches, each explodes into its MinHash/LSH band
@@ -341,57 +370,38 @@ object StreamingGate {
     * ≪ corpus, metadata-width); per batch one band-key shuffle of the
     * new documents only. Unbounded deployment bounds state with the
     * RocksDB provider (q49's seam) + the [[neardupHits]] `ttlMs`
-    * processing-time TTL (an expired bucket is evicted and the next
+    * arrival-time TTL (an expired bucket is evicted and the next
     * claimant re-registers as owner — StreamingSpec proves the
     * re-admission across a RocksDB restart); the gate input is bounded
     * so the gate run uses NoTimeout. */
-  /** Stage `table` into a fresh streaming input dir as two doc_id-parity
-    * batches with ordered names + mtimes and `maxFilesPerTrigger=1` on
-    * the reader — batch membership is a pure function of the DATA
-    * (batch = doc_id % 2), which is what makes a cross-batch streaming
-    * operator's output oracle-checkable. Shared by q58 and m07. */
-  private[graft] def stageParityBatches(
-      s: SparkSession, d: String, table: String,
-      parity: String = "doc_id % 2"): Path = {
-    val rows = Q.table(s, d, table)
-    val inDir = tempDir(s"graft-$table-parity-in")
-    def writeBatch(par: Int, name: String, mtPlus: Long): Unit = {
-      val tmp = tempDir(s"graft-$table-parity-b")
-      rows.where(expr(parity) === par).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = parquetParts(tmp).head
-      val dest = inDir.resolve(name)
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest,
-        FileTime.fromMillis(System.currentTimeMillis() + mtPlus))
-    }
-    writeBatch(0, "0_even.parquet", 0)
-    writeBatch(1, "1_odd.parquet", 60000)
-    inDir
-  }
-
   private[graft] def neardupStream(
-      s: SparkSession, d: String, provider: Option[String]): DataFrame = {
-      val sch = Q.table(s, d, "documents").schema
-      val inDir = stageParityBatches(s, d, "documents")
-      val outDir = tempDir("graft-q58-out").toString
-      val ckpt = tempDir("graft-q58-ckpt").toString
-      neardupHits(s, inDir, sch, provider, None, None, outDir, ckpt)
-  }
+      s: SparkSession, d: String, provider: Option[String]): DataFrame =
+    neardupHits(s, stageParityBatches(s, d, "documents"),
+      Q.table(s, d, "documents").schema, provider, None, None,
+      tempDir("graft-q58"))
 
   /** The q58 stream itself, factored out of the gate staging so the TTL
     * and restart behavior are testable: reads `inDir` as a file stream
     * (schema `sch` must carry `doc_id` + `text`), bands each document,
-    * and runs the bucket-registry FSM.
+    * and runs the bucket-registry FSM, draining into `dir` (a second
+    * call on the same `dir` restarts from its checkpoint).
     *
     * `ttlMs` is the bucket TTL — the bounded-state dial the scaladoc
-    * above promises: `Some(ms)` switches the registry to
-    * `ProcessingTimeTimeout`; a bucket unseen for `ms` is evicted on the
-    * next batch (the `hasTimedOut` path) and its next claimant registers
-    * as a fresh owner. Every touch (ownership claim OR a suppressed
-    * duplicate) re-arms the clock, so only genuinely cold buckets age
-    * out — the same keep-warm rule as the reference's capacity-bounded
-    * channel registry (`/root/reference/gasket/src/messaging.rs:384-391`).
+    * above promises — on the ARRIVAL clock: a row's event time is its
+    * input file's modification time (`_metadata.file_modification_time`,
+    * the order the staging helpers already batch by), under a zero-delay
+    * watermark. `Some(ms)` switches the registry to `EventTimeTimeout`;
+    * every touch (ownership claim OR a suppressed duplicate) re-arms the
+    * bucket at its batch's arrival + `ms`, so only genuinely cold buckets
+    * age out — the same keep-warm rule as the reference's
+    * capacity-bounded channel registry
+    * (`/root/reference/gasket/src/messaging.rs:384-391`). A bucket is
+    * evicted (the `hasTimedOut` path) once a later arrival moves the
+    * watermark past its deadline, and its next claimant registers as a
+    * fresh owner. Expiry is a function of the data, so a TTL run ends
+    * under `AvailableNow` like every other stream; Spark runs the
+    * no-data batch that evicts after the last arrival, and a later
+    * arrival file would provide it otherwise (q42's sentinel rule).
     * `None` = NoTimeout (gate runs on bounded input).
     *
     * `buckets` is an optional live-bucket-count accumulator (wire it
@@ -399,44 +409,32 @@ object StreamingGate {
     * −1 on evict, so registry growth/stall is observable the way the
     * reference exposes queue depth (`messaging.rs:281-377`). Task
     * retries can over-count (accumulator semantics) — it is telemetry,
-    * not state.
-    *
-    * Trigger choice is forced by the TTL: `ProcessingTimeTimeout` makes
-    * the stateful operator report "another batch needed" forever, so
-    * under `Trigger.AvailableNow` the query never self-terminates, and
-    * `processAllAvailable()` never returns either — every timer batch
-    * counts as batch construction, so `noNewData` is never signaled
-    * (both measured: unbounded empty batches / a 20-min hang). A TTL
-    * run therefore uses a periodic trigger, polls streaming progress
-    * until `awaitRows` input rows are consumed, sleeps `settleMs` so
-    * evictions can fire, then `stop()`s — the always-on shape of a real
-    * deployment; the bounded gate run stays on AvailableNow. */
+    * not state. */
   private[graft] def neardupHits(
-      s: SparkSession, inDir: Path,
-      sch: org.apache.spark.sql.types.StructType,
+      s: SparkSession, inDir: Path, sch: StructType,
       provider: Option[String], ttlMs: Option[Long],
       buckets: Option[org.apache.spark.util.LongAccumulator],
-      outDir: String, ckpt: String,
-      settleMs: Long = 0L, awaitRows: Long = 0L): DataFrame = {
-      graft.functions.GraftFunctions.register(s)
-      import s.implicits._
-      val k = DedupOps.minhashK
-      val rowRefs = (1 to DedupOps.minhashRows)
-        .map(i => s"CAST(element_at(sg, bj*${DedupOps.minhashRows} + $i) AS STRING)")
-        .mkString(", ")
-      val timeoutConf =
-        if (ttlMs.isDefined)
-          org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout
-        else org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout
-      val hits = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-        .selectExpr("doc_id", "shingle_set(text, 3) AS sset")
+      dir: Path): DataFrame = {
+    graft.functions.GraftFunctions.register(s)
+    import s.implicits._
+    val k = DedupOps.minhashK
+    val rowRefs = (1 to DedupOps.minhashRows)
+      .map(i => s"CAST(element_at(sg, bj*${DedupOps.minhashRows} + $i) AS STRING)")
+      .mkString(", ")
+    val timeoutConf =
+      if (ttlMs.isDefined)
+        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout
+      else org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout
+    replay(s, inDir, sch, provider, dir) {
+      _.selectExpr("doc_id", "shingle_set(text, 3) AS sset",
+          "_metadata.file_modification_time AS arrival")
+        .withWatermark("arrival", "0 seconds")
         .where("size(sset) >= 1")
-        .selectExpr("doc_id", s"minhash_sig(sset, $k) AS sg")
-        .selectExpr("doc_id", "sg",
+        .selectExpr("doc_id", s"minhash_sig(sset, $k) AS sg", "arrival")
+        .selectExpr("doc_id", "sg", "arrival",
           s"explode(sequence(0, ${DedupOps.minhashBands - 1})) AS bj")
         .selectExpr("doc_id", "CAST(bj AS BIGINT) AS bj",
-          s"concat_ws(',', $rowRefs) AS bkey")
+          s"concat_ws(',', $rowRefs) AS bkey", "arrival")
         .as[BandRow]
         .groupByKey(r => (r.bj, r.bkey))
         .flatMapGroupsWithState(
@@ -448,62 +446,21 @@ object StreamingGate {
               buckets.foreach(_.add(-1))
               Iterator.empty
             } else {
-              val ids = rows.map(_.doc_id).toSeq
+              val rs = rows.toSeq
               val out = if (st.exists) {
                 val o = st.get.owner
-                ids.sorted.iterator.map(id => DupHit(key._1, o, id))
+                rs.map(_.doc_id).sorted.iterator.map(id => DupHit(key._1, o, id))
               } else {
-                st.update(BucketOwner(ids.min))
+                st.update(BucketOwner(rs.map(_.doc_id).min))
                 buckets.foreach(_.add(1))
                 Iterator.empty
               }
-              ttlMs.foreach(st.setTimeoutDuration)
+              ttlMs.foreach(t =>
+                st.setTimeoutTimestamp(rs.map(_.arrival.getTime).max + t))
               out
             }
         }
-      graft.streaming.StateStores.withProvider(s, provider) {
-        val writer = hits.toDF()
-          .writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append")
-        if (ttlMs.isEmpty) {
-          val q = writer.trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        } else {
-          val q = writer
-            .trigger(Trigger.ProcessingTime("100 milliseconds")).start()
-          try {
-            val deadline = System.nanoTime() + 60L * 1000000000L
-            def consumed: Long =
-              q.recentProgress.map(_.numInputRows).sum
-            while (consumed < awaitRows && q.exception.isEmpty &&
-                System.nanoTime() < deadline)
-              Thread.sleep(100)
-            q.exception.foreach(throw _)
-            require(consumed >= awaitRows,
-              s"stream consumed $consumed of $awaitRows rows before deadline")
-            // settle window for evictions: sleep the requested window,
-            // then — if the caller is watching the bucket registry —
-            // keep polling (30 s cap) until every TTL-expired bucket has
-            // actually been evicted. A fixed sleep raced RocksDB snapshot
-            // maintenance under full-suite load (one aborted eviction
-            // micro-batch = a retry landing after the window), observed
-            // r16 as a 1-in-N StreamingSpec flake.
-            if (settleMs > 0) {
-              Thread.sleep(settleMs)
-              val cap = System.nanoTime() + 30L * 1000000000L
-              while (buckets.exists(_.value > 0) && q.exception.isEmpty &&
-                  System.nanoTime() < cap)
-                Thread.sleep(200)
-            }
-          } finally q.stop()
-        }
-      }
-      // explicit schema: a zero-hit run leaves only _spark_metadata in the
-      // sink dir, and schema inference would throw on a semantically-empty
-      // (and oracle-matching) result
-      s.read.schema(org.apache.spark.sql.Encoders.product[DupHit].schema)
-        .parquet(outDir)
+    }
   }
 
   val q58 = QueryDef(
@@ -533,27 +490,16 @@ object StreamingGate {
     "q64_streaming_enrich",
     (s, d) => {
       import s.implicits._
-      val sch = Q.table(s, d, "events").schema
       val inDir = tempDir("graft-q64-in")
       linkParts(d, "events", inDir)
       val cust = Q.table(s, d, "customer")
         .select($"c_custkey", $"c_nationkey", $"c_mktsegment")
-      val outDir = tempDir("graft-q64-out").toString
-      val ckpt = tempDir("graft-q64-ckpt").toString
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
-        .where($"event_type" === "purchase")
-        .select($"event_id", $"user_id", $"value")
-        .join(cust, $"user_id" === $"c_custkey")
-        .select($"event_id", $"user_id", $"value", $"c_nationkey", $"c_mktsegment")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outDir)
+      replay(s, inDir, Q.table(s, d, "events").schema) {
+        _.where($"event_type" === "purchase")
+          .select($"event_id", $"user_id", $"value")
+          .join(cust, $"user_id" === $"c_custkey")
+          .select($"event_id", $"user_id", $"value", $"c_nationkey", $"c_mktsegment")
+      }
     },
     Some("""
       SELECT e.event_id, e.user_id, e.value, c.c_nationkey, c.c_mktsegment
@@ -600,11 +546,8 @@ object StreamingGate {
       // across batches, proving genuine multi-batch operation
       val inDir = stageParityBatches(s, d, "embeddings",
         parity = "(vec_id div 100) % 2")
-      val outDir = tempDir("graft-s11-out").toString
-      val ckpt = tempDir("graft-s11-ckpt").toString
-      val q = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
+      val (outDir, ckpt) = sinkDirs(tempDir("graft-s11"))
+      val q = fileStream(s, inDir, sch)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           // the micro-batch Dataset lives in a session CLONED at stream
@@ -719,39 +662,25 @@ object StreamingGate {
     graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val W = CurationOps.W
-    val sch = Q.table(s, d, "documents").schema
-    val inDir = stageParityBatches(s, d, "documents")
-    val outDir = tempDir("graft-d20-out").toString
-    val ckpt = tempDir("graft-d20-ckpt").toString
-    val hits = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      .where("length(text) >= 1")
-      .selectExpr("doc_id", s"split(${Q.sNorm}, ' ') AS t")
-      .where(s"size(t) >= $W")
-      .selectExpr("doc_id", "t",
-        s"explode(sequence(0, size(t) - $W)) AS p")
-      .selectExpr("doc_id", "CAST(p AS BIGINT) AS p",
-        s"md5(array_join(slice(t, p + 1, $W), ' ')) AS h")
-      .as[SpanRow]
-      .groupByKey(_.h)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[SpanRow],
-         st: org.apache.spark.sql.streaming.GroupState[BucketOwner]) =>
-          spanFsm(rows, st)
-      }
-    graft.streaming.StateStores.withProvider(s, provider) {
-      val q = hits.toDF().writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.schema(org.apache.spark.sql.Encoders.product[SpanHit].schema)
-      .parquet(outDir)
-      .createOrReplaceTempView("d20_hits")
+    replay(s, stageParityBatches(s, d, "documents"),
+        Q.table(s, d, "documents").schema, provider) {
+      _.where("length(text) >= 1")
+        .selectExpr("doc_id", s"split(${Q.sNorm}, ' ') AS t")
+        .where(s"size(t) >= $W")
+        .selectExpr("doc_id", "t",
+          s"explode(sequence(0, size(t) - $W)) AS p")
+        .selectExpr("doc_id", "CAST(p AS BIGINT) AS p",
+          s"md5(array_join(slice(t, p + 1, $W), ' ')) AS h")
+        .as[SpanRow]
+        .groupByKey(_.h)
+        .flatMapGroupsWithState(
+          org.apache.spark.sql.streaming.OutputMode.Append,
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+          (_: String, rows: Iterator[SpanRow],
+           st: org.apache.spark.sql.streaming.GroupState[BucketOwner]) =>
+            spanFsm(rows, st)
+        }
+    }.createOrReplaceTempView("d20_hits")
     // batch post-pass: d19's coverage + reassembly over the LATER batch
     CurationOps.coverageTail(Q.withViews(s, d, "documents")(s"""
       WITH toks AS (SELECT doc_id, split(${Q.sNorm}, ' ') AS t
@@ -871,32 +800,19 @@ object StreamingGate {
     // the request feed: documents restricted to the tombstone rule, split
     // even-requests-then-odd-requests (rule folded into the parity expr
     // so non-tombstoned docs land in neither batch)
-    val sch = Q.table(s, d, "documents").schema
     val inDir = stageParityBatches(s, d, "documents",
       parity = "CASE WHEN doc_id % 13 = 4 THEN CAST(doc_id % 2 AS INT) ELSE -1 END")
-    val outDir = tempDir("graft-d23-out").toString
-    val ckpt = tempDir("graft-d23-ckpt").toString
-    val out = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      .select($"doc_id")
-      .join(mem, "doc_id") // unclustered requests touch no cluster row
-      .selectExpr("cluster_id", "doc_id", "CAST(doc_id % 2 AS BIGINT) AS bno")
-      .as[D23Tomb]
-      .groupByKey(_.cluster_id)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-        initialState = init)(deleteFsm _)
-    graft.streaming.StateStores.withProvider(s, provider) {
-      val q = out.toDF().writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    replay(s, inDir, Q.table(s, d, "documents").schema, provider) {
+      _.select($"doc_id")
+        .join(mem, "doc_id") // unclustered requests touch no cluster row
+        .selectExpr("cluster_id", "doc_id", "CAST(doc_id % 2 AS BIGINT) AS bno")
+        .as[D23Tomb]
+        .groupByKey(_.cluster_id)
+        .flatMapGroupsWithState(
+          org.apache.spark.sql.streaming.OutputMode.Append,
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
+          initialState = init)(deleteFsm _)
     }
-    s.read.schema(org.apache.spark.sql.Encoders.product[D23Out].schema)
-      .parquet(outDir)
   }
 
   val d23 = QueryDef(
@@ -989,40 +905,26 @@ object StreamingGate {
       s: SparkSession, d: String, provider: Option[String]): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     import s.implicits._
-    val sch = Q.table(s, d, "documents").schema
-    val inDir = stageParityBatches(s, d, "documents")
-    val outDir = tempDir("graft-q71-out").toString
-    val ckpt = tempDir("graft-q71-ckpt").toString
-    val rows = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      .where("length(text) >= 1")
-      .selectExpr("doc_id % 2 AS snap",
-        s"explode(space_token_histogram(${Q.sNorm})) AS (tok, cnt)")
-      .selectExpr("tok", "CAST(snap AS BIGINT) AS snap", "CAST(cnt AS BIGINT) AS cnt")
-      .as[DriftRow]
-      .groupByKey(_.tok)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        (tok: String, rs: Iterator[DriftRow],
-         st: org.apache.spark.sql.streaming.GroupState[DriftState]) =>
-          driftFsm(tok, rs, st)
-      }
-    graft.streaming.StateStores.withProvider(s, provider) {
-      val q = rows.toDF().writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val hits = replay(s, stageParityBatches(s, d, "documents"),
+        Q.table(s, d, "documents").schema, provider) {
+      _.where("length(text) >= 1")
+        .selectExpr("doc_id % 2 AS snap",
+          s"explode(space_token_histogram(${Q.sNorm})) AS (tok, cnt)")
+        .selectExpr("tok", "CAST(snap AS BIGINT) AS snap", "CAST(cnt AS BIGINT) AS cnt")
+        .as[DriftRow]
+        .groupByKey(_.tok)
+        .flatMapGroupsWithState(
+          org.apache.spark.sql.streaming.OutputMode.Append,
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+          (tok: String, rs: Iterator[DriftRow],
+           st: org.apache.spark.sql.streaming.GroupState[DriftState]) =>
+            driftFsm(tok, rs, st)
+        }
     }
     // alarm post-pass over the metadata-width emissions: NA = the full
     // baseline total (known after batch 0), NB = the running incoming
     // total; checkpointed leaf so the three references share one scan
-    Q.roundCheckpoint(
-      s.read.schema(org.apache.spark.sql.Encoders.product[DriftOut].schema)
-        .parquet(outDir))
-      .createOrReplaceTempView("q71_hits")
+    Q.roundCheckpoint(hits).createOrReplaceTempView("q71_hits")
     s.sql(s"""
       WITH na AS (SELECT CAST(coalesce(sum(cnt_a), 0) AS BIGINT) AS v
                   FROM q71_hits WHERE bno = 0),
@@ -1184,33 +1086,20 @@ object StreamingGate {
       .as[(Long, Seq[Long], Option[Seq[D28Edge]])]
       .map { case (cid, ms, es) => (cid, D28State(ms, es.getOrElse(Seq.empty))) }
       .groupByKey(_._1).mapValues(_._2)
-    val sch = Q.table(s, d, "embeddings").schema
     val inDir = stageParityBatches(s, d, "embeddings",
       parity = "CASE WHEN vec_id % 13 = 4 THEN CAST(vec_id % 2 AS INT) ELSE -1 END")
-    val outDir = tempDir("graft-d28-out").toString
-    val ckpt = tempDir("graft-d28-ckpt").toString
     val labKey = lab.selectExpr("vec_id", "sem_cluster_id AS cluster_id")
-    val out = s.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      .select($"vec_id")
-      .join(labKey, "vec_id")
-      .selectExpr("cluster_id", "vec_id", "CAST(vec_id % 2 AS BIGINT) AS bno")
-      .as[D28Tomb]
-      .groupByKey(_.cluster_id)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-        initialState = init)(semDeleteFsm _)
-    graft.streaming.StateStores.withProvider(s, provider) {
-      val q = out.toDF().writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    replay(s, inDir, Q.table(s, d, "embeddings").schema, provider) {
+      _.select($"vec_id")
+        .join(labKey, "vec_id")
+        .selectExpr("cluster_id", "vec_id", "CAST(vec_id % 2 AS BIGINT) AS bno")
+        .as[D28Tomb]
+        .groupByKey(_.cluster_id)
+        .flatMapGroupsWithState(
+          org.apache.spark.sql.streaming.OutputMode.Append,
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
+          initialState = init)(semDeleteFsm _)
     }
-    s.read.schema(org.apache.spark.sql.Encoders.product[D28Out].schema)
-      .parquet(outDir)
   }
 
   val d28 = QueryDef(

@@ -472,25 +472,41 @@ class StreamingSpec extends AnyFunSuite {
     assert(runWith(Some(graft.streaming.StateStores.RocksDB)) == hits)
   }
 
+  test("q64 over events with no purchase rows: 0 rows with q64's columns") {
+    val src = "/root/testdata/sf0.001"
+    val dir = graft.ops.StreamingGate.tempDir("graft-q64-empty")
+    graft.ops.Q.table(spark, src, "events").where($"event_type" =!= "purchase")
+      .write.parquet(dir.resolve("events.parquet").toString)
+    graft.ops.Q.table(spark, src, "customer")
+      .write.parquet(dir.resolve("customer.parquet").toString)
+    val out = graft.ops.StreamingGate.q64.run(spark, dir.toString)
+    assert(out.columns.toSeq ==
+      Seq("event_id", "user_id", "value", "c_nationkey", "c_mktsegment"))
+    assert(out.count() == 0)
+  }
+
   test("q58 bucket TTL: an expired bucket re-admits its key as a fresh owner (RocksDB restart)") {
-    // The bounded-state dial: run 1 (TTL = 1 ms) lets doc 1's buckets
-    // expire when the unrelated batch arrives; run 2 restarts the SAME
-    // checkpoint with a long TTL — doc 2 must re-register the expired
+    // The bounded-state dial on the arrival clock: a row's event time is
+    // its file's mtime, set here. Run 1 (TTL 30 s) lets doc 1's buckets
+    // expire once doc 99 arrives 60 s later; run 2 restarts the SAME
+    // checkpoint with a 24 h TTL — doc 2 must re-register the expired
     // buckets as the NEW owner, proven by doc 3's hits naming owner 2,
     // not 1. Texts are fixed and the MinHash pipeline is deterministic,
-    // so the band keys (and hence this test) are deterministic too.
+    // and expiry depends only on the mtimes, so nothing here waits on a
+    // wall clock.
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, StandardCopyOption}
     import java.nio.file.attribute.FileTime
+    import graft.ops.StreamingGate.tempDir
     val sch = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val inDir = Files.createTempDirectory("graft-ttl-in")
-    val outDir = Files.createTempDirectory("graft-ttl-out").toString
-    val ckpt = Files.createTempDirectory("graft-ttl-ckpt").toString
+    val inDir = tempDir("graft-ttl-in")
+    val dir = tempDir("graft-ttl")
+    val t0 = System.currentTimeMillis()
     val textT = "the quick brown fox jumps over the lazy dog again and again"
     val textU = "completely different content describing distributed state stores"
-    def writeFile(name: String, rows: Seq[(Long, String)], mtPlus: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-ttl-b")
+    def writeFile(name: String, rows: Seq[(Long, String)], arrivalS: Long): Unit = {
+      val tmp = tempDir("graft-ttl-b")
       spark.createDataFrame(rows).toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       val st = Files.list(tmp)
@@ -498,40 +514,40 @@ class StreamingSpec extends AnyFunSuite {
         .findFirst().get() finally st.close()
       val dest = inDir.resolve(name)
       Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest,
-        FileTime.fromMillis(System.currentTimeMillis() + mtPlus))
+      Files.setLastModifiedTime(dest, FileTime.fromMillis(t0 + arrivalS * 1000L))
     }
+    val bands = graft.ops.DedupOps.minhashBands.toLong
     val reg = new graft.runtime.Registry
     val acc = reg.sparkCounter(spark, "q58_bucket_registry_size")
+    def live: Long = reg.readings()("accum.q58_bucket_registry_size")
     val rocks = Some(graft.streaming.StateStores.RocksDB)
-    // run 1 (TTL 1 ms, 2 s settle): doc 1 and doc 99 claim their buckets,
-    // then every bucket ages out during the settle window and is evicted
+    // run 1 (TTL 30 s): doc 1 (arrives at 0 s, deadline 30 s) and doc 99
+    // (60 s, deadline 90 s) claim their buckets; doc 99's arrival moves
+    // the watermark to 60 s, which evicts every bucket of doc 1
     writeFile("0_a.parquet", Seq((1L, textT)), 0)
-    writeFile("1_b.parquet", Seq((99L, textU)), 60000)
+    writeFile("1_b.parquet", Seq((99L, textU)), 60)
     val r1 = graft.ops.StreamingGate.neardupHits(
-      spark, inDir, sch, rocks, Some(1L), Some(acc), outDir, ckpt,
-      settleMs = 2000L, awaitRows = 2L)
+      spark, inDir, sch, rocks, Some(30000L), Some(acc), dir)
     assert(r1.count() == 0, "no collisions exist in run 1; hits mean a bug")
-    assert(reg.readings()("accum.q58_bucket_registry_size") == 0L,
-      s"buckets not evicted after TTL: ${acc.value} still registered")
-    // run 2 (same checkpoint, TTL 24 h): doc 2 re-registers T's expired
-    // buckets, doc 3 collides with the NEW owner
-    writeFile("2_c.parquet", Seq((2L, textT)), 120000)
-    writeFile("3_d.parquet", Seq((3L, textT)), 180000)
+    assert(live == bands,
+      s"$live buckets live after run 1; want doc 99's $bands (doc 1's evicted)")
+    // run 2 (same checkpoint, TTL 24 h): doc 2 (120 s) re-registers T's
+    // expired buckets, doc 3 (180 s) collides with the NEW owner in every
+    // band, and doc 99's buckets expire (deadline 90 s < watermark 120 s)
+    writeFile("2_c.parquet", Seq((2L, textT)), 120)
+    writeFile("3_d.parquet", Seq((3L, textT)), 180)
     val hits = graft.ops.StreamingGate.neardupHits(
-        spark, inDir, sch, rocks, Some(86400000L), Some(acc), outDir, ckpt,
-        awaitRows = 2L)
+        spark, inDir, sch, rocks, Some(86400000L), Some(acc), dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(hits.nonEmpty, "doc 3 must collide with the re-admitted bucket")
+    assert(hits.map(_._1).sorted == (0L until bands),
+      s"doc 3 must hit once per band: $hits")
     hits.foreach { case (_, owner, dup) =>
       assert(owner == 2L, s"owner $owner — expired bucket did NOT re-admit doc 2")
       assert(dup == 3L, s"unexpected dup $dup")
     }
     // live-bucket telemetry (SURVEY §2.1 #24): doc 2's re-registered
-    // buckets are the only live ones after the run-1 evictions
-    assert(reg.readings()("accum.q58_bucket_registry_size") ==
-      graft.ops.DedupOps.minhashBands.toLong,
-      s"bucket count ${acc.value} — register/evict accounting drifted")
+    // buckets are the only live ones after both runs' evictions
+    assert(live == bands, s"bucket count $live — register/evict accounting drifted")
   }
 
   test("RocksDB provider is genuinely engaged (progress metrics prove it)") {
