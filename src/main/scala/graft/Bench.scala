@@ -112,50 +112,34 @@ object Bench {
     // "final" artifact self-recorded loadavg 6.78 with the calibration job
     // +69% over the same round's quiet-machine baseline — a loaded run
     // silently became the round's headline. The bench now defends itself:
-    // any run whose fixed calibration job drifts >25% off the committed
-    // quiet reference is STAMPED "load_suspect":true in the artifact
-    // itself, so a noisy run can never masquerade as a clean baseline.
-    // The reference resolves from (in order): -Dgraft.bench.calibRef, a
-    // committed per-host calibration file (tools/bench_calib.json — keyed
-    // so a new host gets a loud "uncalibrated" stamp instead of silently
-    // inheriting another machine's constant, round-15 advice), then the
-    // historical in-code constant as a last resort. The artifact stamps
-    // WHERE the reference came from so a reader can tell a calibrated
-    // verdict from an inherited one.
+    // any run whose fixed calibration job drifts >25% off the quiet
+    // reference of THIS host shape, or that starts on a busy machine, is
+    // STAMPED "load_suspect":true in the artifact itself, so a noisy run
+    // can never masquerade as a clean baseline (see calibRef, loadSuspect).
+    val nproc = Runtime.getRuntime.availableProcessors
+    val calibFile = try {
+      Some(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(repoRoot, "tools", "bench_calib.json")),
+        java.nio.charset.StandardCharsets.UTF_8))
+    } catch { case _: java.io.IOException => None }
     val (calibQuietRef, calibRefSource) =
-      sys.props.get("graft.bench.calibRef")
-        .map(v => (v.toDouble, "prop")) getOrElse {
-        val f = java.nio.file.Paths.get(repoRoot, "tools", "bench_calib.json")
-        val fromFile = try {
-          val txt = new String(java.nio.file.Files.readAllBytes(f),
-            java.nio.charset.StandardCharsets.UTF_8)
-          // single-purpose parse: {"calib_ref": <double>, ...}
-          val m = java.util.regex.Pattern
-            .compile(""""calib_ref"\s*:\s*([0-9.]+)""").matcher(txt)
-          if (m.find()) Some(m.group(1).toDouble) else None
-        } catch { case _: Throwable => None }
-        fromFile.map(v => (v, "file"))
-          .getOrElse((0.43, "default_unverified"))
-      }
-    val calibDrift = calibSec / calibQuietRef - 1.0
-    // Suspect when EITHER signal fires: calib drift >25% of the quiet
-    // reference, OR the machine was demonstrably busy at start (r15's
-    // committed pin carried loadavg 8.29 with an in-guard calib — exactly
-    // the ambiguity the stamp exists to kill; loadavg > 4 on this 32-core
-    // box means several concurrent JVMs, not background hum).
-    val loadSuspect = calibDrift > 0.25 || loadavg1m > 4.0
-    if (loadSuspect) System.err.println(String.format(java.util.Locale.ROOT,
-      "[bench] WARNING: calibration %.3f s (%.0f%% over the quiet " +
-        "reference %.2f s) at loadavg %.2f — artifact stamped load_suspect",
-      Double.box(calibSec), Double.box(calibDrift * 100),
-      Double.box(calibQuietRef), Double.box(loadavg1m)))
+      calibRef(sys.props.get("graft.bench.calibRef"), calibFile, nproc)
+    val calibDrift = calibQuietRef.map(calibSec / _ - 1.0)
+    val suspect = loadSuspect(calibDrift, loadavg1m, nproc)
+    if (suspect) System.err.println(String.format(java.util.Locale.ROOT,
+      "[bench] WARNING: calibration %.3f s against the quiet reference %s " +
+        "(%s) at loadavg %.2f on %d cores — artifact stamped load_suspect",
+      Double.box(calibSec), calibQuietRef.fold("none")(r => f"$r%.2f s"), calibRefSource,
+      Double.box(loadavg1m), Int.box(nproc)))
+    def num(v: Option[Double], digits: Int): String =
+      v.fold("null")(x => String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(x)))
     val calib = String.format(java.util.Locale.ROOT,
-      """"loadavg1m":%.2f,"calib_sec":%.4f,"calib_ref":%.4f,"calib_ref_source":"%s","calib_drift":%.3f,"load_suspect":%b""",
-      Double.box(loadavg1m), Double.box(calibSec), Double.box(calibQuietRef),
-      calibRefSource, Double.box(calibDrift), Boolean.box(loadSuspect))
+      """"loadavg1m":%.2f,"calib_sec":%.4f,"calib_ref":%s,"calib_ref_source":"%s","calib_drift":%s,"load_suspect":%b""",
+      Double.box(loadavg1m), Double.box(calibSec), num(calibQuietRef, 4),
+      calibRefSource, num(calibDrift, 3), Boolean.box(suspect))
     val host = String.format(java.util.Locale.ROOT,
       """"nproc":%d,"cpus":"%s","heap_mb":%d,"git_head":"%s","full_run":%b""",
-      Int.box(Runtime.getRuntime.availableProcessors),
+      Int.box(nproc),
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
       Long.box(Runtime.getRuntime.maxMemory >> 20), gitHead(repoRoot),
       Boolean.box(args.isEmpty))
@@ -175,6 +159,39 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** The 1-min load average above which a run is stamped `load_suspect`:
+    * one eighth of the cores, which is the 4.0 the 32-core host has always
+    * used (the round-15 pin at loadavg 8.29 and r17's 8.80 stay suspect).
+    * Never below 1.5: an sbt launch on an idle 4-core box leaves its own
+    * 0.8 behind when Bench starts, and 4 / 8 = 0.5 would stamp every run
+    * there. */
+  private[graft] def loadGuard(cpus: Int): Double = math.max(1.5, cpus / 8.0)
+
+  /** The quiet calibration reference and where it came from:
+    * `-Dgraft.bench.calibRef` ("prop"), else `calibFile`'s `calib_ref` when
+    * the `cpus` stamped beside it is this host's count ("file"), else none
+    * ("uncalibrated"): a reference timed on another host shape says
+    * nothing about this one. `calibFile` is the text of
+    * `tools/bench_calib.json`, when it exists. */
+  private[graft] def calibRef(prop: Option[String], calibFile: Option[String],
+      cpus: Int): (Option[Double], String) =
+    prop.map(v => (Option(v.toDouble), "prop")).getOrElse {
+      def field(name: String): Option[Double] = calibFile.flatMap { txt =>
+        val m = java.util.regex.Pattern
+          .compile("\"" + name + "\"\\s*:\\s*([0-9.]+)").matcher(txt)
+        if (m.find()) Some(m.group(1).toDouble) else None
+      }
+      val ref = for { c <- field("cpus") if c == cpus; r <- field("calib_ref") } yield r
+      ref.fold((Option.empty[Double], "uncalibrated"))(r => (Some(r), "file"))
+    }
+
+  /** Whether a run is stamped `load_suspect`: its calibration job ran more
+    * than 25 % over the quiet reference (when there is one), or the load
+    * average at start exceeded [[loadGuard]]. */
+  private[graft] def loadSuspect(calibDrift: Option[Double], loadavg1m: Double,
+      cpus: Int): Boolean =
+    calibDrift.exists(_ > 0.25) || loadavg1m > loadGuard(cpus)
 
   /** Where a bench run writes its metric line. Every run writes the side
     * file (`SPARK_GRAFT_BENCH_OUT`, default `/tmp/bench_out.json`). Only a

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** Session-extension entry point: registers graft's native functions and
-  * the [[graft.plans.PackedKeySort]] query-stage preparation rule at session
+  * the [[graft.plans.PackedKeySort]] and [[graft.plans.RunningWindow]]
+  * query-stage preparation rules at session
   * build time (`spark.sql.extensions=graft.functions.GraftExtensions` or
   * `.withExtensions(new GraftExtensions)`, as `graft.Sessions.builder`
   * does). [[GraftFunctions.register]] installs the SAME function builder
@@ -15,6 +16,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.all.foreach(e.injectFunction)
     e.injectQueryStagePrepRule(_ => graft.plans.PackedKeySort)
+    e.injectQueryStagePrepRule(_ => graft.plans.RunningWindow)
   }
 }
 

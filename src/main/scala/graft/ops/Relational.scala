@@ -265,12 +265,20 @@ object Relational {
       WHERE rn <= 3"""))
 
   // ---------------------------------------------------------------- q08
-  /** Frame windows: running sum (decimal-exact) + lag. The driver's
+  /** Frame windows: running sum + lag. The driver's
     * synthetic lineitem does NOT have unique (l_orderkey, l_linenumber) —
     * ~118k duplicate key groups at sf0.1 — so l_quantity closes the sort:
     * rows tying on all four keys carry equal quantity, making lag/sum
     * value-deterministic under any shuffle order (caught by the sf0.1
-    * oracle sweep: 3/600k rows flipped prev_qty between engines). */
+    * oracle sweep: 3/600k rows flipped prev_qty between engines).
+    *
+    * The engine sums on a long ([[Q.sumLong6]], quantities scaled by 10⁶)
+    * where the oracle sums `decimal(18,6)`; `l_quantity` holds integers
+    * 1–50, so both are the same exact value and the one division by 10⁶
+    * gives the same double the decimal cast does. A quantity of at most
+    * 50 overflows the long only past about 1.8·10¹¹ rows per supplier,
+    * and ANSI mode (on by default in Spark 4) makes an overflow throw
+    * rather than wrap. */
   val q08 = QueryDef(
     "q08_running_totals",
     (s, d) => {
@@ -279,9 +287,9 @@ object Relational {
         .orderBy($"l_shipdate", $"l_orderkey", $"l_linenumber", $"l_quantity")
       li(s, d)
         .withColumn("running_qty",
-          sum($"l_quantity".cast(D6))
+          sumLong6($"l_quantity")
             .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double"))
+            .cast("double") / lit(1e6))
         .withColumn("prev_qty", lag($"l_quantity", 1).over(w))
         .select($"l_suppkey", $"l_orderkey", $"l_linenumber",
           $"l_quantity", $"running_qty", $"prev_qty")

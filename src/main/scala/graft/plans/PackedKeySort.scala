@@ -2,17 +2,19 @@ package graft.plans
 
 import java.util.concurrent.TimeUnit.NANOSECONDS
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, NullsFirst, RowOrdering, SortOrder, SortPrefix, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalescedPartitionSpec, GraftSorterBridge, PartialReducerPartitionSpec, SortExec, SortPrefixUtils, SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, GraftSorterBridge, PartialReducerPartitionSpec, SortExec, SortPrefixUtils, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.collection.unsafe.sort.{UnsafeExternalSorter, UnsafeSorterIterator}
+import org.apache.spark.util.collection.unsafe.sort.{RecordComparator, UnsafeExternalSorter, UnsafeSorterIterator}
 
 /** Multi-key sort on a packed, order-preserving 64-bit prefix.
   *
@@ -36,9 +38,11 @@ import org.apache.spark.util.collection.unsafe.sort.{UnsafeExternalSorter, Unsaf
   * the sorter spill where `SortExec` does not.
   *
   * Memory stays bounded: a run of equal prefixes longer than
-  * [[PackedKeySortExec.MaxTieRows]] goes to a stock, spillable TimSort
-  * sorter. Spilled radix runs merge by prefix, so equal-prefix runs stay
-  * contiguous and the same pass orders them.
+  * [[PackedKeySortExec.MaxTieRows]] goes to a spillable TimSort sorter
+  * on the full ordering, configured as `SortExec`'s. Spilled radix runs
+  * merge by prefix, so equal-prefix runs stay contiguous and the same
+  * pass orders them. `spillSize` counts what every sorter spills over
+  * its whole life, including spills forced while its output is read.
   *
   * [[PackedKeySort]] installs the operator as a query-stage preparation
   * rule, so it applies wherever adaptive execution plans the query; plans
@@ -71,23 +75,26 @@ final case class PackedKeySortExec(
     val spillSize = longMetric("spillSize")
     val expected = PackedKeySortExec.expectedRows(child)
     child.execute().mapPartitionsWithIndex({ (part, iter) =>
-      val taskMetrics = TaskContext.get().taskMetrics()
-      // sort time, peak memory and spill of one sorter's fill and sort,
-      // as SortExec counts them
-      def counted[T](sortNanos: => Long, peak: => Long)(sort: => T): T = {
-        val spilledBefore = taskMetrics.memoryBytesSpilled
+      // spill over each sorter's whole life: a sorter spills while it is
+      // filled, and again while its output is read whenever an operator
+      // above asks for memory it holds
+      val sorters = ArrayBuffer.empty[UnsafeExternalSorter]
+      TaskContext.get().addTaskCompletionListener[Unit](_ => spillSize += sorters.map(_.getSpillSize).sum)
+      // sort time and peak memory of one sorter's fill and sort, as
+      // SortExec counts them
+      def counted[T](sorter: UnsafeExternalSorter)(sort: => T): T = {
+        sorters += sorter
         val sorted = sort
-        sortTime += NANOSECONDS.toMillis(sortNanos)
-        peakMemory += peak
-        spillSize += taskMetrics.memoryBytesSpilled - spilledBefore
-        GraftSorterBridge.incPeakExecutionMemory(peak)
+        sortTime += NANOSECONDS.toMillis(sorter.getSortTimeNanos)
+        peakMemory += sorter.getPeakMemoryUsedBytes
+        GraftSorterBridge.incPeakExecutionMemory(sorter.getPeakMemoryUsedBytes)
         sorted
       }
       val packer = new KeyPacker(sortOrder, output)
       val pageSize = SparkEnv.get.memoryManager.pageSizeBytes
       val sorter = GraftSorterBridge.radixSorter(
         PackedKeySortExec.pointerSlots(expected.flatMap(_.lift(part))), pageSize)
-      val radixSorted = counted(sorter.getSortTimeNanos, sorter.getPeakMemoryUsedBytes) {
+      val radixSorted = counted(sorter) {
         var inserted = 0L
         while (iter.hasNext) {
           val row = iter.next().asInstanceOf[UnsafeRow]
@@ -98,29 +105,26 @@ final case class PackedKeySortExec(
         }
         sorter.getSortedIterator
       }
-      // stock sorter for one over-long equal-prefix run, prefixed on the
-      // first key the packed prefix leaves open
-      def stockSorter(open: Int): UnsafeExternalRowSorter = {
+      // a stock sorter for one over-long equal-prefix run: the full
+      // ordering, prefixed on the first key the packed prefix leaves open
+      def sortOverflow(open: Int)(fill: (UnsafeRow => Unit) => Unit): Iterator[InternalRow] = {
         val head = BindReferences.bindReference(sortOrder(open), output)
         val prefixExpr = SortPrefix(head)
         val prefixProj = UnsafeProjection.create(Seq(prefixExpr))
-        UnsafeExternalRowSorter.create(
-          schema, RowOrdering.create(sortOrder, output),
+        val ordering = RowOrdering.create(sortOrder, output)
+        val s = GraftSorterBridge.sorter(() => new RowComparator(ordering, output.length),
           SortPrefixUtils.getPrefixComparator(head),
-          new UnsafeExternalRowSorter.PrefixComputer {
-            private val p = new UnsafeExternalRowSorter.PrefixComputer.Prefix
-            override def computePrefix(row: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
-              val k = prefixProj(row)
-              p.isNull = k.isNullAt(0)
-              p.value = if (p.isNull) prefixExpr.nullValue else k.getLong(0)
-              p
-            }
-          }, pageSize,
-          open == sortOrder.length - 1 && SortPrefixUtils.canSortFullyWithPrefix(head))
-      }
-      def sortOverflow(open: Int)(fill: UnsafeExternalRowSorter => Unit): Iterator[InternalRow] = {
-        val s = stockSorter(open)
-        counted(s.getSortTimeNanos, s.getPeakMemoryUsage) { fill(s); s.sort() }
+          open == sortOrder.length - 1 && SortPrefixUtils.canSortFullyWithPrefix(head),
+          GraftSorterBridge.DefaultInitialSize, pageSize)
+        counted(s) {
+          fill { row =>
+            val k = prefixProj(row)
+            val isNull = k.isNullAt(0)
+            s.insertRecord(row.getBaseObject, row.getBaseOffset, row.getSizeInBytes,
+              if (isNull) prefixExpr.nullValue else k.getLong(0), isNull)
+          }
+          new SortedRows(s, output.length)
+        }
       }
       new TieRunIterator(sorter, radixSorted, packer, RowOrdering.create(sortOrder, output),
         output.length, sortOverflow)
@@ -287,7 +291,7 @@ private[graft] object KeyPacker {
 /** The streaming pass: reads rows in packed-prefix order and emits every
   * run of equal prefixes in full sort order. A run is copied and sorted
   * in memory up to [[PackedKeySortExec.MaxTieRows]] rows; a longer one is
-  * fed to a stock spillable sorter. A single-row run is emitted from a
+  * fed to a spillable sorter. A single-row run is emitted from a
   * reused holder, valid until the next call, as Spark's row contract
   * allows. The radix sorter's memory is released once it is drained. */
 private[plans] final class TieRunIterator(
@@ -296,7 +300,7 @@ private[plans] final class TieRunIterator(
     packer: KeyPacker,
     ordering: Ordering[InternalRow],
     numFields: Int,
-    sortOverflow: Int => (UnsafeExternalRowSorter => Unit) => Iterator[InternalRow])
+    sortOverflow: Int => ((UnsafeRow => Unit) => Unit) => Iterator[InternalRow])
   extends Iterator[InternalRow] {
   import PackedKeySortExec.MaxTieRows
 
@@ -356,15 +360,49 @@ private[plans] final class TieRunIterator(
         advance()
       }
       if (hasAhead && aheadKey == key) {
-        overflow = sortOverflow(open) { s =>
+        overflow = sortOverflow(open) { insert =>
           var i = 0
-          while (i < len) { s.insertRow(run(i).asInstanceOf[UnsafeRow]); run(i) = null; i += 1 }
-          while (hasAhead && aheadKey == key) { s.insertRow(ahead); advance() }
+          while (i < len) { insert(run(i).asInstanceOf[UnsafeRow]); run(i) = null; i += 1 }
+          while (hasAhead && aheadKey == key) { insert(ahead); advance() }
         }
         len = 0
       } else if (len > 1) {
         java.util.Arrays.sort(run, 0, len, ordering)
       }
     }
+  }
+}
+
+/** Orders two records as `ordering` orders the rows they hold. */
+private[plans] final class RowComparator(ordering: Ordering[InternalRow], numFields: Int)
+  extends RecordComparator {
+  private val left = new UnsafeRow(numFields)
+  private val right = new UnsafeRow(numFields)
+
+  override def compare(l: AnyRef, lOff: Long, lLen: Int, r: AnyRef, rOff: Long, rLen: Int): Int = {
+    left.pointTo(l, lOff, lLen)
+    right.pointTo(r, rOff, rLen)
+    ordering.compare(left, right)
+  }
+}
+
+/** The sorted rows of `sorter`, each valid until the next call. The last
+  * row is copied before the sorter's memory is released. */
+private[plans] final class SortedRows(sorter: UnsafeExternalSorter, numFields: Int)
+  extends Iterator[InternalRow] {
+  private val sorted = sorter.getSortedIterator
+  private var row = new UnsafeRow(numFields)
+  if (!sorted.hasNext) sorter.cleanupResources()
+
+  override def hasNext: Boolean = sorted.hasNext
+
+  override def next(): InternalRow = {
+    sorted.loadNext()
+    row.pointTo(sorted.getBaseObject, sorted.getBaseOffset, sorted.getRecordLength)
+    if (!sorted.hasNext) {
+      row = row.copy()
+      sorter.cleanupResources()
+    }
+    row
   }
 }

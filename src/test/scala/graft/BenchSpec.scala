@@ -4,8 +4,9 @@ import java.nio.file.Paths
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Which files a `graft.Bench` run writes: a query-filtered run must never
-  * replace the committed full-suite `BENCH_SELF.json`. */
+/** Which files a `graft.Bench` run writes — a query-filtered run must never
+  * replace the committed full-suite `BENCH_SELF.json` — and which quiet
+  * reference and load guard stamp its `load_suspect`. */
 class BenchSpec extends AnyFunSuite {
   private val root = "/repo"
 
@@ -23,5 +24,23 @@ class BenchSpec extends AnyFunSuite {
     val env = Map("SPARK_GRAFT_BENCH_OUT" -> "/tmp/x.json")
     assert(Bench.outputFiles(Seq("q08_running_totals"), env, root) ==
       Seq(Paths.get("/tmp/x.json")))
+  }
+
+  private val calib32 = Some("""{"host": "x", "cpus": 32, "calib_ref": 0.46}""")
+
+  test("the calibration file is read only on a host with its stamped cpu count") {
+    assert(Bench.calibRef(None, calib32, 32) == ((Some(0.46), "file")))
+    assert(Bench.calibRef(None, calib32, 4) == ((None, "uncalibrated")))
+    assert(Bench.calibRef(None, Some("""{"calib_ref": 0.46}"""), 32) == ((None, "uncalibrated")))
+    assert(Bench.calibRef(None, None, 4) == ((None, "uncalibrated")))
+    assert(Bench.calibRef(Some("1.5"), calib32, 4) == ((Some(1.5), "prop")))
+  }
+
+  test("the load guard scales with the core count; no reference, no drift verdict") {
+    assert(Bench.loadGuard(32) == 4.0 && Bench.loadGuard(4) == 1.5)
+    // r17's start at loadavg 8.80 on 32 cores stays suspect
+    assert(!Bench.loadSuspect(None, 3.9, 32) && Bench.loadSuspect(None, 8.80, 32))
+    assert(!Bench.loadSuspect(None, 0.81, 4) && Bench.loadSuspect(None, 1.6, 4))
+    assert(Bench.loadSuspect(Some(0.3), 0.0, 4) && !Bench.loadSuspect(Some(0.2), 0.0, 4))
   }
 }

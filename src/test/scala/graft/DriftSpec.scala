@@ -12,7 +12,7 @@ class DriftSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def plant(rows: Seq[(Long, String)]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q70").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-q70").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("src0"))

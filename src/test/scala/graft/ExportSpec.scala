@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,7 +43,7 @@ class ExportSpec extends AnyFunSuite {
   }
 
   test("writeShards: per-shard directories, file row order = training order") {
-    val out = Files.createTempDirectory("graft-shards").toString
+    val out = graft.ops.StreamingGate.tempDir("graft-shards").toString
     graft.ops.ExportOps.writeShards(spark, dir, out)
     val manifest = graft.ops.ExportOps.q56.run(spark, dir)
     val back = spark.read.parquet(out)

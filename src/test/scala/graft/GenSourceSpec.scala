@@ -61,8 +61,8 @@ class GenSourceSpec extends AnyFunSuite {
   }
 
   test("streaming restart resumes from committed offset (no replay, no loss)") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-gen-ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-gen-out").toString
+    val ckpt = graft.ops.StreamingGate.tempDir("graft-gen-ckpt").toString
+    val out = graft.ops.StreamingGate.tempDir("graft-gen-out").toString
     def start() = spark.readStream.format("graft-gen")
       .option("rows", "100").option("rowsPerBatch", "40")
       .option("partitions", "2").load()

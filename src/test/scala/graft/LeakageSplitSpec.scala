@@ -13,7 +13,7 @@ class LeakageSplitSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def plant(rows: Seq[(Long, String)]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-d26").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-d26").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -14,7 +14,7 @@ class LshAuditSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def plant(rows: Seq[(Long, String)]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-d25").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-d25").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -12,7 +12,7 @@ class MemorizedNgramsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def plant(rows: Seq[(Long, String)]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-t20").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-t20").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -96,6 +96,26 @@ object PackedKeySortSpec extends Properties("PackedKeySort") {
         rows, 1, spill, anyTieOrder = spill > 0)
     }
 
+  property("a spill forced while the output is read counts in spillSize") =
+    once {
+      TestSpark.spark
+      val order = Seq(SortOrder(attr("i"), Ascending), SortOrder(attr("id"), Ascending))
+      val rows = genRows(20000, 20000).pureApply(Gen.Parameters.default, Seed(5))
+      val child = RowsExec(attrs, rows.map(unsafe), 1)
+      val exec = PackedKeySortExec(order, global = false, child)
+      // read 100 rows, then ask for more memory than the task can get,
+      // which spills the sorter mid-read, and read the rest back
+      val read = exec.execute().mapPartitions { it =>
+        val head = it.take(100).map(_.copy()).toVector
+        org.apache.spark.memory.MemoryHog.spillTask()
+        head.iterator ++ it.map(_.copy())
+      }.map(_.asInstanceOf[UnsafeRow]).collect().toSeq
+      val want = run(SortExec(order, global = false, child))
+      Seq(
+        Option.when(read != want)("output differs from SortExec after the spill"),
+        Option.when(exec.metrics("spillSize").value <= 0)("spillSize missed the read-time spill"))
+    }
+
   property("the pointer array is sized from the expected rows") =
     once {
       import PackedKeySortExec.pointerSlots
@@ -173,7 +193,7 @@ private object PackedKeySortFixture {
       sparkContext.parallelize(rows, parts).map(r => r: InternalRow)
   }
 
-  private def run(plan: SparkPlan): Seq[UnsafeRow] =
+  def run(plan: SparkPlan): Seq[UnsafeRow] =
     plan.execute().map(_.asInstanceOf[UnsafeRow].copy()).collect().toSeq
 
   /** None when the operator's output equals SortExec's row for row, else

@@ -15,7 +15,7 @@ class PageRankSpec extends AnyFunSuite {
     (0 until 8).map(i => s"u$tag$i").mkString(" ")
 
   private def plant(rows: Seq[(Long, String, String)]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q69").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-q69").toString
     rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length($"text").cast("long"))

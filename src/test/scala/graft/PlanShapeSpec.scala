@@ -27,7 +27,7 @@ class PlanShapeSpec extends AnyFunSuite {
   import org.apache.spark.sql.execution.SparkPlan
   import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-  import org.apache.spark.sql.execution.window.WindowExec
+  import org.apache.spark.sql.execution.window.{WindowExec, WindowExecBase}
 
   /** Every node of the pre-execution physical plan (AQE unwrapped). */
   private def nodes(name: String): Seq[SparkPlan] =
@@ -46,7 +46,7 @@ class PlanShapeSpec extends AnyFunSuite {
     * least (lang, blk) — a window partitioned by lang alone puts a whole
     * language's rows into ONE task and is the scale-killer shape. */
   private def assertBlockedPackingWindows(name: String): Unit = {
-    val ws = nodes(name).collect { case w: WindowExec => w }
+    val ws = nodes(name).collect { case w: WindowExecBase => w }
     assert(ws.nonEmpty, s"$name lost its packing window")
     val docOrdered = ws.filter(_.orderSpec.map(_.child).exists {
       case a: AttributeReference => a.name == "doc_id"
@@ -105,7 +105,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // per-vec_id exchange — the N·k explosion this family was built to
     // avoid — and a WindowExec reappears here
     for (n <- Seq("d16_semantic_dedup", "s05_kmeans_update")) {
-      val ws = deepNodes(n).collect { case w: WindowExec => w }
+      val ws = deepNodes(n).collect { case w: WindowExecBase => w }
       assert(ws.isEmpty, s"$n grew a window: ${ws.map(_.simpleStringWithNodeId())}")
       val evals = deepNodes(n)
         .flatMap(_.expressions)
@@ -418,14 +418,16 @@ class PlanShapeSpec extends AnyFunSuite {
 
   // -- packed-key sorts (graft.plans.PackedKeySort) ------------------------
 
-  import graft.plans.PackedKeySortExec
+  import graft.plans.{PackedKeySortExec, RunningWindowExec}
   import org.apache.spark.sql.execution.SortExec
 
   /** Every window is fed by a packed-key sort (directly or through the
     * projections and windows stacked on it), with no stock multi-key sort
     * below; returns the windows. */
-  private def windowsOnPackedSorts(name: String): Seq[WindowExec] = {
-    val ws = nodes(name).collect { case w: WindowExec => w }
+  /** Every window of `name`, stock or [[graft.plans.RunningWindowExec]],
+    * must read a packed-key sort. */
+  private def windowsOnPackedSorts(name: String): Seq[WindowExecBase] = {
+    val ws = nodes(name).collect { case w: WindowExecBase => w }
     assert(ws.nonEmpty, s"$name lost its window")
     ws.foreach { w =>
       assert(w.exists(_.isInstanceOf[PackedKeySortExec]), s"$name: no PackedKeySort under\n$w")
@@ -437,7 +439,25 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q08 window sorts on the packed (l_suppkey, l_shipdate) prefix") {
     val ws = windowsOnPackedSorts("q08_running_totals")
-    assert(ws.forall(_.child.isInstanceOf[PackedKeySortExec]), ws.mkString("\n"))
+    assert(ws.forall(w => w.isInstanceOf[RunningWindowExec] &&
+      w.child.isInstanceOf[PackedKeySortExec]), ws.mkString("\n"))
+  }
+
+  test("lead, RANGE-frame, ntile and long-lag windows stay WindowExec; running ones stream") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val df = spark.range(200).select((col("id") % 7).as("k"), (col("id") % 11).as("o"),
+      col("id").as("v"))
+    val w = Window.partitionBy("k").orderBy("o")
+    def window(c: org.apache.spark.sql.Column): Seq[Class[_]] =
+      planNodes(df.select(col("*"), c.as("w"))).collect { case w: WindowExecBase => w.getClass }
+    for (c <- Seq(lead("v", 1).over(w), sum("v").over(w), ntile(3).over(w),
+        sum("v").over(w.rowsBetween(-2, 0)), lag("v", -1).over(w),
+        lag("v", RunningWindowExec.MaxLag + 1).over(w)))
+      assert(window(c) == Seq(classOf[WindowExec]), c)
+    for (c <- Seq(sum("v").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        lag("v", 2, 0L).over(w), lag("v", RunningWindowExec.MaxLag).over(w), rank().over(w)))
+      assert(window(c) == Seq(classOf[RunningWindowExec]), c)
   }
 
   test("q60 running-min windows keep the packed-key sort") {

@@ -432,7 +432,7 @@ class QueriesSpec extends AnyFunSuite {
       .orderBy(col("doc_id")).collect().toSeq
     graft.ops.Q.clearStaged() // drop memoized labels so both runs compute
     val local = snapshot()
-    val ckptPath = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val ckptPath = graft.ops.StreamingGate.tempDir("graft-ckpt")
     spark.sparkContext.setCheckpointDir(ckptPath.toString)
     try {
       graft.ops.Q.clearStaged()
@@ -614,7 +614,7 @@ class QueriesSpec extends AnyFunSuite {
     // (one empty-string token) never re-admits it. This pins the engine
     // half on a planted corpus; verify_local covers the oracle half.
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-t09ws").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-t09ws").toString
     Seq((1L, "alpha beta alpha", "en", "web", 16L),
         (2L, " \t  ", "en", "web", 5L), // length >= 1, zero tokens
         (3L, "beta gamma", "en", "web", 10L))
@@ -704,7 +704,7 @@ class QueriesSpec extends AnyFunSuite {
     val dupA = ("alpha bravo charlie delta echo foxtrot golf hotel " * 6).trim
     val dupB = ("india juliett kilo lima mike november oscar papa " * 6).trim
     val dupC = ("quebec romeo sierra tango uniform victor whiskey xray " * 6).trim
-    val tmp = java.nio.file.Files.createTempDirectory("graft-d22").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-d22").toString
     Seq(
       (4L, dupA, "en", "web", dupA.length.toLong),
       (30L, dupA, "en", "web", dupA.length.toLong),

@@ -13,7 +13,7 @@ class RetentionMaskSpec extends AnyFunSuite {
 
   private def plant(rows: Seq[(Long, Long, String, String)]): String = {
     // (event_id, user_id, event_type, ts-string)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q61").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-q61").toString
     rows.toDF("event_id", "user_id", "event_type", "tss")
       .withColumn("ts", to_timestamp($"tss"))
       .withColumn("value", lit(1.0))

@@ -25,7 +25,7 @@ class ScaleSpec extends AnyFunSuite {
     val hot = for (i <- 0 until 300000)
       yield (777L, base + i * 1000000L, Seq("view", "click", "purchase")(i % 3))
     val rows = normal ++ hot
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q60-skew").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-q60-skew").toString
     rows.toDF("user_id", "t", "event_type")
       .select($"user_id", timestamp_micros($"t").as("ts"), $"event_type")
       .write.mode("overwrite").parquet(s"$tmp/events.parquet")
@@ -76,7 +76,7 @@ class ScaleSpec extends AnyFunSuite {
     val giantId = 2101L // odd, so d20 routes it through the later batch
     docs += giantId -> (filler(giantId, 150000, "g") ++ boiler ++
       filler(giantId, 150000, "h")).mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-d19-skew").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-d19-skew").toString
     docs.toSeq.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src1"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -35,7 +35,7 @@ class SemDeleteSpec extends AnyFunSuite {
       (9L, v(3 -> 1f)),
       (10L, v(4 -> 1f)),
       (43L, v(3 -> 1f, 4 -> 1f)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-d27").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-d27").toString
     rows.toDF("vec_id", "embedding")
       .withColumn("label", org.apache.spark.sql.functions.lit(0))
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")

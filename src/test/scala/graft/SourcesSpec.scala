@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +11,7 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toString
+    graft.ops.StreamingGate.tempDir(prefix).toString
 
   private lazy val nation =
     graft.ops.Q.table(spark, "/root/testdata/sf0.001", "nation")

@@ -251,7 +251,7 @@ class StreamingSpec extends AnyFunSuite {
     // as a link, that date landed on the source file through the link
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft-q49-src")
+    val dir = graft.ops.StreamingGate.tempDir("graft-q49-src")
     val staging = dir.resolve("staging").toString
     Seq("a  b", "A b", "c").toDF("text").coalesce(1).write.parquet(staging)
     val part = Files.list(java.nio.file.Paths.get(staging)).iterator.asScala
@@ -593,7 +593,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("source throttling bounds micro-batch size (maxFilesPerTrigger = backpressure)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-throttle").toString
+    val dir = graft.ops.StreamingGate.tempDir("graft-throttle").toString
     val nation = graft.ops.Q.table(spark, "/root/testdata/sf0.001", "nation")
     nation.coalesce(1).write.mode("append").parquet(dir)
     nation.coalesce(1).write.mode("append").parquet(dir)
@@ -610,9 +610,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("checkpoint recovery: restarted query resumes offsets, no duplicates") {
-    val src = java.nio.file.Files.createTempDirectory("graft-ckpt-src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-ckpt-out").toString
+    val src = graft.ops.StreamingGate.tempDir("graft-ckpt-src").toString
+    val ckpt = graft.ops.StreamingGate.tempDir("graft-ckpt").toString
+    val out = graft.ops.StreamingGate.tempDir("graft-ckpt-out").toString
     val nation = graft.ops.Q.table(spark, "/root/testdata/sf0.001", "nation")
 
     def start() = spark.readStream.schema(nation.schema).parquet(src)
@@ -716,7 +716,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("Trigger.AvailableNow drains a bounded source and terminates itself") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-avnow").toString
+    val dir = graft.ops.StreamingGate.tempDir("graft-avnow").toString
     val nation = graft.ops.Q.table(spark, "/root/testdata/sf0.001", "nation")
     nation.write.mode("append").parquet(dir)
     val q = spark.readStream.schema(nation.schema).parquet(dir)

@@ -11,7 +11,7 @@ class SyndicationSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def plant(rows: Seq[(Long, String, String)]): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-q72").toString
+    val tmp = graft.ops.StreamingGate.tempDir("graft-q72").toString
     rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -24,7 +24,7 @@ class TimestampEncodingSpec extends AnyFunSuite {
   private lazy val encodedDirs: Map[String, String] = {
     val ev = ops.Q.events(spark, srcDir) // normalized TimestampType
     def mk(name: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (String, String) = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-enc-$name").toString
+      val dir = graft.ops.StreamingGate.tempDir(s"graft-enc-$name").toString
       f(ev).coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
       name -> dir
     }
