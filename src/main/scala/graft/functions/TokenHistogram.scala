@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * means (a) no regex, one branchy byte scan per document; (b) the explode
   * that follows emits one row per DISTINCT word per doc (2.3× fewer at the
   * measured corpus shape); and (c) the per-doc frame becomes a zero-shuffle
-  * projection that [[graft.ops.Q.staged]] can cache ONCE per run, so the
+  * projection that [[graft.ops.Q.staged]] can stage ONCE per run, so the
   * BPE encode family (t12/t14) derives BOTH its train-side wordcount and
   * its per-doc aggregate from a single corpus scan — the round-10 weak-set
   * root cause (SCALE.md "Byte-level tokenizer": the corpus was scanned and

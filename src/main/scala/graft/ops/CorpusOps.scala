@@ -365,8 +365,8 @@ object CorpusOps {
     "q50_sequence_pipeline",
     (s, d) => {
       // The per-doc feature frame is staged SEPARATELY from the chunk
-      // frame, and the keep-filter runs AGAINST THE CACHE, not inside the
-      // scan. Filtering on `keep` directly looks cleaner but is a
+      // frame, and the keep-filter runs against the staged frame, not
+      // inside the scan. Filtering on `keep` directly looks cleaner but is a
       // measured 30× landmine: PushDownPredicates substitutes each
       // feature alias's DEFINITION into the pushed predicate, so the
       // normalize/split/fold chain is re-evaluated once per reference
@@ -374,8 +374,8 @@ object CorpusOps {
       // whole-stage codegen there is no subexpression elimination to
       // collapse them (33 s vs 0.14 s at 64× for the identical result;
       // t07/t08 never hit this because they EMIT keep as a column).
-      // The cache is metadata-width (ids, counts, one digest — no text)
-      // and doubles as the proof the corpus is scanned exactly once.
+      // The staged frame is metadata-width (ids, counts, one digest — no
+      // text), and the corpus is scanned exactly once, in its build.
       // The analysis itself is the native one-pass corpus_features
       // expression (CorpusFeaturesSpec pins it equal to the SQL lambda
       // chain the oracle runs): the interpreted lambda/regex spelling
@@ -569,7 +569,7 @@ object CorpusOps {
   }
 
   /** BPE merge-table training: ONE corpus-scale Spark stage (word counts →
-    * top-`bpeVocab` via TakeOrdered, cached through [[Q.staged]] so t10 and
+    * top-`bpeVocab` via TakeOrdered, staged through [[Q.staged]] so t10 and
     * t12 share it within a run and Bench's cold-run sweep still clears it),
     * then the whole merge loop on the DRIVER over the collected ≤`bpeVocab`
     * rows. The capped vocab frame is trained state, not data — the same
@@ -584,11 +584,11 @@ object CorpusOps {
     * symbol); the oracle's CROSS JOIN with the then-empty `b_r` goes empty
     * the same way. */
   /** Per-doc `[a-z]+` token histograms, staged once per ENCODE run (t12
-    * only — the train-only t10 path must not pay this cache, see
+    * only — the train-only t10 path must not pay this barrier, see
     * [[wordCounts]]). A zero-shuffle projection: the native
     * [[graft.functions.TokenHistogram]] expression collapses each doc's
     * token stream to a `word → count` map in one byte pass, and the
-    * cached frame is document-count rows of map values — NOT
+    * staged frame is document-count rows of map values — NOT
     * token-stream rows (the round-7 measurement that killed the 50 M-row
     * token-stream cache does not apply; the exploded `(doc_id, word,
     * cnt)` spelling WAS re-measured this round and lost ~15% to this map
@@ -610,7 +610,7 @@ object CorpusOps {
     * histogram replaces `regexp_extract_all` + per-occurrence explode:
     * no regex, and the explode emits one row per DISTINCT word per doc
     * (2.3× fewer at the measured corpus shape). Deliberately does NOT
-    * read [[docHist]]'s cache: for a train-only run (t10/t13) the cache
+    * read [[docHist]]'s staged frame: for a train-only run (t10/t13) its
     * write+read round-trip measured SLOWER at 64× (0.55 → 0.95 s) than
     * re-fusing the scan into this one job — encode runs, which need the
     * per-doc frame anyway, derive their wordcount from [[docHist]]
@@ -1113,20 +1113,14 @@ object CorpusOps {
       val candHashes = (0 until cmDepth).map { j =>
         s"named_struct('j', $j, 'h', ${cmHash("word", j, sFold)})"
       }.mkString(",\n               ")
-      // ONE fused corpus pass, vocabulary-width (r17, guide §2.3/§7.2):
-      // every consumer here — the sketch rows AND the exact top-K —
-      // depends only on the GLOBAL per-word count, so both derive from
-      // the staged [[wordCounts]] frame (scan → native histogram →
-      // explode → vocab-width shuffle, built once). The previous
-      // spelling exploded the cached PER-DOC histogram twice (PlanAudit
-      // r17: 2x live Generate) and computed the 4 sketch hashes per
-      // (doc, word) pair; now hashes are computed once per DISTINCT
-      // word, weighted by its global count — identical integers
-      // (char_fold depends only on the word; TokenHistogramSpec pins
-      // the histogram tokenizer == regexp_extract_all('[a-z]+')).
-      // DataFrame composition, not a view hop: the staged frame's plan
-      // carries the explode Generate, and a view wrap defeats the cache
-      // fragment match on Spark 4.1 (coverageTail's documented lesson).
+      // ONE corpus pass, vocabulary-width: the sketch rows AND the exact
+      // top-K depend only on the global per-word count, so both derive
+      // from the staged [[wordCounts]] frame, and the sketch hashes are
+      // computed once per distinct word, weighted by its count (identical
+      // integers: char_fold depends only on the word; TokenHistogramSpec
+      // pins the histogram tokenizer == regexp_extract_all('[a-z]+')).
+      // Measured against the per-doc-histogram spelling in SCALE.md
+      // "One barrier".
       graft.functions.GraftFunctions.register(s)
       import s.implicits._
       import org.apache.spark.sql.functions.{broadcast, expr, min}
@@ -1464,12 +1458,10 @@ object CorpusOps {
   val q70 = QueryDef(
     "q70_snapshot_drift",
     (s, d) => {
-      // the per-token pivot is referenced twice (totals + final select);
-      // left inline, CTE inlining re-runs the corpus histogram pass per
-      // reference (PlanAudit caught exactly that: 2x live documents scan)
-      // — checkpoint it as a LEAF, it is vocabulary-width
+      // staged: the vocabulary-width per-token pivot is referenced twice
+      // (totals + final select)
       staged("q70_p", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+        withViews(s, d, "documents")(s"""
           WITH dh AS (SELECT doc_id % 2 AS snap, tok, cnt
                       FROM (SELECT doc_id,
                               explode(space_token_histogram($sNorm)) AS (tok, cnt)
@@ -1479,7 +1471,7 @@ object CorpusOps {
           SELECT tok,
                  CAST(sum(CASE WHEN snap = 0 THEN c ELSE 0 END) AS BIGINT) AS cnt_a,
                  CAST(sum(CASE WHEN snap = 1 THEN c ELSE 0 END) AS BIGINT) AS cnt_b
-          FROM tc GROUP BY tok"""))
+          FROM tc GROUP BY tok""")
       }.createOrReplaceTempView("q70_p")
       s.sql(s"""
         WITH tot AS (SELECT CAST(sum(cnt_a) AS BIGINT) AS na,

@@ -25,16 +25,8 @@ object CurationOps {
     * variable-length repeated interval), `lag`-based span heads, and the
     * per-doc kept-text regroup. ONE spelling, shared by d19 and d20's
     * post-pass (the oGranuleCtes no-drift rule: the coverage logic must
-    * not be editable in one consumer without the other).
-    *
-    * A DataFrame function, NOT a SQL CTE string: d19 stages its shingle
-    * frame once via [[Q.staged]], and a `createOrReplaceTempView` hop
-    * over any plan containing the posexplode Generate defeats the
-    * CacheManager's fragment match on Spark 4.1 (verified empirically —
-    * the view-wrapped consumer re-plans the full FileScan and the corpus
-    * pays the explode+md5 twice, the exact defect this round removes),
-    * while DataFrame composition on the cached frame substitutes the
-    * InMemoryRelation as expected. */
+    * not be editable in one consumer without the other). A DataFrame
+    * function, composed on d19's staged shingle frame. */
   private[graft] def coverageTail(mk: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.expr
     mk.selectExpr("doc_id", "p", "tok",
@@ -144,13 +136,9 @@ object CurationOps {
     (s, d) => {
       import s.implicits._
       import org.apache.spark.sql.functions.{broadcast, countDistinct, expr}
-      // `chunks` feeds BOTH the boilerplate-frequency aggregate and the
-      // join-back; as one WITH statement Catalyst inlined it into each
-      // consumer and the corpus paid the tokenize + chunk explode TWICE
-      // (PlanAudit r17: 2x live scan + 2x live Generate; StageProfile:
-      // two ~300-400 ms corpus passes at sf0.1). Staged once — d19's
-      // DataFrame-composition pattern, NOT a temp-view hop, which
-      // defeats the cache fragment match on a Generate-bearing plan.
+      // staged: `chunks` feeds both the boilerplate-frequency aggregate
+      // and the join-back, so the corpus pays the tokenize + chunk
+      // explode once
       val ch = staged("d11_chunks", d) {
         withViews(s, d, "documents")(s"""
           WITH $sChunks
@@ -226,9 +214,6 @@ object CurationOps {
                       THEN md5(array_join(slice(t, pos + 1, $W), ' ')) END AS h
           FROM toks LATERAL VIEW posexplode(t) x AS pos, tok""")
       }
-      // DataFrame composition, NOT a temp-view hop: see [[coverageTail]] —
-      // a view wrap here defeats the cache substitution and re-explodes
-      // the corpus in both consumers
       val rep = pr.where($"h".isNotNull)
         .groupBy($"h").agg(countDistinct($"doc_id").as("nd"))
         .where($"nd" >= 2).select($"h".as("rh"))
@@ -786,12 +771,11 @@ object CurationOps {
   val d15 = QueryDef(
     "d15_incremental_dedup",
     (s, d) => {
-      // checkpointed leaf: the fingerprint frame feeds the new/old split,
-      // both near-dup join sides, and the output join — inlined, the
-      // normalize+md5 pass re-ran per reference (PlanAudit: 12 live scans)
+      // staged: the fingerprint frame feeds the new/old split, both
+      // near-dup join sides, and the output join
       val fps = staged("d15_fps", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
-          SELECT doc_id, md5($sNorm) AS fp FROM documents"""))
+        withViews(s, d, "documents")(s"""
+          SELECT doc_id, md5($sNorm) AS fp FROM documents""")
       }
       fps.createOrReplaceTempView("d15_fps")
       DedupOps.d02Pairs(s, d).createOrReplaceTempView("d15_pairs")
@@ -1031,28 +1015,18 @@ object CurationOps {
       // the vocab feeds TWO join sides while the mapped bigram stream
       // feeds THREE consumers (LM counts, context counts via lm, and the
       // scoring pass) — without materialization the corpus-wide
-      // tokenize+explode runs up to three times per query. The vocab
-      // cache is 1000 rows; the mb cache is the (doc_id, w1, w2) stream —
-      // the same materialized-boundary pattern as d02's staged shingles
-      // (at cluster scale these are the pipeline's checkpoint/exchange
-      // reuse points; recomputing instead is a config choice, not a plan
-      // change).
-      // checkpointed leaves, not lazy caches: both frames are consumed
-      // through temp views by SQL that references them repeatedly, and
-      // their Generate/lambda-bearing plans defeat the cache fragment
-      // match (PlanAudit round 12: the vocab pass tokenized the corpus
-      // once per reference and the bigram stream rebuilt per consumer —
-      // the materialized boundary this staging always intended)
+      // tokenize+explode runs up to three times per query. The vocab is
+      // 1000 rows; the mb frame is the (doc_id, w1, w2) stream.
       staged("t11_v", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+        withViews(s, d, "documents")(s"""
           SELECT word FROM (
             SELECT wd AS word, count(*) AS freq
             FROM (SELECT explode(regexp_extract_all(lower(text), '[a-z]+', 0)) AS wd
                   FROM documents)
-            GROUP BY wd ORDER BY freq DESC, word LIMIT $lmVocab)"""))
+            GROUP BY wd ORDER BY freq DESC, word LIMIT $lmVocab)""")
       }.createOrReplaceTempView("t11_v")
       staged("t11_mb", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+        withViews(s, d, "documents")(s"""
           WITH w AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+', 0) AS ws
                      FROM documents),
           bg AS (SELECT doc_id, pr.w1 AS w1, pr.w2 AS w2
@@ -1063,7 +1037,7 @@ object CurationOps {
                  CASE WHEN v1.word IS NULL THEN '<unk>' ELSE bg.w1 END AS w1,
                  CASE WHEN v2.word IS NULL THEN '<unk>' ELSE bg.w2 END AS w2
           FROM bg LEFT JOIN t11_v v1 ON bg.w1 = v1.word
-                  LEFT JOIN t11_v v2 ON bg.w2 = v2.word"""))
+                  LEFT JOIN t11_v v2 ON bg.w2 = v2.word""")
       }.createOrReplaceTempView("t11_mb")
       s.sql(s"""
         WITH lm AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
@@ -1155,7 +1129,7 @@ object CurationOps {
     (s, d) => {
       val targetIn = dsirTargets.map(t => s"'$t'").mkString("(", ", ", ")")
       staged("d18_ng", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+        withViews(s, d, "documents")(s"""
           WITH w AS (SELECT doc_id, source,
                        regexp_extract_all(lower(text), '[a-z]+', 0) AS ws
                      FROM documents WHERE length(text) >= 1)
@@ -1165,7 +1139,7 @@ object CurationOps {
                     THEN concat(ws, transform(sequence(0, size(ws) - 2),
                            i -> concat(ws[i], ' ', ws[i + 1])))
                     ELSE ws END) AS g
-                FROM w WHERE size(ws) >= 1)"""))
+                FROM w WHERE size(ws) >= 1)""")
       }.createOrReplaceTempView("d18_ng")
       s.sql(s"""
         WITH cnt AS (SELECT b, CAST(count(*) AS BIGINT) AS cr,
@@ -1350,16 +1324,13 @@ object CurationOps {
   val q69 = QueryDef(
     "q69_source_pagerank",
     (s, d) => {
-      staged("q69_edges", d) {
-        roundCheckpoint(pagerankEdges(s, d, pagerankCap))
-      }.createOrReplaceTempView("q69_edges")
-      // the node set is ALSO a multiply-referenced CTE (cnt, r0, every
-      // iteration, the readout — PlanAudit counted 9 live corpus scans
-      // when it was left inline); as a leaf the iteration SQL touches
+      staged("q69_edges", d) { pagerankEdges(s, d, pagerankCap) }
+        .createOrReplaceTempView("q69_edges")
+      // the node set is also multiply referenced (cnt, r0, every
+      // iteration, the readout): staged, the iteration SQL touches
       // documents zero times
       staged("q69_nodes", d) {
-        roundCheckpoint(withViews(s, d, "documents")(
-          "SELECT DISTINCT source FROM documents"))
+        withViews(s, d, "documents")("SELECT DISTINCT source FROM documents")
       }.createOrReplaceTempView("q69_nodes")
       s.sql(s"""
         WITH nodes AS (SELECT source FROM q69_nodes),
@@ -1438,7 +1409,7 @@ object CurationOps {
   val d26 = QueryDef(
     "d26_split_leakage_audit",
     (s, d) => {
-      staged("d26_split", d) { roundCheckpoint(q54.run(s, d)) }
+      staged("d26_split", d) { q54.run(s, d) }
         .createOrReplaceTempView("d26_split")
       DedupOps.d02Pairs(s, d).createOrReplaceTempView("d26_pairs")
       graft.functions.GraftFunctions.register(s)

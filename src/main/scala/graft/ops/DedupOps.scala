@@ -101,13 +101,6 @@ object DedupOps {
           SELECT doc_id, bj, concat_ws(',', $rowRefs) AS bkey
           FROM sig LATERAL VIEW explode(sequence(0, ${minhashBands - 1})) x AS bj""")
       }
-      // DataFrame composition for the self-join, NOT a `d02_bands` temp
-      // view: the bands plan carries the explode Generate, and a view hop
-      // over a cached Generate-bearing frame defeats CacheManager's
-      // fragment match on Spark 4.1 (d19's round-12 lesson) — PlanAudit
-      // caught this spelling recomputing minhash_sig over the corpus
-      // TWICE, one live copy per self-join side, with the staged cache
-      // never substituted.
       import s.implicits._
       bands.as("a")
         .join(bands.as("b"),
@@ -305,10 +298,9 @@ object DedupOps {
       WHERE CAST(n_shared AS DOUBLE) / CAST(n_union AS DOUBLE) >= 0.8"""),
     headline = true)
 
-  /** d02's verified near-dup pair list with TRUNCATED lineage (one
-    * [[Q.roundCheckpoint]]), shared by every composite consumer (d06
-    * propagation, d07 decontam, d15 incremental). Two reasons, both
-    * structural:
+  /** d02's verified near-dup pair list, staged (truncated lineage),
+    * shared by every composite consumer (d06 propagation, d07 decontam,
+    * d15 incremental). Two reasons, both structural:
     *  - the consumers self-join or multi-reference the pairs, and with
     *    the full MinHash plan (staged lambda-bearing subtrees) on both
     *    sides Spark's DeduplicateRelations intermittently fails analysis
@@ -321,9 +313,7 @@ object DedupOps {
     *    the same way is the scale-consistent shape, not a workaround. */
   private[graft] def d02Pairs(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    staged("d02_pairs", d) {
-      roundCheckpoint(d02.run(s, d).select("doc_a", "doc_b"))
-    }
+    staged("d02_pairs", d) { d02.run(s, d).select("doc_a", "doc_b") }
 
   /** LSH candidate-precision audit — the measurement that prices d02's
     * banding dial: one row per RAW banding candidate with its EXACT
@@ -439,11 +429,11 @@ object DedupOps {
     "d04_ngram_jaccard",
     (s, d) => {
       val g = staged("d04_g", d) {
-        roundCheckpoint(withViews(s, d, "documents")("""
+        withViews(s, d, "documents")("""
           SELECT doc_id, lang, source, grams, minhash_sig(grams, 16) AS sg FROM
             (SELECT doc_id, lang, source, shingle_set(text, 2) AS grams
              FROM documents)
-          WHERE size(grams) >= 1"""))
+          WHERE size(grams) >= 1""")
       }
       g.createOrReplaceTempView("d04_g")
       s.sql("""
@@ -537,16 +527,16 @@ object DedupOps {
       // per class through map-side partial agg — the exchange carries at
       // most |classes|·|partitions| texts, never the corpus), then
       // normalize → distinct 3-shingles → md5, exploded to (rep, h) and
-      // checkpointed — a LogicalRDD leaf, so the class-freq aggregate and
-      // the self-join below re-read rows, never re-derive the explode
+      // staged, so the class-freq aggregate and the self-join below
+      // re-read rows, never re-derive the explode
       val g = staged("d21_g", d) {
-        roundCheckpoint(withViews(s, d, "documents")(s"""
+        withViews(s, d, "documents")(s"""
           WITH cls AS (SELECT min(doc_id) AS rep, count(*) AS members,
                               min_by(text, doc_id) AS rtext
                        FROM documents GROUP BY md5($sNorm)),
           sh AS (SELECT rep, members, shingle_set(rtext, 3) AS sset FROM cls)
           SELECT rep, members, md5(s) AS h
-          FROM sh LATERAL VIEW explode(sset) x AS s"""))
+          FROM sh LATERAL VIEW explode(sset) x AS s""")
       }
       // (class, shingle, class-freq) over the capped vocabulary, staged
       // once: feeds the per-class size aggregate AND both self-join sides
@@ -624,16 +614,13 @@ object DedupOps {
   /** Normalized double-precision embeddings + L2 norms, staged once and
     * shared by d05 and d16 (one copy of the corpus in memory even when a
     * capstone composes both). */
-  // checkpointed leaf, not a lazy cache: see SimilarityOps.normalized —
-  // the view-hop consumers (d05/d16/d17) were re-normalizing per
-  // reference (PlanAudit: 6 live embeddings scans in d05)
   private[graft] def normEmbeddings(s: org.apache.spark.sql.SparkSession, d: String) =
     staged("d05_n", d) {
-      roundCheckpoint(withViews(s, d, "embeddings")("""
+      withViews(s, d, "embeddings")("""
         WITH e AS (SELECT vec_id, label,
                      transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                    FROM embeddings)
-        SELECT vec_id, label, v, sqrt(dot_product(v, v)) AS nrm FROM e"""))
+        SELECT vec_id, label, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
     }
 
   val d05 = QueryDef(
@@ -751,7 +738,7 @@ object DedupOps {
       // it has three consumers (both pair-join sides + the final output),
       // and as a CTE Spark would inline and re-run the corpus-wide
       // arg-max pass per reference (PlanShapeSpec pins exactly one
-      // evaluation); the cache is metadata-width (id, label, cid).
+      // evaluation); the staged frame is metadata-width (id, label, cid).
       // (spelled without WITH: a staged view whose analyzed plan carries
       // CTE defs breaks InlineCTE / CTE pushdown when referenced three
       // times downstream — the q50 landmine family)
@@ -813,8 +800,9 @@ object DedupOps {
     * Converges in ≤ diameter hops; each hop is one metadata-width
     * shuffle — the standard scalable formulation when a graph library
     * isn't available. Callers wrap in [[Q.withAdvisoryCoalesce]] (rounds
-    * are barriers — fewer, larger reduce tasks win) and stage/cache the
-    * edge frame (it is re-read every hop).
+    * are barriers — fewer, larger reduce tasks win) and stage the edge
+    * frame (it is re-read every hop). The labels come back checkpointed,
+    * so the last persisted round is released before returning.
     *
     * Round 16 (guide §1 measured, §2.4/§2.6 applied): at gate scale the
     * fixpoint's entire cost was the per-round DRIVER machinery — SQL
@@ -863,8 +851,8 @@ object DedupOps {
     // task or two instead of 64 empty ones (measured: 0.08-0.2 s/round
     // at 32 inherited partitions → ~0.03 s at 1), and a 10^10-edge
     // graph still gets thousands of reduce partitions. The count is one
-    // cheap job over the caller's cached edge frame, paid once per
-    // fixpoint, and it doubles as the cache materialization.
+    // cheap job over the caller's staged edge frame, paid once per
+    // fixpoint.
     val nEdges = eRdd.count()
     val part = new org.apache.spark.HashPartitioner(
       math.max(1, math.min(eRdd.getNumPartitions.toLong,
@@ -918,7 +906,9 @@ object DedupOps {
       cur = next.mapValues(_._1)
     }
     byDst.unpersist(false)
-    cur.toDF("id", "cluster")
+    val labels = roundCheckpoint(cur.toDF("id", "cluster"))
+    lastPersisted.unpersist(false)
+    labels
   }
 
   /** Dedup clustering: connected components over the MinHash near-dup
@@ -1097,13 +1087,10 @@ object DedupOps {
     * centroid set; candidate pairs are probe-bounded equi-joins on the
     * cluster id (never a cross join); the per-source top-k is a
     * rank-filtered window (WindowGroupLimit partial top-k); the k-NN
-    * frame is metadata-width (N·k rows) and checkpoints as a LEAF
-    * because the mutuality readout self-joins it — left inline, the CTE
-    * would re-run the whole pairwise pass twice (q69/d22's lesson). */
+    * frame is metadata-width (N·k rows) and staged, since the mutuality
+    * readout self-joins it. */
   /** The staged N·k k-NN frame behind s15 (and d24's semantic graph):
-    * checkpointed as a LEAF because every consumer self-joins it — left
-    * inline, the CTE would re-run the whole pairwise pass per reference
-    * (q69/d22's lesson). Registers the `s15_knn` temp view.
+    * every consumer self-joins it. Registers the `s15_knn` temp view.
     *
     * Scoring rides the cluster join DIRECTLY: probes and members carry
     * their (v, nrm) into the equi-join and the cosine is projected in
@@ -1334,8 +1321,7 @@ object DedupOps {
         KnnDiag.lastAssignKey = assignKey
         val twoLevelAssign = assignKey.startsWith("s15_hassign_")
         staged(assignKey, d) {
-          roundCheckpoint(
-            if (twoLevelAssign) s.sql(s"""
+          if (twoLevelAssign) s.sql(s"""
               WITH sup AS (SELECT collect_list(named_struct(
                              'cid', gid, 'cv', gcv,
                              'cn', sqrt(dot_product(gcv, gcv)))) AS sups
@@ -1377,12 +1363,12 @@ object DedupOps {
                     FROM s06_n t CROSS JOIN cs)
               SELECT vec_id, pr.col.cid AS cluster,
                      CAST(pr.pos + 1 AS INT) AS rn
-              FROM a LATERAL VIEW posexplode(nc) pr"""))
+              FROM a LATERAL VIEW posexplode(nc) pr""")
         }.createOrReplaceTempView("s15_tassign")
         ("s15_tassign", "s06_n", s"s15_knn@$assignKey")
     }
     val knn = staged(stageKey, d) {
-      roundCheckpoint(s.sql(s"""
+      s.sql(s"""
         WITH qp AS (SELECT a.vec_id AS src, a.cluster, n.v AS qv, n.nrm AS qn
                     FROM $assignV a JOIN $nView n ON n.vec_id = a.vec_id
                     WHERE a.rn <= ${SimilarityOps.ivfProbes}),
@@ -1397,7 +1383,7 @@ object DedupOps {
                                    ORDER BY cos DESC, nb) AS rn
               FROM sc)
         SELECT src, nb, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= $knnGraphK"""))
+        FROM r WHERE rn <= $knnGraphK""")
     }
     knn.createOrReplaceTempView("s15_knn")
     knn
@@ -1553,7 +1539,7 @@ object DedupOps {
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     SimilarityOps.s03Statics(s, d)
     staged("d27_rknn", d) {
-      roundCheckpoint(s.sql(s"""
+      s.sql(s"""
         WITH sn AS (SELECT vec_id, v, nrm FROM s03_n WHERE NOT ($d27TombPred)),
         c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM sn
               WHERE vec_id % 50 = 7 AND vec_id < 3200),
@@ -1576,7 +1562,7 @@ object DedupOps {
                                    ORDER BY cos DESC, nb) AS rn
               FROM sc)
         SELECT src, nb, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= $knnGraphK"""))
+        FROM r WHERE rn <= $knnGraphK""")
     }
   }
 

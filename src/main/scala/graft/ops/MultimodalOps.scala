@@ -918,17 +918,9 @@ object MultimodalOps {
       val media = table(s, d, "documents")
         .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
       // class collapse BEFORE the key join (m06's rule): one row per
-      // distinct decoded content, metadata-width, staged (cached) so the
-      // three consumers below never re-run the scan+granulate pass.
-      // r17: staged cache instead of an eager localCheckpoint — same
-      // build-once guarantee (direct DataFrame reuse, so the fragment
-      // match is exact), but materialization folds into the first
-      // consuming job instead of a separate barrier job, and a BUILT
-      // cache preserves output partitioning where the checkpoint leaf
-      // surfaces UnknownPartitioning (a consumer planned before the
-      // first build sees UnknownPartitioning too; both pinned in
-      // PlanShapeSpec). StageProfile r17: the two checkpoint barriers
-      // alone were ~0.9 s of m10's 3.8 s at sf0.1
+      // distinct decoded content, metadata-width, staged so its three
+      // consumers below (ck0, nbv's class sizes, the output) never re-run
+      // the scan+granulate pass
       val cls = staged("m10_cls", d) {
         audioGranules(s, media)
           .groupBy($"dg")
@@ -943,13 +935,9 @@ object MultimodalOps {
       // classes are non-identifying; dropping them bounds the worst
       // bucket's quadratic pair cost (metadata-width window count —
       // ck0 is already partitioned by gkey, so no extra exchange)
-      // ck feeds the denominators and BOTH self-join sides, so it is
-      // an eager roundCheckpoint: left lazy, the explode + pinned
-      // exchange + skew-cap window re-ran per reference (PlanAudit: 9
-      // live Generates). The checkpoint leaf reports
-      // UnknownPartitioning (plans/r17/m10_audio_granule_neardup_after.txt),
-      // so ck0's gkey hash-partitioning does not survive it: at scale
-      // both sides of the self-join below re-exchange on gkey
+      // ck feeds the denominators and both self-join sides, so it is
+      // checkpointed once; its leaf keeps ck0's gkey hash partitioning,
+      // so neither self-join side re-exchanges (pinned in PlanShapeSpec)
       val ck = roundCheckpoint(ck0.withColumn("kc",
           count(lit(1)).over(org.apache.spark.sql.expressions.Window
             .partitionBy($"gkey")))

@@ -114,15 +114,14 @@ object Q {
   def oDateStr(expr: String): String =
     s"strftime(cast(($expr) as date), '%Y-%m-%d')"
 
-  /** Memoized stage intermediates keyed by (name, data dir, session).
-    * Composed queries (d06 reusing d02's pairs, q40 reusing d06) share ONE
-    * materialized copy instead of re-deriving it per call. `staged` caches
-    * what `build` returns unless that frame is itself a checkpoint (its
-    * analyzed plan is a checkpointed `LogicalRDD`, what [[roundCheckpoint]]
-    * returns): such a frame is already materialized and is memoized as
-    * it is, so an `InMemoryRelation` never wraps a checkpoint. Either way
-    * [[clearStaged]] releases what the entry holds: the cache, or the
-    * checkpoint's blocks. */
+  /** The one materialization barrier, memoized per (name, data dir,
+    * session): `staged` returns [[roundCheckpoint]] of what `build`
+    * returns, or that frame as it is when it already is a checkpoint leaf
+    * (the Lloyd loops), so composed queries (d06 reusing d02's pairs, q40
+    * reusing d06) share one materialized copy that is built once, at
+    * construction, before any consumer is planned, and that keeps its
+    * producer's partitioning and ordering; [[clearStaged]] releases each
+    * entry's checkpoint blocks. */
   private val stagedMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
@@ -140,35 +139,28 @@ object Q {
     } else {
       if (existing != null) stagedMemo.remove(k, existing)
       val frame = build
-      val built = if (checkpointOf(frame).isDefined) frame else frame.cache()
+      val built = if (checkpointOf(frame).isDefined) frame else roundCheckpoint(frame)
       val prev = stagedMemo.putIfAbsent(k, built)
       if (prev == null) built
-      else { unstage(built, blocking = false); prev } // lost a benign race; use the winner
+      else { releaseCheckpointBlocks(built, blocking = false); prev } // lost a benign race; use the winner
     }
   }
 
-  /** Release a memoized frame: its checkpoint blocks or its cache. */
-  private def unstage(df: DataFrame, blocking: Boolean): Unit =
-    checkpointOf(df) match {
-      case Some(rdd) => rdd.unpersist(blocking)
-      case None      => df.unpersist(blocking)
-    }
-
-  /** Unpersist and forget every memoized intermediate (cold-cache runs).
+  /** Release and forget every memoized intermediate (cold-cache runs).
     * Blocking: a non-blocking unpersist races the NEXT cold run — the old
     * blocks are still draining while the new run fills the store, and the
     * eviction/GC churn showed up as an unattributable 60% bench swing. */
   def clearStaged(): Unit = {
     stagedMemo.forEach { (_, df) =>
-      try if (!df.sparkSession.sparkContext.isStopped) unstage(df, blocking = true)
+      try if (!df.sparkSession.sparkContext.isStopped) releaseCheckpointBlocks(df, blocking = true)
       catch { case _: Throwable => () }
     }
     stagedMemo.clear()
   }
 
   /** Drop EVERY persisted RDD still registered with the context — staged
-    * caches AND (local)checkpoint blocks from iterative queries (d06's
-    * rounds), which `clearStaged` can't see. Bench calls this between
+    * checkpoints AND the unkeyed checkpoints and persisted rounds of
+    * iterative queries (d06's rounds), which `clearStaged` can't see. Bench calls this between
     * timed runs so each run starts from a genuinely empty block store.
     * Only safe when no live Dataset will be re-read: checkpoint lineage is
     * truncated, so swept blocks are unrecoverable. */
@@ -197,21 +189,18 @@ object Q {
     graft.Sessions.withConf(s,
       "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")(body)
 
-  /** Per-round lineage truncation for iterative algorithms (d06 label
-    * propagation, s06 Lloyd iterations). Each round must read the previous
-    * round's BLOCKS, never its plan — without this the final plan
-    * re-derives all K rounds (each referencing the previous twice →
-    * exponential recompute).
-    *
-    * Durability is configurable: when the session has a reliable
-    * checkpoint dir (`sc.setCheckpointDir`, e.g. HDFS/S3 on a cluster),
-    * rounds checkpoint there and survive executor loss; otherwise
-    * `localCheckpoint` stores blocks on executors — the right default at
-    * local[32], NOT fault-tolerant on a real cluster (an executor loss
-    * kills the job). */
+  /** Materialize `df` now and return a leaf that reads its blocks, never
+    * its plan: the barrier behind [[staged]] and the per-round lineage cut
+    * of the iterative loops (s06 Lloyd rounds), whose final plan would
+    * otherwise re-derive every round. The checkpoint is eager, to the
+    * reliable checkpoint dir when the session has one (it survives
+    * executor loss) and otherwise local (executor blocks, lost with their
+    * executor), and the `LogicalRDD` leaf declares the partitioning and
+    * ordering of the adaptive plan that ran, so a consumer keyed like the
+    * producer plans no exchange. */
   def roundCheckpoint(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(true)
+    org.apache.spark.sql.GraftSqlBridge.checkpoint(df,
+      reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined)
 
   /** The checkpointed RDD when `df` ITSELF is a checkpoint — its analyzed
     * plan's root is a `LogicalRDD` over a checkpointed RDD, the shape

@@ -87,19 +87,12 @@ object SimilarityOps {
   /** Normalized double vectors with norms, staged once per data dir and
     * shared by every similarity query (s01 broadcast side + corpus side,
     * s05 centroid seeding + assignment). */
-  // staged as a checkpoint, NOT a cache: these frames are consumed
-  // through temp views by SQL that references them 2-13x, and
-  // a view hop over a cached lambda/Generate-bearing plan defeats
-  // CacheManager's fragment match on Spark 4.1 (PlanAudit round 12: the
-  // "cached" normalization recomputed per reference — s10 re-normalized
-  // the corpus 13x). A checkpointed LogicalRDD is a LEAF: nothing to
-  // re-derive, nothing for DeduplicateRelations to trip over.
   private def normalized(s: org.apache.spark.sql.SparkSession, d: String) =
     staged("s01_n", d) {
-      roundCheckpoint(withViews(s, d, "embeddings")("""
+      withViews(s, d, "embeddings")("""
         WITH e AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                    FROM embeddings)
-        SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM e"""))
+        SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
     }
 
   val s01 = QueryDef(
@@ -263,10 +256,10 @@ object SimilarityOps {
   private[graft] def s03Statics(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     val n = staged("s03_n", d) {
-      roundCheckpoint(withViews(s, d, "embeddings")("""
+      withViews(s, d, "embeddings")("""
         WITH e AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                    FROM embeddings)
-        SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM e"""))
+        SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
     }
     n.createOrReplaceTempView("s03_n")
     val assign = staged("s03_assign", d) {
@@ -280,7 +273,6 @@ object SimilarityOps {
                                              cid) AS rn
                FROM s03_n t CROSS JOIN c)
         SELECT vec_id, cid AS cluster, rn FROM sc WHERE rn <= $ivfProbes""")
-        .transform(roundCheckpoint)
     }
     assign.createOrReplaceTempView("s03_assign")
   }
@@ -777,18 +769,14 @@ object SimilarityOps {
       // two are pinned bit-identical in QuantizeSpec). No qd > 0 filter
       // in the build: a filter over the derived column trips the
       // pushdown landmine (predicate re-derives the chain per row) — the
-      // search side filters the cached long instead.
+      // search side filters the staged long instead.
       staged("s08_qz", d) {
         withViews(s, d, "embeddings")("""
           SELECT vec_id, q.qv AS qv, q.qd AS qd
           FROM (SELECT vec_id, int8_quantize(embedding) AS q
                 FROM embeddings)""")
       }.createOrReplaceTempView("s08_n")
-      // spelled WITHOUT a WITH: cache substitution happens on the analyzed
-      // plan and does not reach subtrees inside CTE defs (measured — the
-      // same search as a CTE re-derives the whole quantize chain on both
-      // join sides; the d16 staged-assign fix, same family). Scores are
-      // exact integer dots cast once to double — bit-identical to the
+      // Scores are exact integer dots cast once to double — bit-identical to the
       // oracle's double-accumulated fold (all values ≪ 2^53).
       s.sql(s"""
         SELECT r.query_id, r.neighbor_id, r.qcos, CAST(r.rn AS BIGINT) AS rn,
@@ -1018,18 +1006,16 @@ object SimilarityOps {
   val s10 = QueryDef(
     "s10_knn_pq",
     (s, d) => {
-      // checkpointed leaf: the quantized-vector frame `e` is referenced
-      // SEVEN times below (codebooks, codes, queries, both exact-rerank
-      // sides) and as an inlined CTE the corpus was re-normalized and
-      // re-quantized per reference (PlanAudit: 13 live embeddings scans)
+      // staged: the quantized-vector frame `e` is referenced seven times
+      // below (codebooks, codes, queries, both exact-rerank sides)
       staged("s10_e", d) {
-        roundCheckpoint(withViews(s, d, "embeddings")("""
+        withViews(s, d, "embeddings")("""
           WITH v0 AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                       FROM embeddings),
           v AS (SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM v0)
           SELECT vec_id,
                  transform(v, x -> CAST(floor(x / nrm * 1000000.0) AS BIGINT)) AS x6
-          FROM v WHERE nrm > 0"""))
+          FROM v WHERE nrm > 0""")
       }.createOrReplaceTempView("s10_e")
       s.sql(s"""
       WITH e AS (SELECT vec_id, x6 FROM s10_e),
@@ -1136,17 +1122,16 @@ object SimilarityOps {
   val s12 = QueryDef(
     "s12_ivf_incremental",
     (s, d) => {
-      // checkpointed leaf: `n` feeds the centroid set and THREE
-      // assignment passes (base/delta/full — the full pass is the
-      // operator's own recompute proof, deliberate); as an inlined CTE
-      // the corpus re-normalized per reference (PlanAudit: 6 live scans)
+      // staged: `n` feeds the centroid set and three assignment passes
+      // (base/delta/full — the full pass is the operator's own recompute
+      // proof, deliberate)
       staged("s12_n", d) {
-        roundCheckpoint(withViews(s, d, "embeddings")(s"""
+        withViews(s, d, "embeddings")(s"""
           WITH e AS (SELECT vec_id,
                        transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
                        ($s12DeltaPred) AS is_delta
                      FROM embeddings)
-          SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm, is_delta FROM e"""))
+          SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm, is_delta FROM e""")
       }.createOrReplaceTempView("s12_n")
       s.sql(s"""
         WITH n AS (SELECT vec_id, v, nrm, is_delta FROM s12_n),

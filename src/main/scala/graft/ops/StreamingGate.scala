@@ -923,7 +923,7 @@ object StreamingGate {
     }
     // alarm post-pass over the metadata-width emissions: NA = the full
     // baseline total (known after batch 0), NB = the running incoming
-    // total; checkpointed leaf so the three references share one scan
+    // total; checkpointed so the three references share one scan
     Q.roundCheckpoint(hits).createOrReplaceTempView("q71_hits")
     s.sql(s"""
       WITH na AS (SELECT CAST(coalesce(sum(cnt_a), 0) AS BIGINT) AS v

@@ -506,39 +506,20 @@ object Temporal {
 
   /** Build + register the shared co-partitioned events base for the fused
     * pass, staged once per (dir, session) and shared by q65 and
-    * fusedEventSuite.
-    *
-    * Checkpoint (not cache): the materialized base must survive re-analysis
-    * under a temp view, and LogicalRDD rewrites its preserved partitioning
-    * to the fresh attribute ids. A built cache of this exact repartition +
-    * sortWithinPartitions shape plans every branch without a user_id
-    * exchange, but q60, q61 and q62 then throw at run time
-    * (NoSuchElementException: key not found: user_id, from
-    * InMemoryRelation.withOutput when AQE re-plans the branch; probed on
-    * Spark 4.1 at sf0.001). AQE off for the base build only: the
-    * checkpoint leaf of an AQE plan reports UnknownPartitioning (pinned in
-    * PlanShapeSpec), so every branch would re-exchange on user_id — the
-    * one plan property this operator exists to share. AQE adds nothing to
-    * a plain repartition+sort anyway; branch queries still run under it. */
+    * fusedEventSuite. The staged leaf keeps the base's user_id hash
+    * partitioning and (user_id, ts, event_id) ordering, so no branch
+    * re-exchanges on user_id (pinned in PlanShapeSpec). */
   private def fusedBase(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     graft.functions.GraftFunctions.register(s)
     val base = Q.staged("fused_base", d) {
       // project BEFORE the exchange (guide §2.3): the four branch
       // statements (q60Sql..q63Sql) read only (user_id, ts, event_id,
-      // event_type) — `value`/`props` rode the user_id shuffle AND the
-      // checkpoint for nothing. Catalyst cannot prune them itself: the
-      // checkpoint is an eager materialization boundary, so every
-      // column present at the barrier is paid in full (this is the
-      // round-15-named q65 constant — 807 MB materialized + re-read at
-      // 256× — shrunk at the source).
-      graft.Sessions.withConf(s, "spark.sql.adaptive.enabled", "false") {
-        roundCheckpoint(
-          Q.events(s, d)
-            .select(col("event_id"), col("ts"), col("user_id"),
-              col("event_type"))
-            .repartition(col("user_id"))
-            .sortWithinPartitions(col("user_id"), col("ts"), col("event_id")))
-      }
+      // event_type), and every column present at the barrier is paid in
+      // full
+      Q.events(s, d)
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+        .repartition(col("user_id"))
+        .sortWithinPartitions(col("user_id"), col("ts"), col("event_id"))
     }
     // SCOPED view name (round-10 verdict item 5): registering the
     // repartitioned+sorted base as the session-wide `events` view meant

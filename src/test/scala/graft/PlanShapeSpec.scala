@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Assertions read the pre-execution plan string (the AQE-initial plan:
   * what the optimizer committed to before runtime re-planning), so they
-  * are deterministic and cheap — no job runs.
+  * are deterministic and cheap — the only jobs are the eager staged
+  * checkpoints a query runs while it is built.
   */
 class PlanShapeSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -24,9 +25,11 @@ class PlanShapeSpec extends AnyFunSuite {
   // -- structural inspection (stable across Spark's plan-string formats) --
 
   import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.execution.SparkPlan
-  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, HashPartitioningLike, UnknownPartitioning}
+  import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
   import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+  import org.apache.spark.sql.util.QueryExecutionListener
   import org.apache.spark.sql.execution.window.{WindowExec, WindowExecBase}
 
   /** Every node of the pre-execution physical plan (AQE unwrapped). */
@@ -61,29 +64,39 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  private def countCacheReads(name: String): Int =
-    nodes(name).count(_.isInstanceOf[InMemoryTableScanExec])
+  /** Reads of a staged frame: scans of a checkpointed RDD leaf. */
+  private def countStagedReads(name: String): Int =
+    nodes(name).count {
+      case r: RDDScanExec => r.rdd.isCheckpointed
+      case _ => false
+    }
 
-  /** Plan nodes INCLUDING staged-cache build plans (InMemoryRelation
-    * subtrees), recursively — where the corpus-scan work actually lives
-    * for the staged pipelines. */
+  /** Plan nodes INCLUDING the plans of the eager checkpoints (staged
+    * frames, loop rounds) the query ran while it was built — where the
+    * corpus-scan work actually lives for the staged pipelines. Staged
+    * frames are cleared first so each is built, and seen, once. */
   private def deepNodes(name: String): Seq[SparkPlan] = {
-    // each distinct cache's BUILD plan counts once, however many scans
-    // read it (cache reuse is the point, not re-evaluation)
-    val seen = new java.util.IdentityHashMap[SparkPlan, Unit]()
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        if (action == "checkpoint" || action == "localCheckpoint") built.add(qe.executedPlan)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    graft.ops.Q.clearStaged()
+    spark.listenerManager.register(listener)
+    val df =
+      try SparkEntry.queries(name)(spark, dir)
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case i: InMemoryTableScanExec =>
-        val build =
-          if (seen.containsKey(i.relation.cachedPlan)) Nil
-          else {
-            seen.put(i.relation.cachedPlan, ())
-            walk(i.relation.cachedPlan)
-          }
-        i +: (build ++ i.children.flatMap(walk))
+      case q: QueryStageExec => q +: walk(q.plan)
       case _ => p +: p.children.flatMap(walk)
     }
-    walk(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+    import scala.jdk.CollectionConverters._
+    (df.queryExecution.executedPlan +: built.asScala.toSeq).flatMap(walk)
   }
 
   test("q56 manifest: one metadata-width exchange, text never shuffles") {
@@ -147,7 +160,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // block offsets come back by broadcast, and both phases read the
     // staged narrow projection — the text is scanned once, in its build
     assert(plan("q48_greedy_packing").contains("BroadcastHashJoin"))
-    assert(countCacheReads("q48_greedy_packing") >= 2)
+    assert(countStagedReads("q48_greedy_packing") >= 2)
   }
 
   test("t07/t08 text stages are shuffle-free row-wise projections") {
@@ -197,9 +210,9 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q50 sequence pipeline: single text scan + blocked packing window") {
-    // both packing-phase consumers read the staged chunk cache, so the
-    // text is scanned only inside the cache build
-    assert(countCacheReads("q50_sequence_pipeline") >= 2,
+    // both packing-phase consumers read the staged chunk frame, so the
+    // text is scanned only inside its build
+    assert(countStagedReads("q50_sequence_pipeline") >= 2,
       "staged chunk frame not reused")
     // packing window is the blocked two-phase shape, never per-language
     assertBlockedPackingWindows("q50_sequence_pipeline")
@@ -496,34 +509,44 @@ class PlanShapeSpec extends AnyFunSuite {
     (leaf, exchanges)
   }
 
-  test("under AQE a checkpoint leaf forgets its hash partitioning; a built cache leaf keeps it") {
-    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+  private def assertKeyedOnK(leaf: SparkPlan): Unit =
+    leaf.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.numPartitions == 8)
+        assert(h.expressions.collect { case a: AttributeReference => a.name } == Seq("k"))
+      case other => fail(s"leaf $leaf reports $other")
+    }
+
+  test("under AQE checkpoint, staged and built-cache leaves keep hash partitioning") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     val (ckLeaf, ckExchanges) = leafAndExchanges(graft.ops.Q.roundCheckpoint(keyed()))
-    assert(ckLeaf.outputPartitioning.isInstanceOf[UnknownPartitioning], ckLeaf)
-    assert(ckExchanges == 1, "a groupBy on the checkpoint's key must re-exchange")
+    assertKeyedOnK(ckLeaf)
+    assert(ckExchanges == 0, "a groupBy on the checkpoint's key must not re-exchange")
+    try {
+      val (stLeaf, stExchanges) =
+        leafAndExchanges(graft.ops.Q.staged("leaf_probe_keyed", dir)(keyed()))
+      assert(stLeaf.isInstanceOf[RDDScanExec], stLeaf)
+      assertKeyedOnK(stLeaf)
+      assert(stExchanges == 0, "a groupBy on the staged frame's key must not re-exchange")
+    } finally graft.ops.Q.clearStaged()
     val cached = keyed().cache()
     try {
       cached.createOrReplaceTempView("leaf_probe_cached")
-      // a cache not yet built reports nothing either: its plan is still
-      // an unexecuted adaptive plan
+      // a cache not yet built reports nothing: its plan is still an
+      // unexecuted adaptive plan
       val (lazyLeaf, lazyExchanges) = leafAndExchanges(spark.table("leaf_probe_cached"))
       assert(lazyLeaf.isInstanceOf[InMemoryTableScanExec], lazyLeaf)
       assert(lazyLeaf.outputPartitioning.isInstanceOf[UnknownPartitioning], lazyLeaf)
       assert(lazyExchanges == 1)
       cached.count()
       val (cacheLeaf, cacheExchanges) = leafAndExchanges(spark.table("leaf_probe_cached"))
-      cacheLeaf.outputPartitioning match {
-        case h: HashPartitioning =>
-          assert(h.numPartitions == 8)
-          assert(h.expressions.collect { case a: AttributeReference => a.name } == Seq("k"))
-        case other => fail(s"built cache leaf reports $other")
-      }
+      assert(cacheLeaf.isInstanceOf[InMemoryTableScanExec], cacheLeaf)
+      assertKeyedOnK(cacheLeaf)
       assert(cacheExchanges == 0, "a groupBy on the built cache's key must not re-exchange")
     } finally cached.unpersist(blocking = true)
   }
 
-  test("staged keeps a checkpoint as its leaf and caches any other frame") {
+  test("staged returns a checkpoint leaf, never a cache, for any frame") {
     import org.apache.spark.storage.StorageLevel
     val ck = graft.ops.Q.staged("leaf_probe_ck", dir) { graft.ops.Q.roundCheckpoint(keyed()) }
     val viaRdd = graft.ops.Q.staged("leaf_probe_rdd", dir) {
@@ -531,10 +554,49 @@ class PlanShapeSpec extends AnyFunSuite {
       spark.createDataFrame(df.rdd, df.schema)
     }
     try {
-      assert(ck.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-      assert(ck.storageLevel == StorageLevel.NONE, "a checkpoint was cached on top")
-      assert(viaRdd.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-      assert(viaRdd.storageLevel != StorageLevel.NONE, "a createDataFrame root was not cached")
+      for (df <- Seq(ck, viaRdd)) {
+        df.queryExecution.analyzed match {
+          case l: org.apache.spark.sql.execution.LogicalRDD =>
+            assert(l.rdd.isCheckpointed, "staged returned an unmaterialized frame")
+          case other => fail(s"staged returned $other")
+        }
+        assert(df.storageLevel == StorageLevel.NONE, "a staged frame was cached")
+      }
     } finally graft.ops.Q.clearStaged()
+  }
+
+  test("m10's gkey self-join plans no exchange on either side above the ck leaf") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // broadcast off, so the join is a shuffle join at any scale
+    graft.Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
+      graft.ops.Q.clearStaged()
+      val joins = planNodes(SparkEntry.queries("m10_audio_granule_neardup")(spark, dir))
+        .collect { case j: SortMergeJoinExec => j }
+        .filter(_.leftKeys.exists(_.references.exists(_.name == "gkey")))
+      assert(joins.size == 1, s"expected one gkey self-join, got ${joins.size}")
+      for (side <- joins.head.children) {
+        assert(side.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+          s"a self-join side re-exchanges above the ck leaf:\n$side")
+        assert(side.collect { case r: RDDScanExec => r }.size == 1, side)
+      }
+    }
+  }
+
+  test("q65's branches plan no user_id exchange over the staged base, AQE on") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    graft.ops.Q.clearStaged()
+    val ns = planNodes(SparkEntry.queries("q65_fused_event_suite")(spark, dir))
+    val byUser = ns.collect { case e: ShuffleExchangeExec => e }.filter { e =>
+      e.outputPartitioning match {
+        case h: HashPartitioning => h.references.exists(_.name == "user_id")
+        case _ => false
+      }
+    }
+    assert(byUser.isEmpty, s"a q65 branch re-exchanges on user_id: $byUser")
+    val bases = ns.collect { case r: RDDScanExec if r.output.exists(_.name == "user_id") => r }
+    assert(bases.nonEmpty && bases.forall(_.outputPartitioning.isInstanceOf[HashPartitioningLike]),
+      s"the staged base lost its user_id partitioning: $bases")
   }
 }

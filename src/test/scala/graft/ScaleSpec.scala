@@ -166,7 +166,7 @@ class ScaleSpec extends AnyFunSuite {
       assert(got(tag) == want, s"fused $tag diverged from $name")
     }
     // plan pin: no branch re-exchanges the event stream — the only
-    // user_id hashpartitioning lives inside the staged cached base
+    // user_id hashpartitioning lives inside the staged base's build
     val plan = fused.queryExecution.executedPlan.toString
     val reExchanges = "Exchange hashpartitioning\\(user_id".r
       .findAllIn(plan).size
@@ -192,14 +192,16 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("clearStaged releases stagedMaterialized checkpoint blocks (no leak)") {
-    // a staged frame whose root is a checkpoint holds localCheckpoint RDD
-    // blocks that a plan-level unpersist cannot see: q65's fused base (a
-    // full events copy) and d02's pair list must both be released (the
-    // title keeps the name of the checkpointing stager, now `Q.staged`)
+    // every staged frame is a checkpoint whose localCheckpoint RDD blocks
+    // a plan-level unpersist cannot see: q65's fused base (a full events
+    // copy), d02's pair list and d24's createDataFrame-rooted labels (and
+    // the fixpoint rounds behind them) must all be released (the title
+    // keeps the name of the checkpointing stager, now `Q.staged`)
     val dir = "/root/testdata/sf0.001"
     val inputs = Seq[() => Unit](
       () => SparkEntry.queries("q65_fused_event_suite")(spark, dir).collect(),
-      () => graft.ops.DedupOps.d02Pairs(spark, dir).collect())
+      () => graft.ops.DedupOps.d02Pairs(spark, dir).collect(),
+      () => SparkEntry.queries("d24_semantic_graph_dedup")(spark, dir).collect())
     for (run <- inputs) {
       graft.ops.Q.clearStaged()
       val before = spark.sparkContext.getPersistentRDDs.keySet
