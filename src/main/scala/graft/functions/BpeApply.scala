@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the reference's contract that per-unit user compute is unbounded by
   * the framework (`/root/reference/gasket/src/framework.rs:125`) holds.
   *
-  * SEMANTICS — exactly [[graft.ops.CorpusOps.encodeBytesLocal]] /
+  * SEMANTICS — exactly [[graft.ops.CorpusOps.encodeLocal]] /
   * `greedyMergeLocal`: merges apply in training order; each is one
   * leftmost-greedy scan (tail-fuse-or-append) over the current symbols.
   * Symbols are contiguous slices of the word's UTF-8 bytes, so the whole

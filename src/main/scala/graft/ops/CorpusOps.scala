@@ -511,16 +511,16 @@ object CorpusOps {
              CAST(sum(n_chunk_tokens) AS BIGINT) AS n_tokens_packed
       FROM p GROUP BY lang"""))
 
-  // ---- tokenizer vocab induction --------------------------------------
+  // ---- tokenizer: one BPE pipeline over two alphabets -----------------
 
   /** BPE geometry — shared by the engine loop and the unrolled oracle so
     * retuning cannot break engine↔oracle equivalence (same rule as the
     * chunk/pack constants above). `bpeRounds` is a JVM-level dial
     * (`-Dgraft.bpe.rounds=N`, default 12 to keep the gate's unrolled
     * DuckDB oracle tractable): the merge loop itself is driver-local
-    * (see [[bpeTrain]]), so raising the dial costs O(N·vocab·len) driver
-    * work and ZERO extra Spark jobs — 32 k-merge tokenizer training is
-    * in reach of the same code path (SCALE.md "t10 rounds dial"). */
+    * (see [[bpeMergeLoop]]), so raising the dial costs O(N·vocab·len)
+    * driver work and ZERO extra Spark jobs (SCALE.md "Tokenizer-training
+    * ops at 8×/64× documents"). */
   private[graft] val bpeRounds: Int =
     sys.props.getOrElse("graft.bpe.rounds", "12").toInt
   private[graft] val bpeVocab = 1000
@@ -531,14 +531,10 @@ object CorpusOps {
     * step either fuses the tail symbol with the incoming one (tail = lhs
     * and incoming = rhs — `endswith(acc, '|lhs|')` identifies the tail
     * EXACTLY because symbols never contain the delimiter) or appends.
-    * This replaced a fixed 5-pass `replace` composition after a
-    * randomized audit showed iterated non-overlapping replace diverges
-    * from greedy BPE on self-overlapping runs (different adjacency on
-    * `aaaaa`+(a,a); even the symbol multiset differed in 18 of 200k
-    * random sequences) — the fold is the textbook single-scan semantics,
-    * still deterministic and engine↔oracle identical, with no magic pass
-    * count. The prepended `'|'` init also satisfies DuckDB's
-    * `list_reduce` same-type constraint. */
+    * Iterated non-overlapping `replace` is NOT this semantics: it
+    * diverges from greedy BPE on self-overlapping runs (`aaaaa`+(a,a)).
+    * The prepended `'|'` init also satisfies DuckDB's `list_reduce`
+    * same-type constraint. */
   private[graft] def sGreedyMerge(seqE: String, lhsE: String, rhsE: String): String =
     s"""aggregate(filter(split($seqE, '[|]'), x -> x <> ''), '|',
        |  (acc, x) -> CASE WHEN endswith(acc, concat('|', $lhsE, '|')) AND x = $rhsE
@@ -553,7 +549,7 @@ object CorpusOps {
 
   /** Driver-local leftmost-greedy merge — the EXACT semantics of
     * [[sGreedyMerge]]/[[oGreedyMerge]] (tail-fuse-or-append single scan),
-    * in plain Scala for the trained-state loop in [[bpeTrain]]. */
+    * in plain Scala for [[bpeMergeLoop]] and [[encodeLocal]]. */
   private[graft] def greedyMergeLocal(
       syms: Array[String], lhs: String, rhs: String): Array[String] = {
     val buf = new scala.collection.mutable.ArrayBuffer[String](syms.length)
@@ -567,263 +563,6 @@ object CorpusOps {
     }
     buf.toArray
   }
-
-  /** BPE merge-table training: ONE corpus-scale Spark stage (word counts →
-    * top-`bpeVocab` via TakeOrdered, staged through [[Q.staged]] so t10 and
-    * t12 share it within a run and Bench's cold-run sweep still clears it),
-    * then the whole merge loop on the DRIVER over the collected ≤`bpeVocab`
-    * rows. The capped vocab frame is trained state, not data — the same
-    * model-artifact judgment as t12's collected merge table and d12's
-    * driver-built Bloom filter — so each round is O(vocab·len) local work
-    * (count adjacent pairs weighted by word freq, arg-max with the
-    * deterministic freq DESC, lhs, rhs tiebreak, one greedy-merge scan per
-    * word) instead of two distributed jobs paying per-job constants over
-    * 1000 rows. Corpus size only ever touches the one word-count shuffle;
-    * round count only ever touches driver CPU — 32 k merges ≈ tens of ms.
-    * Stops early if no adjacent pair remains (every word fused to one
-    * symbol); the oracle's CROSS JOIN with the then-empty `b_r` goes empty
-    * the same way. */
-  /** Per-doc `[a-z]+` token histograms, staged once per ENCODE run (t12
-    * only — the train-only t10 path must not pay this barrier, see
-    * [[wordCounts]]). A zero-shuffle projection: the native
-    * [[graft.functions.TokenHistogram]] expression collapses each doc's
-    * token stream to a `word → count` map in one byte pass, and the
-    * staged frame is document-count rows of map values — NOT
-    * token-stream rows (the round-7 measurement that killed the 50 M-row
-    * token-stream cache does not apply; the exploded `(doc_id, word,
-    * cnt)` spelling WAS re-measured this round and lost ~15% to this map
-    * form at 64× — per-row cache overhead beats map serialization
-    * here). t12 derives BOTH its train-side wordcount and its per-doc
-    * aggregate from this one frame, cutting the encode family's corpus
-    * passes from 2 to 1 (round-10 verdict item 1). */
-  private[graft] def docHist(
-      s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("t12_doc_hist", d) {
-      withViews(s, d, "documents")("""
-        SELECT doc_id, ascii_word_histogram(lower(text)) AS h
-        FROM documents""")
-    }
-
-  /** FULL per-word counts of the `[a-z]+` token stream — ONE fused
-    * corpus pass (scan → native histogram → map explode → partial agg →
-    * vocabulary-width shuffle), staged vocabulary-sized. The per-doc
-    * histogram replaces `regexp_extract_all` + per-occurrence explode:
-    * no regex, and the explode emits one row per DISTINCT word per doc
-    * (2.3× fewer at the measured corpus shape). Deliberately does NOT
-    * read [[docHist]]'s staged frame: for a train-only run (t10/t13) its
-    * write+read round-trip measured SLOWER at 64× (0.55 → 0.95 s) than
-    * re-fusing the scan into this one job — encode runs, which need the
-    * per-doc frame anyway, derive their wordcount from [[docHist]]
-    * instead ([[t12Encode]]). */
-  private[graft] def wordCounts(
-      s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("t10_wordcounts_full", d) {
-      withViews(s, d, "documents")("""
-        SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
-        FROM (SELECT explode(ascii_word_histogram(lower(text))) AS (word, cnt)
-              FROM documents)
-        GROUP BY word""")
-    }
-
-  private[graft] def bpeTrain(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      rounds: Int = bpeRounds): Vector[(Int, String, String, Long)] = {
-    wordCounts(s, d).createOrReplaceTempView("t10_wc")
-    bpeTrainFromView(s, "t10_wc", rounds)
-  }
-
-  /** The train head over an already-registered full-wordcount view: top-K
-    * vocab cap (deterministic `freq DESC, word` tiebreak) → driver merge
-    * loop. Split out so the encode path can train from the wordcount it
-    * derives from the staged per-doc histograms ([[t12Encode]]) — same
-    * values as [[wordCounts]] (spec-pinned in TokenHistogramSpec), zero
-    * extra corpus scans. */
-  private[graft] def bpeTrainFromView(
-      s: org.apache.spark.sql.SparkSession,
-      wcView: String,
-      rounds: Int): Vector[(Int, String, String, Long)] = {
-    val wc = s.sql(
-      s"SELECT word, freq FROM $wcView ORDER BY freq DESC, word LIMIT $bpeVocab")
-    bpeMergeLoop(
-      wc.collect().map(r => (r.getString(0).map(_.toString).toArray, r.getLong(1))),
-      rounds)
-  }
-
-  /** The ONE DuckDB spelling of t10's merge-table derivation — the full
-    * WITH-chain body (wc, w1, then per-round a/p/b/w CTEs ending at
-    * `w${bpeRounds+1}`, trailing comma-ready), shared by t10's oracle
-    * (which selects the b1..bN merge rows) and t12's (which composes the
-    * encode rounds on top of the same b1..bN) so the two oracles cannot
-    * drift — the same rule as [[graft.ops.DedupOps.oracleBandsCte]]. */
-  /** One oracle merge round (a/p/b/w CTE block) — generic over the symbol
-    * alphabet: it only sees `|`-delimited `seq` strings, so the same
-    * round body drives t10's char-level chain AND t13's byte-level (hex
-    * symbol) chain without drift. */
-  private def bpeOracleRound(r: Int): String = s"""
-        a$r AS MATERIALIZED (SELECT word, freq, seq,
-                   list_filter(string_split(seq, '|'), x -> x <> '') AS syms
-                 FROM w$r),
-        p$r AS (SELECT lhs, rhs, CAST(sum(freq) AS BIGINT) AS freq
-                FROM (SELECT freq, syms[i] AS lhs, syms[i + 1] AS rhs
-                      FROM (SELECT freq, syms, unnest(range(1, len(syms))) AS i
-                            FROM a$r WHERE len(syms) >= 2))
-                GROUP BY lhs, rhs),
-        b$r AS MATERIALIZED (SELECT lhs, rhs, freq FROM p$r
-                ORDER BY freq DESC, lhs, rhs LIMIT 1),
-        w${r + 1} AS (SELECT w.word, w.freq,
-                   ${oGreedyMerge("w.seq", "b.lhs", "b.rhs")} AS seq
-                   FROM a$r w CROSS JOIN b$r b)"""
-
-  private def t10OracleChain: String =
-    s"""wc AS (SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-                  FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-                        FROM documents)
-                  GROUP BY w ORDER BY freq DESC, word LIMIT $bpeVocab),
-      w1 AS (SELECT word, freq,
-               '|' || regexp_replace(word, '(.)', '\\1|', 'g') AS seq
-             FROM wc),
-      ${(1 to bpeRounds).map(bpeOracleRound).mkString(",")}"""
-
-  /** BPE-style tokenizer vocab induction: the merge-rule table a subword
-    * tokenizer is trained from. ONE corpus-scale shuffle (lowercased
-    * `[a-z]+` word counts → top-`bpeVocab` via TakeOrdered — the only
-    * stage that touches N documents), then the whole greedy merge loop
-    * runs driver-local over the collected capped vocab ([[bpeTrain]] —
-    * trained state, not data), so round count never costs Spark jobs.
-    * Symbol sequences in the oracle ride `|`-delimited strings
-    * (`|p|a|r|`), safe because words are `[a-z]+` only; the driver fold
-    * ([[greedyMergeLocal]]) and the oracle fold ([[oGreedyMerge]]) are
-    * the same exact leftmost-greedy single-scan semantics.
-    *
-    * Scale: merge work is O(`bpeRounds`·`bpeVocab`·len) on the driver
-    * regardless of N — corpus size only ever affects the one word-count
-    * shuffle, and a tokenizer-realistic 32 k merges is the same one
-    * Spark stage (`-Dgraft.bpe.rounds`, SCALE.md "t10 rounds dial").
-    * The oracle is the identical unrolled computation (materialized
-    * CTEs — DuckDB inlines CTEs referenced twice, which re-evaluates
-    * each round's frame exponentially without the hint).
-    * Reference analogue: iterative refinement over a bounded state frame,
-    * the same shape as the reference's staged worker loops
-    * (`gasket/src/runtime.rs:244-289` drives repeated bounded work units
-    * through a fixed stage graph). */
-  val t10 = QueryDef(
-    "t10_bpe_vocab",
-    (s, d) => {
-      import s.implicits._
-      bpeTrain(s, d)
-        .map { case (r, l, rh, f) => (r.toLong, l, rh, f) }
-        .toDF("rank", "lhs", "rhs", "freq")
-        .orderBy("rank")
-    },
-    Some(s"""
-      WITH $t10OracleChain
-      ${(1 to bpeRounds)
-        .map(r => s"SELECT CAST($r AS BIGINT) AS rank, lhs, rhs, freq FROM b$r")
-        .mkString(" UNION ALL ")}
-      ORDER BY rank"""),
-    headline = true)
-
-  /** t12's distributed encode plan at an arbitrary merge depth: train the
-    * merge table ([[bpeTrain]] — a MODEL ARTIFACT, tiny trained state,
-    * same judgment as d12's driver-built Bloom filter), flatten it into
-    * ONE string literal, and apply it per DISTINCT word with the native
-    * [[graft.functions.BpeApply]] expression. Round count only ever
-    * changes the literal's length — never the plan shape — so a
-    * 30k-merge production tokenizer is the SAME two-stage plan (this is
-    * what removed the old nested-`aggregate()` spelling's structural
-    * depth cap; QueriesSpec pins 12-round equivalence against that legacy
-    * SQL fold and 256-round equivalence against the driver fold). */
-  private[graft] def t12Encode(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      rounds: Int = bpeRounds): org.apache.spark.sql.DataFrame = {
-    // ONE corpus scan for the whole query: the staged per-doc histograms
-    // feed (a) the train-side wordcount (metadata-width re-aggregation —
-    // identical values to [[wordCounts]], spec-pinned), (b) the
-    // distinct-word encode frame, and (c) the per-doc aggregate, where
-    // every stat is a count-weighted sum over the doc's distinct words
-    // (exact BIGINTs — identical to summing per token occurrence).
-    docHist(s, d).createOrReplaceTempView("t12_dh")
-    staged("t12_wordcounts_derived", d) {
-      s.sql("""
-        SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
-        FROM (SELECT explode(h) AS (word, cnt) FROM t12_dh)
-        GROUP BY word""")
-    }.createOrReplaceTempView("t12_wc")
-    val merges = bpeTrainFromView(s, "t12_wc", rounds)
-      .map { case (_, l, r, _) => s"$l $r" }.mkString(" ")
-    // round 12: the tail is ONE zero-shuffle row-wise pass over the
-    // staged map frame (native [[graft.functions.BpeDocStats]]) — the
-    // prior explode + broadcast-join + re-aggregate spelling
-    // materialized a (doc, distinct word) row per map entry and
-    // re-grouped rows that started out grouped by document. `size(h)>0`
-    // keeps the old explode semantics: a token-free document emitted no
-    // rows there and must stay absent here.
-    s.sql(s"""
-      SELECT doc_id,
-             st.n_words AS n_words,
-             st.n_subwords AS n_subwords,
-             st.n_len AS n_chars,
-             CAST(st.n_len AS DOUBLE) / CAST(st.n_subwords AS DOUBLE)
-               AS chars_per_subword
-      FROM (SELECT doc_id, bpe_doc_stats_chars(h, '$merges') AS st
-            FROM t12_dh WHERE size(h) > 0)""")
-  }
-
-  /** BPE tokenizer APPLICATION — the other half of t10's train step:
-    * encode every document with the learned merge-rule table and report
-    * per-doc subword statistics (token count, char count, chars-per-
-    * subword compression — the number a tokenizer owner actually
-    * monitors).
-    *
-    * Scale shape ([[t12Encode]]): merges apply to DISTINCT words, not the
-    * token stream — the native merge-apply expression runs once per
-    * distinct word (vocabulary-sized, millions at 100 TB, never
-    * corpus-sized) after one metadata-width word shuffle, and the encoded
-    * lengths broadcast back onto the shuffle-free per-doc token explode.
-    * The oracle cannot collect, so it re-derives the merge table with
-    * t10's own unrolled CTEs (oracle-verified identical by t10's gate
-    * row) and applies the same 12 rounds over the distinct-word frame. */
-  val t12 = QueryDef(
-    "t12_bpe_encode",
-    (s, d) => t12Encode(s, d),
-    Some {
-      // composes [[t10OracleChain]] — the oracle-verified derivation of
-      // the same b1..b12 the engine collected, so both sides apply the
-      // IDENTICAL rules. LEFT JOIN ON true, not CROSS JOIN: past the
-      // exhaustion round (every word fused — char-level dries up at 89
-      // rounds on sf0.01) b_r is EMPTY, and a cross join would wipe the
-      // encode chain to zero rows while the engine's collected table just
-      // stops early; the left join passes seq through unchanged (caught
-      // by the -Dgraft.bpe.rounds=256 deep-dial gate run in round 10).
-      val encodeRounds = (1 to bpeRounds).map { r =>
-        s"""e$r AS MATERIALIZED (SELECT w,
-            CASE WHEN b.lhs IS NULL THEN seq
-                 ELSE ${oGreedyMerge("seq", "b.lhs", "b.rhs")} END AS seq
-            FROM e${r - 1} LEFT JOIN b$r b ON true)"""
-      }.mkString(",\n      ")
-      s"""
-      WITH $t10OracleChain,
-      toks AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS w
-               FROM documents),
-      dw AS (SELECT DISTINCT w FROM toks),
-      e0 AS (SELECT w, '|' || regexp_replace(w, '(.)', '\\1|', 'g') AS seq FROM dw),
-      $encodeRounds,
-      enc AS (SELECT w, CAST(len(list_filter(string_split(seq, '|'),
-                x -> x <> '')) AS BIGINT) AS n_sub
-              FROM e$bpeRounds)
-      SELECT t.doc_id,
-             CAST(count(*) AS BIGINT) AS n_words,
-             CAST(sum(e.n_sub) AS BIGINT) AS n_subwords,
-             CAST(sum(length(t.w)) AS BIGINT) AS n_chars,
-             CAST(sum(length(t.w)) AS DOUBLE) / CAST(sum(e.n_sub) AS DOUBLE)
-               AS chars_per_subword
-      FROM toks t JOIN enc e ON t.w = e.w
-      GROUP BY t.doc_id"""
-    },
-    headline = true)
-
-  // ---- byte-level tokenizer (full UTF-8 coverage) ---------------------
 
   /** Deterministic corpus augmentation for the byte-level tokenizer gate:
     * the synthetic `documents.text` is lowercase-ASCII words + spaces
@@ -843,19 +582,103 @@ object CorpusOps {
 
   /** UTF-8 bytes of a word as uppercase hex-pair symbols — the byte-level
     * symbol alphabet. Hex pairs never contain `|`, so the SAME delimited
-    * greedy-fold machinery (s/oGreedyMerge, [[greedyMergeLocal]]) drives
-    * byte-level merges, and merged symbols (concatenated hex) are
-    * quote-free SQL literals with binary-stable ordering in BOTH engines
-    * (plain ASCII compare — no collation games on raw UTF-8). */
+    * greedy fold drives byte-level merges, and merged symbols (concatenated
+    * hex) are quote-free SQL literals with binary-stable ordering in BOTH
+    * engines (plain ASCII compare — no collation games on raw UTF-8). */
   private[graft] def byteSyms(w: String): Array[String] =
     w.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       .map(b => f"${b & 0xff}%02X")
 
-  /** The shared driver-local merge loop behind [[bpeTrain]] (char-level)
-    * and [[bpeTrainBytes]] (byte-level): count adjacent pairs weighted by
-    * word freq, arg-max with the deterministic (freq DESC, lhs, rhs)
-    * tiebreak, one greedy-merge scan per word, stop early when no pair
-    * remains. Pure function of the capped vocab — trained state. */
+  /** A BPE symbol alphabet: everything the char-level tokenizer (t10
+    * train, t12 encode) and the byte-level one (t13 train, t14 encode,
+    * t15 ids, t18 detokenize) differ in. Exactly two instances, nothing
+    * settable; every stage below is written once over it.
+    *
+    * @param unit     native-function suffix (`bpe_apply_<unit>`,
+    *                 `bpe_doc_stats_<unit>`) and the encode output's length
+    *                 unit (`n_<unit>`, `<unit>_per_subword`)
+    * @param trainTag staged-frame prefix of the train path (t10 / t13)
+    * @param encodeTag staged-frame prefix of the encode path (t12 / t14)
+    * @param sHist    Spark: a document's `word → count` histogram
+    * @param sOrder   Spark: the vocab cap's tiebreak over column `word`
+    * @param syms     driver: a word's initial symbols
+    * @param oTokens  DuckDB: a document's token list
+    * @param oOrder   DuckDB: the vocab cap's tiebreak over column `w`
+    * @param oSeq     DuckDB: a word's initial `|s1|s2|…|` symbol string
+    * @param oLen     DuckDB: the length function counted in `n_<unit>` */
+  private[graft] sealed abstract class Alphabet(
+      val unit: String,
+      val trainTag: String,
+      val encodeTag: String,
+      val sHist: String,
+      val sOrder: String,
+      val syms: String => Array[String],
+      val oTokens: String,
+      val oOrder: String,
+      val oSeq: String => String,
+      val oLen: String)
+
+  /** Lowercased `[a-z]+` words, one symbol per character. */
+  private[graft] case object Chars extends Alphabet(
+    unit = "chars", trainTag = "t10", encodeTag = "t12",
+    sHist = "ascii_word_histogram(lower(text))",
+    sOrder = "word",
+    syms = _.map(_.toString).toArray,
+    oTokens = "regexp_extract_all(lower(text), '[a-z]+')",
+    oOrder = "w",
+    oSeq = w => s"'|' || regexp_replace($w, '(.)', '\\1|', 'g')",
+    oLen = "length")
+
+  /** Raw space-separated tokens of the augmented corpus ([[sAugText]]),
+    * one symbol per UTF-8 byte ([[byteSyms]]); the vocab tiebreak orders
+    * by `hex(encode(word))` — injective, byte-wise, collation-proof in
+    * both engines. */
+  private[graft] case object Bytes extends Alphabet(
+    unit = "bytes", trainTag = "t13", encodeTag = "t14",
+    sHist = s"space_token_histogram($sAugText)",
+    sOrder = "hex(encode(word, 'UTF-8'))",
+    syms = byteSyms,
+    oTokens = s"list_filter(string_split($oAugText, ' '), x -> x <> '')",
+    oOrder = "hex(encode(w))",
+    oSeq = w => s"'|' || regexp_replace(hex(encode($w)), '(..)', '\\1|', 'g')",
+    oLen = "strlen")
+
+  /** Per-doc token histograms, staged for the encode path only: a
+    * zero-shuffle projection of document-count map rows (the native
+    * [[graft.functions.TokenHistogram]] collapses each doc's token stream
+    * in one byte pass), from which the encode derives its wordcount, its
+    * distinct-word merge input and its per-doc stats — one corpus scan
+    * (SCALE.md "Round 11: single-pass tokenizer family via native per-doc
+    * histograms"). */
+  private[graft] def docHist(
+      s: org.apache.spark.sql.SparkSession, d: String, a: Alphabet) =
+    staged(s"${a.encodeTag}_doc_hist", d) {
+      withViews(s, d, "documents")(
+        s"SELECT doc_id, ${a.sHist} AS h FROM documents")
+    }
+
+  /** FULL per-word counts — ONE fused corpus pass (scan → native
+    * histogram → distinct-per-doc explode → partial agg →
+    * vocabulary-width shuffle), staged vocabulary-sized. Deliberately does
+    * NOT read [[docHist]]: a train-only run pays less re-fusing the scan
+    * than writing and reading the per-doc frame (same SCALE.md section). */
+  private[graft] def wordCounts(
+      s: org.apache.spark.sql.SparkSession, d: String, a: Alphabet) =
+    staged(s"${a.trainTag}_wordcounts_full", d) {
+      withViews(s, d, "documents")(s"""
+        SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
+        FROM (SELECT explode(${a.sHist}) AS (word, cnt) FROM documents)
+        GROUP BY word""")
+    }
+
+  /** The driver-local merge loop: count adjacent pairs weighted by word
+    * freq, arg-max with the deterministic (freq DESC, lhs, rhs) tiebreak,
+    * one greedy-merge scan per word, stop early when no pair remains
+    * (every word fused to one symbol; the oracle's CROSS JOIN with the
+    * then-empty `b_r` goes empty the same way). Pure function of the
+    * capped vocab — trained state, the same model-artifact judgment as
+    * d12's driver-built Bloom filter — so round count only ever costs
+    * driver CPU. */
   private[graft] def bpeMergeLoop(
       init: Array[(Array[String], Long)],
       rounds: Int): Vector[(Int, String, String, Long)] = {
@@ -884,186 +707,181 @@ object CorpusOps {
     out.result()
   }
 
-  /** Byte-level BPE training — [[bpeTrain]]'s shape (ONE corpus-scale
-    * word-count shuffle → TakeOrdered top-`bpeVocab`, then the merge loop
-    * driver-local over the collected vocab) with two deltas: words are
-    * raw space-separated tokens of the AUGMENTED corpus (nothing dropped
-    * — digits, punct, case, multi-byte UTF-8 all flow through), and the
-    * symbol alphabet is UTF-8 hex byte pairs ([[byteSyms]]), merging
-    * toward GPT-2-style byte-level subwords. Vocab tiebreak orders by
-    * `hex(encode(word))` — injective, byte-wise, collation-proof in both
-    * engines. */
-  /** Byte-level twin of [[docHist]]: per-doc histograms of the augmented
-    * raw-token stream (maximal non-space byte runs — exactly
-    * `filter(split(text, ' '), x -> x <> '')`), staged only on the
-    * encode path (t14), which derives all three of its frames from it. */
-  private[graft] def docHistBytes(
-      s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("t13_doc_hist", d) {
-      withViews(s, d, "documents")(s"""
-        SELECT doc_id, space_token_histogram($sAugText) AS h
-        FROM documents""")
-    }
+  /** BPE merge-table training: the one corpus-scale stage is
+    * [[wordCounts]]; the top-`bpeVocab` cap (TakeOrdered) is collected
+    * and merged driver-local. */
+  private[graft] def bpeTrain(
+      s: org.apache.spark.sql.SparkSession, d: String, a: Alphabet,
+      rounds: Int = bpeRounds): Vector[(Int, String, String, Long)] =
+    bpeTrainFrom(wordCounts(s, d, a), a, rounds)
 
-  /** Byte-level twin of [[wordCounts]]: FULL per-word counts of the
-    * augmented raw-token stream as ONE fused corpus pass (native
-    * histogram, no regex split, distinct-per-doc explode), staged for
-    * the train head and t15/t18's encode/decode frames. Same
-    * train-only-runs-stay-lean judgment as [[wordCounts]]. */
-  private[graft] def wordCountsBytes(
-      s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("t13_wordcounts_full", d) {
-      withViews(s, d, "documents")(s"""
-        SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
-        FROM (SELECT explode(space_token_histogram($sAugText)) AS (word, cnt)
-              FROM documents)
-        GROUP BY word""")
-    }
-
-  private[graft] def bpeTrainBytes(
-      s: org.apache.spark.sql.SparkSession,
-      d: String,
-      rounds: Int = bpeRounds): Vector[(Int, String, String, Long)] = {
-    wordCountsBytes(s, d).createOrReplaceTempView("t13_wc")
-    bpeTrainBytesFromView(s, "t13_wc", rounds)
-  }
-
-  /** Byte-level twin of [[bpeTrainFromView]] (injective
-    * `hex(encode(word))` vocab tiebreak — collation-proof). */
-  private[graft] def bpeTrainBytesFromView(
-      s: org.apache.spark.sql.SparkSession,
-      wcView: String,
+  /** The train head over a full `(word, freq)` wordcount frame: top-K
+    * vocab cap (`freq DESC` + the alphabet's tiebreak) → driver merge
+    * loop. The encode path trains from the wordcount it derives from
+    * [[docHist]] (same values as [[wordCounts]], TokenHistogramSpec). */
+  private[graft] def bpeTrainFrom(
+      wc: org.apache.spark.sql.DataFrame, a: Alphabet,
       rounds: Int): Vector[(Int, String, String, Long)] = {
-    val wc = s.sql(s"""
-      SELECT word, freq FROM $wcView
-      ORDER BY freq DESC, hex(encode(word, 'UTF-8')) LIMIT $bpeVocab""")
-    bpeMergeLoop(
-      wc.collect().map(r => (byteSyms(r.getString(0)), r.getLong(1))), rounds)
+    import org.apache.spark.sql.functions.{col, expr}
+    val top = wc.orderBy(col("freq").desc, expr(a.sOrder))
+      .limit(bpeVocab).collect()
+    bpeMergeLoop(top.map(r => (a.syms(r.getString(0)), r.getLong(1))), rounds)
   }
 
-  /** Driver-local byte-level encode of one word under a merge table — the
-    * exact fold the engine SQL applies ([[sGreedyMerge]] chain over hex
-    * symbols), for spec-level round-trip proofs: concatenating the
-    * returned symbols always reconstructs `hex(utf8(word))`, so decoding
-    * is lossless for ANY input. */
-  private[graft] def encodeBytesLocal(
-      word: String, merges: Seq[(String, String)]): Array[String] =
-    merges.foldLeft(byteSyms(word)) { case (syms, (l, r)) =>
+  /** Driver-local encode of one word under a merge table — the exact
+    * fold the native `bpe_apply_<unit>` applies, for spec-level proofs
+    * (byte-level: the symbols always concatenate back to
+    * `hex(utf8(word))`, so decoding is lossless for ANY input). */
+  private[graft] def encodeLocal(
+      word: String, merges: Seq[(String, String)], a: Alphabet): Array[String] =
+    merges.foldLeft(a.syms(word)) { case (syms, (l, r)) =>
       greedyMergeLocal(syms, l, r)
     }
 
-  /** Byte-level twin of [[t10OracleChain]]: same per-round CTE bodies
-    * ([[bpeOracleRound]] is alphabet-generic), byte-level wc/w1 heads. */
-  private def t13OracleChain: String =
+  /** The distributed encode at an arbitrary merge depth: train from the
+    * staged per-doc histograms, flatten the merge table into ONE string
+    * literal, and compute each document's stats in one zero-shuffle
+    * row-wise pass of the native [[graft.functions.BpeDocStats]] over its
+    * distinct words (SCALE.md "Round 12: t12/t14 encode tail fused into
+    * one row-wise expression"). Round count only changes the literal's
+    * length, never the plan shape. `size(h) > 0` drops token-free
+    * documents, which the oracle's join drops too. */
+  private[graft] def encode(
+      s: org.apache.spark.sql.SparkSession, d: String, a: Alphabet,
+      rounds: Int = bpeRounds): org.apache.spark.sql.DataFrame = {
+    val dh = s"${a.encodeTag}_dh"
+    docHist(s, d, a).createOrReplaceTempView(dh)
+    val wc = staged(s"${a.encodeTag}_wordcounts_derived", d) {
+      s.sql(s"""
+        SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
+        FROM (SELECT explode(h) AS (word, cnt) FROM $dh)
+        GROUP BY word""")
+    }
+    val merges = bpeTrainFrom(wc, a, rounds)
+      .map { case (_, l, r, _) => s"$l $r" }.mkString(" ")
+    s.sql(s"""
+      SELECT doc_id,
+             st.n_words AS n_words,
+             st.n_subwords AS n_subwords,
+             st.n_len AS n_${a.unit},
+             CAST(st.n_len AS DOUBLE) / CAST(st.n_subwords AS DOUBLE)
+               AS ${a.unit}_per_subword
+      FROM (SELECT doc_id, bpe_doc_stats_${a.unit}(h, '$merges') AS st
+            FROM $dh WHERE size(h) > 0)""")
+  }
+
+  /** One oracle merge round (a/p/b/w CTE block) — alphabet-generic: it
+    * only sees `|`-delimited `seq` strings. */
+  private def bpeOracleRound(r: Int): String = s"""
+        a$r AS MATERIALIZED (SELECT word, freq, seq,
+                   list_filter(string_split(seq, '|'), x -> x <> '') AS syms
+                 FROM w$r),
+        p$r AS (SELECT lhs, rhs, CAST(sum(freq) AS BIGINT) AS freq
+                FROM (SELECT freq, syms[i] AS lhs, syms[i + 1] AS rhs
+                      FROM (SELECT freq, syms, unnest(range(1, len(syms))) AS i
+                            FROM a$r WHERE len(syms) >= 2))
+                GROUP BY lhs, rhs),
+        b$r AS MATERIALIZED (SELECT lhs, rhs, freq FROM p$r
+                ORDER BY freq DESC, lhs, rhs LIMIT 1),
+        w${r + 1} AS (SELECT w.word, w.freq,
+                   ${oGreedyMerge("w.seq", "b.lhs", "b.rhs")} AS seq
+                   FROM a$r w CROSS JOIN b$r b)"""
+
+  /** The ONE DuckDB spelling of the merge-table derivation (wc, w1, then
+    * per round a/p/b/w), shared by every tokenizer oracle so they cannot
+    * drift: the vocab queries select b1..bN, the encode queries and
+    * [[oIdChain]] apply b1..bN on top. MATERIALIZED because DuckDB
+    * inlines a CTE referenced twice, which re-evaluates each round's
+    * frame exponentially. */
+  private def oTrainChain(a: Alphabet): String =
     s"""wc AS (SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-                  FROM (SELECT unnest(list_filter(string_split($oAugText, ' '),
-                                 x -> x <> '')) AS w
-                        FROM documents)
-                  GROUP BY w ORDER BY freq DESC, hex(encode(w)) LIMIT $bpeVocab),
-      w1 AS (SELECT word, freq,
-               '|' || regexp_replace(hex(encode(word)), '(..)', '\\1|', 'g') AS seq
-             FROM wc),
+                  FROM (SELECT unnest(${a.oTokens}) AS w FROM documents)
+                  GROUP BY w ORDER BY freq DESC, ${a.oOrder} LIMIT $bpeVocab),
+      w1 AS (SELECT word, freq, ${a.oSeq("word")} AS seq FROM wc),
       ${(1 to bpeRounds).map(bpeOracleRound).mkString(",")}"""
 
-  /** Byte-level BPE vocab induction (GPT-2-style: symbols are UTF-8
-    * BYTES, so no input ever falls outside the alphabet — digits,
-    * punctuation, casing, and multi-byte scripts tokenize instead of
-    * vanishing, closing t10's lowercase-`[a-z]+` coverage hole). Runs on
-    * the augmented corpus ([[sAugText]]) precisely so the gate hash
-    * proves the non-ASCII path. Identical scale shape to t10: one
-    * word-count shuffle touches N documents; the merge loop is
-    * driver-local over ≤`bpeVocab` collected rows (trained state), and
-    * `-Dgraft.bpe.rounds` scales rounds at zero Spark-job cost. */
-  val t13 = QueryDef(
-    "t13_bpe_byte_vocab",
+  /** The ONE DuckDB encode-round chain over the distinct words of a
+    * `toks(…, w)` CTE, ending at `e$bpeRounds(w, seq)`. LEFT JOIN ON
+    * true, not CROSS JOIN: past the exhaustion round b_r is EMPTY, and
+    * a cross join would wipe the chain while the engine's collected
+    * table just stops early (SCALE.md "Deep-dial gate runs"). */
+  private def oEncodeChain(a: Alphabet): String = {
+    val rounds = (1 to bpeRounds).map { r =>
+      s"""e$r AS MATERIALIZED (SELECT w,
+          CASE WHEN b.lhs IS NULL THEN seq
+               ELSE ${oGreedyMerge("seq", "b.lhs", "b.rhs")} END AS seq
+          FROM e${r - 1} LEFT JOIN b$r b ON true)"""
+    }.mkString(",\n      ")
+    s"""dw AS (SELECT DISTINCT w FROM toks),
+      e0 AS (SELECT w, ${a.oSeq("w")} AS seq FROM dw),
+      $rounds"""
+  }
+
+  /** BPE tokenizer vocab induction (t10 char-level, t13 byte-level): the
+    * merge-rule table a subword tokenizer is trained from. ONE
+    * corpus-scale shuffle ([[wordCounts]] → top-`bpeVocab` via
+    * TakeOrdered), then the whole greedy merge loop driver-local over the
+    * collected capped vocab ([[bpeTrain]]). Symbol sequences in the
+    * oracle ride `|`-delimited strings, safe because neither alphabet's
+    * symbols contain `|`; the driver fold ([[greedyMergeLocal]]) and the
+    * oracle fold ([[oGreedyMerge]]) are the same exact leftmost-greedy
+    * single-scan semantics. Byte-level symbols are UTF-8 BYTES, so no
+    * input ever falls outside the alphabet; the gate runs it on the
+    * augmented corpus precisely so its hash proves the non-ASCII path.
+    * Reference analogue: iterative refinement over a bounded state frame
+    * (`gasket/src/runtime.rs:244-289` drives repeated bounded work units
+    * through a fixed stage graph). */
+  private def vocabQuery(name: String, a: Alphabet) = QueryDef(
+    name,
     (s, d) => {
       import s.implicits._
-      bpeTrainBytes(s, d)
+      bpeTrain(s, d, a)
         .map { case (r, l, rh, f) => (r.toLong, l, rh, f) }
         .toDF("rank", "lhs", "rhs", "freq")
         .orderBy("rank")
     },
     Some(s"""
-      WITH $t13OracleChain
+      WITH ${oTrainChain(a)}
       ${(1 to bpeRounds)
         .map(r => s"SELECT CAST($r AS BIGINT) AS rank, lhs, rhs, freq FROM b$r")
         .mkString(" UNION ALL ")}
       ORDER BY rank"""),
     headline = true)
 
-  /** t14's distributed encode plan at an arbitrary merge depth — the
-    * byte-level twin of [[t12Encode]]: one merge-table artifact literal,
-    * one `bpe_apply_bytes` pass per DISTINCT word. Exposed with a
-    * `rounds` dial so QueriesSpec proves the SAME distributed plan at 256
-    * merges (vs [[encodeBytesLocal]]) — depth is data, not plan shape. */
-  private[graft] def t14Encode(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      rounds: Int = bpeRounds): org.apache.spark.sql.DataFrame = {
-    // ONE corpus scan: per-doc histograms feed the derived wordcount
-    // (train + distinct-word encode frame) and the per-doc aggregate —
-    // [[t12Encode]]'s shape on the byte alphabet.
-    docHistBytes(s, d).createOrReplaceTempView("t13_dh")
-    staged("t14_wordcounts_derived", d) {
-      s.sql("""
-        SELECT word, CAST(sum(cnt) AS BIGINT) AS freq
-        FROM (SELECT explode(h) AS (word, cnt) FROM t13_dh)
-        GROUP BY word""")
-    }.createOrReplaceTempView("t14_wc")
-    val merges = bpeTrainBytesFromView(s, "t14_wc", rounds)
-      .map { case (_, l, r, _) => s"$l $r" }.mkString(" ")
-    // round 12: zero-shuffle row-wise tail — see [[t12Encode]]'s note
-    s.sql(s"""
-      SELECT doc_id,
-             st.n_words AS n_words,
-             st.n_subwords AS n_subwords,
-             st.n_len AS n_bytes,
-             CAST(st.n_len AS DOUBLE) / CAST(st.n_subwords AS DOUBLE)
-               AS bytes_per_subword
-      FROM (SELECT doc_id, bpe_doc_stats_bytes(h, '$merges') AS st
-            FROM t13_dh WHERE size(h) > 0)""")
-  }
-
-  /** Byte-level BPE encode — t12's plan shape (merge table applied over
-    * DISTINCT words only, vocabulary-scale; encoded lengths broadcast
-    * back onto the shuffle-free per-doc token explode) on the byte
-    * alphabet: per-doc subword count, UTF-8 byte count, and
-    * bytes-per-subword compression over the augmented corpus. Lossless by
-    * construction (symbols partition the byte string — proved per-word in
-    * QueriesSpec via [[encodeBytesLocal]] round-trips). */
-  val t14 = QueryDef(
-    "t14_bpe_byte_encode",
-    (s, d) => t14Encode(s, d),
-    Some {
-      // LEFT JOIN ON true for the same exhaustion-robustness as t12's
-      // oracle (empty b_r past the last real merge must pass seq through)
-      val encodeRounds = (1 to bpeRounds).map { r =>
-        s"""e$r AS MATERIALIZED (SELECT w,
-            CASE WHEN b.lhs IS NULL THEN seq
-                 ELSE ${oGreedyMerge("seq", "b.lhs", "b.rhs")} END AS seq
-            FROM e${r - 1} LEFT JOIN b$r b ON true)"""
-      }.mkString(",\n      ")
-      s"""
-      WITH $t13OracleChain,
-      toks AS (SELECT doc_id,
-                 unnest(list_filter(string_split($oAugText, ' '), x -> x <> '')) AS w
-               FROM documents),
-      dw AS (SELECT DISTINCT w FROM toks),
-      e0 AS (SELECT w, '|' || regexp_replace(hex(encode(w)), '(..)', '\\1|', 'g') AS seq
-             FROM dw),
-      $encodeRounds,
+  /** BPE tokenizer APPLICATION (t12 char-level, t14 byte-level): encode
+    * every document with the learned merge table ([[encode]]) and report
+    * per-doc subword count, length in the alphabet's unit, and
+    * unit-per-subword compression — the number a tokenizer owner
+    * monitors. The oracle cannot collect, so it re-derives the merge
+    * table with the vocab query's own chain ([[oTrainChain]],
+    * oracle-verified by the vocab gate row) and applies the same rounds
+    * over the distinct-word frame ([[oEncodeChain]]). Byte-level encodes
+    * are lossless by construction (symbols partition the byte string —
+    * proved per word in QueriesSpec via [[encodeLocal]]). */
+  private def encodeQuery(name: String, a: Alphabet) = QueryDef(
+    name,
+    (s, d) => encode(s, d, a),
+    Some(s"""
+      WITH ${oTrainChain(a)},
+      toks AS (SELECT doc_id, unnest(${a.oTokens}) AS w FROM documents),
+      ${oEncodeChain(a)},
       enc AS (SELECT w, CAST(len(list_filter(string_split(seq, '|'),
                 x -> x <> '')) AS BIGINT) AS n_sub
               FROM e$bpeRounds)
       SELECT t.doc_id,
              CAST(count(*) AS BIGINT) AS n_words,
              CAST(sum(e.n_sub) AS BIGINT) AS n_subwords,
-             CAST(sum(strlen(t.w)) AS BIGINT) AS n_bytes,
-             CAST(sum(strlen(t.w)) AS DOUBLE) / CAST(sum(e.n_sub) AS DOUBLE)
-               AS bytes_per_subword
+             CAST(sum(${a.oLen}(t.w)) AS BIGINT) AS n_${a.unit},
+             CAST(sum(${a.oLen}(t.w)) AS DOUBLE) / CAST(sum(e.n_sub) AS DOUBLE)
+               AS ${a.unit}_per_subword
       FROM toks t JOIN enc e ON t.w = e.w
-      GROUP BY t.doc_id"""
-    },
+      GROUP BY t.doc_id"""),
     headline = true)
+
+  val t10 = vocabQuery("t10_bpe_vocab", Chars)
+  val t12 = encodeQuery("t12_bpe_encode", Chars)
+  val t13 = vocabQuery("t13_bpe_byte_vocab", Bytes)
+  val t14 = encodeQuery("t14_bpe_byte_encode", Bytes)
 
   /** Count-min geometry, shared engine↔oracle: depth-4 hash rows ×
     * width-1024 counters. ε = e/w ≈ 0.27%·N expected overcount per row;
@@ -1124,7 +942,7 @@ object CorpusOps {
       graft.functions.GraftFunctions.register(s)
       import s.implicits._
       import org.apache.spark.sql.functions.{broadcast, expr, min}
-      val wt = wordCounts(s, d)
+      val wt = wordCounts(s, d, Chars)
       val cm = wt.selectExpr("freq AS cnt", s"explode(array($hashes)) AS pr")
         .groupBy($"pr.j".as("j"), $"pr.h".as("h"))
         .agg(expr("CAST(sum(cnt) AS BIGINT)").as("cnt"))
@@ -1166,37 +984,30 @@ object CorpusOps {
     },
     headline = true)
 
-  /** Token-ID materialization — the artifact a trainer actually consumes,
-    * closing the tokenizer pipeline (t13 train → t14 encode → ids):
-    * GPT-2's id scheme exactly — ids 0..255 are the single bytes, id
-    * 255+r is merge r's product — so every document becomes its token-ID
-    * SEQUENCE. Output per doc is bounded evidence of the full sequence:
-    * token count, the first 8 ids (comma-joined STRING — list encodings
-    * differ across engines, strings hash identically), and the exact
-    * order-weighted BIGINT checksum Σ id_i·i (s07's audit pattern: any
-    * id or position error anywhere in the sequence breaks the hash).
+  /** The engine head shared by t15 (encode to ids) and t18 (decode
+    * back): trains the byte-level table from the staged full wordcount,
+    * registers that frame as `t13_wc`, and returns two CTEs —
+    * `toks(doc_id, pos, w)`, the augmented token stream, and
+    * `enc(w, ids)`, each DISTINCT word's id array read from `t13_wc`
+    * (re-exploding the corpus for the distinct words would pay a second
+    * scan + posexplode) — plus the id → symbol map literal t18 decodes
+    * with.
     *
-    * Scale shape: the id mapping runs over DISTINCT words
-    * (vocabulary-scale — the merge map is ≤`bpeRounds` entries riding the
-    * SQL literal, base bytes map via `conv`), per-word id arrays
-    * broadcast back onto one posexplode pass, and the per-DOC sequence
-    * assembles with a collect_list that is bounded by DOCUMENT length —
-    * never corpus-scale state (a 100 TB corpus is more docs, not bigger
-    * ones; the power-doc bound is the max document size, the same bound
-    * any sequence writer has). */
-  /** SQL-literal id scheme for a trained byte-level merge table — ONE
-    * definition shared by t15 (encode to ids) and t18 (decode back).
-    * Two merge ROUNDS can produce the same product STRING — ('41','4243')
-    * and ('4142','43') both yield '414243'; real tokenizers key merges by
-    * id pairs, our symbols are strings — so the symbol→id map keeps the
-    * FIRST (lowest-round) id for a product: an undeduped literal would
-    * crash Spark's `map(...)` under `mapKeyDedupPolicy=EXCEPTION`, and
-    * the oracle's rank table dedupes identically (`min(id) GROUP BY
-    * sym`), keeping both engines on one id per distinct symbol. */
-  private[graft] final case class BpeIdScheme(
-      merges: String, mergeMap: String, invMap: String, symId: String)
-  private[graft] def bpeIdScheme(
-      table: Vector[(Int, String, String, Long)]): BpeIdScheme = {
+    * GPT-2's id scheme: ids 0..255 are the single bytes, id 255+r is
+    * merge r's product. Two merge ROUNDS can produce the same product
+    * STRING — ('41','4243') and ('4142','43') both yield '414243'; real
+    * tokenizers key merges by id pairs, our symbols are strings — so the
+    * symbol→id map keeps the FIRST (lowest-round) id for a product: an
+    * undeduped literal would crash Spark's `map(...)` under
+    * `mapKeyDedupPolicy=EXCEPTION`, and the oracle's rank table dedupes
+    * identically (`min(id) GROUP BY sym`), keeping both engines on one
+    * id per distinct symbol. */
+  private def tokenIdsCte(
+      s: org.apache.spark.sql.SparkSession, d: String,
+      rounds: Int): (String, String) = {
+    val wc = wordCounts(s, d, Bytes)
+    wc.createOrReplaceTempView("t13_wc")
+    val table = bpeTrainFrom(wc, Bytes, rounds)
     val merges = table.map { case (_, l, r, _) => s"$l $r" }.mkString(" ")
     val first = scala.collection.mutable.LinkedHashMap[String, Int]()
     table.foreach { case (r, l, rh, _) =>
@@ -1209,37 +1020,34 @@ object CorpusOps {
       .map { case (p, id) => s"$id, '$p'" }.mkString("map(", ", ", ")")
     val symId = "CASE WHEN length(s) = 2 THEN CAST(conv(s, 16, 10) AS INT) " +
       s"ELSE element_at($mergeMap, s) END"
-    BpeIdScheme(merges, mergeMap, invMap, symId)
+    (s"""toks AS (SELECT doc_id,
+                      posexplode(filter(split($sAugText, ' '), x -> x <> ''))
+                        AS (pos, w)
+                    FROM documents),
+      enc AS (SELECT word AS w,
+                transform(bpe_apply_${Bytes.unit}(word, '$merges'),
+                  s -> CAST($symId AS BIGINT)) AS ids
+              FROM t13_wc)""", invMap)
   }
 
-  /** DuckDB twin of [[bpeIdScheme]] + the word→(pos, id) chain shared by
-    * the t15 and t18 oracles: re-derives the merge table via t13's
-    * verified CTEs, encodes the distinct words, and maps symbols to ids
-    * INDEPENDENTLY of the engine (hex digits via strpos arithmetic,
-    * merge products via the deduped rank table). Ends at `wid(w, i, id)`
-    * and also defines `toks` and `mp` for downstream use. */
+  /** DuckDB twin of [[tokenIdsCte]]'s id scheme + the word→(pos, id)
+    * chain shared by the t15 and t18 oracles: re-derives the merge table
+    * via [[oTrainChain]], encodes the distinct words via [[oEncodeChain]],
+    * and maps symbols to ids INDEPENDENTLY of the engine (hex digits via
+    * strpos arithmetic, merge products via the deduped rank table). Ends
+    * at `wid(w, i, id)` and also defines `toks` and `mp` for downstream
+    * use. */
   private def oIdChain: String = {
-    val encodeRounds = (1 to bpeRounds).map { r =>
-      s"""e$r AS MATERIALIZED (SELECT w,
-          CASE WHEN b.lhs IS NULL THEN seq
-               ELSE ${oGreedyMerge("seq", "b.lhs", "b.rhs")} END AS seq
-          FROM e${r - 1} LEFT JOIN b$r b ON true)"""
-    }.mkString(",\n      ")
     val mpUnion = (1 to bpeRounds)
       .map(r => s"SELECT 255 + $r AS id, lhs || rhs AS sym FROM b$r")
       .mkString(" UNION ALL ")
-    s"""$t13OracleChain,
+    s"""${oTrainChain(Bytes)},
       mp AS (SELECT sym, CAST(min(id) AS BIGINT) AS id
              FROM ($mpUnion) GROUP BY sym),
       toks AS (SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos,
                  unnest(ws) AS w
-               FROM (SELECT doc_id,
-                       list_filter(string_split($oAugText, ' '), x -> x <> '') AS ws
-                     FROM documents)),
-      dw AS (SELECT DISTINCT w FROM toks),
-      e0 AS (SELECT w, '|' || regexp_replace(hex(encode(w)), '(..)', '\\1|', 'g') AS seq
-             FROM dw),
-      $encodeRounds,
+               FROM (SELECT doc_id, ${Bytes.oTokens} AS ws FROM documents)),
+      ${oEncodeChain(Bytes)},
       wsyms AS (SELECT w, list_filter(string_split(seq, '|'), x -> x <> '') AS syms
                 FROM e$bpeRounds),
       ws AS (SELECT w, unnest(range(1, len(syms) + 1)) AS i,
@@ -1253,25 +1061,27 @@ object CorpusOps {
               FROM ws LEFT JOIN mp ON ws.s = mp.sym)"""
   }
 
+  /** Token-ID materialization — the artifact a trainer actually consumes,
+    * closing the tokenizer pipeline (t13 train → t14 encode → ids): every
+    * document becomes its token-ID SEQUENCE under [[tokenIdsCte]]'s
+    * scheme. Output per doc is bounded evidence of the full sequence:
+    * token count, the first 8 ids (comma-joined STRING — list encodings
+    * differ across engines, strings hash identically), and the exact
+    * order-weighted BIGINT checksum Σ id_i·i (s07's audit pattern: any
+    * id or position error anywhere in the sequence breaks the hash).
+    *
+    * Scale shape: the id mapping runs over DISTINCT words
+    * (vocabulary-scale — the merge map is ≤`bpeRounds` entries riding the
+    * SQL literal, base bytes map via `conv`), per-word id arrays
+    * broadcast back onto one posexplode pass, and the per-DOC sequence
+    * assembles with a collect_list bounded by DOCUMENT length — never
+    * corpus-scale state. */
   private[graft] def t15Ids(
       s: org.apache.spark.sql.SparkSession, d: String,
       rounds: Int = bpeRounds): org.apache.spark.sql.DataFrame = {
-    val sch = bpeIdScheme(bpeTrainBytes(s, d, rounds))
-    val merges = sch.merges
-    val symId = sch.symId
-    // bpeTrainBytes above staged the full wordcount artifact as t13_wc —
-    // the distinct-word frame reads it instead of re-exploding the corpus
-    // (confirmed by plan audit: the DISTINCT-from-toks spelling inlined
-    // toks twice and paid a second scan+posexplode)
+    val (cte, _) = tokenIdsCte(s, d, rounds)
     withViews(s, d, "documents")(s"""
-      WITH toks AS (SELECT doc_id,
-                      posexplode(filter(split($sAugText, ' '), x -> x <> ''))
-                        AS (pos, w)
-                    FROM documents),
-      enc AS (SELECT word AS w,
-                transform(bpe_apply_bytes(word, '$merges'),
-                  s -> CAST($symId AS BIGINT)) AS ids
-              FROM t13_wc),
+      WITH $cte,
       seq AS (SELECT /*+ BROADCAST(e) */ t.doc_id, t.pos, e.ids
               FROM toks t JOIN enc e ON t.w = e.w),
       doc AS (SELECT doc_id,
@@ -1330,19 +1140,9 @@ object CorpusOps {
   private[graft] def t18Detok(
       s: org.apache.spark.sql.SparkSession, d: String,
       rounds: Int = bpeRounds): org.apache.spark.sql.DataFrame = {
-    val sch = bpeIdScheme(bpeTrainBytes(s, d, rounds))
-    val merges = sch.merges
-    val invMap = sch.invMap
-    val symId = sch.symId
+    val (cte, invMap) = tokenIdsCte(s, d, rounds)
     withViews(s, d, "documents")(s"""
-      WITH toks AS (SELECT doc_id,
-                      posexplode(filter(split($sAugText, ' '), x -> x <> ''))
-                        AS (pos, w)
-                    FROM documents),
-      enc AS (SELECT word AS w,
-                transform(bpe_apply_bytes(word, '$merges'),
-                  s -> CAST($symId AS BIGINT)) AS ids
-              FROM t13_wc),
+      WITH $cte,
       dec AS (SELECT w, size(ids) AS n_ids,
                 decode(unhex(concat_ws('', transform(ids, i ->
                   CASE WHEN i < 256 THEN lpad(conv(i, 10, 16), 2, '0')
@@ -1410,7 +1210,7 @@ object CorpusOps {
   private[graft] val driftPermil = 1
 
   /** The drift predicate's exact-integer RHS in its θ-envelope-safe
-    * spelling (round-15 verdict item 8): when θ | 1000,
+    * spelling: when θ | 1000,
     * `(NA·NB) div (1000/θ)` equals `(θ·NA·NB) div 1000` EXACTLY
     * (floor(X·θ/(m·θ)) = floor(X/m) for integers X ≥ 0, m = 1000/θ ≥ 1)
     * but its largest intermediate is NA·NB itself — headroom stays
@@ -1439,15 +1239,12 @@ object CorpusOps {
     * no division-by-data anywhere (the div-1000 is exact: for
     * non-negative integers A, B, `1000·A > B ⟺ A > B div 1000`, since A
     * is an integer and B div 1000 floors), so engine and oracle can never
-    * diverge by a ulp. The div spelling replaced `·1000 >` (round-13
-    * advice): multiplying the LHS by 1000 overflowed 2^63 at
-    * NA≈NB≈9.6×10⁷ tokens — ~31× below the intended envelope. Since
-    * round 16 the RHS comes from [[driftRhs]], which for θ | 1000
-    * divides by 1000/θ instead of multiplying by θ — the largest term
-    * is NA·NB itself, so headroom is √2^63 ≈ 3×10⁹ tokens per snapshot
-    * independent of θ (raising the threshold no longer silently shrinks
-    * the envelope). The LHS terms count·N stay within 2^63 under the
-    * same bound. Past the envelope the spelling rides decimal(38,0).
+    * diverge by a ulp. Multiplying the LHS by 1000 instead would
+    * overflow 2^63 at NA≈NB≈9.6×10⁷ tokens. The RHS comes from
+    * [[driftRhs]], whose largest term is NA·NB itself, so headroom is
+    * √2^63 ≈ 3×10⁹ tokens per snapshot independent of θ; the LHS terms
+    * count·N stay within 2^63 under the same bound. Past the envelope
+    * the spelling rides decimal(38,0).
     *
     * Scale shape: ONE corpus pass (the shared per-doc token histogram —
     * occurrences never explode, only per-doc DISTINCT tokens), one

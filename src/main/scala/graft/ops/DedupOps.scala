@@ -112,159 +112,70 @@ object DedupOps {
 
   /** Verify-stage spelling dial (`-Dgraft.d02.verify`, read once at load
     * like [[minhashBands]] so the staged frames can never mix spellings
-    * within a run). All four spellings produce the IDENTICAL
+    * within a run). Both spellings produce the IDENTICAL
     * (doc_a, doc_b, n_shared, n_union) frame — exact integer set counts
     * (LshAuditSpec pins row-identity) — they differ only in what the
     * verify stage's exchanges CARRY. Measured at 64× (13.6 M candidates,
-    * SCALE.md "round 14: the d02 verify exchange A/B"):
+    * SCALE.md "Round 14: the d02 verify exchange A/B"):
     *
     *  - `sets` (default): join the candidate pairs to the shingle-SET
     *    frame twice, count overlap with the allocation-free
-    *    `intersect_count`. d25 17.7 s — the 64× winner. The cost at the
-    *    box's edge: the intermediate BETWEEN the two joins carries
-    *    sa.sset per candidate row, and at 256× (163 M replica-clique
-    *    candidates × ~2 KB arrays ≈ 300 GB of second-join shuffle) that
-    *    spills past free disk — the r13 DNF.
+    *    `intersect_count`. d25 17.7 s. The cost at the box's edge: the
+    *    intermediate BETWEEN the two joins carries sa.sset per candidate
+    *    row, and at 256× (163 M replica-clique candidates × ~2 KB arrays
+    *    ≈ 300 GB of second-join shuffle) that spills past free disk.
     *  - `bcast`: `sets` with the dictionary BROADCAST into both joins —
     *    the array side moves once (corpus-linear), the candidate stream
     *    stays narrow end to end, no array-carrying exchange exists. The
     *    256× leg that survives this box. Requires the (doc_id, sset)
     *    dictionary to fit executor memory, so at true 100 TB the dial
-    *    flips back to `sets` and the exchange spreads over the cluster.
-    *  - `classes`: collapse docs with IDENTICAL shingle sets into classes
-    *    first (d21's replication-invariant move), verify once per
-    *    DISTINCT class pair, map scores back over narrow joins. The
-    *    right economics for boilerplate-heavy corpora where exact-dup
-    *    collapse is massive; on the ScaleData corpus the per-replica
-    *    salt makes every sset distinct BY DESIGN, so classes degenerates
-    *    to sets + a window pass (measured 25-29 s at 64× — documented
-    *    rejection for THIS corpus, kept as the dial for corpora where
-    *    collapse is real).
-    *  - `explode`: count shared shingles by (doc, shingle) equi-join
-    *    aggregation — narrow rows only, but Σ|set| of them per candidate
-    *    (measured 90 s at 64×, and ~390 GB of exchange at 256× — worse
-    *    than the wall it was meant to avoid; measured rejection). */
+    *    stays `sets` and the exchange spreads over the cluster. */
   private[graft] val d02VerifySpelling =
     sys.props.getOrElse("graft.d02.verify", "sets")
 
   /** The ONE scored verify frame (doc_a, doc_b, n_shared, n_union) — the
     * exact shingle-overlap counts for every RAW banding candidate —
     * shared by d02 (filters it to jaccard ≥ 0.8 true near-dups) and d25
-    * (audits its precision). Extracted per round-13 advice: the two
-    * queries previously duplicated the verify join verbatim, so a future
-    * respelling could drift the confirmed filter apart from the audit's
-    * is_confirmed cross-multiplication. Now there is one frame to
-    * respell, and [[d02VerifySpelling]] is where the respelling lives. */
-  /** NOT staged/cached: the frame is consumed once per query (d02 filters
-    * it, d25 projects it) and the expensive stages underneath
-    * ([[d02Shingles]], [[d02Candidates]], the class frame) are already
-    * shared caches — force-caching the scored output itself was measured
-    * at 64× as pure overhead on the verify pass (it materializes
-    * candidate-count rows nobody re-reads). */
+    * (audits its precision), so a respelling cannot drift the confirmed
+    * filter apart from the audit's is_confirmed cross-multiplication.
+    * NOT staged: the frame is consumed once per query (d02 filters it,
+    * d25 projects it) and the expensive stages underneath
+    * ([[d02Shingles]], [[d02Candidates]]) are already shared — staging
+    * the scored output was measured at 64× as pure overhead on the
+    * verify pass. */
   private[graft] def d02ScoredCandidates(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
     d02ScoredWith(s, d, d02VerifySpelling)
 
   /** [[d02ScoredCandidates]] at an explicit spelling — the A/B seam
-    * (LshAuditSpec proves the three spellings row-identical at the gate
-    * corpus; the SCALE.md legs time them at 64×/256×). */
+    * (LshAuditSpec proves the two spellings row-identical at the gate
+    * corpus). `intersect_count`, NOT size(array_intersect(...)): the
+    * alias is substituted through d02's filter and d25's derived columns
+    * (CollapseProject/PushDownPredicates), so the overlap evaluates 2-3x
+    * per row — the count-only expression keeps each evaluation
+    * allocation-free (measured: d02 34.4 -> ~22 s at 64x). */
   private[graft] def d02ScoredWith(
       s: org.apache.spark.sql.SparkSession, d: String,
       spelling: String): org.apache.spark.sql.DataFrame = {
-      import s.implicits._
-      import org.apache.spark.sql.functions.{expr, coalesce, lit}
-      val sh = d02Shingles(s, d)
-      val cand = d02Candidates(s, d)
-      spelling match {
-        case "sets" | "bcast" =>
-          // intersect_count, NOT size(array_intersect(...)): the alias is
-          // substituted through d02's filter and d25's derived columns
-          // (CollapseProject/PushDownPredicates), so the overlap evaluates
-          // 2-3x per row — the count-only expression keeps each
-          // evaluation allocation-free (measured: d02 34.4 -> ~22 s at 64x)
-          //
-          // bcast additionally BROADCASTS the shingle dictionary into both
-          // joins: with exchange-based joins the intermediate between them
-          // carries sa.sset per CANDIDATE row (candidates × ~2 KB arrays —
-          // the ~300 GB second-join shuffle that was the 256× disk wall);
-          // broadcast makes the array side move ONCE (corpus-linear) and
-          // the candidate stream stays narrow end to end. The dictionary
-          // must fit executor memory — corpus-linear, so at true 100 TB
-          // this dial flips back to `sets` and the exchange spreads over
-          // the cluster instead.
-          val dict =
-            if (spelling == "bcast") org.apache.spark.sql.functions.broadcast(sh)
-            else sh
-          cand
-            .join(dict.as("sa"), $"ida" === $"sa.doc_id")
-            .join(dict.as("sb"), $"idb" === $"sb.doc_id")
-            .select($"ida".as("doc_a"), $"idb".as("doc_b"),
-              expr("intersect_count(sa.sset, sb.sset)").as("n_shared"),
-              expr("CAST(size(sa.sset) AS BIGINT) + CAST(size(sb.sset) AS BIGINT)")
-                .as("n_total"))
-            .selectExpr("doc_a", "doc_b", "n_shared",
-              "n_total - n_shared AS n_union")
-        case "classes" =>
-          // doc → class (= min doc_id among docs with the identical sset):
-          // one window over the sset-keyed exchange; the frame is the
-          // corpus shingle volume once — the same bytes building d02_sh
-          // already moved — never candidates × arrays
-          val cls = staged("d02_cls", d) {
-            s.sql("""SELECT doc_id, sset,
-                            min(doc_id) OVER (PARTITION BY sset) AS cls
-                     FROM d02_sh""")
-          }
-          val docCls = cls.select($"doc_id", $"cls")
-          val reps = cls.where($"doc_id" === $"cls")
-            .select($"cls".as("rep"), $"sset")
-          val candC = cand
-            .join(docCls.as("ca"), $"ida" === $"ca.doc_id")
-            .join(docCls.as("cb"), $"idb" === $"cb.doc_id")
-            .select($"ida", $"idb",
-              expr("least(ca.cls, cb.cls)").as("clo"),
-              expr("greatest(ca.cls, cb.cls)").as("chi"))
-          // the ONLY array-carrying join: one row per DISTINCT class pair
-          // (replication-invariant — replicas share ssets, hence classes)
-          val scored = candC.select($"clo", $"chi").distinct()
-            .join(reps.as("ra"), $"clo" === $"ra.rep")
-            .join(reps.as("rb"), $"chi" === $"rb.rep")
-            .select($"clo", $"chi",
-              expr("intersect_count(ra.sset, rb.sset)").as("n_shared"),
-              expr("CAST(size(ra.sset) AS BIGINT) + CAST(size(rb.sset) AS BIGINT)")
-                .as("n_total"))
-            .selectExpr("clo", "chi", "n_shared", "n_total - n_shared AS n_union")
-          // NO broadcast hint: the score table is class-pair-bounded —
-          // tiny under replication/boilerplate collapse, but a corpus of
-          // all-distinct texts degenerates it to candidate-sized, and a
-          // forced broadcast there is a driver OOM. AQE reads the actual
-          // exchange size and broadcasts exactly when collapse happened.
-          candC.join(scored, Seq("clo", "chi"))
-            .select($"ida".as("doc_a"), $"idb".as("doc_b"),
-              $"n_shared", $"n_union")
-        case "explode" =>
-          val shx = staged("d02_shx", d) {
-            sh.selectExpr("doc_id", "explode(sset) AS shg")
-          }
-          val sz = sh.selectExpr("doc_id", "CAST(size(sset) AS BIGINT) AS sz")
-          val shared = cand
-            .join(shx.as("xa"), $"ida" === $"xa.doc_id")
-            .select($"ida", $"idb", $"xa.shg".as("shga"))
-            .join(shx.as("xb"),
-              $"idb" === $"xb.doc_id" && $"shga" === $"xb.shg")
-            .groupBy($"ida", $"idb")
-            .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_shared"))
-          cand
-            .join(shared, Seq("ida", "idb"), "left")
-            .join(sz.as("za"), $"ida" === $"za.doc_id")
-            .join(sz.as("zb"), $"idb" === $"zb.doc_id")
-            .select($"ida".as("doc_a"), $"idb".as("doc_b"),
-              coalesce($"n_shared", lit(0L)).as("n_shared"),
-              (expr("za.sz + zb.sz") - coalesce($"n_shared", lit(0L)))
-                .as("n_union"))
-        case other =>
-          throw new IllegalArgumentException(
-            s"graft.d02.verify: unknown spelling '$other' (sets|bcast|classes|explode)")
-      }
+    import s.implicits._
+    import org.apache.spark.sql.functions.expr
+    val sh = d02Shingles(s, d)
+    val dict = spelling match {
+      case "sets" => sh
+      case "bcast" => org.apache.spark.sql.functions.broadcast(sh)
+      case other =>
+        throw new IllegalArgumentException(
+          s"graft.d02.verify: unknown spelling '$other' (sets|bcast)")
+    }
+    d02Candidates(s, d)
+      .join(dict.as("sa"), $"ida" === $"sa.doc_id")
+      .join(dict.as("sb"), $"idb" === $"sb.doc_id")
+      .select($"ida".as("doc_a"), $"idb".as("doc_b"),
+        expr("intersect_count(sa.sset, sb.sset)").as("n_shared"),
+        expr("CAST(size(sa.sset) AS BIGINT) + CAST(size(sb.sset) AS BIGINT)")
+          .as("n_total"))
+      .selectExpr("doc_a", "doc_b", "n_shared",
+        "n_total - n_shared AS n_union")
   }
 
   /** The ONE DuckDB spelling of the scored verify frame, shared by d02's
@@ -611,23 +522,10 @@ object DedupOps {
     * 3-probe IVF at ~1/3 of the all-pairs candidates). The oracle runs
     * the identical quantizer, so both engines produce the same
     * candidates; dots fold left-to-right → bit-identical doubles. */
-  /** Normalized double-precision embeddings + L2 norms, staged once and
-    * shared by d05 and d16 (one copy of the corpus in memory even when a
-    * capstone composes both). */
-  private[graft] def normEmbeddings(s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("d05_n", d) {
-      withViews(s, d, "embeddings")("""
-        WITH e AS (SELECT vec_id, label,
-                     transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                   FROM embeddings)
-        SELECT vec_id, label, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
-    }
-
   val d05 = QueryDef(
     "d05_embedding_neardup",
     (s, d) => {
-      val n = normEmbeddings(s, d)
-      n.createOrReplaceTempView("d05_n")
+      SimilarityOps.normEmbeddings(s, d).createOrReplaceTempView("d05_n")
       s.sql("""
         WITH c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM d05_n
                    WHERE vec_id % 50 = 7 AND vec_id < 3200),
@@ -708,7 +606,7 @@ object DedupOps {
     * composing them compute it ONCE per (session, dir). */
   private[graft] def clusterAssign(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    normEmbeddings(s, d).createOrReplaceTempView("d16_n")
+    SimilarityOps.normEmbeddings(s, d).createOrReplaceTempView("d16_n")
     staged("d16_assign", d) {
       s.sql(s"""
         SELECT /*+ BROADCAST(cs) */ t.vec_id, t.label,
@@ -725,7 +623,7 @@ object DedupOps {
   val d16 = QueryDef(
     "d16_semantic_dedup",
     (s, d) => {
-      normEmbeddings(s, d).createOrReplaceTempView("d16_n")
+      SimilarityOps.normEmbeddings(s, d).createOrReplaceTempView("d16_n")
       // Assignment is ROW-WISE through the native nearest_centroid
       // expression over the collected centroid array (one broadcast row):
       // the window spelling explodes each vector into k scored rows and
@@ -1024,7 +922,7 @@ object DedupOps {
   val d17 = QueryDef(
     "d17_semantic_decontam",
     (s, d) => {
-      normEmbeddings(s, d).createOrReplaceTempView("d17_n")
+      SimilarityOps.normEmbeddings(s, d).createOrReplaceTempView("d17_n")
       s.sql(s"""
         SELECT vec_id, label, nc.cid AS eval_id,
                CAST(floor(nc.cos * CAST(1000000 AS DOUBLE)) AS BIGINT) AS cos6,

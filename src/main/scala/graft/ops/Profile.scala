@@ -19,7 +19,7 @@ package graft.ops
   * | `graft.profile` | `local` | `cluster` | this umbrella |
   * | `graft.q18.bloom` | off | ON | the Bloom semi-join removes the orders-side exchange entirely; on one box the extra jobs cost more than the exchange (−5% at 256× local), on a network-bound cluster the exchange is the dominant cost (`Relational.q18BloomDial`) |
   * | `graft.q61.mask` | off | ON | the mod-64 bitmask aggregate replaces the `collect_set` object aggregate with a flat codegen'd buffer — marginal 1.2× of DuckDB vs plain's 3.0× at 256×; local ≤64× the plain spelling's fewer jobs win (`Temporal.q61MaskDial`) |
-  * | `graft.d02.verify` | `sets` | `sets` (unchanged) | deliberately NOT flipped: `bcast` is the single-box winner at 256× but requires the corpus-linear shingle dictionary to fit executor memory — at true 100 TB `sets` spreads the exchange over cluster disk, so `sets` IS the cluster spelling (`DedupOps.d02VerifySpelling`) |
+  * | `graft.d02.verify` | `sets` | `sets` (unchanged) | the verify exchange's two spellings, `sets` and `bcast`; deliberately NOT flipped: `bcast` is the single-box winner at 256× but requires the corpus-linear shingle dictionary to fit executor memory — at true 100 TB `sets` spreads the exchange over cluster disk, so `sets` IS the cluster spelling (`DedupOps.d02VerifySpelling`) |
   * | `graft.export.shards`, `graft.pack.blockDocs` | 8 / 4096 | unchanged | sizing dials, not spelling crossovers — a deployment tunes them to its executor count and shard-size target |
   * | `graft.bpe.rounds` | 12 | unchanged | tokenizer merge rounds; `tools/verify_local.py` handles deep runs (`=256`) |
   * | `graft.bench.calibRef`, `graft.repo.root` | unset | unchanged | `graft.Bench` tooling: calibration reference and artifact root |

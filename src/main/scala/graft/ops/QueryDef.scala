@@ -206,7 +206,7 @@ object Q {
     * plan's root is a `LogicalRDD` over a checkpointed RDD, the shape
     * [[roundCheckpoint]] returns. Root-only, deliberately: a frame that
     * merely READS a checkpoint (s06's round-0 centroids select from the
-    * shared checkpointed `normalized` leaf) is not one, and releasing the
+    * shared checkpointed `normEmbeddings` leaf) is not one, and releasing the
     * leaf it reads killed that shared checkpoint for every later consumer
     * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). A plain `createDataFrame(rdd,
     * schema)` root is not checkpointed either. */

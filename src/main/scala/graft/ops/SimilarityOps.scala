@@ -84,15 +84,18 @@ object SimilarityOps {
                  FROM pr JOIN s02_idx i ON i.tbl = pr.tbl AND i.bkt = pr.pb
                  WHERE i.vec_id <> query_id)"""
 
-  /** Normalized double vectors with norms, staged once per data dir and
-    * shared by every similarity query (s01 broadcast side + corpus side,
-    * s05 centroid seeding + assignment). */
-  private def normalized(s: org.apache.spark.sql.SparkSession, d: String) =
-    staged("s01_n", d) {
+  /** Normalized double vectors with L2 norms and labels
+    * (vec_id, label, v, nrm), staged ONCE per data dir and read by every
+    * embedding query under its own view name (s01–s06, s12–s16, d05,
+    * d16, d17, d24 through [[s03Statics]]), so a run that composes several
+    * of them checkpoints the corpus once. */
+  private[graft] def normEmbeddings(s: org.apache.spark.sql.SparkSession, d: String) =
+    staged("emb_n", d) {
       withViews(s, d, "embeddings")("""
-        WITH e AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        WITH e AS (SELECT vec_id, label,
+                     transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                    FROM embeddings)
-        SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
+        SELECT vec_id, label, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
     }
 
   val s01 = QueryDef(
@@ -101,7 +104,7 @@ object SimilarityOps {
       // Normalized vectors materialize once (consumed by the query side
       // and the corpus side); the tiny query side broadcasts, so the scan
       // over the corpus stays a single parallel pass — linear in N.
-      normalized(s, d).createOrReplaceTempView("s01_n")
+      normEmbeddings(s, d).createOrReplaceTempView("s01_n")
       s.sql(s"""
         WITH q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM s01_n
               WHERE $qSet),
@@ -152,7 +155,7 @@ object SimilarityOps {
   val s02 = QueryDef(
     "s02_knn_lsh",
     (s, d) => {
-      normalized(s, d).createOrReplaceTempView("s02_n")
+      normEmbeddings(s, d).createOrReplaceTempView("s02_n")
       val idx = staged("s02_idx", d) {
         s.sql(s"""
           SELECT vec_id, tbl,
@@ -255,13 +258,7 @@ object SimilarityOps {
     * by the batch gate row and the s11 streaming twin, ONE definition. */
   private[graft] def s03Statics(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val n = staged("s03_n", d) {
-      withViews(s, d, "embeddings")("""
-        WITH e AS (SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                   FROM embeddings)
-        SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
-    }
-    n.createOrReplaceTempView("s03_n")
+    normEmbeddings(s, d).createOrReplaceTempView("s03_n")
     val assign = staged("s03_assign", d) {
       s.sql(s"""
         WITH c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM s03_n
@@ -392,7 +389,7 @@ object SimilarityOps {
   val s05 = QueryDef(
     "s05_kmeans_update",
     (s, d) => {
-      normalized(s, d).createOrReplaceTempView("s05_n")
+      normEmbeddings(s, d).createOrReplaceTempView("s05_n")
       // assignment through the native row-wise arg-max (nearest_centroid
       // over the collected-centroid broadcast row): the previous
       // cross-join + row_number window shipped every VECTOR k times
@@ -564,7 +561,7 @@ object SimilarityOps {
   private[graft] def s06CentsWith(
       s: org.apache.spark.sql.SparkSession, d: String, k: Int,
       stageKey: String, trainStride: Int = 1): org.apache.spark.sql.DataFrame = {
-    normalized(s, d).createOrReplaceTempView("s06_n")
+    normEmbeddings(s, d).createOrReplaceTempView("s06_n")
     val trainView =
       if (trainStride <= 1) "s06_n"
       else {
@@ -1122,19 +1119,12 @@ object SimilarityOps {
   val s12 = QueryDef(
     "s12_ivf_incremental",
     (s, d) => {
-      // staged: `n` feeds the centroid set and three assignment passes
+      // `n` feeds the centroid set and three assignment passes
       // (base/delta/full — the full pass is the operator's own recompute
       // proof, deliberate)
-      staged("s12_n", d) {
-        withViews(s, d, "embeddings")(s"""
-          WITH e AS (SELECT vec_id,
-                       transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-                       ($s12DeltaPred) AS is_delta
-                     FROM embeddings)
-          SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm, is_delta FROM e""")
-      }.createOrReplaceTempView("s12_n")
+      normEmbeddings(s, d).createOrReplaceTempView("s12_n")
       s.sql(s"""
-        WITH n AS (SELECT vec_id, v, nrm, is_delta FROM s12_n),
+        WITH n AS (SELECT vec_id, v, nrm, ($s12DeltaPred) AS is_delta FROM s12_n),
         c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
               WHERE vec_id % 50 = 7 AND vec_id < 3200 AND NOT is_delta),
         ab AS (SELECT /*+ BROADCAST(c) */ vec_id, cid,
@@ -1254,7 +1244,7 @@ object SimilarityOps {
   val s13 = QueryDef(
     "s13_coreset_select",
     (s, d) => {
-      normalized(s, d).createOrReplaceTempView("s13_n")
+      normEmbeddings(s, d).createOrReplaceTempView("s13_n")
       s.sql("""
         WITH cs AS (SELECT collect_list(named_struct('cid', cid, 'cv', cv,
                         'cn', cn)) AS cents
@@ -1343,7 +1333,7 @@ object SimilarityOps {
     "s14_coreset_recall",
     (s, d) => {
       s13.run(s, d).createOrReplaceTempView("s14_core")
-      normalized(s, d).createOrReplaceTempView("s14_n")
+      normEmbeddings(s, d).createOrReplaceTempView("s14_n")
       s.sql(s"""
         WITH q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM s14_n
                    WHERE $qSet),
@@ -1449,7 +1439,7 @@ object SimilarityOps {
   val s16 = QueryDef(
     "s16_filtered_knn",
     (s, d) => {
-      DedupOps.normEmbeddings(s, d).createOrReplaceTempView("s16_n")
+      normEmbeddings(s, d).createOrReplaceTempView("s16_n")
       s.sql(s"""
         WITH q AS (SELECT vec_id AS query_id, label AS qlab, v AS qv,
                           nrm AS qn

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.Q
 import graft.runtime.{Policy, StageRuntime, Tether, Worker, WorkSchedule}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
@@ -16,8 +17,8 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   *    as UNION ALL (multiset, order-free — matching mpsc interleaving
   *    nondeterminism);
   *  - [[PipelineBuilder.tee]] = `Fanout`/`broadcast_port` 1→N
-  *    (`messaging.rs:71-95,425-436`): the upstream is cached once and every
-  *    sink consumes it; zero sinks fails at build time (the reference's
+  *    (`messaging.rs:71-95,425-436`): the upstream is checkpointed once and
+  *    every sink consumes it; zero sinks fails at build time (the reference's
   *    `Error::NotConnected`, `messaging.rs:84`);
   *  - [[Flow.map]]/[[Flow.split]]/[[Flow.mapOpt]] = `impl_mapper!`,
   *    `impl_splitter!` (`macros.rs:1-85`) and `OutputMap`
@@ -101,7 +102,7 @@ object SinkStage {
 
 /** @param shareable a broadcast edge (produced by [[materialize]]): may be
   *                   consumed by any number of downstream chains, each
-  *                   reading the one cached upstream computation. Plain
+  *                   reading the one checkpointed upstream computation. Plain
   *                   edges are consume-ONCE — the reference panics when a
   *                   non-broadcast receiver is cloned (`messaging.rs:
   *                   358-377`); here a second consume of a plain edge
@@ -152,24 +153,25 @@ final class PipelineBuilder[O] private[pipeline] (
 
   /** Materialized stage boundary (SURVEY.md §7.3): downstream consumers
     * share one computation of everything upstream instead of re-deriving
-    * it — locally a cache, on a cluster the reused exchange/checkpoint.
-    * This is the DSL's broadcast edge: the returned builder may fan out
-    * to any number of consumers. */
+    * it — the engine's one barrier, [[Q.roundCheckpoint]], taken when the
+    * first consumer opens the edge. This is the DSL's broadcast edge: the
+    * returned builder may fan out to any number of consumers. */
   def materialize: PipelineBuilder[O] = {
     claim()
-    // memoize the cached Dataset so every consumer shares ONE plan (and
-    // one InMemoryRelation), not one cache() call per consumer. A memo
-    // entry bound to a STOPPED session is rebuilt, not reused — a
-    // shareable builder can outlive a session restart, and the stale
-    // entry would both fail downstream and leak its cache registration
-    // (same guard as Q.staged)
+    // memoize the checkpoint so every consumer reads ONE leaf, not one
+    // checkpoint per consumer. A memo entry bound to a STOPPED session is
+    // rebuilt, not reused — a shareable builder can outlive a session
+    // restart (same guard as Q.staged)
     val memo = new java.util.concurrent.ConcurrentHashMap[SparkSession, Dataset[O]]()
     new PipelineBuilder[O](source,
       (s, c) => memo.compute(s, (ss, prev) =>
         if (prev != null && !prev.sparkSession.sparkContext.isStopped) prev
-        else build(ss, c).cache()),
+        else checkpoint(build(ss, c))),
       shareable = true, capacity = capacity)
   }
+
+  private def checkpoint(ds: Dataset[O]): Dataset[O] =
+    Q.roundCheckpoint(ds.toDF()).as(ds.encoder)
 
   def to(sink: SinkStage[O]): Pipeline = {
     claim()
@@ -177,8 +179,9 @@ final class PipelineBuilder[O] private[pipeline] (
       s => sink.write(open(s)))
   }
 
-  /** Fan-out to several sinks: upstream computed once (cached), every sink
-    * sees every row — gasket broadcast-edge semantics. */
+  /** Fan-out to several sinks: upstream computed once (checkpointed, its
+    * blocks released when the last sink is done), every sink sees every
+    * row — gasket broadcast-edge semantics. */
   def tee(sinks: SinkStage[O]*): Pipeline = {
     if (sinks.isEmpty)
       throw new IllegalArgumentException(
@@ -186,9 +189,9 @@ final class PipelineBuilder[O] private[pipeline] (
           "(reference Error::NotConnected, messaging.rs:84)")
     claim()
     new Pipeline(s"${source.name}=>tee", { s =>
-      val ds = open(s).cache()
+      val ds = checkpoint(open(s))
       try sinks.foreach(_.write(ds))
-      finally ds.unpersist()
+      finally Q.releaseCheckpointBlocks(ds.toDF(), blocking = false)
     })
   }
 }

@@ -61,14 +61,11 @@ class LshAuditSpec extends AnyFunSuite {
       f"(banding precision ${confirmed.size.toDouble / audit.length}%.2f)")
   }
 
-  test("verify-exchange spellings (sets / bcast / classes / explode) are row-identical") {
-    // Round-13 advice factored d02/d25's duplicated verify join into ONE
-    // scored frame; the round-13 verdict's item 1 then made that frame the
-    // A/B seam for the 256× disk wall. The four spellings move different
-    // bytes (arrays per candidate row / broadcast dictionary / one array
-    // join per DISTINCT class pair / narrow exploded rows) but must be
-    // the same function — this pins it on the gate corpus, SCALE.md
-    // times them at 64×/256×.
+  test("verify-exchange spellings (sets / bcast) are row-identical") {
+    // d02 and d25 share ONE scored frame; its two spellings move
+    // different bytes (arrays per candidate row / a broadcast dictionary)
+    // but must be the same function — pinned on the gate corpus, timed at
+    // 64×/256× in SCALE.md.
     val dir = "/root/testdata/sf0.001"
     def rows(sp: String): Seq[(Long, Long, Long, Long)] =
       graft.ops.DedupOps.d02ScoredWith(spark, dir, sp)
@@ -77,7 +74,6 @@ class LshAuditSpec extends AnyFunSuite {
     val sets = rows("sets")
     assert(sets.nonEmpty, "no scored candidates on the gate corpus")
     assert(rows("bcast") == sets, "bcast spelling diverges from sets")
-    assert(rows("classes") == sets, "classes spelling diverges from sets")
-    assert(rows("explode") == sets, "explode spelling diverges from sets")
+    assertThrows[IllegalArgumentException](rows("classes"))
   }
 }

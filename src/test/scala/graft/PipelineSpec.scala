@@ -112,6 +112,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(evals.get() == 1, "broadcast edge must build its upstream exactly once")
   }
 
+  test("materialize: two consumers of one edge evaluate each upstream row once") {
+    // the open() count above is driver-side; this counts task-side row
+    // evaluations upstream of the barrier — a consumer that re-derived
+    // the upstream instead of reading the checkpoint would add 100 more
+    val rows = spark.sparkContext.longAccumulator("materialize-upstream-rows")
+    val shared = Pipeline.from(Source[Long]("range", s => s.range(0, 100).as[Long]))
+      .via(Flow.map("counted")((x: Long) => { rows.add(1); x }))
+      .materialize
+    val b1 = new ConcurrentLinkedQueue[Long]()
+    val b2 = new ConcurrentLinkedQueue[Long]()
+    shared.via(Flow.map("x2")((x: Long) => x * 2)).to(collectSink(b1)).runSync(spark)
+    shared.via(Flow.filter[Long]("even")(_ % 2 == 0)).to(collectSink(b2)).runSync(spark)
+    assert(b1.asScala.toSeq.sorted == (0L until 100L).map(_ * 2))
+    assert(b2.asScala.toSeq.sorted == (0L until 100L by 2L))
+    assert(rows.value == 100L, s"upstream rows evaluated ${rows.value} times for 100 rows")
+  }
+
   test("harness multiset assertion accepts reordered funnel output") {
     graft.testing.Harness.assertMultiset(Seq(2, 1, 1), Seq(1, 2, 1))
     assertThrows[IllegalArgumentException] {

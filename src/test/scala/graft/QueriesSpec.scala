@@ -83,17 +83,44 @@ class QueriesSpec extends AnyFunSuite {
     assert(viaLocal == viaSql)
   }
 
-  test("t10 rounds dial: 256 merges is the same one Spark stage, prefix-consistent") {
+  import graft.ops.CorpusOps.{Alphabet, Bytes, Chars}
+
+  /** A frequent word per alphabet: the corpus's top word (char-level) and
+    * the byte-level gate's augmentation token (digits, punct, case,
+    * multi-byte UTF-8). */
+  private def sampleWord(a: Alphabet): String = a match {
+    case Chars => graft.ops.CorpusOps.wordCounts(spark, dir, Chars)
+      .orderBy(org.apache.spark.sql.functions.desc("freq"), org.apache.spark.sql.functions.col("word"))
+      .head().getString(0)
+    case Bytes => "Café-№3.2%"
+  }
+
+  test("BPE rounds dial, both alphabets: 256 merges extend the 12-round table") {
     // O(rounds) driver work, not O(rounds) jobs: 256 rounds must extend the
     // 12-round merge table (greedy BPE is prefix-stable in round count) and
     // the extra 244 rounds must cost only local milliseconds
-    val base = graft.ops.CorpusOps.bpeTrain(spark, dir)
-    val t0 = System.nanoTime()
-    val deep = graft.ops.CorpusOps.bpeTrain(spark, dir, rounds = 256)
-    val sec = (System.nanoTime() - t0) / 1e9
-    assert(deep.take(base.length) == base)
-    assert(deep.length > base.length, "sf0.001 vocab must support >12 merges")
-    assert(sec < 30.0, f"256-round train took $sec%.1f s — loop is not driver-local")
+    for (a <- Seq(Chars, Bytes)) {
+      val base = graft.ops.CorpusOps.bpeTrain(spark, dir, a)
+      val t0 = System.nanoTime()
+      val deep = graft.ops.CorpusOps.bpeTrain(spark, dir, a, rounds = 256)
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(deep.take(base.length) == base, s"$a: greedy BPE must be prefix-stable")
+      assert(deep.length > base.length, s"$a: sf0.001 vocab must support >12 merges")
+      assert(sec < 30.0, f"$a: 256-round train took $sec%.1f s — loop is not driver-local")
+    }
+  }
+
+  test("BPE deep dial, both alphabets: 256 merges compress a frequent word") {
+    // a realistic merge depth reaches the alphabet's frequent words —
+    // for the byte alphabet, the non-ASCII augmentation token
+    for (a <- Seq(Chars, Bytes)) {
+      val merges = graft.ops.CorpusOps.bpeTrain(spark, dir, a, rounds = 256)
+        .map { case (_, l, r, _) => (l, r) }
+      val w = sampleWord(a)
+      val syms = graft.ops.CorpusOps.encodeLocal(w, merges, a)
+      assert(syms.length < a.syms(w).length,
+        s"$a: deep merge table must compress '$w': ${syms.length} syms vs ${a.syms(w).length}")
+    }
   }
 
   test("t13 byte-level BPE round-trips digits/punct/case/UTF-8 losslessly") {
@@ -104,7 +131,7 @@ class QueriesSpec extends AnyFunSuite {
     // 256-round table (merges only ever fuse adjacent symbols; the
     // partition invariant must survive depth).
     for (rounds <- Seq(12, 256)) {
-      val merges = graft.ops.CorpusOps.bpeTrainBytes(spark, dir, rounds = rounds)
+      val merges = graft.ops.CorpusOps.bpeTrain(spark, dir, Bytes, rounds = rounds)
         .map { case (_, l, r, _) => (l, r) }
       assert(merges.nonEmpty)
       assert(merges.forall { case (l, r) =>
@@ -113,27 +140,13 @@ class QueriesSpec extends AnyFunSuite {
       val words = Seq("café", "Δ42%!", "Straße", "naïve", "日本語テスト",
         "a1-b2.c3", "ΩδWEB", "№9", "mixedCASE42", "...", "", "🙂emoji")
       for (w <- words) {
-        val syms = graft.ops.CorpusOps.encodeBytesLocal(w, merges)
+        val syms = graft.ops.CorpusOps.encodeLocal(w, merges, Bytes)
         val bytes = syms.mkString.grouped(2)
           .map(Integer.parseInt(_, 16).toByte).toArray
         assert(new String(bytes, java.nio.charset.StandardCharsets.UTF_8) == w,
           s"round-trip broke for '$w' at $rounds rounds")
       }
     }
-  }
-
-  test("t13 deep-dial: 256 byte-level merges compress the augmented tokens") {
-    // the 100 TB argument: rounds cost driver CPU only, and a realistic
-    // merge depth actually reaches the non-ASCII augmentation words
-    val deep = graft.ops.CorpusOps.bpeTrainBytes(spark, dir, rounds = 256)
-    val base = graft.ops.CorpusOps.bpeTrainBytes(spark, dir)
-    assert(deep.take(base.length) == base, "greedy BPE must be prefix-stable")
-    val merges = deep.map { case (_, l, r, _) => (l, r) }
-    val w = "Café-№3.2%"
-    val syms = graft.ops.CorpusOps.encodeBytesLocal(w, merges)
-    val nBytes = w.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-    assert(syms.length < nBytes,
-      s"deep merge table must compress '$w': ${syms.length} syms vs $nBytes bytes")
   }
 
   test("bpe_apply native expression == legacy nested-SQL fold (12 rounds, both alphabets)") {
@@ -147,7 +160,7 @@ class QueriesSpec extends AnyFunSuite {
     val wordsB = Seq("café", "Δ42%!", "Straße", "naïve", "日本語テスト",
       "a1-b2.c3", "ΩδWEB", "№9", "mixedCASE42", "...", "x", "🙂emoji",
       "Café-№3.2%", "the", "and", "that", "with", "from", "this")
-    val mergesB = graft.ops.CorpusOps.bpeTrainBytes(spark, dir)
+    val mergesB = graft.ops.CorpusOps.bpeTrain(spark, dir, Bytes)
       .map { case (_, l, r, _) => (l, r) }
     val flatB = mergesB.map { case (l, r) => s"$l $r" }.mkString(" ")
     val legacyB = mergesB.foldLeft(
@@ -166,7 +179,7 @@ class QueriesSpec extends AnyFunSuite {
 
     val wordsC = Seq("the", "and", "that", "with", "from", "parrot",
       "cancan", "aaaaa", "ababab", "stern", "luster", "x")
-    val mergesC = graft.ops.CorpusOps.bpeTrain(spark, dir)
+    val mergesC = graft.ops.CorpusOps.bpeTrain(spark, dir, Chars)
       .map { case (_, l, r, _) => (l, r) }
     val flatC = mergesC.map { case (l, r) => s"$l $r" }.mkString(" ")
     val legacyC = mergesC.foldLeft(
@@ -194,9 +207,9 @@ class QueriesSpec extends AnyFunSuite {
     graft.functions.GraftFunctions.register(spark)
     for ((mode, hist, train) <- Seq(
         ("chars", "ascii_word_histogram(lower(text))",
-          () => graft.ops.CorpusOps.bpeTrain(spark, dir)),
+          () => graft.ops.CorpusOps.bpeTrain(spark, dir, Chars)),
         ("bytes", "space_token_histogram(concat(text, ' Ωδ', source))",
-          () => graft.ops.CorpusOps.bpeTrainBytes(spark, dir)))) {
+          () => graft.ops.CorpusOps.bpeTrain(spark, dir, Bytes)))) {
       val flat = train().map { case (_, l, r, _) => s"$l $r" }.mkString(" ")
       val docs = graft.ops.Q.table(spark, dir, "documents")
         .repartition(4).selectExpr("doc_id", s"$hist AS h")
@@ -224,50 +237,60 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("t14 deep-dial: 256 merges run through the DISTRIBUTED expression path") {
-    // the round-9 gap: deep-round evidence only ever ran encodeBytesLocal
-    // on the driver. Here the SAME 256-merge table rides the SQL literal
-    // into bpe_apply_bytes executed by Spark, and every word's distributed
-    // encoding must equal the driver fold — depth is data, not plan shape.
+    // deep-round evidence on the driver fold alone proves nothing about
+    // the engine: here the SAME 256-merge table rides the SQL literal into
+    // bpe_apply_<unit> executed by Spark, and every word's distributed
+    // encoding must equal the driver fold — depth is data, not plan
+    // shape. Both alphabets: t12 (chars) and t14 (bytes).
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val merges = graft.ops.CorpusOps.bpeTrainBytes(spark, dir, rounds = 256)
-      .map { case (_, l, r, _) => (l, r) }
-    assert(merges.length > 100, "sf0.001 vocab must support deep merges")
-    val flat = merges.map { case (l, r) => s"$l $r" }.mkString(" ")
-    val words = Seq("café", "Δ42%!", "Straße", "日本語テスト", "Café-№3.2%",
-      "a1-b2.c3", "ΩδWEB", "🙂emoji", "the", "that", "with", "mixedCASE42")
-    val viaSpark = words.toDF("w")
-      .repartition(4) // force task-side eval, not a driver-side constant fold
-      .selectExpr("w", s"bpe_apply_bytes(w, '$flat') AS syms")
-      .collect().map(r => (r.getString(0), r.getSeq[String](1).toSeq)).toMap
-    for (w <- words) {
-      val local = graft.ops.CorpusOps.encodeBytesLocal(w, merges).toSeq
-      assert(viaSpark(w) == local, s"distributed != driver fold for '$w' at 256 rounds")
-      assert(local.mkString.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-        .sameElements(w.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-        s"round-trip broke for '$w'")
+    val wordsOf = Map[Alphabet, Seq[String]](
+      Chars -> Seq("the", "and", "that", "with", "from", "parrot", "cancan",
+        "aaaaa", "ababab", "stern", "luster", "x", sampleWord(Chars)),
+      Bytes -> Seq("café", "Δ42%!", "Straße", "日本語テスト", "Café-№3.2%",
+        "a1-b2.c3", "ΩδWEB", "🙂emoji", "the", "that", "with", "mixedCASE42"))
+    for (a <- Seq(Chars, Bytes)) {
+      val merges = graft.ops.CorpusOps.bpeTrain(spark, dir, a, rounds = 256)
+        .map { case (_, l, r, _) => (l, r) }
+      assert(merges.length > (if (a == Bytes) 100 else graft.ops.CorpusOps.bpeRounds),
+        s"$a: sf0.001 vocab must support deep merges")
+      val flat = merges.map { case (l, r) => s"$l $r" }.mkString(" ")
+      val words = wordsOf(a)
+      val viaSpark = words.toDF("w")
+        .repartition(4) // force task-side eval, not a driver-side constant fold
+        .selectExpr("w", s"bpe_apply_${a.unit}(w, '$flat') AS syms")
+        .collect().map(r => (r.getString(0), r.getSeq[String](1).toSeq)).toMap
+      for (w <- words) {
+        val local = graft.ops.CorpusOps.encodeLocal(w, merges, a).toSeq
+        assert(viaSpark(w) == local, s"$a: distributed != driver fold for '$w' at 256 rounds")
+        if (a == Bytes)
+          assert(local.mkString.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+            .sameElements(w.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+            s"round-trip broke for '$w'")
+        else assert(local.mkString == w, s"char symbols must concatenate back to '$w'")
+      }
+      // and the full encode plan at 256 rounds: same plan shape, rows for
+      // every doc, strictly better compression than the 12-round table
+      val deep = graft.ops.CorpusOps.encode(spark, dir, a, rounds = 256)
+        .selectExpr("sum(n_subwords) AS s", "count(*) AS n").collect().head
+      val base = graft.ops.CorpusOps.encode(spark, dir, a)
+        .selectExpr("sum(n_subwords) AS s", "count(*) AS n").collect().head
+      assert(deep.getLong(1) == base.getLong(1))
+      assert(deep.getLong(0) < base.getLong(0),
+        s"$a: 256-round table must compress further than the 12-round table")
     }
-    // and the full t14 plan at 256 rounds: same two-stage shape, rows for
-    // every doc, strictly better compression than the 12-round table
-    val deep = graft.ops.CorpusOps.t14Encode(spark, dir, rounds = 256)
-      .selectExpr("sum(n_subwords) AS s", "count(*) AS n").collect().head
-    val base = graft.ops.CorpusOps.t14Encode(spark, dir)
-      .selectExpr("sum(n_subwords) AS s", "count(*) AS n").collect().head
-    assert(deep.getLong(1) == base.getLong(1))
-    assert(deep.getLong(0) < base.getLong(0),
-      "256-round table must compress further than the 12-round table")
   }
 
   test("t15 token-id sequences: engine output matches a full driver-side recompute") {
     // end-to-end independent check of the id materialization: rebuild a
     // document's complete token-id sequence on the driver (augmented
-    // text -> tokens -> encodeBytesLocal -> GPT-2 id scheme) and compare
+    // text -> tokens -> encodeLocal -> GPT-2 id scheme) and compare
     // count, head, and the order-weighted checksum for every doc
-    val table = graft.ops.CorpusOps.bpeTrainBytes(spark, dir)
+    val table = graft.ops.CorpusOps.bpeTrain(spark, dir, Bytes)
     val merges = table.map { case (_, l, r, _) => (l, r) }
     val mergeIds = table.map { case (r, l, rh, _) => (l + rh) -> (255L + r) }.toMap
     def idsOf(word: String): Seq[Long] =
-      graft.ops.CorpusOps.encodeBytesLocal(word, merges).toSeq.map { s =>
+      graft.ops.CorpusOps.encodeLocal(word, merges, Bytes).toSeq.map { s =>
         if (s.length == 2) java.lang.Integer.parseInt(s, 16).toLong
         else mergeIds(s)
       }

@@ -114,7 +114,7 @@ class TokenHistogramSpec extends AnyFunSuite {
     // the train head's staged artifact (sum over per-doc histograms) must
     // be row-identical to the pre-round-11 direct corpus aggregate
     graft.functions.GraftFunctions.register(spark)
-    val derived = graft.ops.CorpusOps.wordCounts(spark, dir)
+    val derived = graft.ops.CorpusOps.wordCounts(spark, dir, graft.ops.CorpusOps.Chars)
     graft.ops.Q.table(spark, dir, "documents").createOrReplaceTempView("documents")
     val direct = spark.sql("""
       SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
