@@ -928,9 +928,6 @@ object CorpusOps {
       val hashes = (0 until cmDepth).map { j =>
         s"named_struct('j', $j, 'h', ${cmHash("word", j, sFold)})"
       }.mkString(",\n               ")
-      val candHashes = (0 until cmDepth).map { j =>
-        s"named_struct('j', $j, 'h', ${cmHash("word", j, sFold)})"
-      }.mkString(",\n               ")
       // ONE corpus pass, vocabulary-width: the sketch rows AND the exact
       // top-K depend only on the global per-word count, so both derive
       // from the staged [[wordCounts]] frame, and the sketch hashes are
@@ -949,7 +946,7 @@ object CorpusOps {
       val top = wt.selectExpr("word", "freq AS exact_cnt")
         .orderBy($"exact_cnt".desc, $"word").limit(25)
       val ch = top.selectExpr("word", "exact_cnt",
-          s"explode(array($candHashes)) AS pr")
+          s"explode(array($hashes)) AS pr")
         .select($"word", $"exact_cnt", $"pr.j".as("j"), $"pr.h".as("h"))
       cm.join(broadcast(ch), Seq("j", "h"))
         .groupBy($"word", $"exact_cnt")

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.functions._
 import Q._
 
 /** Multimodal-column plumbing: media payloads ride as opaque `binary`
@@ -12,34 +13,63 @@ import Q._
   * Decoding is behind the pluggable [[MediaCodec]] seam; the gate queries
   * run the deterministic [[MediaCodec.Stub]] (no media libraries in this
   * container), whose outputs are pure functions of the payload bytes and
-  * therefore SQL-expressible — the plumbing is real and oracle-checked. */
+  * therefore SQL-expressible — the plumbing is real and oracle-checked.
+  *
+  * Every decode operator is [[codecStage]] plus a per-row kernel; the
+  * kernels ([[aHash]], [[energyFingerprint]], [[granuleKeys]],
+  * [[frames]]) exist once each, and [[mediaFeatures]] composes them. */
 object MultimodalOps {
 
   final case class MediaIn(doc_id: Long, payload: Array[Byte], source: String)
   final case class MediaMeta(doc_id: Long, media_type: String, width: Long,
       height: Long, n_frames: Long, size_bytes: Long)
 
-  /** Reusable stage: binary-payload Dataset → metadata Dataset. The codec
-    * session opens once per partition (decoder init), then rows stream. */
+  /** A documents frame as media: the text bytes stand in for payloads
+    * (the [[MediaIn]] columns). */
+  private def mediaOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("text").cast("binary").as("payload"),
+      col("source"))
+
+  private def media(s: SparkSession, d: String): DataFrame =
+    mediaOf(table(s, d, "documents"))
+
+  /** The one codec stage (gasket's worker: bootstrap once, then execute
+    * unit after unit): the codec session opens once per partition, then
+    * `rows` streams the partition through it. Row-wise, no shuffle —
+    * except the small-scan spread that the CPU-heavy passes ask for
+    * (`spread`): a batch frame with fewer partitions than the default
+    * parallelism (a small single-file scan arrives as ONE partition) is
+    * spread to that count first, so the per-row work does not serialize
+    * on one core. At scale scans are multi-partition and the rule is a
+    * no-op. Cheap passes skip it: on a one-partition scan the extra
+    * exchange costs more than it saves (SCALE.md "One codec stage").
+    * Streaming frames are never spread (`.rdd` is illegal on them; m07
+    * hashes a stream). */
+  private[graft] def codecStage[T: Encoder](media: DataFrame, codec: MediaCodec,
+      spread: Boolean = false)(
+      rows: MediaCodec.Session => Iterator[MediaIn] => Iterator[T]): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    val par = spark.sparkContext.defaultParallelism
+    val in =
+      if (spread && !media.isStreaming && media.rdd.getNumPartitions < par)
+        media.repartition(par)
+      else media
+    in.as[MediaIn].mapPartitions(it => rows(codec.open())(it))
+  }
+
+  /** Reusable stage: binary-payload Dataset → metadata Dataset. */
   def decodeMetadata(spark: SparkSession, media: DataFrame,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    media.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      it.map(sess.metadata)
-    }.toDF()
+    codecStage(media, codec)(sess => _.map(sess.metadata)).toDF()
   }
 
-  /** Documents' text bytes stand in for media payloads; stub metadata is a
-    * pure function of payload length → SQL oracle (ASCII: chars == bytes). */
+  /** Stub metadata is a pure function of payload length → SQL oracle
+    * (ASCII: chars == bytes). */
   val m01 = QueryDef(
     "m01_media_metadata",
-    (s, d) => {
-      import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      decodeMetadata(s, media)
-    },
+    (s, d) => decodeMetadata(s, media(s, d)),
     Some("""
       WITH b AS (SELECT doc_id, CAST(strlen(text) AS BIGINT) AS len FROM documents)
       SELECT doc_id,
@@ -57,20 +87,17 @@ object MultimodalOps {
 
   /** Frame sampling: slice each binary payload into fixed-size frames and
     * keep every Nth (the video/audio "sample k frames per clip" stage).
-    * Same per-partition batch shape as [[decodeMetadata]]: the codec
-    * session is the per-partition state — a real decoder replaces the
-    * stub and nothing else changes. Row-wise flatMap: no shuffle, output
-    * is offsets + per-frame digests (provenance a downstream trainer can
-    * verify). */
+    * The codec session is the per-partition state — a real decoder
+    * replaces the stub and nothing else changes. Row-wise flatMap: no
+    * shuffle, output is offsets + per-frame digests (provenance a
+    * downstream trainer can verify). */
   def sampleFrames(spark: SparkSession, media: DataFrame,
       frameBytes: Int = 64, every: Int = 4,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    media.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      it.flatMap { m =>
-        val len = m.payload.length
-        val nFrames = (len + frameBytes - 1) / frameBytes
+    codecStage(media, codec) { sess =>
+      _.flatMap { m =>
+        val nFrames = (m.payload.length + frameBytes - 1) / frameBytes
         (0 until nFrames by every).iterator.map { fi =>
           val start = fi * frameBytes
           val (bytes, hex) = sess.slice(m.payload, start, frameBytes)
@@ -84,12 +111,7 @@ object MultimodalOps {
     * DuckDB's md5(substring(...)) replicates the frame digests exactly. */
   val m02 = QueryDef(
     "m02_frame_sample",
-    (s, d) => {
-      import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      sampleFrames(s, media)
-    },
+    (s, d) => sampleFrames(s, media(s, d)),
     Some("""
       WITH b AS (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS len
                  FROM documents),
@@ -110,17 +132,15 @@ object MultimodalOps {
     * Per window: the codec's scalar feature (stub: exact unsigned-byte
     * sum — the stand-in for a spectral feature) and a content digest.
     * Tail windows shorter than W are kept (documented; an equal-length
-    * formulation would drop starts past len − W). Same per-partition
-    * batch shape as [[sampleFrames]]. Row-wise flatMap — no shuffle. */
+    * formulation would drop starts past len − W). Row-wise flatMap — no
+    * shuffle. */
   def segmentWindows(spark: SparkSession, media: DataFrame,
       winBytes: Int = 96, hopBytes: Int = 48,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    media.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      it.flatMap { m =>
-        val len = m.payload.length
-        val nWin = (len + hopBytes - 1) / hopBytes
+    codecStage(media, codec, spread = true) { sess =>
+      _.flatMap { m =>
+        val nWin = (m.payload.length + hopBytes - 1) / hopBytes
         (0 until nWin).iterator.map { wi =>
           val start = wi * hopBytes
           val (bytes, hex) = sess.slice(m.payload, start, winBytes)
@@ -131,17 +151,20 @@ object MultimodalOps {
     }.toDF()
   }
 
+  /** DuckDB spelling of the Stub's `feature` — the unsigned byte sum — of
+    * string expression `x` (ASCII: character codes == byte values). ONE
+    * spelling for m03, m11, m12 and [[oAudioFpCtes]]. */
+  private def oByteSum(x: String): String = s"""CAST(list_reduce(
+               list_prepend(CAST(0 AS BIGINT), list_transform(range(1, length($x) + 1),
+                 i -> CAST(ascii(substring($x, i, 1)) AS BIGINT))),
+               (a, c) -> a + c) AS BIGINT)"""
+
   /** Oracle: ASCII payloads — byte slices == substrings and byte values ==
     * character codes, so energy and digests replicate exactly in SQL. */
   val m03 = QueryDef(
     "m03_window_segments",
-    (s, d) => {
-      import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      segmentWindows(s, media)
-    },
-    Some("""
+    (s, d) => segmentWindows(s, media(s, d)),
+    Some(s"""
       WITH b AS (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS len
                  FROM documents),
       w AS (SELECT doc_id, text, len,
@@ -152,15 +175,20 @@ object MultimodalOps {
              CAST(wi AS BIGINT) AS win_idx,
              CAST(wi * 48 + 1 AS BIGINT) AS byte_start,
              CAST(length(win) AS BIGINT) AS n_bytes,
-             CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(range(1, length(win) + 1),
-                 i -> CAST(ascii(substring(win, i, 1)) AS BIGINT))),
-               (a, c) -> a + c) AS BIGINT) AS energy,
+             ${oByteSum("win")} AS energy,
              md5(win) AS win_md5
       FROM sub"""))
 
   final case class ThumbMeta(doc_id: Long, thumb_w: Long, thumb_h: Long,
       thumb_energy: Long, thumb_md5: String)
+
+  /** Sum of a pixel grid: the thumbnail's energy and the aHash mean. */
+  private def pixelSum(px: Array[Int]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < px.length) { s += px(i); i += 1 }
+    s
+  }
 
   /** Thumbnail resize — the "shrink every image to a fixed grid" stage a
     * vision-data pipeline runs before embedding/featurizing. Nearest-
@@ -175,90 +203,20 @@ object MultimodalOps {
       srcW: Int = 32, dstW: Int = 8, dstH: Int = 8,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    media.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      it.map { m =>
+    codecStage(media, codec) { sess =>
+      _.map { m =>
         val px = sess.resize(m.payload, srcW, dstW, dstH)
-        var e = 0L
-        var i = 0
-        while (i < px.length) { e += px(i); i += 1 }
-        val digest = org.apache.commons.codec.digest.DigestUtils
-          .md5Hex(px.mkString("-"))
-        ThumbMeta(m.doc_id, dstW.toLong, dstH.toLong, e, digest)
+        ThumbMeta(m.doc_id, dstW.toLong, dstH.toLong, pixelSum(px),
+          org.apache.commons.codec.digest.DigestUtils.md5Hex(px.mkString("-")))
       }
     }.toDF()
   }
 
-  /** Oracle: the stub's stripe-gather is integer index arithmetic over
-    * ASCII text (chars == bytes), so DuckDB reproduces each sampled
-    * intensity with ascii(substring(...)) and the digest via string_agg
-    * in pixel order. */
-  val m04 = QueryDef(
-    "m04_thumbnail",
-    (s, d) => {
-      import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      thumbnail(s, media)
-    },
-    Some("""
-      WITH b AS (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS len
-                 FROM documents),
-      g AS (SELECT doc_id, text, len, (len + 31) // 32 AS src_h FROM b),
-      p AS (SELECT doc_id, text, len, src_h, unnest(range(0, 64)) AS pi FROM g),
-      px AS (SELECT doc_id, pi,
-               CASE WHEN (((pi // 8) * src_h) // 8) * 32 + (pi % 8) * 4 + 1 <= len
-                    THEN ascii(substring(text,
-                      CAST((((pi // 8) * src_h) // 8) * 32 + (pi % 8) * 4 + 1 AS INT), 1))
-                    ELSE 0 END AS v
-             FROM p)
-      SELECT doc_id,
-             CAST(8 AS BIGINT) AS thumb_w,
-             CAST(8 AS BIGINT) AS thumb_h,
-             CAST(sum(v) AS BIGINT) AS thumb_energy,
-             md5(string_agg(CAST(v AS VARCHAR), '-' ORDER BY pi)) AS thumb_md5
-      FROM px GROUP BY doc_id"""))
-
-  final case class AHashRow(doc_id: Long, ahash: String)
-
-  /** Average-hash (aHash) perceptual fingerprint — the classic image
-    * near-dup signature: resize to an 8×8 grid through the codec seam,
-    * then one bit per pixel: is it brighter than the image mean? The
-    * comparison is EXACT integer arithmetic (`v·64 > Σv` — no division,
-    * no float mean), and the 64 bits are spelled as a '0'/'1' string so
-    * both engines agree without 64-bit sign/overflow games. Same
-    * per-partition codec-session shape as the other m-ops; a real codec
-    * (ImageIoCodec) replaces the stub and the operator is unchanged. */
-  def perceptualHash(spark: SparkSession, media: DataFrame,
-      srcW: Int = 32, codec: MediaCodec = MediaCodec.Stub): DataFrame = {
-    import spark.implicits._
-    media.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      it.map { m =>
-        val px = sess.resize(m.payload, srcW, 8, 8)
-        var s = 0L
-        var i = 0
-        while (i < px.length) { s += px(i); i += 1 }
-        val bits = new Array[Char](px.length)
-        i = 0
-        while (i < px.length) {
-          bits(i) = if (px(i).toLong * 64L > s) '1' else '0'
-          i += 1
-        }
-        AHashRow(m.doc_id, new String(bits))
-      }
-    }.toDF()
-  }
-
-  /** The oracle's independent aHash derivation (the Stub codec's stripe
-    * resize + brighter-than-mean bits as pure SQL) — ONE spelling shared
-    * by m05 and m06 so the two oracles cannot drift. ASCII assumption:
-    * strlen/substring/ascii index CHARACTERS while the engine hashes raw
-    * UTF-8 payload BYTES — identical only because `documents.text` is
-    * ASCII (verified: zero non-ASCII rows at every shipped SF, asserted
-    * in MultimodalSpec's "documents.text is ASCII" pin; m01-m04 oracles
-    * lean on the same equivalence). */
-  private def oAHashCtes: String = """
+  /** DuckDB spelling of the Stub's 8×8 stripe resize (32-wide source) over
+    * ASCII text (chars == bytes), ending at `px(doc_id, pi, v)`: each
+    * sampled intensity by integer index arithmetic. ONE spelling for m04
+    * and [[oAHashCtes]]. */
+  private val oPxCtes = """
       b AS (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS len
                  FROM documents),
       g AS (SELECT doc_id, text, len, (len + 31) // 32 AS src_h FROM b),
@@ -268,13 +226,74 @@ object MultimodalOps {
                     THEN ascii(substring(text,
                       CAST((((pi // 8) * src_h) // 8) * 32 + (pi % 8) * 4 + 1 AS INT), 1))
                     ELSE 0 END AS v
-             FROM p),
+             FROM p)"""
+
+  /** Oracle: [[oPxCtes]]' intensities, the digest via string_agg in pixel
+    * order. */
+  val m04 = QueryDef(
+    "m04_thumbnail",
+    (s, d) => thumbnail(s, media(s, d)),
+    Some(s"""
+      WITH $oPxCtes
+      SELECT doc_id,
+             CAST(8 AS BIGINT) AS thumb_w,
+             CAST(8 AS BIGINT) AS thumb_h,
+             CAST(sum(v) AS BIGINT) AS thumb_energy,
+             md5(string_agg(CAST(v AS VARCHAR), '-' ORDER BY pi)) AS thumb_md5
+      FROM px GROUP BY doc_id"""))
+
+  final case class AHashRow(doc_id: Long, ahash: String)
+
+  /** The aHash kernel: resize to an 8×8 grid through the codec seam, then
+    * one bit per pixel — is it brighter than the grid mean? EXACT integer
+    * arithmetic (`v·64 > Σv` — no division, no float mean), spelled as a
+    * '0'/'1' string so both engines agree without 64-bit sign/overflow
+    * games. */
+  private def aHash(sess: MediaCodec.Session, payload: Array[Byte],
+      srcW: Int): String = {
+    val px = sess.resize(payload, srcW, 8, 8)
+    val sum = pixelSum(px)
+    val bits = new Array[Char](px.length)
+    var i = 0
+    while (i < px.length) {
+      bits(i) = if (px(i).toLong * 64L > sum) '1' else '0'
+      i += 1
+    }
+    new String(bits)
+  }
+
+  /** Average-hash (aHash) perceptual fingerprint — the classic image
+    * near-dup signature ([[aHash]] per row). A real codec (ImageIoCodec)
+    * replaces the stub and the operator is unchanged. */
+  def perceptualHash(spark: SparkSession, media: DataFrame,
+      srcW: Int = 32, codec: MediaCodec = MediaCodec.Stub): DataFrame = {
+    import spark.implicits._
+    codecStage(media, codec) { sess =>
+      _.map(m => AHashRow(m.doc_id, aHash(sess, m.payload, srcW)))
+    }.toDF()
+  }
+
+  /** The oracle's independent aHash derivation ([[oPxCtes]] +
+    * brighter-than-mean bits as pure SQL) ending at `h(doc_id, ahash)` —
+    * ONE spelling shared by m05-m07 and m09 so the oracles cannot drift.
+    * ASCII assumption: strlen/substring/ascii index CHARACTERS while the
+    * engine hashes raw UTF-8 payload BYTES — identical only because
+    * `documents.text` is ASCII (verified: zero non-ASCII rows at every
+    * shipped SF, asserted in MultimodalSpec's "documents.text is ASCII"
+    * pin; m01-m04 oracles lean on the same equivalence). */
+  private val oAHashCtes: String = s"""$oPxCtes,
       sums AS (SELECT doc_id, sum(v) AS sv FROM px GROUP BY doc_id),
       h AS (SELECT px.doc_id,
               string_agg(CASE WHEN px.v * 64 > sums.sv THEN '1' ELSE '0' END,
                          '' ORDER BY px.pi) AS ahash
             FROM px JOIN sums ON px.doc_id = sums.doc_id
             GROUP BY px.doc_id)"""
+
+  /** DuckDB Hamming distance between two 64-char bit strings — ONE
+    * spelling for the m06-m09 oracles. */
+  private def oHam64(a: String, b: String): String =
+    s"""CAST(len(list_filter(range(1, 65),
+                i -> substring($a, i, 1) <> substring($b, i, 1))) AS BIGINT)"""
 
   /** Perceptual near-dup grouping over the aHash: documents sharing a
     * fingerprint form a duplicate group; each row reports its group size
@@ -288,17 +307,12 @@ object MultimodalOps {
     "m05_perceptual_neardup",
     (s, d) => {
       import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      // checkpointed: h feeds the group aggregate AND the join back —
-      // left lazy, the payload scan + decode + hash pass ran twice
-      // (PlanAudit round 12; perceptualNeighbors already treats its dh
-      // frame this way). Metadata-width, so effectively free.
-      val h = roundCheckpoint(perceptualHash(s, media))
+      // checkpointed: h feeds the group aggregate AND the join back, so
+      // left lazy the scan + decode + hash pass would run twice
+      // (SCALE.md "Round 12: PlanAudit"). Metadata-width.
+      val h = roundCheckpoint(perceptualHash(s, media(s, d)))
       val g = h.groupBy($"ahash")
-        .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n_docs"),
-          org.apache.spark.sql.functions.min($"doc_id").as("canonical_doc"))
+        .agg(count(lit(1)).as("n_docs"), min($"doc_id").as("canonical_doc"))
       h.join(g, "ahash")
         .select($"doc_id", $"ahash", $"n_docs",
           ($"doc_id" === $"canonical_doc").as("is_canonical"))
@@ -338,6 +352,17 @@ object MultimodalOps {
     s"CAST(${half(1)} + ${half(33)} AS BIGINT)"
   }
 
+  /** Both directions `(key, other)` of every undirected edge `(a, b)` in
+    * ONE pass over `edges`: a union of two projections would reference
+    * `edges` twice, and a multiply-referenced non-materialized frame
+    * re-executes per reference (PlanAudit caught m06's band join + Hamming
+    * verify running twice). */
+  private def bothWays(edges: DataFrame, a: String, b: String,
+      key: String): DataFrame =
+    edges.select(explode(expr(s"array(struct($a AS $key, $b AS other), " +
+        s"struct($b AS $key, $a AS other))")).as("e"))
+      .select(col(s"e.$key"), col("e.other"))
+
   /** Banded Hamming-neighbor aggregation over a (doc_id, ahash) frame —
     * d02's LSH-banding economics on the perceptual key. Plan shape, in
     * order: ONE shuffle on the fingerprint (distinct-hash groups — the
@@ -359,7 +384,6 @@ object MultimodalOps {
       s"perceptualNeighbors: maxHam=$maxHam >= bands=$m06Bands would drop " +
         "the pigeonhole completeness guarantee (add bands or lower maxHam)")
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // materialize the distinct-hash frame before the band self-join: both
     // join sides (and the final report join) would otherwise recompute
     // the ENTIRE upstream — payload scan + codec decode + fingerprint —
@@ -389,17 +413,7 @@ object MultimodalOps {
       .distinct()
       .withColumn("ham", expr(sHam64("ha", "hb")))
       .where($"ham" <= maxHam)
-    // both edge directions from ONE pass over `near`: the
-    // union-of-two-projections spelling referenced `near` twice, and a
-    // multiply-referenced non-materialized frame re-executes per
-    // reference — PlanAudit caught the band join + Hamming verify
-    // running twice. An explode of the two directions is a row-local
-    // rewrite of the same rows.
-    val edges = near.select(explode(expr(
-        "array(struct(ha AS ahash, hb AS other), " +
-        "struct(hb AS ahash, ha AS other))")).as("e"))
-      .select($"e.ahash", $"e.other")
-    val nb = edges
+    val nb = bothWays(near, "ha", "hb", "ahash")
       .join(dh.select($"ahash".as("other"), $"n_docs".as("other_docs")), "other")
       .groupBy($"ahash")
       .agg(count(lit(1)).as("n_neighbor_hashes"),
@@ -410,37 +424,35 @@ object MultimodalOps {
         coalesce($"n_neighbor_docs", lit(0L)).as("n_neighbor_docs"))
   }
 
+  /** DuckDB spelling of the [[perceptualNeighbors]] report over
+    * `h(doc_id, ahash)`: it brute-forces all distinct-hash pairs (an
+    * INDEPENDENT derivation — no banding), which doubles as the
+    * completeness proof of the pigeonhole argument. ONE spelling for the
+    * m06 and m08 oracles. */
+  private val oNeighbourReport = s"""
+      dh AS (SELECT ahash, CAST(count(*) AS BIGINT) AS n_docs,
+               min(doc_id) AS canonical_doc
+             FROM h GROUP BY ahash),
+      ed AS (SELECT a.ahash AS ahash, b.n_docs AS other_docs,
+              ${oHam64("a.ahash", "b.ahash")} AS ham
+            FROM dh a JOIN dh b ON a.ahash <> b.ahash),
+      nb AS (SELECT ahash, CAST(count(*) AS BIGINT) AS n_neighbor_hashes,
+               CAST(sum(other_docs) AS BIGINT) AS n_neighbor_docs
+             FROM ed WHERE ham <= $m06MaxHam GROUP BY ahash)
+      SELECT dh.ahash, dh.n_docs, dh.canonical_doc,
+             CAST(coalesce(nb.n_neighbor_hashes, 0) AS BIGINT) AS n_neighbor_hashes,
+             CAST(coalesce(nb.n_neighbor_docs, 0) AS BIGINT) AS n_neighbor_docs
+      FROM dh LEFT JOIN nb ON dh.ahash = nb.ahash"""
+
   /** Hamming-tolerant perceptual near-dup (m05's documented extension
     * made real): per distinct aHash class, its size, canonical doc, and
     * the neighboring classes within `m06MaxHam` flipped bits — so
     * re-encoded/slightly-perturbed images that no longer collide exactly
-    * still surface as near-dups. The DuckDB oracle brute-forces all
-    * distinct-hash pairs (an INDEPENDENT derivation — no banding), which
-    * doubles as the completeness proof of the pigeonhole argument. */
+    * still surface as near-dups. */
   val m06 = QueryDef(
     "m06_perceptual_banded",
-    (s, d) => {
-      import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      perceptualNeighbors(s, perceptualHash(s, media))
-    },
-    Some(s"""
-      WITH $oAHashCtes,
-      dh AS (SELECT ahash, CAST(count(*) AS BIGINT) AS n_docs,
-               min(doc_id) AS canonical_doc
-             FROM h GROUP BY ahash),
-      e AS (SELECT a.ahash AS ahash, b.n_docs AS other_docs,
-              len(list_filter(range(1, 65),
-                i -> substring(a.ahash, i, 1) <> substring(b.ahash, i, 1))) AS ham
-            FROM dh a JOIN dh b ON a.ahash <> b.ahash),
-      nb AS (SELECT ahash, CAST(count(*) AS BIGINT) AS n_neighbor_hashes,
-               CAST(sum(other_docs) AS BIGINT) AS n_neighbor_docs
-             FROM e WHERE ham <= $m06MaxHam GROUP BY ahash)
-      SELECT dh.ahash, dh.n_docs, dh.canonical_doc,
-             CAST(coalesce(nb.n_neighbor_hashes, 0) AS BIGINT) AS n_neighbor_hashes,
-             CAST(coalesce(nb.n_neighbor_docs, 0) AS BIGINT) AS n_neighbor_docs
-      FROM dh LEFT JOIN nb ON dh.ahash = nb.ahash"""))
+    (s, d) => perceptualNeighbors(s, perceptualHash(s, media(s, d))),
+    Some(s"WITH $oAHashCtes,$oNeighbourReport"))
 
   private[graft] case class PBandRow(
       doc_id: Long, bi: Long, bv: String, ahash: String)
@@ -476,11 +488,8 @@ object MultimodalOps {
       sch: org.apache.spark.sql.types.StructType,
       provider: Option[String]): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.functions.col
     StreamingGate.replay(s, inDir, sch, provider) { docs =>
-      val media = docs.select(col("doc_id"),
-        col("text").cast("binary").as("payload"), col("source"))
-      perceptualHash(s, media)
+      perceptualHash(s, mediaOf(docs))
         .selectExpr("doc_id", "ahash",
           s"explode(transform(sequence(0, ${m06Bands - 1}), " +
             "i -> struct(CAST(i AS BIGINT) AS bi, " +
@@ -537,9 +546,7 @@ object MultimodalOps {
       SELECT b.bi AS bi, o.owner_doc AS owner_doc, b.doc_id AS dup_doc
       FROM bands b JOIN own o ON b.bi = o.bi AND b.bv = o.bv
       WHERE b.doc_id % 2 = 1
-        AND len(list_filter(range(1, 65),
-              i -> substring(b.ahash, i, 1) <> substring(o.owner_hash, i, 1)))
-            <= $m06MaxHam"""))
+        AND ${oHam64("b.ahash", "o.owner_hash")} <= $m06MaxHam"""))
 
   /** DuckDB audio-fingerprint chain (proportional window spans over the
     * ASCII byte==char identity, the engine's exact geometry) ending at
@@ -547,78 +554,71 @@ object MultimodalOps {
     * so the two cannot drift (oAHashCtes' rule). CTE names are
     * parameterized so the chain composes into a WITH alongside others. */
   private def oAudioFpCtes(
-      b: String, en: String, h: String, fpCol: String): String = s"""
+      b: String, en: String, h: String, fpCol: String): String = {
+    val win = "substring(text, CAST((wi * len) // 65 + 1 AS INT), " +
+      "CAST(((wi + 2) * len) // 65 - (wi * len) // 65 AS INT))"
+    s"""
       $b AS (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS len
              FROM documents),
-      $en AS (SELECT doc_id, list_transform(range(0, 65), wi ->
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                 list_transform(range(1, length(substring(text, CAST((wi * len) // 65 + 1 AS INT), CAST(((wi + 2) * len) // 65 - (wi * len) // 65 AS INT))) + 1),
-                   i -> CAST(ascii(substring(substring(text, CAST((wi * len) // 65 + 1 AS INT), CAST(((wi + 2) * len) // 65 - (wi * len) // 65 AS INT)), i, 1)) AS BIGINT))),
-                 (a, c) -> a + c)) AS e
+      $en AS (SELECT doc_id,
+               list_transform(range(0, 65), wi -> ${oByteSum(win)}) AS e
              FROM $b),
       $h AS (SELECT doc_id, array_to_string(list_transform(range(0, 64),
                i -> CASE WHEN e[i + 2] > e[i + 1] THEN '1' ELSE '0' END), '')
                AS $fpCol
             FROM $en)"""
+  }
 
-  /** Audio fingerprint (Haitsma–Kalker shape): the sign of the energy
-    * delta between consecutive analysis windows, 64 bits over a 65-window
-    * horizon. Window geometry is PER-CLIP proportional — window wi spans
-    * bytes ⌊wi·len/65⌋ to ⌊(wi+2)·len/65⌋ (50% overlap, m03's STFT
-    * shape) — so the horizon spans the whole clip and EVERY window is
-    * non-empty, making every bit informative. Geometry matters more
-    * than it looks: the first-shipped fixed-geometry spelling
-    * zero-padded short clips, which concentrated tail bands on the
-    * all-zero value — ONE band bucket held 58% of all distinct
-    * fingerprints and the band join degenerated toward all-pairs
-    * (measured 22.5 s at sf0.1; a ⌈len/65⌉-hop variant still left the
-    * truncated tail biased, max bucket 2816 of 4858). Proportional
-    * spans drop the max bucket to 246 and the candidate load 5× (SCALE
-    * .md). Windows come from the codec session's slice + scalar
-    * feature, so a real decoder (WavCodec) drops in unchanged.
-    *
-    * Shape: ZERO shuffles — one row-wise map over the payloads; only
-    * (doc_id, 64-char fingerprint) leaves the scan. */
+  /** The energy-delta sign kernel: bit k is '1' iff window k+1 carries
+    * more energy than window k (`e.length - 1` bits). Delta signs are
+    * invariant to uniform gain. */
+  private def deltaBits(e: Array[Long]): String = {
+    val bits = new java.lang.StringBuilder(e.length - 1)
+    var k = 0
+    while (k < e.length - 1) {
+      bits.append(if (e(k + 1) > e(k)) '1' else '0')
+      k += 1
+    }
+    bits.toString
+  }
+
+  /** Audio fingerprint kernel (Haitsma–Kalker shape): [[deltaBits]] over
+    * `horizon` windows. Window geometry is PER-CLIP proportional — window
+    * wi spans frames ⌊wi·nf/horizon⌋ to ⌊(wi+2)·nf/horizon⌋ (50% overlap,
+    * m03's STFT shape) — so the horizon spans the whole clip and every
+    * window is non-empty, making every bit informative (why geometry
+    * decides the band load: SCALE.md "m08 audio near-dup"). Each window
+    * is one codec `slice` + `feature`, so a real decoder (WavCodec) drops
+    * in unchanged. */
+  private def energyFingerprint(sess: MediaCodec.Session,
+      payload: Array[Byte], horizon: Int): String = {
+    // window boundaries land on codec frame boundaries (frameBytes) —
+    // proportional BYTE offsets would slice 16-bit PCM mid-sample and
+    // destroy gain covariance (caught by the m08 WAV spec)
+    val fb = sess.frameBytes
+    // frame count over the DECODED stream (planeLength), not the
+    // container: a WAV header would shift every window and silence the
+    // tail, and the same PCM re-containered (AU/AIFF) would fingerprint
+    // differently — container-invariance is spec-pinned
+    val nf = sess.planeLength(payload).toLong / fb
+    deltaBits(Array.tabulate(horizon) { wi =>
+      val startF = wi * nf / horizon
+      val endF = ((wi + 2) * nf / horizon).min(nf)
+      sess.feature(sess.slice(payload,
+        (startF * fb).toInt, ((endF - startF) * fb).toInt)._1)
+    })
+  }
+
+  /** Audio fingerprint: 64 bits over a 65-window horizon
+    * ([[energyFingerprint]] per row). Shape: ZERO shuffles beyond the
+    * codec stage's spread — only (doc_id, 64-char fingerprint) leaves the
+    * scan. */
   def audioFingerprint(spark: SparkSession, media: DataFrame,
       horizon: Int = 65,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    // CPU-bound per-row decode: a small single-file scan arrives as ONE
-    // partition (3 MB of sf0.1 documents) and would serialize the whole
-    // fingerprint pass on one core (StageProfile: 2.1 s single-task
-    // stage). At 100 TB scans are naturally multi-partition and this is
-    // a no-op; locally it spreads the decode at the cost of shuffling
-    // the (small) payloads once.
-    val spread =
-      if (media.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
-        media.repartition(spark.sparkContext.defaultParallelism)
-      else media
-    spread.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      // window boundaries land on codec frame boundaries (frameBytes) —
-      // proportional BYTE offsets would slice 16-bit PCM mid-sample and
-      // destroy gain covariance (caught by the m08 WAV spec)
-      val fb = sess.frameBytes
-      it.map { m =>
-        // frame count over the DECODED stream (planeLength), not the
-        // container: a WAV header would shift every window and silence
-        // the tail, and the same PCM re-containered (AU/AIFF) would
-        // fingerprint differently — container-invariance is spec-pinned
-        val nf = sess.planeLength(m.payload).toLong / fb
-        val energies = Array.tabulate(horizon) { wi =>
-          val startF = wi * nf / horizon
-          val endF = ((wi + 2) * nf / horizon).min(nf)
-          sess.feature(sess.slice(m.payload,
-            (startF * fb).toInt, ((endF - startF) * fb).toInt)._1)
-        }
-        val bits = new java.lang.StringBuilder(horizon - 1)
-        var i = 0
-        while (i < horizon - 1) {
-          bits.append(if (energies(i + 1) > energies(i)) '1' else '0')
-          i += 1
-        }
-        (m.doc_id, bits.toString)
-      }
+    codecStage(media, codec, spread = true) { sess =>
+      _.map(m => (m.doc_id, energyFingerprint(sess, m.payload, horizon)))
     }.toDF("doc_id", "ahash")
   }
 
@@ -628,32 +628,11 @@ object MultimodalOps {
     * PROFILE — delta signs are invariant to uniform gain — so they land
     * within a few flipped bits). The DuckDB oracle re-derives the
     * fingerprint from the ASCII byte==char identity and brute-forces all
-    * distinct-fingerprint pairs — banding-free, so it independently
-    * proves the pigeonhole completeness exactly as m06's oracle does. */
+    * distinct-fingerprint pairs, exactly as m06's oracle does. */
   val m08 = QueryDef(
     "m08_audio_neardup",
-    (s, d) => {
-      import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      perceptualNeighbors(s, audioFingerprint(s, media))
-    },
-    Some(s"""
-      WITH ${oAudioFpCtes("b", "en", "h", "ahash")},
-      dh AS (SELECT ahash, CAST(count(*) AS BIGINT) AS n_docs,
-               min(doc_id) AS canonical_doc
-             FROM h GROUP BY ahash),
-      ed AS (SELECT a.ahash AS ahash, b.n_docs AS other_docs,
-              len(list_filter(range(1, 65),
-                i -> substring(a.ahash, i, 1) <> substring(b.ahash, i, 1))) AS ham
-            FROM dh a JOIN dh b ON a.ahash <> b.ahash),
-      nb AS (SELECT ahash, CAST(count(*) AS BIGINT) AS n_neighbor_hashes,
-               CAST(sum(other_docs) AS BIGINT) AS n_neighbor_docs
-             FROM ed WHERE ham <= $m06MaxHam GROUP BY ahash)
-      SELECT dh.ahash, dh.n_docs, dh.canonical_doc,
-             CAST(coalesce(nb.n_neighbor_hashes, 0) AS BIGINT) AS n_neighbor_hashes,
-             CAST(coalesce(nb.n_neighbor_docs, 0) AS BIGINT) AS n_neighbor_docs
-      FROM dh LEFT JOIN nb ON dh.ahash = nb.ahash"""),
+    (s, d) => perceptualNeighbors(s, audioFingerprint(s, media(s, d))),
+    Some(s"WITH ${oAudioFpCtes("b", "en", "h", "ahash")},$oNeighbourReport"),
     headline = true)
 
   // ---- content-defined audio granules (m10) ---------------------------
@@ -662,13 +641,10 @@ object MultimodalOps {
     * last 5 energy-delta SIGNS read 1,0,1,0,1 — expected spacing 2^5 = 32
     * frames on sign-balanced content. Granules shorter than
     * `m10MinFrames` frames are dropped. 33 fingerprint windows → 32 key
-    * bits: the 17-window (16-bit) geometry was measured FIRST and
-    * rejected — at 64× its key space aliased unrelated granule contents
-    * 8:1 (9,376 distinct keys for 74,444 distinct granule CONTENTS) and
-    * blew the candidate-pair load to 940 M where the content-true floor
-    * is 82 M; 32 bits restores content-level selectivity (for granules
-    * shorter than 33 frames some windows are zero-width — lower entropy,
-    * still deterministic and content-exact on both engines).
+    * bits, wide enough that keys keep content-level selectivity at 64×
+    * (the key-width A/B: SCALE.md "Round 11: m10"). For granules shorter
+    * than 33 frames some windows are zero-width — lower entropy, still
+    * deterministic and content-exact on both engines.
     * `m10MaxKeyClasses` is the skew backstop (the stop-landmark idea
     * production audio matchers apply to over-common landmarks): a key
     * held by more classes is dropped as non-identifying before the pair
@@ -680,31 +656,28 @@ object MultimodalOps {
   private[graft] val m10MaxKeyClasses = 512
 
   /** Content-defined audio granule keys: the alignment-robust matching
-    * signal the round-10 verdict asked for. The proportional-grid global
-    * fingerprint ([[audioFingerprint]]) decorrelates under a one-token
-    * edit because EVERY window boundary is a fraction of total length
-    * (measured min Hamming 19 on true pairs, SCALE.md) — and a single
-    * best-offset search cannot repair a MIDDLE insertion either (the
-    * prefix aligns at offset 0, the suffix at ±k; no global shift fits
-    * both). Production matchers anchor analysis to CONTENT landmarks, so
-    * an edit stays local: here a granule boundary is cut wherever the
-    * last 5 delta-sign bits of the frame-energy stream match `10101`
-    * (delta SIGNS, not raw energies, so boundaries — like the granule
-    * fingerprints — are invariant to uniform gain). An insertion
-    * corrupts only the granule containing it (and possibly its
-    * neighbor); every other granule's bytes, boundaries, and fingerprint
-    * are untouched, so near-dups keep a majority of granule keys in
-    * common no matter WHERE the edit lands.
+    * signal. The proportional-grid global fingerprint
+    * ([[audioFingerprint]]) decorrelates under a one-token edit because
+    * EVERY window boundary is a fraction of total length (measured min
+    * Hamming 19 on true pairs, SCALE.md) — and a single best-offset
+    * search cannot repair a MIDDLE insertion either (the prefix aligns at
+    * offset 0, the suffix at ±k; no global shift fits both). Production
+    * matchers anchor analysis to CONTENT landmarks, so an edit stays
+    * local: here a granule boundary is cut wherever the last 5 delta-sign
+    * bits of the frame-energy stream match `10101` (delta SIGNS, not raw
+    * energies, so boundaries — like the granule fingerprints — are
+    * invariant to uniform gain). An insertion corrupts only the granule
+    * containing it (and possibly its neighbor); every other granule's
+    * bytes, boundaries, and fingerprint are untouched, so near-dups keep
+    * a majority of granule keys in common no matter WHERE the edit lands.
     *
     * Per granule (≥ [[m10MinFrames]] frames): [[m10FpWindows]] (33)
     * proportional 50%-overlap windows within the granule → 32
-    * energy-delta sign bits; key = `"<frameLen>:<bits>"` (the 17-window/
-    * 16-bit variant was measured and REJECTED — 8:1 key aliasing, 940 M
-    * candidate pairs; see the constants' doc block). Keys are
-    * exact-join tokens — candidate
-    * generation is an equi-join (banding degenerates to exact matching;
-    * no Hamming search, no cross join). Returns the payload's decoded
-    * content digest (class key) plus the DISTINCT granule keys.
+    * [[deltaBits]]; key = `"<frameLen>:<bits>"`. Keys are exact-join
+    * tokens — candidate generation is an equi-join (banding degenerates
+    * to exact matching; no Hamming search, no cross join). Returns the
+    * payload's decoded content digest (class key) plus the DISTINCT
+    * granule keys.
     *
     * Semantics are frame-aligned through the [[MediaCodec]] seam (frame
     * energies via `feature` over single frames of the decoded plane) —
@@ -731,7 +704,6 @@ object MultimodalOps {
     // and the DuckDB oracle spells window energy as the same plain sum),
     // so one prefix-sum array answers every window in O(1) instead of
     // re-reading each granule's bytes ~2× through 33 allocated copies
-    // (review finding: this is m09/m10's per-row hot path)
     val pre = new Array[Long](nf + 1)
     i = 0
     while (i < nf) { pre(i + 1) = pre(i) + e(i); i += 1 }
@@ -739,21 +711,11 @@ object MultimodalOps {
     def emit(gs: Int, ge: Int): Unit = {
       val gl = ge - gs + 1
       if (gl >= m10MinFrames) {
-        val en = new Array[Long](m10FpWindows)
-        var wi = 0
-        while (wi < m10FpWindows) {
-          val s0 = wi * gl / m10FpWindows
-          val e0 = math.min((wi + 2) * gl / m10FpWindows, gl)
-          en(wi) = pre(gs + e0) - pre(gs + s0)
-          wi += 1
+        val en = Array.tabulate(m10FpWindows) { wi =>
+          pre(gs + math.min((wi + 2) * gl / m10FpWindows, gl)) -
+            pre(gs + wi * gl / m10FpWindows)
         }
-        val bits = new java.lang.StringBuilder(m10FpWindows - 1)
-        var k = 0
-        while (k < m10FpWindows - 1) {
-          bits.append(if (en(k + 1) > en(k)) '1' else '0')
-          k += 1
-        }
-        keys += s"$gl:$bits"
+        keys += s"$gl:${deltaBits(en)}"
       }
     }
     var start = 0
@@ -771,75 +733,35 @@ object MultimodalOps {
   }
 
   /** Binary-payload frame → `(doc_id, dg, gkeys)`: content digest (the
-    * duplicate-class key) plus distinct granule keys, one row per doc.
-    * ZERO shuffles — same row-wise economics (and small-scan spread) as
-    * [[audioFingerprint]]. */
+    * duplicate-class key) plus distinct granule keys, one row per doc
+    * ([[granuleKeys]] per row). */
   def audioGranules(spark: SparkSession, media: DataFrame,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    val spread =
-      if (media.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
-        media.repartition(spark.sparkContext.defaultParallelism)
-      else media
-    spread.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      it.map { m =>
+    codecStage(media, codec, spread = true) { sess =>
+      _.map { m =>
         val (dg, keys) = granuleKeys(sess, m.payload)
         (m.doc_id, dg, keys)
       }
     }.toDF("doc_id", "dg", "gkeys")
   }
 
-  /** ONE corpus decode for m09: image aHash + audio fingerprint +
-    * granule class/keys computed in a single `mapPartitions` pass.
-    * Round-11's m09 ran [[perceptualHash]], [[audioFingerprint]] and
-    * [[audioGranules]] as three independent passes and re-joined them on
-    * doc_id — three corpus scans/decodes (~5.5 s EACH at 64×, and the
-    * image pass inherited the scan's 1–2 partitions, serializing its
-    * compute) plus two join shuffles, all to rebuild a frame this pass
-    * emits directly. Feature spellings are byte-for-byte those of the
-    * three standalone helpers (their oracles pin them); the standalone
-    * helpers stay the single-signal building blocks for m05/m06/m08/m10. */
+  /** ONE corpus decode for m09: the [[aHash]], [[energyFingerprint]] and
+    * [[granuleKeys]] kernels composed in a single codec stage, so m09
+    * pays one scan and decode and no doc_id re-join (the three-pass A/B:
+    * SCALE.md "Round 12: m09 one-pass media features"). The standalone
+    * operators stay the single-signal building blocks for
+    * m05/m06/m08/m10. */
   private[graft] def mediaFeatures(spark: SparkSession, media: DataFrame,
       srcW: Int = 32, horizon: Int = 65,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    val spread =
-      if (media.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
-        media.repartition(spark.sparkContext.defaultParallelism)
-      else media
-    spread.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      val fb = sess.frameBytes
-      it.map { m =>
-        // image aHash ([[perceptualHash]]'s spelling)
-        val px = sess.resize(m.payload, srcW, 8, 8)
-        var sum = 0L
-        var i = 0
-        while (i < px.length) { sum += px(i); i += 1 }
-        val ibits = new Array[Char](px.length)
-        i = 0
-        while (i < px.length) {
-          ibits(i) = if (px(i).toLong * 64L > sum) '1' else '0'
-          i += 1
-        }
-        // audio fingerprint ([[audioFingerprint]]'s spelling)
-        val nf = sess.planeLength(m.payload).toLong / fb
-        val energies = Array.tabulate(horizon) { wi =>
-          val startF = wi * nf / horizon
-          val endF = ((wi + 2) * nf / horizon).min(nf)
-          sess.feature(sess.slice(m.payload,
-            (startF * fb).toInt, ((endF - startF) * fb).toInt)._1)
-        }
-        val abits = new java.lang.StringBuilder(horizon - 1)
-        i = 0
-        while (i < horizon - 1) {
-          abits.append(if (energies(i + 1) > energies(i)) '1' else '0')
-          i += 1
-        }
-        // content class + granule keys ([[granuleKeys]])
+    codecStage(media, codec, spread = true) { sess =>
+      _.map { m =>
+        val ihash = aHash(sess, m.payload, srcW)
+        val afp = energyFingerprint(sess, m.payload, horizon)
         val (dg, keys) = granuleKeys(sess, m.payload)
-        (m.doc_id, new String(ibits), abits.toString, dg, keys)
+        (m.doc_id, ihash, afp, dg, keys)
       }
     }.toDF("doc_id", "ihash", "afp", "dg", "gkeys")
   }
@@ -914,15 +836,12 @@ object MultimodalOps {
     "m10_audio_granule_neardup",
     (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.functions._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
       // class collapse BEFORE the key join (m06's rule): one row per
       // distinct decoded content, metadata-width, staged so its three
       // consumers below (ck0, nbv's class sizes, the output) never re-run
       // the scan+granulate pass
       val cls = staged("m10_cls", d) {
-        audioGranules(s, media)
+        audioGranules(s, media(s, d))
           .groupBy($"dg")
           .agg(min($"doc_id").as("canonical_doc"),
             count(lit(1)).as("n_docs"), first($"gkeys").as("gkeys"))
@@ -952,15 +871,9 @@ object MultimodalOps {
       val mt = sh
         .join(ng.select($"dg".as("da"), $"n_g".as("na")), "da")
         .join(ng.select($"dg".as("db"), $"n_g".as("nb")), "db")
-        .where(org.apache.spark.sql.functions.expr(
-          oGranuleMatchSql("c", "na", "nb")))
+        .where(expr(oGranuleMatchSql("c", "na", "nb")))
         .select($"da", $"db")
-      // both directions in one pass over mt (see perceptualNeighbors)
-      val ed = mt.select(explode(expr(
-          "array(struct(da AS dg, db AS other), " +
-          "struct(db AS dg, da AS other))")).as("e"))
-        .select($"e.dg", $"e.other")
-      val nbv = ed
+      val nbv = bothWays(mt, "da", "db", "dg")
         .join(cls.select($"dg".as("other"), $"n_docs".as("od")), "other")
         .groupBy($"dg")
         .agg(count(lit(1)).as("n_matched_classes"),
@@ -1006,13 +919,13 @@ object MultimodalOps {
     * CANDIDATE pair (d02's MinHash/LSH, jaccard ≥ 0.8) is corroborated
     * against two independent perceptual signals on the same payloads —
     * the image aHash (88% of true text near-dups within m06MaxHam bits,
-    * measured at sf0.01) and, since round 11, the AUDIO signal as a
-    * GATING input: content-defined granule overlap ([[granuleKeys]] —
-    * 84% of true pairs matched at sf0.01), which is alignment-robust
-    * where the m08 global fingerprint is not. The global fingerprint's
-    * Hamming stays reported as `ham_audio` (the m08 grouping signal and
-    * the measured illustration of WHY granules are needed: a
-    * single-token edit shifts every proportional window span,
+    * measured at sf0.01) and the AUDIO signal as a GATING input:
+    * content-defined granule overlap ([[granuleKeys]] — 84% of true pairs
+    * matched at sf0.01; SCALE.md "Round 11: m10"), which is
+    * alignment-robust where the m08 global fingerprint is not. The global
+    * fingerprint's Hamming stays reported as `ham_audio` (the m08
+    * grouping signal and the measured illustration of WHY granules are
+    * needed: a single-token edit shifts every proportional window span,
     * decorrelating the deltas — min Hamming 19 across true pairs).
     * `consensus` = image within tolerance AND audio granule match
     * (same decoded content, or ≥ 2 shared granule keys covering ≥ half
@@ -1032,12 +945,8 @@ object MultimodalOps {
     "m09_crossmodal_consensus",
     (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.functions._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      // ONE decode pass for all three signals (see [[mediaFeatures]]) —
-      // round 11 paid three corpus passes plus two doc_id join shuffles
-      val feats = roundCheckpoint(mediaFeatures(s, media))
+      // ONE decode pass for all three signals (see [[mediaFeatures]])
+      val feats = roundCheckpoint(mediaFeatures(s, media(s, d)))
       val pairs = graft.ops.DedupOps.d02.run(s, d)
         .select($"doc_a", $"doc_b", $"jaccard")
       val withA = feats.as("fa")
@@ -1075,12 +984,8 @@ object MultimodalOps {
               JOIN cgk gb2 ON gb2.doc_id = p.doc_b AND ga2.gkey = gb2.gkey
               GROUP BY 1, 2),
       j AS (SELECT p.doc_a, p.doc_b, p.jaccard,
-              CAST(len(list_filter(range(1, 65),
-                i -> substring(ia.ahash, i, 1) <> substring(ib.ahash, i, 1)))
-                AS BIGINT) AS ham_image,
-              CAST(len(list_filter(range(1, 65),
-                i -> substring(aa.afp, i, 1) <> substring(bb.afp, i, 1)))
-                AS BIGINT) AS ham_audio,
+              ${oHam64("ia.ahash", "ib.ahash")} AS ham_image,
+              ${oHam64("aa.afp", "bb.afp")} AS ham_audio,
               CAST(coalesce(s.c, 0) AS BIGINT) AS audio_shared,
               (da.dg = db.dg) OR ${oGranuleMatchSql("coalesce(s.c, 0)",
                 "coalesce(na.n_g, 0)", "coalesce(nb.n_g, 0)")}
@@ -1100,6 +1005,47 @@ object MultimodalOps {
              ham_image <= $m06MaxHam AND audio_match AS consensus
       FROM j"""))
 
+  /** The per-frame kernel of [[detectShots]] and [[detectSpeech]]: the
+    * decoded plane cut into consecutive frames of `frameBytes` (aligned
+    * down to the codec's sample granularity — a 16-bit PCM plane must not
+    * slice mid-sample, m10's geometry rule), each frame's codec feature,
+    * its feature length-normalized to per-full-frame scale (so the short
+    * tail frame cannot fake a cut or a gate: `feat·fb div len`) and its
+    * content digest. */
+  private final case class Frames(feats: Array[Long], scaled: Array[Long],
+      md5s: Array[String])
+
+  private def frames(sess: MediaCodec.Session, payload: Array[Byte],
+      frameBytes: Int): Frames = {
+    val fb = math.max(frameBytes / sess.frameBytes, 1) * sess.frameBytes
+    val n = (sess.planeLength(payload) + fb - 1) / fb
+    val f = Frames(new Array[Long](n), new Array[Long](n), new Array[String](n))
+    var i = 0
+    while (i < n) {
+      val (bytes, hex) = sess.slice(payload, i * fb, fb)
+      f.feats(i) = sess.feature(bytes)
+      f.md5s(i) = hex
+      f.scaled(i) = f.feats(i) * fb / math.max(bytes.length, 1)
+      i += 1
+    }
+    f
+  }
+
+  /** DuckDB spelling of [[frames]] over the stub's plane (the text
+    * itself) for `fb`-byte frames of the non-empty documents, ending at
+    * `g(doc_id, fi, feat, fmd5, sc)` — ONE spelling for m11 and m12. */
+  private def oFrameCtes(fb: Int): String = s"""
+      b AS (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS len
+                 FROM documents WHERE strlen(text) > 0),
+      f AS (SELECT doc_id, text, len,
+              unnest(range(0, (len + ${fb - 1}) // $fb)) AS fi FROM b),
+      sub AS (SELECT doc_id, fi,
+                substring(text, CAST(fi * $fb + 1 AS INT), $fb) AS fr FROM f),
+      e AS (SELECT doc_id, fi, CAST(length(fr) AS BIGINT) AS flen,
+              ${oByteSum("fr")} AS feat, md5(fr) AS fmd5
+            FROM sub),
+      g AS (SELECT doc_id, fi, feat, fmd5, (feat * $fb) // flen AS sc FROM e)"""
+
   final case class ShotMeta(doc_id: Long, shot_idx: Long, start_frame: Long,
       n_frames: Long, energy_sum: Long, key_frame_idx: Long,
       key_frame_md5: String)
@@ -1116,108 +1062,63 @@ object MultimodalOps {
     * preprocessing stage a multimodal training pipeline runs before
     * captioning/sampling (PySceneDetect's content-detector shape: a cut
     * where the inter-frame feature delta exceeds a threshold, then one
-    * representative keyframe per shot). Frames are consecutive
-    * `frameBytes`-byte slices of the DECODED plane (m02's video-frame
-    * grid, stride = frame size — segmentation needs every consecutive
-    * delta, not m02's every-Nth sample); the per-frame feature is the
-    * codec's scalar (stub: exact unsigned-byte sum — the luma-mean
-    * stand-in), length-normalized to per-full-frame scale so the short
-    * tail frame can't fake a cut (`feat·frameBytes div len`). The cut
-    * rule is RELATIVE — `sens·|Δ| > max(prev, cur)` — so it is invariant
-    * to global intensity scaling (a brighter encode of the same video
-    * cuts identically), the same reason m08/m10 use delta SIGNS. Per
-    * shot: frame span, energy sum, and the argmax-feature keyframe
-    * (first-frame tie-break) with its content digest — the frame a
-    * captioner/sampler would take.
+    * representative keyframe per shot). Frames are [[frames]]: m02's
+    * video-frame grid with stride = frame size (segmentation needs every
+    * consecutive delta, not m02's every-Nth sample). The cut rule is
+    * RELATIVE — `sens·|Δ| > max(prev, cur)` over the scaled features — so
+    * it is invariant to global intensity scaling (a brighter encode of
+    * the same video cuts identically), the same reason m08/m10 use delta
+    * SIGNS. Per shot: frame span, energy sum, and the argmax-feature
+    * keyframe (first-frame tie-break) with its content digest — the
+    * frame a captioner/sampler would take.
     *
-    * Scale shape: ONE row-wise flatMap behind the per-partition codec
-    * session — zero shuffles, zero joins; per-doc state is one frame's
-    * features at a time plus the current shot accumulator (bounded by
-    * document length, never corpus-scale). d14's ideal-map-pass
-    * economics. */
+    * Scale shape: ONE row-wise flatMap in the codec stage — zero joins;
+    * per-doc state is the frame arrays plus the current shot accumulator
+    * (bounded by document length, never corpus-scale). */
   def detectShots(spark: SparkSession, media: DataFrame,
       frameBytes: Int = 64, sensitivity: Long = shotSensitivity,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    media.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      // frame size aligned to the codec's sample granularity (a 16-bit
-      // PCM plane must not slice mid-sample — m10's geometry rule)
-      val fb = math.max(frameBytes / sess.frameBytes, 1) * sess.frameBytes
-      it.flatMap { m =>
-        val len = sess.planeLength(m.payload)
-        val n = (len + fb - 1) / fb
-        if (n == 0) Iterator.empty
-        else {
-          val feats = new Array[Long](n)
-          val scaled = new Array[Long](n)
-          val md5s = new Array[String](n)
-          var i = 0
-          while (i < n) {
-            val (bytes, hex) = sess.slice(m.payload, i * fb, fb)
-            feats(i) = sess.feature(bytes)
-            md5s(i) = hex
-            scaled(i) = feats(i) * fb / math.max(bytes.length, 1)
-            i += 1
+    codecStage(media, codec, spread = true) { sess =>
+      _.flatMap { m =>
+        val Frames(feats, scaled, md5s) = frames(sess, m.payload, frameBytes)
+        val n = feats.length
+        val out = scala.collection.mutable.ArrayBuffer.empty[ShotMeta]
+        var shotStart = 0
+        def emit(endExcl: Int): Unit = {
+          var e = 0L
+          var kf = shotStart
+          var j = shotStart
+          while (j < endExcl) {
+            e += feats(j)
+            if (feats(j) > feats(kf)) kf = j
+            j += 1
           }
-          val out = scala.collection.mutable.ArrayBuffer.empty[ShotMeta]
-          var shotStart = 0
-          var shot = 0L
-          def emit(endExcl: Int): Unit = {
-            var e = 0L
-            var kf = shotStart
-            var j = shotStart
-            while (j < endExcl) {
-              e += feats(j)
-              if (feats(j) > feats(kf)) kf = j
-              j += 1
-            }
-            out += ShotMeta(m.doc_id, shot, shotStart.toLong,
-              (endExcl - shotStart).toLong, e, kf.toLong, md5s(kf))
-            shot += 1
-          }
-          i = 1
-          while (i < n) {
-            val a = scaled(i - 1)
-            val b = scaled(i)
-            if (sensitivity * math.abs(b - a) > math.max(a, b)) {
-              emit(i); shotStart = i
-            }
-            i += 1
-          }
-          emit(n)
-          out.iterator
+          out += ShotMeta(m.doc_id, out.length.toLong, shotStart.toLong,
+            (endExcl - shotStart).toLong, e, kf.toLong, md5s(kf))
         }
+        var i = 1
+        while (i < n) {
+          val a = scaled(i - 1)
+          val b = scaled(i)
+          if (sensitivity * math.abs(b - a) > math.max(a, b)) {
+            emit(i); shotStart = i
+          }
+          i += 1
+        }
+        if (n > 0) emit(n)
+        out.iterator
       }
     }.toDF()
   }
 
-  /** Oracle: ASCII payloads — the stub's plane is the text itself, so
-    * frame features and digests replicate in SQL (m03's spelling), and
-    * the shot segmentation is a lag + running-sum-of-cuts window. */
+  /** Oracle: [[oFrameCtes]], and the shot segmentation as a lag +
+    * running-sum-of-cuts window. */
   val m11 = QueryDef(
     "m11_shot_detection",
-    (s, d) => {
-      import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      detectShots(s, media)
-    },
+    (s, d) => detectShots(s, media(s, d)),
     Some(s"""
-      WITH b AS (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS len
-                 FROM documents WHERE strlen(text) > 0),
-      f AS (SELECT doc_id, text, len,
-              unnest(range(0, (len + 63) // 64)) AS fi FROM b),
-      sub AS (SELECT doc_id, fi,
-                substring(text, CAST(fi * 64 + 1 AS INT), 64) AS fr FROM f),
-      e AS (SELECT doc_id, fi, CAST(length(fr) AS BIGINT) AS flen,
-              CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(range(1, length(fr) + 1),
-                  i -> CAST(ascii(substring(fr, i, 1)) AS BIGINT))),
-                (a, c) -> a + c) AS BIGINT) AS feat,
-              md5(fr) AS fmd5
-            FROM sub),
-      g AS (SELECT doc_id, fi, feat, fmd5, (feat * 64) // flen AS sc FROM e),
+      WITH ${oFrameCtes(64)},
       c AS (SELECT doc_id, fi, feat, fmd5, sc,
               CASE WHEN lag(sc) OVER w IS NULL THEN 0
                    WHEN $shotSensitivity * abs(sc - lag(sc) OVER w)
@@ -1258,89 +1159,52 @@ object MultimodalOps {
     * consumes. The threshold is relative to the document's own mean
     * ([[vadMargin]]) so a quiet recording segments the same as a loud
     * one — m11's scaling-invariance argument, applied to the gate level
-    * rather than the delta. Frame energies are length-normalized to
-    * per-full-frame scale (the m11 tail rule) and the activity compare
-    * is exact integer cross-multiplication (scaled·n·100 ≥
-    * total·(100+margin)) — no division, bit-identical in SQL.
+    * rather than the delta. Frames are [[frames]] (scaled per full
+    * frame, the m11 tail rule) and the activity compare is exact integer
+    * cross-multiplication (scaled·n·100 ≥ total·(100+margin)) — no
+    * division, bit-identical in SQL.
     *
-    * Scale shape: ONE row-wise flatMap behind the per-partition codec
-    * session — zero shuffles; per-doc state is the frame-feature array
-    * (bounded by document length). m11/d14's ideal-map-pass economics. */
+    * Scale shape: ONE row-wise flatMap in the codec stage; per-doc state
+    * is the frame-feature array (bounded by document length). */
   def detectSpeech(spark: SparkSession, media: DataFrame,
       frameBytes: Int = 48, marginPct: Long = vadMargin,
       codec: MediaCodec = MediaCodec.Stub): DataFrame = {
     import spark.implicits._
-    media.as[MediaIn].mapPartitions { it =>
-      val sess = codec.open()
-      val fb = math.max(frameBytes / sess.frameBytes, 1) * sess.frameBytes
-      it.flatMap { m =>
-        val len = sess.planeLength(m.payload)
-        val n = (len + fb - 1) / fb
-        if (n == 0) Iterator.empty
-        else {
-          val feats = new Array[Long](n)
-          val scaled = new Array[Long](n)
-          var tot = 0L
-          var i = 0
-          while (i < n) {
-            val (bytes, _) = sess.slice(m.payload, i * fb, fb)
-            feats(i) = sess.feature(bytes)
-            scaled(i) = feats(i) * fb / math.max(bytes.length, 1)
-            tot += scaled(i)
-            i += 1
-          }
-          val out = scala.collection.mutable.ArrayBuffer.empty[VadMeta]
-          var seg = 0L
-          var segStart = -1
-          var segE = 0L
-          i = 0
-          while (i < n) {
-            val active = scaled(i) * n * 100L >= tot * (100L + marginPct)
-            if (active) {
-              if (segStart < 0) { segStart = i; segE = 0L }
-              segE += feats(i)
-            } else if (segStart >= 0) {
-              out += VadMeta(m.doc_id, seg, segStart.toLong,
-                (i - segStart).toLong, segE)
-              seg += 1
-              segStart = -1
-            }
-            i += 1
-          }
-          if (segStart >= 0)
-            out += VadMeta(m.doc_id, seg, segStart.toLong,
-              (n - segStart).toLong, segE)
-          out.iterator
+    codecStage(media, codec, spread = true) { sess =>
+      _.flatMap { m =>
+        val Frames(feats, scaled, _) = frames(sess, m.payload, frameBytes)
+        val n = feats.length
+        val tot = scaled.sum
+        val out = scala.collection.mutable.ArrayBuffer.empty[VadMeta]
+        var segStart = -1
+        var segE = 0L
+        def close(endExcl: Int): Unit = {
+          out += VadMeta(m.doc_id, out.length.toLong, segStart.toLong,
+            (endExcl - segStart).toLong, segE)
+          segStart = -1
         }
+        var i = 0
+        while (i < n) {
+          if (scaled(i) * n * 100L >= tot * (100L + marginPct)) {
+            if (segStart < 0) { segStart = i; segE = 0L }
+            segE += feats(i)
+          } else if (segStart >= 0) close(i)
+          i += 1
+        }
+        if (segStart >= 0) close(n)
+        out.iterator
       }
     }.toDF()
   }
 
-  /** Oracle: m11's frame spelling + the activity gate as the same integer
+  /** Oracle: [[oFrameCtes]] + the activity gate as the same integer
     * cross-multiplication, runs via lag-head + running-sum-of-heads over
     * active frames only (coverageTail's span idiom). */
   val m12 = QueryDef(
     "m12_speech_segments",
-    (s, d) => {
-      import s.implicits._
-      val media = table(s, d, "documents")
-        .select($"doc_id", $"text".cast("binary").as("payload"), $"source")
-      detectSpeech(s, media)
-    },
+    (s, d) => detectSpeech(s, media(s, d)),
     Some(s"""
-      WITH b AS (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS len
-                 FROM documents WHERE strlen(text) > 0),
-      f AS (SELECT doc_id, text, len,
-              unnest(range(0, (len + 47) // 48)) AS fi FROM b),
-      sub AS (SELECT doc_id, fi,
-                substring(text, CAST(fi * 48 + 1 AS INT), 48) AS fr FROM f),
-      e AS (SELECT doc_id, fi, CAST(length(fr) AS BIGINT) AS flen,
-              CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(range(1, length(fr) + 1),
-                  i -> CAST(ascii(substring(fr, i, 1)) AS BIGINT))),
-                (a, c) -> a + c) AS BIGINT) AS feat
-            FROM sub),
-      g AS (SELECT doc_id, fi, feat, (feat * 48) // flen AS sc FROM e),
+      WITH ${oFrameCtes(48)},
       t AS (SELECT doc_id, fi, feat, sc,
               count(*) OVER (PARTITION BY doc_id) AS nf,
               sum(sc) OVER (PARTITION BY doc_id) AS tot

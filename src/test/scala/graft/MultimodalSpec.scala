@@ -46,9 +46,9 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("mediaFeatures == the three standalone passes, column for column (no-drift pin)") {
     import spark.implicits._
-    // m09's fused single-decode pass duplicates the perceptualHash /
-    // audioFingerprint / granuleKeys spellings; this pin makes the fused
-    // copy uneditable without the standalone one (and vice versa)
+    // m09's single-decode pass composes the aHash, energy-fingerprint and
+    // granule kernels of the three standalone operators; this pin checks
+    // that the composition wires each kernel to its own column
     def keyed(df: org.apache.spark.sql.DataFrame, cols: String*) =
       df.select("doc_id", cols: _*).collect()
         .map(r => r.getLong(0) -> cols.map(c => r.get(r.fieldIndex(c)) match {
@@ -71,6 +71,27 @@ class MultimodalSpec extends AnyFunSuite {
       assert(v(2) == gr(id)(0), s"dg drift at doc $id")
       assert(v(3) == gr(id)(1), s"gkeys drift at doc $id")
     }
+  }
+
+  test("a spreading codec stage widens a one-partition batch scan; a wide frame plans no extra exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val par = spark.sparkContext.defaultParallelism
+    def stage(df: org.apache.spark.sql.DataFrame) =
+      MultimodalOps.codecStage(df, MediaCodec.Stub, spread = true)(_ => _.map(_.doc_id))
+    def exchanges(ds: org.apache.spark.sql.Dataset[_]): Int =
+      new AdaptiveSparkPlanHelper {}.collect(ds.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }.size
+    assert(media.rdd.getNumPartitions == 1, "the sf0.001 documents scan is no longer one partition")
+    assert(stage(media).rdd.getNumPartitions == par)
+    assert(exchanges(stage(media)) == (if (par > 1) 1 else 0))
+    // an RDD-backed frame: its partitions come from no exchange Catalyst
+    // could collapse a second repartition into
+    val wide = spark.createDataFrame(media.rdd.repartition(par), media.schema)
+    assert(wide.rdd.getNumPartitions == par && exchanges(wide) == 0)
+    assert(exchanges(stage(wide)) == 0, "a frame with defaultParallelism partitions was spread again")
   }
 
   test("a custom codec drops into every operator without plumbing changes") {
