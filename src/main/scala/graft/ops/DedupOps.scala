@@ -689,124 +689,123 @@ object DedupOps {
              p.vec_id IS NULL AS is_kept
       FROM assign s LEFT JOIN pruned p ON s.vec_id = p.vec_id"""))
 
-  /** Connected components by iterative min-label propagation over a
-    * SYMMETRIC edge list (`doc_a`, `doc_b`; both directions present) —
-    * each node labeled with the smallest id reachable through edges.
-    * Shared by d06 (MinHash near-dup graph) and d24 (mutual-kNN semantic
-    * graph): ONE fixpoint implementation, two edge semantics.
-    *
-    * Converges in ≤ diameter hops; each hop is one metadata-width
-    * shuffle — the standard scalable formulation when a graph library
-    * isn't available. Callers wrap in [[Q.withAdvisoryCoalesce]] (rounds
-    * are barriers — fewer, larger reduce tasks win) and stage the edge
-    * frame (it is re-read every hop). The labels come back checkpointed,
-    * so the last persisted round is released before returning.
-    *
-    * Round 16 (guide §1 measured, §2.4/§2.6 applied): at gate scale the
-    * fixpoint's entire cost was the per-round DRIVER machinery — SQL
-    * analysis + AQE stage-by-stage scheduling + a broadcast-build job +
-    * localCheckpoint + Observation PER HOP, 0.16–1.3 s each on ~1.5 k
-    * edge rows, 14 hops for d24 at sf0.1 (largest-component diameter
-    * 17) = 3.4–15.4 s of pure per-round overhead, and the run-to-run
-    * dispersion of that overhead was the whole d24 bench spread. Two
-    * fixes were built and MEASURED before this one: (a) pointer-jumping
-    * (label-of-label in the min fold) — on the real d24 graph it saves
-    * only 2 of 14 rounds (ids are dense and random relative to the
-    * graph structure, so a node's current label usually sits near it; a
-    * driver-side simulation on the exported edge list confirmed
-    * 14 → 12) — rejected; (b) unrolling 4 hops per materialized SQL
-    * round — SLOWER still (8–15 s: every hop keeps its own exchange, so
-    * AQE schedules the same number of stages and the deeper plan costs
-    * more to analyze) — rejected. What removes the overhead is removing
-    * the machinery: the loop now runs on the RDD API — edges hashed by
-    * dst ONCE into `byDst` and labels kept co-partitioned with it, so a
-    * round is `byDst.join(labels)` (narrow, zero shuffle) → one
-    * metadata-width `reduceByKey(min)` shuffle → a narrow
-    * `leftOuterJoin` fold, materialized and convergence-counted by a
-    * single `count()` job — ONE job, two stages, no SQL planner, no
-    * AQE re-planning, no broadcast build, no checkpoint machinery per
-    * round (persisted rounds truncate recomputation; lineage depth
-    * grows only by one narrow layer per round). The per-row work is a
-    * primitive Long min — nothing for codegen to win on — while the
-    * shuffle structure (one metadata exchange per round) is IDENTICAL
-    * to the SQL spelling at every scale; this is GraphX's formulation
-    * of exactly this algorithm. Fixpoint, labels, and the DuckDB
-    * recursive-CTE oracle are unchanged. Measured at sf0.1: d24's
-    * fixpoint 3.4–15.4 s → ~0.6 s, and the dispersion collapses with
-    * the machinery. */
-  /** Hops chained per materialized fixpoint round. */
-  private val ccUnroll = 4
-
+  /** Connected components of a SYMMETRIC edge list (`doc_a`, `doc_b`,
+    * both directions present: d06's unioned pairs, d24's and d27's
+    * mutual k-NN edges): each `doc_a` labeled with the smallest id
+    * reachable through edges, the min-reach fixpoint of the DuckDB
+    * recursive-CTE oracles. Partitions are size-derived, about
+    * `edgesPerPart` edge rows (~64 MB) each and never more than the
+    * input has. One partition solves the whole graph in one task with
+    * [[unionMin]]; a bigger graph runs the distributed min-label round
+    * loop until no label moves. Callers stage the edge frame (every pass
+    * re-reads it) and run under [[Q.withAdvisoryCoalesce]]. The labels
+    * come back checkpointed, and nothing else stays persisted.
+    * `edgesPerPart` is lowered only by specs, to send small graphs
+    * through the round loop. Measured history: SCALE.md "One-task
+    * fixpoint". */
   private[graft] def minLabelComponents(
       s: org.apache.spark.sql.SparkSession,
-      edges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      edges: org.apache.spark.sql.DataFrame,
+      edgesPerPart: Long = 4000000L): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val eRdd = edges.select($"doc_a", $"doc_b").as[(Long, Long)].rdd
-    // scale-adaptive partitioning, SIZE-derived (the AQE-advisory rule
-    // applied by hand, since AQE cannot see RDD shuffles): ~4 M edge
-    // rows (~64 MB at 16 B/row) per partition, never a core-count or
-    // inherited-layout constant — gate graphs run the whole round in a
-    // task or two instead of 64 empty ones (measured: 0.08-0.2 s/round
-    // at 32 inherited partitions → ~0.03 s at 1), and a 10^10-edge
-    // graph still gets thousands of reduce partitions. The count is one
-    // cheap job over the caller's staged edge frame, paid once per
-    // fixpoint.
+    // one cheap job over the staged edges, paid once per fixpoint
     val nEdges = eRdd.count()
     val part = new org.apache.spark.HashPartitioner(
       math.max(1, math.min(eRdd.getNumPartitions.toLong,
-        (nEdges + 4000000L - 1) / 4000000L).toInt))
-    val byDst = eRdd.map(e => (e._2, e._1)).partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // nodes = distinct doc_a (symmetric edges ⇒ same as distinct doc_b),
-    // labeled with themselves; reduceByKey doubles as the distinct and
-    // leaves the frame partitioned like byDst
-    var cur = byDst.map(p => (p._2, p._2)).reduceByKey(part, (a, _) => a)
-      .persist()
-    var lastPersisted: org.apache.spark.rdd.RDD[_] = cur
-    var changed = 1L
-    // one label-propagation hop: min over self and in-neighbors, narrow
-    // except for the single metadata-width reduceByKey shuffle
-    def hop(labels: org.apache.spark.rdd.RDD[(Long, Long)])
-        : org.apache.spark.rdd.RDD[(Long, (Long, Boolean))] = {
-      val merged = byDst.join(labels) // narrow: both sides carry `part`
-        .map { case (_, (src, lab)) => (src, lab) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      labels.leftOuterJoin(merged) // narrow again
-        .mapValues { case (old, m) =>
-          val nl = m.fold(old)(math.min(old, _)); (nl, nl != old)
-        }
-    }
-    // each materialized round chains `ccUnroll` hops into ONE job (the
-    // per-JOB driver overhead, ~100-150 ms even for a single-task job,
-    // was the measured floor — chained hops are just extra stages in
-    // the same job); convergence counts the LAST hop's moves, and hop
-    // k = hop k−1 already implies hop k−1 is the fixpoint (labels are
-    // monotone non-increasing), so termination and the final labels
-    // are exactly the one-hop fixpoint, at up to unroll−1 wasted
-    // metadata-width hops past convergence
-    while (changed > 0) {
-      var stepped = cur
-      var h = 1
-      while (h < ccUnroll) { stepped = hop(stepped).mapValues(_._1); h += 1 }
-      val next = hop(stepped)
-        // persist, NOT localCheckpoint: truncating lineage per round was
-        // measured SLOWER here (3.2-4.7 s vs 2.1 s — the checkpoint
-        // materialization pass costs more than serializing the per-round
-        // RDD object graph, which at diameter-bounded round counts stays
-        // kilobytes); persistence short-circuits recomputation, which is
-        // all the loop needs
+        (nEdges + edgesPerPart - 1) / edgesPerPart).toInt))
+    if (part.numPartitions == 1) {
+      // the round loop would run every hop of this graph in one task
+      // anyway: run them all there, as one job, on primitive arrays
+      val solved = eRdd.coalesce(1).mapPartitions { it =>
+        val a = new scala.collection.mutable.ArrayBuilder.ofLong
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        a.sizeHint(nEdges.toInt); b.sizeHint(nEdges.toInt)
+        it.foreach { case (x, y) => a += x; b += y }
+        val src = a.result()
+        val (ids, root) = unionMin(src, src, b.result())
+        Iterator.tabulate(ids.length)(j => (ids(j), ids(root(j))))
+      }
+      roundCheckpoint(solved.toDF("id", "cluster"))
+    } else {
+      val byDst = eRdd.map(e => (e._2, e._1)).partitionBy(part)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // one count() materializes the round AND detects convergence —
-      // exact under task retries (it reads the persisted result)
-      changed = next.filter(_._2._2).count()
+      // nodes = distinct doc_a (symmetric edges ⇒ same as distinct doc_b),
+      // labeled with themselves; reduceByKey doubles as the distinct and
+      // leaves the frame partitioned like byDst
+      var cur = byDst.map(p => (p._2, p._2)).reduceByKey(part, (a, _) => a)
+        .persist()
+      var lastPersisted: org.apache.spark.rdd.RDD[_] = cur
+      var changed = 1L
+      // one label-propagation hop: min over self and in-neighbors, narrow
+      // except for the single metadata-width reduceByKey shuffle
+      def hop(labels: org.apache.spark.rdd.RDD[(Long, Long)])
+          : org.apache.spark.rdd.RDD[(Long, (Long, Boolean))] = {
+        val merged = byDst.join(labels) // narrow: both sides carry `part`
+          .map { case (_, (src, lab)) => (src, lab) }
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+        labels.leftOuterJoin(merged) // narrow again
+          .mapValues { case (old, m) =>
+            val nl = m.fold(old)(math.min(old, _)); (nl, nl != old)
+          }
+      }
+      // each round chains `ccUnroll` hops into ONE job; convergence counts
+      // the LAST hop's moves, and labels only fall, so a still last hop
+      // means the one-hop fixpoint was reached (at up to unroll−1 spare
+      // metadata-width hops)
+      while (changed > 0) {
+        var stepped = cur
+        var h = 1
+        while (h < ccUnroll) { stepped = hop(stepped).mapValues(_._1); h += 1 }
+        // persisted, not checkpointed: it only has to stop recomputation
+        val next = hop(stepped)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // one count() materializes the round AND detects convergence —
+        // exact under task retries (it reads the persisted result)
+        changed = next.filter(_._2._2).count()
+        lastPersisted.unpersist(false)
+        lastPersisted = next
+        cur = next.mapValues(_._1)
+      }
+      byDst.unpersist(false)
+      val labels = roundCheckpoint(cur.toDF("id", "cluster"))
       lastPersisted.unpersist(false)
-      lastPersisted = next
-      cur = next.mapValues(_._1)
+      labels
     }
-    byDst.unpersist(false)
-    val labels = roundCheckpoint(cur.toDF("id", "cluster"))
-    lastPersisted.unpersist(false)
-    labels
+  }
+
+  /** Hops chained per materialized round of the distributed fixpoint. */
+  private val ccUnroll = 4
+
+  /** The one union-find kernel, shared by [[minLabelComponents]]' one-task
+    * path and d28's per-cluster FSM ([[StreamingGate.semDeleteFsm]]): the
+    * components of `nodes` under the edges `a(i)`–`b(i)`. Returns the
+    * sorted distinct node ids and, slot for slot, the slot of the smallest
+    * id in that node's component. Union by min slot with path halving on
+    * an `Int` parent array, ids found by binary search; an edge endpoint
+    * that is not a node fails loudly. */
+  private[graft] def unionMin(nodes: Array[Long], a: Array[Long], b: Array[Long])
+      : (Array[Long], Array[Int]) = {
+    val sorted = nodes.clone()
+    java.util.Arrays.sort(sorted)
+    var k = 0
+    for (x <- sorted) if (k == 0 || x != sorted(k - 1)) { sorted(k) = x; k += 1 }
+    val ids = java.util.Arrays.copyOf(sorted, k)
+    def slot(x: Long): Int = {
+      val i = java.util.Arrays.binarySearch(ids, x)
+      require(i >= 0, s"edge endpoint $x is not a node"); i
+    }
+    // every link points to a smaller slot (union by min, halving only
+    // shortens), so one forward pass at the end resolves every root
+    val root = Array.range(0, k)
+    @scala.annotation.tailrec def find(x: Int): Int =
+      if (root(x) == x) x else { root(x) = root(root(x)); find(root(x)) }
+    for (i <- a.indices) {
+      val ra = find(slot(a(i))); val rb = find(slot(b(i)))
+      if (ra < rb) root(rb) = ra else if (rb < ra) root(ra) = rb
+    }
+    for (j <- root.indices) root(j) = root(root(j))
+    (ids, root)
   }
 
   /** Dedup clustering: connected components over the MinHash near-dup

@@ -973,15 +973,15 @@ object StreamingGate {
     * re-derive the component labels among survivors — a deletion can
     * SPLIT a semantic neighborhood (the deleted node may be the
     * articulation point), so re-election is connectivity, not a max scan
-    * like d23's. Components come from a min-label union-find over the
-    * cluster's surviving stored edges — the in-group twin of
-    * [[DedupOps.minLabelComponents]]'s distributed fixpoint, exact
-    * because the state holds the WHOLE cluster's edges (cluster-bounded:
-    * ≤ members·k rows — d13/d23's per-group bound). Mixed-parity batches
-    * fail loudly (q71's hardened convention, round-14): the parity-staged
-    * maxFilesPerTrigger=1 layout is ENFORCED, not assumed. A key invoked
-    * with no batch rows emits nothing and leaves state untouched — the
-    * delta contract: silence means "stored labels still valid". */
+    * like d23's. Components come from [[DedupOps.unionMin]], the kernel of
+    * [[DedupOps.minLabelComponents]]' one-task path, over the cluster's
+    * surviving stored edges, exact because the state holds the WHOLE
+    * cluster's edges (cluster-bounded: ≤ members·k rows — d13/d23's
+    * per-group bound). Mixed-parity batches fail loudly (q71's hardened
+    * convention, round-14): the parity-staged maxFilesPerTrigger=1
+    * layout is ENFORCED, not assumed. A key invoked with no batch rows
+    * emits nothing and leaves state untouched — the delta contract:
+    * silence means "stored labels still valid". */
   private[graft] def semDeleteFsm(key: Long, rows: Iterator[D28Tomb],
       st: org.apache.spark.sql.streaming.GroupState[D28State])
       : Iterator[D28Out] =
@@ -1005,25 +1005,9 @@ object StreamingGate {
       st.update(D28State(ms, es))
       if (ms.isEmpty) Iterator.single(D28Out(bno, key, -1L, -1L, false))
       else {
-        // min-label connected components over the surviving stored edges:
-        // union-by-min with path compression, O(|members| + |edges|)
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        ms.foreach(m => parent(m) = m)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        es.foreach { e =>
-          val ra = find(e.a); val rb = find(e.b)
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        ms.map { m =>
-          val c = find(m)
-          D28Out(bno, key, m, c, c != m)
-        }.iterator
+        val (ids, root) =
+          DedupOps.unionMin(ms.toArray, es.map(_.a).toArray, es.map(_.b).toArray)
+        ids.indices.iterator.map(j => D28Out(bno, key, ids(j), ids(root(j)), root(j) != j))
       }
     }
 

@@ -599,4 +599,41 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(bases.nonEmpty && bases.forall(_.outputPartitioning.isInstanceOf[HashPartitioningLike]),
       s"the staged base lost its user_id partitioning: $bases")
   }
+
+  test("d24's fixpoint runs at most two jobs: the edge count and a one-task solve") {
+    // the job-budget pin: a gate-size graph fits one partition, so the
+    // fixpoint must not fall back to one job per unrolled round (the
+    // round loop runs four here: the count, two rounds and the label
+    // checkpoint). A job belongs to the
+    // fixpoint when its call site, or that of the SQL execution it
+    // serves, runs through `minLabelComponents`.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sqlSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[Long])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.stageInfos.headOption.map(_.details).getOrElse(""),
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .map(_.toLong)))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => sqlSites.put(x.executionId, x.details)
+        case _ => ()
+      }
+    }
+    graft.ops.Q.clearStaged()
+    spark.sparkContext.addSparkListener(listener)
+    try SparkEntry.queries("d24_semantic_graph_dedup")(spark, dir)
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val fixpointJobs = jobs.asScala.count { case (site, sql) =>
+      (site +: sql.flatMap(id => Option(sqlSites.get(id))).toSeq)
+        .exists(_.contains("minLabelComponents"))
+    }
+    assert(fixpointJobs >= 1, "no job traced to minLabelComponents: the listener saw nothing")
+    assert(fixpointJobs <= 2, s"d24's fixpoint ran $fixpointJobs jobs (budget 2)")
+  }
 }

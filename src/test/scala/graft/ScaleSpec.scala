@@ -191,12 +191,11 @@ class ScaleSpec extends AnyFunSuite {
         s"q65 branch $tag lost or duplicated rows")
   }
 
-  test("clearStaged releases stagedMaterialized checkpoint blocks (no leak)") {
+  test("clearStaged releases Q.staged checkpoint blocks (no leak)") {
     // every staged frame is a checkpoint whose localCheckpoint RDD blocks
     // a plan-level unpersist cannot see: q65's fused base (a full events
-    // copy), d02's pair list and d24's createDataFrame-rooted labels (and
-    // the fixpoint rounds behind them) must all be released (the title
-    // keeps the name of the checkpointing stager, now `Q.staged`)
+    // copy), d02's pair list and d24's k-NN graph, edges and labels must
+    // all be released
     val dir = "/root/testdata/sf0.001"
     val inputs = Seq[() => Unit](
       () => SparkEntry.queries("q65_fused_event_suite")(spark, dir).collect(),
