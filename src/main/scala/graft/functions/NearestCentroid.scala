@@ -12,43 +12,17 @@ import org.apache.spark.sql.types._
   * centroid-table memo + vector scratch, task-local by construction. */
 final class NearestCentroidKernel {
   private val table = new CentroidTable
-  private var vecBuf: Array[Double] = _
 
   /** Returns `struct(cid, cos)` of the highest-cosine centroid (ties to
     * the smallest cid), or null when the centroid table is empty. */
   def eval(vecA: ArrayData, vn: Double, cs: ArrayData): InternalRow = {
     table.decode(cs)
-    val dims = vecA.numElements()
-    if (vecBuf == null || vecBuf.length < dims) vecBuf = new Array[Double](dims)
-    var i = 0
-    while (i < dims) { vecBuf(i) = vecA.getDouble(i); i += 1 }
-    var bestCid = Long.MinValue
-    var bestCos = Double.NegativeInfinity
-    var first = true
-    var c = 0
-    val k = table.k
-    while (c < k) {
-      val cid = table.cids(c)
-      val cv = table.cvs(c)
-      var acc = 0.0
-      i = 0
-      while (i < dims) {
-        acc += vecBuf(i) * cv(i)
-        i += 1
-      }
-      val cos = acc / (vn * table.cns(c))
-      // ORDER BY cos DESC, cid semantics (NaN sorts greatest, like Spark)
-      val cmp =
-        if (cos.isNaN && bestCos.isNaN) 0
-        else if (cos.isNaN) 1
-        else if (bestCos.isNaN) -1
-        else java.lang.Double.compare(cos, bestCos)
-      if (first || cmp > 0 || (cmp == 0 && cid < bestCid)) {
-        bestCid = cid; bestCos = cos; first = false
-      }
-      c += 1
-    }
-    if (first) null else InternalRow(bestCid, bestCos)
+    if (table.k == 0) return null
+    table.score(vecA, vn)
+    var best = 0
+    var c = 1
+    while (c < table.k) { if (table.before(c, best)) best = c; c += 1 }
+    InternalRow(table.cids(best), table.cos(best))
   }
 }
 
@@ -69,21 +43,14 @@ final class NearestCentroidKernel {
   * Dots fold left-to-right like [[DotProduct]], so the selected cosine
   * is bit-identical to the SQL chain's.
   *
-  * MEASURED CODEGEN REJECTION (round 15 — the same mechanism as
-  * [[graft.functions.IntersectCount]]'s, caught by the quiet-bench
-  * per-query diff): most consumers reference the struct result MORE
-  * THAN ONCE (`nc.cid` + `nc.cos`, d17 adds `nc IS NOT NULL` — three
-  * references), and CollapseProject substitutes the alias into every
-  * field access, so a codegen'd spelling runs the N·k kernel fold 2-3×
-  * per row inside the fused stage, while the `CodegenFallback` form
-  * excludes the operator from whole-stage codegen and its standalone
-  * projection evaluates the expression ONCE under subexpression
-  * elimination. Quiet-bench sf0.1 deltas under the codegen'd spelling:
-  * d24 +25%, s15 +24%, t19-class noise elsewhere; a targeted A/B
-  * confirmed recovery on revert. The single-reference d16 shape
-  * measured −5% under codegen — not worth the multi-reference tax.
-  * Contrast [[NearestCentroids]] (plural): array result consumed once
-  * via posexplode — its codegen ships (measured −9-10%). */
+  * Codegen is off on purpose (`CodegenFallback`): consumers read the
+  * struct result more than once (`nc.cid`, `nc.cos`, d17's `nc IS NOT
+  * NULL`), CollapseProject substitutes the alias into each read, and a
+  * generated spelling would run the N·k fold once per read. The fallback
+  * projection evaluates it once under subexpression elimination.
+  * Measured in SCALE.md "Round 15: codegen A/B for the two hottest
+  * interpreted kernels"; [[NearestCentroids]] (one read, via posexplode)
+  * is generated. */
 case class NearestCentroid(vec: Expression, nrm: Expression, cents: Expression)
     extends TernaryExpression with CodegenFallback {
 
@@ -104,22 +71,9 @@ case class NearestCentroid(vec: Expression, nrm: Expression, cents: Expression)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    val okVec = vec.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    val okNrm = nrm.dataType == DoubleType
-    val okCents = cents.dataType match {
-      case ArrayType(StructType(Array(
-            StructField(_, LongType, _, _),
-            StructField(_, ArrayType(DoubleType, _), _, _),
-            StructField(_, DoubleType, _, _))), _) => true
-      case _ => false
-    }
-    if (okVec && okNrm && okCents) TypeCheckResult.TypeCheckSuccess
+    if (CentroidTable.argsOk(vec, nrm, cents)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<double>, double, " +
-        "array<struct<cid:bigint,cv:array<double>,cn:double>>), got " +
+      s"$prettyName expects (${CentroidTable.argsDoc}), got " +
         Seq(vec, nrm, cents).map(_.dataType.simpleString).mkString(", "))
   }
 

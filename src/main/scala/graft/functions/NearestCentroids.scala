@@ -6,7 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Per-task memoized decode of the centroid table into primitive arrays.
+/** The centroid table both kernels read: a per-task memoized decode into
+  * primitive arrays, the scoring loop ([[score]]) and the rank order
+  * ([[before]]) that [[NearestCentroidKernel]] and
+  * [[NearestCentroidsKernel]] share.
   *
   * The centroid argument reaches the expression as the SAME broadcast
   * ArrayData instance on every row of a task (it is the one
@@ -34,6 +37,10 @@ private[functions] final class CentroidTable {
   var cids: Array[Long] = _
   var cvs: Array[Array[Double]] = _
   var cns: Array[Double] = _
+  /** The cosines of the last [[score]]d vector, slot for slot. */
+  var cos: Array[Double] = _
+  private var vecBuf: Array[Double] = _
+
   def decode(arr: ArrayData): Unit = {
     if ((arr.asInstanceOf[AnyRef] eq ref) && arr.numElements() == k &&
         (k == 0 || (arr.getStruct(0, 3).getLong(0) == cids(0) &&
@@ -52,6 +59,52 @@ private[functions] final class CentroidTable {
     }
     ref = arr.asInstanceOf[AnyRef]
   }
+
+  /** Fills [[cos]] with the cosine of `vecA` (L2 norm `vn`) against every
+    * decoded centroid: `dot / (vn * cn)`, the dot a left fold like
+    * [[DotProduct]]'s, so each cosine is bit-identical to the SQL chain's. */
+  def score(vecA: ArrayData, vn: Double): Unit = {
+    val dims = vecA.numElements()
+    if (vecBuf == null || vecBuf.length < dims) vecBuf = new Array[Double](dims)
+    if (cos == null || cos.length < k) cos = new Array[Double](k)
+    var i = 0
+    while (i < dims) { vecBuf(i) = vecA.getDouble(i); i += 1 }
+    var c = 0
+    while (c < k) {
+      val cv = cvs(c)
+      var acc = 0.0
+      i = 0
+      while (i < dims) { acc += vecBuf(i) * cv(i); i += 1 }
+      cos(c) = acc / (vn * cns(c))
+      c += 1
+    }
+  }
+
+  /** Whether slot `a` ranks before slot `b` under `ORDER BY cos DESC, cid`,
+    * comparing doubles as Spark's sort does (NaN greatest, -0.0 = 0.0). */
+  def before(a: Int, b: Int): Boolean = {
+    val x = cos(a); val y = cos(b)
+    val cmp = if (x == y) 0 else java.lang.Double.compare(x, y)
+    cmp > 0 || (cmp == 0 && cids(a) < cids(b))
+  }
+}
+
+private[functions] object CentroidTable {
+  /** The argument check both expressions share: (array<double>, double,
+    * array<struct<cid:bigint, cv:array<double>, cn:double>>). */
+  def argsOk(vec: Expression, nrm: Expression, cents: Expression): Boolean =
+    (vec.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }) && nrm.dataType == DoubleType && (cents.dataType match {
+      case ArrayType(StructType(Array(
+            StructField(_, LongType, _, _),
+            StructField(_, ArrayType(DoubleType, _), _, _),
+            StructField(_, DoubleType, _, _))), _) => true
+      case _ => false
+    })
+
+  val argsDoc = "array<double>, double, array<struct<cid:bigint,cv:array<double>,cn:double>>"
 }
 
 /** The top-P assignment kernel shared by [[NearestCentroids]]' interpreted
@@ -60,8 +113,6 @@ private[functions] final class CentroidTable {
   * scratch buffers, task-local by construction. */
 final class NearestCentroidsKernel {
   private val table = new CentroidTable
-  private var cosBuf: Array[Double] = _
-  private var vecBuf: Array[Double] = _
 
   /** Returns the top-`probes` `array<struct<cid,cos>>`, or null when the
     * centroid table is empty. */
@@ -69,51 +120,22 @@ final class NearestCentroidsKernel {
     table.decode(cs)
     val k = table.k
     if (k == 0) return null
-    val cids = table.cids
-    val dims = vecA.numElements()
-    if (cosBuf == null || cosBuf.length < k) cosBuf = new Array[Double](k)
-    if (vecBuf == null || vecBuf.length < dims) vecBuf = new Array[Double](dims)
-    var i = 0
-    while (i < dims) { vecBuf(i) = vecA.getDouble(i); i += 1 }
-    var c = 0
-    while (c < k) {
-      val cv = table.cvs(c)
-      var acc = 0.0
-      i = 0
-      while (i < dims) {
-        acc += vecBuf(i) * cv(i)
-        i += 1
-      }
-      cosBuf(c) = acc / (vn * table.cns(c))
-      c += 1
-    }
-    // selection: p passes over the cached cosines (p ≪ K), each pass
-    // picking the best not-yet-taken entry under (cos DESC, cid ASC) —
-    // NaN sorts greatest, matching Spark's descending sort order
+    table.score(vecA, vn)
+    // p selection passes over the scored slots (p ≪ K), each taking the
+    // best slot not yet taken
     val take = math.max(0, math.min(probes, k))
     val taken = new Array[Boolean](k)
     val out = new Array[Any](take)
     var r = 0
     while (r < take) {
       var best = -1
-      c = 0
+      var c = 0
       while (c < k) {
-        if (!taken(c)) {
-          if (best < 0) best = c
-          else {
-            val a = cosBuf(c); val b = cosBuf(best)
-            val cmp =
-              if (a.isNaN && b.isNaN) 0
-              else if (a.isNaN) 1
-              else if (b.isNaN) -1
-              else java.lang.Double.compare(a, b)
-            if (cmp > 0 || (cmp == 0 && cids(c) < cids(best))) best = c
-          }
-        }
+        if (!taken(c) && (best < 0 || table.before(c, best))) best = c
         c += 1
       }
       taken(best) = true
-      out(r) = InternalRow(cids(best), cosBuf(best))
+      out(r) = InternalRow(table.cids(best), table.cos(best))
       r += 1
     }
     new GenericArrayData(out)
@@ -136,15 +158,11 @@ final class NearestCentroidsKernel {
   * like [[DotProduct]], so selected cosines are bit-identical to the SQL
   * chain's.
   *
-  * Codegen'd (round-15, verdict item 3): the kernel is held as generated-
-  * class mutable state, so the N·K dot-product fold runs inside the
-  * whole-stage body instead of through a boxed `CodegenFallback` eval.
-  * MEASURED WIN: the trained-quantizer s15 graph build at 64× salted /
-  * K=2560 ran 17.45/18.80 s fallback vs 15.66/17.06 s codegen across
-  * two interleaved same-day legs (min-of-5) — −9-10%. Unlike
-  * [[IntersectCount]] (measured rejection, see there), this kernel sits
-  * in exactly ONE projection with no alias-substituted copies, so
-  * fusing it into the stage has no multiplicity downside. */
+  * Generated code (`doGenCode`): the kernel is mutable state of the
+  * generated class, so the N·K fold runs inside the whole-stage body. The
+  * array result is read once (posexplode), so fusing has no
+  * multiplicity cost, unlike [[NearestCentroid]]. Measured in SCALE.md
+  * "Round 15: codegen A/B for the two hottest interpreted kernels". */
 case class NearestCentroids(
     vec: Expression, nrm: Expression, cents: Expression, p: Expression)
     extends QuaternaryExpression {
@@ -164,28 +182,15 @@ case class NearestCentroids(
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    val okVec = vec.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    val okNrm = nrm.dataType == DoubleType
-    val okCents = cents.dataType match {
-      case ArrayType(StructType(Array(
-            StructField(_, LongType, _, _),
-            StructField(_, ArrayType(DoubleType, _), _, _),
-            StructField(_, DoubleType, _, _))), _) => true
-      case _ => false
-    }
     // p must be a foldable POSITIVE int: a non-positive literal would
     // otherwise surface as a runtime array-size error at eval time
     val okP = p.dataType == IntegerType && p.foldable && {
       val pv = p.eval(InternalRow.empty)
       pv != null && pv.asInstanceOf[Int] > 0
     }
-    if (okVec && okNrm && okCents && okP) TypeCheckResult.TypeCheckSuccess
+    if (CentroidTable.argsOk(vec, nrm, cents) && okP) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (array<double>, double, " +
-        "array<struct<cid:bigint,cv:array<double>,cn:double>>, positive literal int), got " +
+      s"$prettyName expects (${CentroidTable.argsDoc}, positive literal int), got " +
         Seq(vec, nrm, cents, p).map(_.dataType.simpleString).mkString(", "))
   }
 

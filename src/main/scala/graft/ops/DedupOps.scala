@@ -1,6 +1,8 @@
 package graft.ops
 
 import Q._
+import SimilarityOps._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Near-duplicate detection over `documents` / `embeddings` — the core
   * dedup stages of a large-scale training-data pipeline:
@@ -56,10 +58,6 @@ object DedupOps {
                     x -> CAST(x AS VARCHAR)), ',') AS bkey
                 FROM sig, (SELECT unnest(range(0, $minhashBands)) AS bj) bx)"""
 
-  /** MinHash signature (k = bands·rows via 2-hash affine family) + LSH
-    * banding (see [[minhashBands]]), then exact shingle-Jaccard
-    * verification of candidates. Planted near-dups in the driver data sit
-    * at jaccard ≥ 0.8; the default banding gives ≥ 0.999 recall there. */
   /** d02's staged shingle-set frame (doc_id, sset) — the stage that feeds
     * FOUR consumers in d02 alone (two band sides, two verify sides) and
     * now also d25's exact-overlap audit. Materializing it once cut the
@@ -193,6 +191,10 @@ object DedupOps {
               FROM cand JOIN sh sa ON cand.ida = sa.doc_id
                         JOIN sh sb ON cand.idb = sb.doc_id)"""
 
+  /** MinHash signature (k = bands·rows via 2-hash affine family) + LSH
+    * banding (see [[minhashBands]]), then exact shingle-Jaccard
+    * verification of candidates. Planted near-dups in the test data sit
+    * at jaccard ≥ 0.8; the default banding gives ≥ 0.999 recall there. */
   val d02 = QueryDef(
     "d02_minhash_lsh",
     (s, d) => {
@@ -525,53 +527,50 @@ object DedupOps {
   val d05 = QueryDef(
     "d05_embedding_neardup",
     (s, d) => {
-      SimilarityOps.normEmbeddings(s, d).createOrReplaceTempView("d05_n")
+      normEmbeddings(s, d).createOrReplaceTempView("d05_n")
+      // hashed by vec_id at the session's full shuffle parallelism, so the
+      // candidate DISTINCT stays partition-local behind the broadcast
+      // self-join and that join runs on every core: AQE would coalesce
+      // this metadata-width frame into one task that emits every pair
+      // (5.8 M at 16×)
+      probeAssign(s, "d05_n", seedCents("d05_n", ivfSeeds), 3, "label, ")
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
+          org.apache.spark.sql.functions.col("vec_id"))
+        .createOrReplaceTempView("d05_assign")
       s.sql("""
-        WITH c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM d05_n
-                   WHERE vec_id % 50 = 7 AND vec_id < 3200),
-        sc AS (SELECT /*+ BROADCAST(c) */ t.vec_id, t.label, cid,
-                 row_number() OVER (PARTITION BY t.vec_id
-                                    ORDER BY dot_product(t.v, cv) / (t.nrm * cn) DESC,
-                                             cid) AS rn
-               FROM d05_n t CROSS JOIN c),
-        assign AS (SELECT vec_id, label, cid FROM sc WHERE rn <= 3),
-        cand AS (SELECT DISTINCT a.vec_id AS ida, b.vec_id AS idb
-                 FROM assign a JOIN assign b
-                   ON a.label = b.label AND a.cid = b.cid AND a.vec_id < b.vec_id),
+        WITH cand AS (SELECT DISTINCT a.vec_id AS ida, b.vec_id AS idb
+                 FROM d05_assign a JOIN d05_assign b
+                   ON a.label = b.label AND a.cluster = b.cluster AND a.vec_id < b.vec_id),
         p AS (SELECT ida, idb,
                 dot_product(na.v, nb.v) / (na.nrm * nb.nrm) AS cos
               FROM cand JOIN d05_n na ON cand.ida = na.vec_id
                         JOIN d05_n nb ON cand.idb = nb.vec_id)
         SELECT ida AS vec_a, idb AS vec_b, cos FROM p WHERE cos >= 0.4""")
     },
-    Some("""
-      WITH e AS (SELECT vec_id, label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, label, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
-      c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
-            WHERE vec_id % 50 = 7 AND vec_id < 3200),
-      sc AS (SELECT t.vec_id, t.label, cid,
-               row_number() OVER (PARTITION BY t.vec_id
-                                  ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                                    list_transform(list_zip(t.v, cv), s -> s[1] * s[2])),
-                                    (acc, z) -> acc + z) / (t.nrm * cn) DESC,
-                                           cid) AS rn
-             FROM n t CROSS JOIN c),
-      assign AS (SELECT vec_id, label, cid FROM sc WHERE rn <= 3),
+    Some(sql"""
+      ${oCorpus(Seq("label"))},
+      ${oLabelAssign(ivfSeeds, "rn <= 3")},
       cand AS (SELECT DISTINCT a.vec_id AS ida, b.vec_id AS idb
                FROM assign a JOIN assign b
                  ON a.label = b.label AND a.cid = b.cid AND a.vec_id < b.vec_id),
       p AS (SELECT ida, idb,
-              list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(list_zip(na.v, nb.v), s -> s[1] * s[2])),
-                (acc, z) -> acc + z) / (na.nrm * nb.nrm) AS cos
+              ${oDot("na.v", "nb.v")} / (na.nrm * nb.nrm) AS cos
             FROM cand JOIN n na ON cand.ida = na.vec_id
                       JOIN n nb ON cand.idb = nb.vec_id)
       SELECT ida AS vec_a, idb AS vec_b, cos FROM p WHERE cos >= 0.4"""))
+
+  /** DuckDB label-blocked assignment (d05, d16) over [[oCorpus]]`(label)`:
+    * centroids `c` from the `seeds` rows and `assign` (vec_id, label,
+    * cid), the rows whose rank by cosine DESC, cid passes `rank`. */
+  private def oLabelAssign(seeds: String, rank: String): String =
+    sql"""c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
+         |      WHERE $seeds),
+         |sc AS (SELECT t.vec_id, t.label, cid,
+         |         row_number() OVER (PARTITION BY t.vec_id
+         |                            ORDER BY ${oDot("t.v", "cv")} / (t.nrm * cn) DESC,
+         |                                     cid) AS rn
+         |       FROM n t CROSS JOIN c),
+         |assign AS (SELECT vec_id, label, cid FROM sc WHERE $rank)"""
 
   /** Semantic-dedup centroid count, shared by engine SQL and oracle
     * SQL. Work per corpus is N·k (assignment, row-wise — see the
@@ -587,6 +586,18 @@ object DedupOps {
   private[graft] val semSeedPred =
     s"vec_id % 50 = 7 AND vec_id < ${50L * semCentroids}"
 
+  /** The shared coarse-cluster assignment frame (vec_id, label, cid):
+    * d16's row-wise `nearest_centroid` pass over the collected centroid
+    * array, memoized under one staged key so d16, s15, and any capstone
+    * composing them compute it ONCE per (session, dir). */
+  private[graft] def clusterAssign(s: SparkSession, d: String): DataFrame = {
+    normEmbeddings(s, d).createOrReplaceTempView("d16_n")
+    staged("d16_assign", d) {
+      s.sql(s"""SELECT vec_id, label, nc.cid AS cid FROM (${nearestSql(
+        "d16_n", seedCents("d16_n", semSeedPred), "t.vec_id, t.label")})""")
+    }
+  }
+
   /** Semantic deduplication — the embedding-space analogue of d01's
     * keep-first: k-means-style coarse clusters bound the pairwise work,
     * and within each (label, cluster) cell a vector is PRUNED when a
@@ -600,30 +611,10 @@ object DedupOps {
     * of N), so assignment is one broadcast pass; the only quadratic term
     * is per-cluster and the centroid count is the dial that bounds it.
     * The prune join ships only (vec_id) pairs — metadata-width. */
-  /** The shared coarse-cluster assignment frame (vec_id, label, cid):
-    * d16's row-wise `nearest_centroid` pass over the collected centroid
-    * array, memoized under one staged key so d16, s15, and any capstone
-    * composing them compute it ONCE per (session, dir). */
-  private[graft] def clusterAssign(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    SimilarityOps.normEmbeddings(s, d).createOrReplaceTempView("d16_n")
-    staged("d16_assign", d) {
-      s.sql(s"""
-        SELECT /*+ BROADCAST(cs) */ t.vec_id, t.label,
-               nearest_centroid(t.v, t.nrm, cs.cents).cid AS cid
-        FROM d16_n t CROSS JOIN (
-          SELECT collect_list(named_struct('cid', cid, 'cv', cv,
-                   'cn', cn)) AS cents
-          FROM (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM d16_n
-                WHERE $semSeedPred)
-        ) cs""")
-    }
-  }
-
   val d16 = QueryDef(
     "d16_semantic_dedup",
     (s, d) => {
-      SimilarityOps.normEmbeddings(s, d).createOrReplaceTempView("d16_n")
+      normEmbeddings(s, d).createOrReplaceTempView("d16_n")
       // Assignment is ROW-WISE through the native nearest_centroid
       // expression over the collected centroid array (one broadcast row):
       // the window spelling explodes each vector into k scored rows and
@@ -658,33 +649,16 @@ object DedupOps {
           WHERE dot_product(na.v, nb.v) / (na.nrm * nb.nrm) >= 0.3
         ) p ON s.vec_id = p.vec_id""")
     },
-    Some(s"""
-      WITH e AS (SELECT vec_id, label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, label, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
-      c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
-            WHERE $semSeedPred),
-      sc AS (SELECT t.vec_id, t.label, cid,
-               row_number() OVER (PARTITION BY t.vec_id
-                                  ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                                    list_transform(list_zip(t.v, cv), s -> s[1] * s[2])),
-                                    (acc, z) -> acc + z) / (t.nrm * cn) DESC,
-                                           cid) AS rn
-             FROM n t CROSS JOIN c),
-      assign AS (SELECT vec_id, label, cid FROM sc WHERE rn = 1),
+    Some(sql"""
+      ${oCorpus(Seq("label"))},
+      ${oLabelAssign(semSeedPred, "rn = 1")},
       pruned AS (SELECT DISTINCT b.vec_id
                  FROM assign a JOIN assign b
                    ON a.label = b.label AND a.cid = b.cid
                   AND a.vec_id < b.vec_id
                  JOIN n na ON a.vec_id = na.vec_id
                  JOIN n nb ON b.vec_id = nb.vec_id
-                 WHERE list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                   list_transform(list_zip(na.v, nb.v), s -> s[1] * s[2])),
-                   (acc, z) -> acc + z) / (na.nrm * nb.nrm) >= 0.3)
+                 WHERE ${oDot("na.v", "nb.v")} / (na.nrm * nb.nrm) >= 0.3)
       SELECT s.vec_id, s.label, CAST(s.cid AS BIGINT) AS cluster,
              p.vec_id IS NULL AS is_kept
       FROM assign s LEFT JOIN pruned p ON s.vec_id = p.vec_id"""))
@@ -921,38 +895,23 @@ object DedupOps {
   val d17 = QueryDef(
     "d17_semantic_decontam",
     (s, d) => {
-      SimilarityOps.normEmbeddings(s, d).createOrReplaceTempView("d17_n")
+      normEmbeddings(s, d).createOrReplaceTempView("d17_n")
       s.sql(s"""
         SELECT vec_id, label, nc.cid AS eval_id,
                CAST(floor(nc.cos * CAST(1000000 AS DOUBLE)) AS BIGINT) AS cos6,
                nc.cos >= $contamThreshold AS is_contaminated
-        FROM (SELECT /*+ BROADCAST(cs) */ t.vec_id, t.label,
-                nearest_centroid(t.v, t.nrm, cs.cents) AS nc
-              FROM d17_n t CROSS JOIN (
-                SELECT collect_list(named_struct('cid', vec_id, 'cv', v,
-                         'cn', nrm)) AS cents
-                FROM d17_n WHERE ${evalSetPred("vec_id")}) cs
-              WHERE NOT ${evalSetPred("t.vec_id")})
+        FROM (${nearestSql(s"(SELECT * FROM d17_n WHERE NOT ${evalSetPred("vec_id")})",
+          seedCents("d17_n", evalSetPred("vec_id")), "t.vec_id, t.label")})
         WHERE nc IS NOT NULL""")
     },
-    Some(s"""
-      WITH e AS (SELECT vec_id, label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, label, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
+    Some(sql"""
+      ${oCorpus(Seq("label"))},
       ev AS (SELECT vec_id AS eid, v AS evv, nrm AS evn FROM n
              WHERE ${evalSetPred("vec_id")}),
       sc AS (SELECT t.vec_id, t.label, eid,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(t.v, evv), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (t.nrm * evn) AS cos,
+               ${oDot("t.v", "evv")} / (t.nrm * evn) AS cos,
                row_number() OVER (PARTITION BY t.vec_id
-                 ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                   list_transform(list_zip(t.v, evv), s -> s[1] * s[2])),
-                   (acc, z) -> acc + z) / (t.nrm * evn) DESC, eid) AS rn
+                 ORDER BY ${oDot("t.v", "evv")} / (t.nrm * evn) DESC, eid) AS rn
              FROM n t CROSS JOIN ev WHERE NOT ${evalSetPred("t.vec_id")})
       SELECT vec_id, label, eid AS eval_id,
              CAST(floor(cos * 1000000) AS BIGINT) AS cos6,
@@ -962,6 +921,233 @@ object DedupOps {
   /** k-NN graph out-degree: a retrieval/clustering constant, never a
     * function of N. */
   private[graft] val knnGraphK = 5
+
+  /** The k-NN graph's quantizer, a pure function of corpus size N (the
+    * K∝N rule). Corpora with N ≥ 50 000 vectors feed the probe/member
+    * frames from a TRAINED quantizer (s06's Lloyd loop via
+    * [[SimilarityOps.s06CentsWith]]) at K = max(64, ⌈N / 125⌉) instead of
+    * s03's pinned |C| ≤ 64 sample. At fixed |C| the candidate load is
+    * N²·P/|C| — quadratic, as the committed 16× curve showed (4× data →
+    * 12.8×/16× time); with K∝N the expected cell size N/K = 125 is
+    * CONSTANT, so candidates are N·P·E[cell] — linear (measured: 64×
+    * salted 35.4 s trained vs 191.7 s fixed, growth 1.8× vs 8.8× per 4×
+    * data).
+    *
+    * Below the threshold the result is None: s03's sampled quantizer.
+    * The threshold sits above every gate SF (sf0.1 = 2 000 vectors), so
+    * gate rows stay bit-for-bit hash-identical to the DuckDB oracle — the
+    * trained path is spec-gated instead (KnnGraphSpec: graph validity +
+    * measured recall floor), because an oracle cannot run Lloyd. Below
+    * the threshold the fixed path is also the FASTER one (training cost
+    * dominates at small N); above it the quadratic candidate load
+    * dominates everything — 16× salted (80 k vectors) already crosses
+    * (19.9 s trained vs 21.7 s fixed). History: SCALE.md "Round 14:
+    * s15/d24 at the trained K∝N quantizer". */
+  private[graft] def knnQuantizerFor(n: Long): Option[Int] =
+    if (n < 50000L) None
+    else Some(math.max(64L, (n + 124L) / 125L).toInt)
+
+  /** Per-dir memoized embeddings row count: s15, d24, d27 and d28 all
+    * resolve the quantizer, and the trained path sizes its sample from
+    * the same count. Data dirs are immutable within a JVM run — test
+    * fixtures and scaled dirs are written before any session touches
+    * them. */
+  private val embCountMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private[graft] def embeddingsCount(s: SparkSession, d: String): Long =
+    embCountMemo.computeIfAbsent(d,
+      _ => java.lang.Long.valueOf(table(s, d, "embeddings").count())).longValue()
+
+  /** Test-visible diagnostic: which assignment stage the most recent
+    * [[s15KnnFrameWith]] invocation CHOSE — `s15_hassign_*` hierarchical
+    * two-level, `s15_hassignf_*` hierarchical-trained/flat-assigned (the
+    * spec seam), `s15_tassign_*` flat trained, `s03` fixed sampled.
+    * KnnGraphSpec asserts that the path it believes it exercises actually
+    * ENGAGED, so the two-level equality test cannot pass vacuously through
+    * the flat fallback. Diagnostic only — no engine behavior reads it. */
+  private[graft] object KnnDiag { @volatile var lastAssignKey: String = "" }
+
+  /** The staged N·k k-NN frame (src, nb, cos, rn) behind s15 and d24's
+    * semantic graph, at the quantizer [[knnQuantizerFor]] picks; every
+    * consumer self-joins it. Registers the `s15_knn` temp view. */
+  private[graft] def s15KnnFrame(s: SparkSession, d: String): DataFrame =
+    s15KnnFrameWith(s, d, knnQuantizerFor(embeddingsCount(s, d)))
+
+  /** Hierarchical two-stage Lloyd training — the N^1.5 respelling of the
+    * K∝N quantizer. Sampled flat training cuts the two Lloyd passes from
+    * N·K to (N/stride)·K folds, but with stride = N/20K that is still
+    * (20K)·K — quadratic in K, and under the auto rule K ∝ N. This trains
+    * in two stages, both distributed:
+    *
+    *  1. G ≈ ⌈√K⌉ SUPERCENTROIDS via the existing [[SimilarityOps
+    *     .s06CentsWith]] sampled Lloyd (strideG = N/20G — ~20 sample
+    *     points per supercell; cost ~20G·G·d = 20K·d per round, trivial).
+    *  2. The stride sample (~20K rows) is assigned once to its nearest
+    *     supercell (broadcast, row-wise, zero shuffle), then each
+    *     supercell trains its OWN sub-centroids on its OWN members —
+    *     all supercells in one distributed job per Lloyd round: the
+    *     current per-group centroid lists broadcast as G member arrays
+    *     (K structs total, ~K·d doubles), each sample row folds only its
+    *     group's K/G entries. Per round: (20K)·(K/G)·d ≈ 20K^1.5·d —
+    *     the quadratic is gone.
+    *
+    * Seeds are PROPORTIONAL and deterministic: supercell g with c_g
+    * sample members gets max(1, round(K·c_g/Σc)) seeds, chosen as the
+    * first quota members in xxhash64(vec_id) order (a deterministic
+    * pseudo-random spread through the member list); cid = seed vec_id,
+    * globally unique. Sub-cell sizes therefore track data density the
+    * same way flat K∝N training does. Mean updates are the exact
+    * [[SimilarityOps.meanUpdate]], so training is bit-reproducible across
+    * runs (spec-pinned); it is NOT bit-equal to flat training — the
+    * trained path is spec-gated, not oracle-gated, and KnnGraphSpec
+    * measures its recall.
+    *
+    * The supercell model is a DISTRIBUTED training output (G rows) and
+    * the grouping artifact (gid per cid) falls out of stage 2 — nothing
+    * K-sized ever lands on the driver (SCALE.md has the 64× audit
+    * against flat training).
+    *
+    * Returns (supercentroids (gid, gcv), sub-centroids (gid, cid, cv)) —
+    * both staged; the second is checkpointed per Lloyd round exactly
+    * like s06CentsWith. */
+  private[graft] def hierCents(s: SparkSession, d: String, k: Int, stride: Int)
+      : (DataFrame, DataFrame) = {
+    val g = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
+    val n = embeddingsCount(s, d)
+    val strideG = math.max(1L, n / (20L * g)).toInt
+    val sup = SimilarityOps
+      .s06CentsWith(s, d, g, s"s15_hsup_${k}_g${g}_s$strideG", strideG)
+      .selectExpr("cid AS gid", "cv AS gcv")
+    val cents = staged(s"s15_hc_${k}_s$stride", d) {
+      sup.createOrReplaceTempView("s15_hsup")
+      s.sql(s"SELECT vec_id, v, nrm FROM s06_n WHERE vec_id % $stride = 0")
+        .createOrReplaceTempView("s15_htrain")
+      // one broadcast pass: sample row → nearest supercell. Checkpointed:
+      // the seeding window and both Lloyd rounds re-read it.
+      val asg = roundCheckpoint(s.sql(s"""
+        SELECT vec_id, v, nrm, nc.cid AS gid FROM (${nearestSql("s15_htrain",
+          s"SELECT ${centsAgg("gid", "gcv")} AS cents FROM s15_hsup", "t.vec_id, t.v, t.nrm")})"""))
+      asg.createOrReplaceTempView("s15_hasg")
+      // proportional deterministic seeds (sample-sized window, one
+      // sample-row shuffle — ~20K rows at any corpus size)
+      var cur = roundCheckpoint(s.sql(s"""
+        WITH cnt AS (SELECT gid, count(*) AS c FROM s15_hasg GROUP BY gid),
+        tot AS (SELECT sum(c) AS t FROM cnt),
+        quota AS (SELECT gid, greatest(CAST(1 AS BIGINT),
+                    CAST(round(CAST($k AS DOUBLE) * c / t) AS BIGINT)) AS q
+                  FROM cnt CROSS JOIN tot),
+        rk AS (SELECT gid, vec_id, v,
+                 row_number() OVER (PARTITION BY gid
+                   ORDER BY xxhash64(vec_id), vec_id) AS rn
+               FROM s15_hasg)
+        SELECT rk.gid, rk.vec_id AS cid, rk.v AS cv
+        FROM rk JOIN quota ON quota.gid = rk.gid WHERE rk.rn <= quota.q"""))
+      for (_ <- 1 to 2) {
+        cur.createOrReplaceTempView("s15_hc")
+        val next = roundCheckpoint(meanUpdate(s, s"""
+          SELECT /*+ BROADCAST(grp) */ t.gid, nearest_centroid(t.v, t.nrm, mem).cid AS cid, t.v
+          FROM s15_hasg t JOIN (SELECT gid, ${centsAgg()} AS mem FROM s15_hc GROUP BY gid) grp
+            ON grp.gid = t.gid""", keys = "gid, "))
+        releaseCheckpointBlocks(cur, blocking = false)
+        cur = next
+      }
+      releaseCheckpointBlocks(asg, blocking = false)
+      cur
+    }
+    (sup, cents)
+  }
+
+  /** [[s15KnnFrame]] at an explicit quantizer choice (None = s03's
+    * sampled statics; Some(k) = trained centroids at K=k). Both assign
+    * through [[SimilarityOps.probeAssign]] and search through
+    * [[SimilarityOps.ivfKnn]]; they differ only in where the centroids
+    * come from. Staged keys carry the variant so two choices never share
+    * a cache. `twoLevelK` and `flatAssign` are test-only seams: specs
+    * lower `twoLevelK` to engage the hierarchical path on a gate corpus
+    * (or raise it past K for the flat trained path), and `flatAssign`
+    * keeps hierarchical training but assigns FLAT over all K
+    * sub-centroids — the spec seam that proves two-level assignment
+    * exact when top-2 probing covers every group. */
+  private[graft] def s15KnnFrameWith(s: SparkSession, d: String,
+      trainedK: Option[Int], twoLevelK: Int = 1024,
+      flatAssign: Boolean = false): DataFrame = {
+    val P = ivfProbes
+    val (assignV, nView, stageKey) = trainedK match {
+      case None =>
+        s03Statics(s, d)
+        KnnDiag.lastAssignKey = "s03"
+        ("s03_assign", "s03_n", "s15_knn")
+      case Some(k) =>
+        // Training rides the vec_id%stride SAMPLE (~20 points per
+        // expected cell — the two Lloyd passes drop from N·K to (N/6)·K
+        // at E[cell]=125). At K ≥ twoLevelK training is hierarchical
+        // ([[hierCents]] — G≈√K supercells first, then per-supercell
+        // sub-centroids, N^1.5 total, fully distributed) and assignment
+        // goes TWO-LEVEL: nearest supercell over the G supercentroids,
+        // then nearest centroid within the top-2 probed supercells —
+        // per-row cost falls from K·d to ~(G + 2·K/G)·d ≈ 3√K·d (~30× at
+        // K=10240), composed ENTIRELY from the existing expressions and
+        // two broadcast joins (zero new shuffles). Cell assignment
+        // becomes approximate at the supercell level (a vector's true
+        // nearest centroid can sit in an unprobed group) — the standard
+        // IVF trade, spec-gated like the rest of the trained path;
+        // KnnGraphSpec measures it, SCALE.md has the 64× edge overlap.
+        val n = embeddingsCount(s, d)
+        val stride = math.max(1L, n / (20L * k)).toInt
+        val assignKey =
+          if (k >= twoLevelK) {
+            val (sup, cents) = hierCents(s, d, k, stride)
+            val usedG = cents.select("gid").distinct().count()
+            if (usedG < 2 || flatAssign) {
+              cents.selectExpr("cid", "cv").createOrReplaceTempView("s15_tc")
+              s"s15_hassignf_${k}_s$stride"
+            } else {
+              cents.createOrReplaceTempView("s15_grpraw")
+              sup.join(cents.select("gid").distinct(), "gid")
+                .selectExpr("gid", "gcv").createOrReplaceTempView("s15_supraw")
+              s"s15_hassign_${k}_s$stride"
+            }
+          } else {
+            SimilarityOps.s06CentsWith(s, d, k, s"s15_tc_${k}_s$stride", stride)
+              .createOrReplaceTempView("s15_tc")
+            s"s15_tassign_${k}_s$stride"
+          }
+        KnnDiag.lastAssignKey = assignKey
+        staged(assignKey, d) {
+          if (assignKey.startsWith("s15_hassign_")) s.sql(s"""
+              WITH sup AS (SELECT ${centsAgg("gid", "gcv")} AS sups FROM s15_supraw),
+              grp AS (SELECT gid, ${centsAgg()} AS mem FROM s15_grpraw GROUP BY gid),
+              a AS (SELECT /*+ BROADCAST(sup) */ t.vec_id, t.v, t.nrm,
+                      nearest_centroids(t.v, t.nrm, sups, 2) AS gs
+                    FROM s06_n t CROSS JOIN sup),
+              j AS (SELECT /*+ BROADCAST(m1), BROADCAST(m2) */
+                      a.vec_id, a.v, a.nrm, m1.mem AS mem1, m2.mem AS mem2
+                    FROM a JOIN grp m1 ON m1.gid = a.gs[0].cid
+                           JOIN grp m2 ON m2.gid = a.gs[1].cid),
+              sc AS (SELECT vec_id,
+                       slice(array_sort(
+                         concat(nearest_centroids(v, nrm, mem1, $P),
+                                nearest_centroids(v, nrm, mem2, $P)),
+                         (l, r) -> CASE
+                           WHEN isnan(l.cos) AND NOT isnan(r.cos) THEN -1
+                           WHEN isnan(r.cos) AND NOT isnan(l.cos) THEN 1
+                           WHEN l.cos > r.cos THEN -1
+                           WHEN l.cos < r.cos THEN 1
+                           WHEN l.cid < r.cid THEN -1
+                           WHEN l.cid > r.cid THEN 1 ELSE 0 END),
+                         1, $P) AS nc
+                     FROM j)
+              SELECT vec_id, pr.col.cid AS cluster,
+                     CAST(pr.pos + 1 AS INT) AS rn
+              FROM sc LATERAL VIEW posexplode(nc) pr""")
+          else probeAssign(s, "s06_n", trainedCents("s15_tc"), P)
+        }.createOrReplaceTempView("s15_tassign")
+        ("s15_tassign", "s06_n", s"s15_knn@$assignKey")
+    }
+    val knn = staged(stageKey, d) { ivfKnn(s, assignV, nView, P, knnGraphK) }
+    knn.createOrReplaceTempView("s15_knn")
+    knn
+  }
 
   /** Approximate k-NN GRAPH construction — the all-nodes adjacency
     * artifact graph-based curation consumes (SemDeDup-style neighborhood
@@ -986,306 +1172,6 @@ object DedupOps {
     * rank-filtered window (WindowGroupLimit partial top-k); the k-NN
     * frame is metadata-width (N·k rows) and staged, since the mutuality
     * readout self-joins it. */
-  /** The staged N·k k-NN frame behind s15 (and d24's semantic graph):
-    * every consumer self-joins it. Registers the `s15_knn` temp view.
-    *
-    * Scoring rides the cluster join DIRECTLY: probes and members carry
-    * their (v, nrm) into the equi-join and the cosine is projected in
-    * its output, inside whole-stage codegen. The first spelling built a
-    * bare (src, nb) candidate list, DISTINCT'ed it, then re-joined the
-    * vector frame TWICE to score — at 64× that was one ~10⁹-row
-    * hash-distinct plus two ~10⁹-row joins whose intermediate carried a
-    * 64-dim array per row (~0.5 TB of exchange), and the leg was killed
-    * unfinished after 20 minutes. The DISTINCT was pure waste: members
-    * hold rn=1 rows (each vector in exactly ONE cluster) and probes hold
-    * distinct clusters per source, so (src, nb) pairs are unique by
-    * construction. Same candidate set, same cosines, one join. */
-  /** The k-NN graph's quantizer, a pure function of corpus size N —
-    * the K∝N rule (round 13, the default since round 15). Corpora with
-    * N ≥ 50 000 vectors feed the probe/member frames from a TRAINED
-    * quantizer (s06's Lloyd loop via [[SimilarityOps.s06CentsWith]]) at
-    * K = max(64, ⌈N / 125⌉) instead of s03's pinned |C| ≤ 64 sample.
-    * At fixed |C| the candidate load is N²·P/|C| — the quadratic regime
-    * the committed 16× curve (4× data → 12.8×/16× time) made visible;
-    * with K∝N the expected cell size N/K = 125 (the r14 measured
-    * operating point) is CONSTANT, so candidates are N·P·E[cell] —
-    * linear (measured: 64× salted 35.4 s trained vs 191.7 s fixed,
-    * growth 1.8× vs 8.8× per 4× data).
-    *
-    * Below the threshold the result is None: s03's sampled quantizer.
-    * The threshold sits above every gate SF (sf0.1 = 2 000 vectors), so
-    * gate rows stay bit-for-bit hash-identical to the DuckDB oracle — the
-    * trained path is spec-gated instead (KnnGraphSpec: graph validity +
-    * measured recall floor), because an oracle cannot run Lloyd. Below
-    * the threshold the fixed path is also the FASTER one (training cost
-    * dominates at small N); above it the quadratic candidate load
-    * dominates everything — 16× salted (80 k vectors) already crosses
-    * (19.9 s trained vs 21.7 s fixed). */
-  private[graft] def knnQuantizerFor(n: Long): Option[Int] =
-    if (n < 50000L) None
-    else Some(math.max(64L, (n + 124L) / 125L).toInt)
-
-  /** Per-dir memoized embeddings row count (round-15 advice: the
-    * resolve + trained-assignment pair counted the corpus twice per
-    * invocation, and s15/d24/d27/d28 all re-enter the trained path).
-    * Data dirs are immutable within a JVM run — test fixtures and
-    * scaled dirs are written before any session touches them. */
-  private val embCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def embeddingsCount(
-      s: org.apache.spark.sql.SparkSession, d: String): Long =
-    embCountMemo.computeIfAbsent(d,
-      _ => java.lang.Long.valueOf(table(s, d, "embeddings").count())).longValue()
-
-  /** Test-visible diagnostic: which assignment stage the most recent
-    * [[s15KnnFrameWith]] invocation CHOSE — `s15_hassign_*` hierarchical
-    * two-level, `s15_hassignf_*` hierarchical-trained/flat-assigned (the
-    * spec seam), `s15_tassign_*` flat trained, `s03` fixed sampled.
-    * KnnGraphSpec asserts the path it believes it exercises actually
-    * ENGAGED (round-15 advice: the two-level equality test could pass
-    * vacuously through the silent flat fallback). Diagnostic only — no
-    * engine behavior reads it. */
-  private[graft] object KnnDiag { @volatile var lastAssignKey: String = "" }
-
-  private[graft] def s15KnnFrame(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    s15KnnFrameWith(s, d, knnQuantizerFor(embeddingsCount(s, d)))
-
-  /** Hierarchical two-stage Lloyd training — the N^1.5 respelling of the
-    * K∝N quantizer (round-15 verdict item 1, the residual constant behind
-    * s15's 6.6×/4× growth at 256×). Round 15's SAMPLED flat training cut
-    * the two Lloyd passes from N·K to (N/stride)·K folds, but with
-    * stride = N/20K that is still (20K)·K — quadratic in K, and under
-    * the auto rule K ∝ N. This trains in two stages, both distributed:
-    *
-    *  1. G ≈ ⌈√K⌉ SUPERCENTROIDS via the existing [[SimilarityOps
-    *     .s06CentsWith]] sampled Lloyd (strideG = N/20G — ~20 sample
-    *     points per supercell; cost ~20G·G·d = 20K·d per round, trivial).
-    *  2. The stride sample (~20K rows) is assigned once to its nearest
-    *     supercell (broadcast, row-wise, zero shuffle), then each
-    *     supercell trains its OWN sub-centroids on its OWN members —
-    *     all supercells in one distributed job per Lloyd round: the
-    *     current per-group centroid lists broadcast as G member arrays
-    *     (K structs total, ~K·d doubles), each sample row folds only its
-    *     group's K/G entries. Per round: (20K)·(K/G)·d ≈ 20K^1.5·d —
-    *     the quadratic is gone.
-    *
-    * Seeds are PROPORTIONAL and deterministic: supercell g with c_g
-    * sample members gets max(1, round(K·c_g/Σc)) seeds, chosen as the
-    * first quota members in xxhash64(vec_id) order (a deterministic
-    * pseudo-random spread through the member list); cid = seed vec_id,
-    * globally unique. Sub-cell sizes therefore track data density the
-    * same way flat K∝N training does. Mean updates are the exact
-    * integer-scaled spelling sRound uses, so training is bit-reproducible
-    * across runs (spec-pinned); it is NOT bit-equal to flat training —
-    * the trained path has been spec-gated (not oracle-gated) since
-    * round 13, and KnnGraphSpec measures its recall.
-    *
-    * The supercell model is a DISTRIBUTED training output (G rows) and
-    * the grouping artifact (gid per cid) falls out of stage 2 — nothing
-    * K-sized ever lands on the driver (SCALE.md has the 64× audit
-    * against flat training).
-    *
-    * Returns (supercentroids (gid, gcv), sub-centroids (gid, cid, cv)) —
-    * both staged; the second is checkpointed per Lloyd round exactly
-    * like s06CentsWith. */
-  private[graft] def hierCents(
-      s: org.apache.spark.sql.SparkSession, d: String, k: Int, stride: Int)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val g = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val n = embeddingsCount(s, d)
-    val strideG = math.max(1L, n / (20L * g)).toInt
-    val sup = SimilarityOps
-      .s06CentsWith(s, d, g, s"s15_hsup_${k}_g${g}_s$strideG", strideG)
-      .selectExpr("cid AS gid", "cv AS gcv")
-    val cents = staged(s"s15_hc_${k}_s$stride", d) {
-      sup.createOrReplaceTempView("s15_hsup")
-      s.sql(s"SELECT vec_id, v, nrm FROM s06_n WHERE vec_id % $stride = 0")
-        .createOrReplaceTempView("s15_htrain")
-      // one broadcast pass: sample row → nearest supercell. Checkpointed:
-      // the seeding window and both Lloyd rounds re-read it.
-      val asg = roundCheckpoint(s.sql("""
-        WITH sup AS (SELECT collect_list(named_struct('cid', gid, 'cv', gcv,
-                       'cn', sqrt(dot_product(gcv, gcv)))) AS sups
-                     FROM s15_hsup)
-        SELECT /*+ BROADCAST(sup) */ t.vec_id, t.v, t.nrm,
-               nearest_centroid(t.v, t.nrm, sups).cid AS gid
-        FROM s15_htrain t CROSS JOIN sup"""))
-      asg.createOrReplaceTempView("s15_hasg")
-      // proportional deterministic seeds (sample-sized window, one
-      // sample-row shuffle — ~20K rows at any corpus size)
-      var cur = roundCheckpoint(s.sql(s"""
-        WITH cnt AS (SELECT gid, count(*) AS c FROM s15_hasg GROUP BY gid),
-        tot AS (SELECT sum(c) AS t FROM cnt),
-        quota AS (SELECT gid, greatest(CAST(1 AS BIGINT),
-                    CAST(round(CAST($k AS DOUBLE) * c / t) AS BIGINT)) AS q
-                  FROM cnt CROSS JOIN tot),
-        rk AS (SELECT gid, vec_id, v,
-                 row_number() OVER (PARTITION BY gid
-                   ORDER BY xxhash64(vec_id), vec_id) AS rn
-               FROM s15_hasg)
-        SELECT rk.gid, rk.vec_id AS cid, rk.v AS cv
-        FROM rk JOIN quota ON quota.gid = rk.gid WHERE rk.rn <= quota.q"""))
-      for (_ <- 1 to 2) {
-        cur.createOrReplaceTempView("s15_hc")
-        val next = roundCheckpoint(s.sql("""
-          WITH grp AS (SELECT gid, collect_list(named_struct('cid', cid,
-                         'cv', cv, 'cn', sqrt(dot_product(cv, cv)))) AS mem
-                       FROM s15_hc GROUP BY gid),
-          a AS (SELECT /*+ BROADCAST(grp) */ t.gid, t.vec_id,
-                  nearest_centroid(t.v, t.nrm, mem).cid AS cid, t.v
-                FROM s15_hasg t JOIN grp ON grp.gid = t.gid),
-          e AS (SELECT gid, cid, CAST(dim AS BIGINT) AS dim,
-                  CAST(floor(xv * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS xi
-                FROM a LATERAL VIEW posexplode(v) t AS dim, xv),
-          m AS (SELECT gid, cid, dim,
-                  CAST(sum(xi) AS DOUBLE)
-                    / CAST(count(*) * 1000000000000 AS DOUBLE) AS mc
-                FROM e GROUP BY gid, cid, dim)
-          SELECT gid, cid,
-                 transform(sort_array(collect_list(struct(dim, mc))), x -> x.mc) AS cv
-          FROM m GROUP BY gid, cid"""))
-        releaseCheckpointBlocks(cur, blocking = false)
-        cur = next
-      }
-      releaseCheckpointBlocks(asg, blocking = false)
-      cur
-    }
-    (sup, cents)
-  }
-
-  /** [[s15KnnFrame]] at an explicit quantizer choice (None = s03's
-    * sampled statics; Some(k) = trained centroids at K=k). Staged keys
-    * carry the variant so two choices never share a cache.
-    * `twoLevelK` and `flatAssign` are test-only seams: specs lower
-    * `twoLevelK` to engage the hierarchical path on a gate corpus (or
-    * raise it past K for the flat trained path), and `flatAssign` keeps
-    * hierarchical training but assigns FLAT over all K sub-centroids —
-    * the spec seam that proves two-level assignment exact when top-2
-    * probing covers every group. */
-  private[graft] def s15KnnFrameWith(
-      s: org.apache.spark.sql.SparkSession, d: String,
-      trainedK: Option[Int], twoLevelK: Int = 1024,
-      flatAssign: Boolean = false): org.apache.spark.sql.DataFrame = {
-    val (assignV, nView, stageKey) = trainedK match {
-      case None =>
-        SimilarityOps.s03Statics(s, d)
-        KnnDiag.lastAssignKey = "s03"
-        ("s03_assign", "s03_n", "s15_knn")
-      case Some(k) =>
-        // trained coarse quantizer at an explicit K. Assignment is the
-        // ROW-WISE top-P expression, not the CROSS JOIN + window: at the
-        // K∝N operating point the window spelling explodes N·K scored
-        // rows into one exchange+sort (64× at K=2560 = an 819 M-row
-        // shuffle for a per-row argmax-P) — `nearest_centroids` keeps it
-        // a zero-shuffle scan pass over one ~K·dims broadcast row.
-        //
-        // Training rides the vec_id%stride SAMPLE (~20 points per
-        // expected cell — the two Lloyd passes drop from N·K to (N/6)·K
-        // at E[cell]=125). At K ≥ twoLevelK training is hierarchical
-        // ([[hierCents]] — G≈√K supercells first, then per-supercell
-        // sub-centroids, N^1.5 total, fully distributed) and assignment
-        // goes TWO-LEVEL: nearest supercell over the G supercentroids,
-        // then nearest centroid within the top-2 probed supercells —
-        // per-row cost falls from K·d to ~(G + 2·K/G)·d ≈ 3√K·d (~30× at
-        // K=10240), composed ENTIRELY from the existing expressions and
-        // two broadcast joins (zero new shuffles). Cell assignment
-        // becomes approximate at the supercell level (a vector's true
-        // nearest centroid can sit in an unprobed group) — the standard
-        // IVF trade, spec-gated like the rest of the trained path;
-        // KnnGraphSpec measures it, SCALE.md has the 64× edge overlap.
-        val n = embeddingsCount(s, d)
-        val stride = math.max(1L, n / (20L * k)).toInt
-        val P = SimilarityOps.ivfProbes
-        val assignKey =
-          if (k >= twoLevelK) {
-            val (sup, cents) = hierCents(s, d, k, stride)
-            val usedG = cents.select("gid").distinct().count()
-            if (usedG < 2 || flatAssign) {
-              cents.selectExpr("cid", "cv").createOrReplaceTempView("s15_tc")
-              s"s15_hassignf_${k}_s$stride"
-            } else {
-              cents.createOrReplaceTempView("s15_grpraw")
-              sup.join(cents.select("gid").distinct(), "gid")
-                .selectExpr("gid", "gcv").createOrReplaceTempView("s15_supraw")
-              s"s15_hassign_${k}_s$stride"
-            }
-          } else {
-            SimilarityOps.s06CentsWith(s, d, k, s"s15_tc_${k}_s$stride", stride)
-              .createOrReplaceTempView("s15_tc")
-            s"s15_tassign_${k}_s$stride"
-          }
-        KnnDiag.lastAssignKey = assignKey
-        val twoLevelAssign = assignKey.startsWith("s15_hassign_")
-        staged(assignKey, d) {
-          if (twoLevelAssign) s.sql(s"""
-              WITH sup AS (SELECT collect_list(named_struct(
-                             'cid', gid, 'cv', gcv,
-                             'cn', sqrt(dot_product(gcv, gcv)))) AS sups
-                           FROM s15_supraw),
-              grp AS (SELECT gid, collect_list(named_struct(
-                        'cid', cid, 'cv', cv,
-                        'cn', sqrt(dot_product(cv, cv)))) AS mem
-                      FROM s15_grpraw GROUP BY gid),
-              a AS (SELECT /*+ BROADCAST(sup) */ t.vec_id, t.v, t.nrm,
-                      nearest_centroids(t.v, t.nrm, sups, 2) AS gs
-                    FROM s06_n t CROSS JOIN sup),
-              j AS (SELECT /*+ BROADCAST(m1), BROADCAST(m2) */
-                      a.vec_id, a.v, a.nrm, m1.mem AS mem1, m2.mem AS mem2
-                    FROM a JOIN grp m1 ON m1.gid = a.gs[0].cid
-                           JOIN grp m2 ON m2.gid = a.gs[1].cid),
-              sc AS (SELECT vec_id,
-                       slice(array_sort(
-                         concat(nearest_centroids(v, nrm, mem1, $P),
-                                nearest_centroids(v, nrm, mem2, $P)),
-                         (l, r) -> CASE
-                           WHEN isnan(l.cos) AND NOT isnan(r.cos) THEN -1
-                           WHEN isnan(r.cos) AND NOT isnan(l.cos) THEN 1
-                           WHEN l.cos > r.cos THEN -1
-                           WHEN l.cos < r.cos THEN 1
-                           WHEN l.cid < r.cid THEN -1
-                           WHEN l.cid > r.cid THEN 1 ELSE 0 END),
-                         1, $P) AS nc
-                     FROM j)
-              SELECT vec_id, pr.col.cid AS cluster,
-                     CAST(pr.pos + 1 AS INT) AS rn
-              FROM sc LATERAL VIEW posexplode(nc) pr""")
-            else s.sql(s"""
-              WITH cs AS (SELECT collect_list(named_struct(
-                            'cid', cid, 'cv', cv,
-                            'cn', sqrt(dot_product(cv, cv)))) AS cents
-                          FROM s15_tc),
-              a AS (SELECT /*+ BROADCAST(cs) */ t.vec_id,
-                      nearest_centroids(t.v, t.nrm, cents, $P) AS nc
-                    FROM s06_n t CROSS JOIN cs)
-              SELECT vec_id, pr.col.cid AS cluster,
-                     CAST(pr.pos + 1 AS INT) AS rn
-              FROM a LATERAL VIEW posexplode(nc) pr""")
-        }.createOrReplaceTempView("s15_tassign")
-        ("s15_tassign", "s06_n", s"s15_knn@$assignKey")
-    }
-    val knn = staged(stageKey, d) {
-      s.sql(s"""
-        WITH qp AS (SELECT a.vec_id AS src, a.cluster, n.v AS qv, n.nrm AS qn
-                    FROM $assignV a JOIN $nView n ON n.vec_id = a.vec_id
-                    WHERE a.rn <= ${SimilarityOps.ivfProbes}),
-        mem AS (SELECT a.vec_id AS nb, a.cluster, n.v, n.nrm
-                FROM $assignV a JOIN $nView n ON n.vec_id = a.vec_id
-                WHERE a.rn = 1),
-        sc AS (SELECT src, nb, dot_product(qv, v) / (qn * nrm) AS cos
-               FROM qp JOIN mem ON mem.cluster = qp.cluster
-               WHERE nb <> src),
-        r AS (SELECT src, nb, cos,
-                row_number() OVER (PARTITION BY src
-                                   ORDER BY cos DESC, nb) AS rn
-              FROM sc)
-        SELECT src, nb, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= $knnGraphK""")
-    }
-    knn.createOrReplaceTempView("s15_knn")
-    knn
-  }
-
   val s15 = QueryDef(
     "s15_knn_graph",
     (s, d) => {
@@ -1303,43 +1189,11 @@ object DedupOps {
     * corpus predicate — `TRUE` is the gate oracle; d27's from-scratch
     * rebuild leg re-runs it over the tombstone survivors (the predicate
     * reaches the centroid CTE too, so the rebuild's quantizer is
-    * survivor-only, exactly like the engine's rebuild). */
-  private[graft] def s15OracleSql(pred: String): String = s"""
-      WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings WHERE $pred),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
-      c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
-            WHERE vec_id % 50 = 7 AND vec_id < 3200),
-      sc0 AS (SELECT t.vec_id, cid,
-                list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                  list_transform(list_zip(t.v, cv), s -> s[1] * s[2])),
-                  (acc, z) -> acc + z) / (t.nrm * cn) AS cos
-              FROM n t CROSS JOIN c),
-      ranked AS (SELECT vec_id, cid AS cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY cos DESC, cid) AS rn
-                 FROM sc0),
-      members AS (SELECT vec_id, cluster FROM ranked WHERE rn = 1),
-      probes AS (SELECT vec_id AS src, cluster FROM ranked
-                 WHERE rn <= ${SimilarityOps.ivfProbes}),
-      cand AS (SELECT DISTINCT p.src, m.vec_id AS nb
-               FROM probes p JOIN members m ON m.cluster = p.cluster
-               WHERE m.vec_id <> p.src),
-      sc AS (SELECT src, nb,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(q.v, t.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (q.nrm * t.nrm) AS cos
-             FROM cand JOIN n q ON q.vec_id = src
-                       JOIN n t ON t.vec_id = nb),
-      r AS (SELECT src, nb, cos,
-              row_number() OVER (PARTITION BY src
-                                 ORDER BY cos DESC, nb) AS rn
-            FROM sc),
-      k AS (SELECT src, nb, cos, CAST(rn AS BIGINT) AS rn
-            FROM r WHERE rn <= $knnGraphK)
+    * survivor-only, exactly like the engine's rebuild). The search is
+    * [[SimilarityOps.oIvfSearch]], s03's oracle with every vector a query. */
+  private[graft] def s15OracleSql(pred: String): String = sql"""
+      ${oIvfSearch("src", "nb", corpusPred = pred)},
+      k AS (${topK("src", "nb", knnGraphK)})
       SELECT k.src AS vec_id, k.nb AS neighbor_id, k.cos, k.rn,
              (m.src IS NOT NULL) AS mutual
       FROM k LEFT JOIN k m ON m.src = k.nb AND m.nb = k.src"""
@@ -1384,11 +1238,10 @@ object DedupOps {
           // mutual ⇒ the reversed row exists with the bit-identical cos
           // (the dot fold multiplies the same term pairs in the same
           // order), so the filtered list is already symmetric — and for
-          // the same reason the τ cut applies to BOTH join inputs
-          // (round 16, guide §2.3): filtering m pre-join shrinks the
-          // mutual join's build side by the τ selectivity without
-          // changing a single surviving edge (k.cos = m.cos bit-for-bit
-          // on every mutual pair).
+          // the same reason the τ cut applies to BOTH join inputs:
+          // filtering m pre-join shrinks the mutual join's build side by
+          // the τ selectivity without changing a single surviving edge
+          // (k.cos = m.cos bit-for-bit on every mutual pair).
           s.sql(s"""
             SELECT k.src AS doc_a, k.nb AS doc_b
             FROM s15_knn k JOIN s15_knn m
@@ -1432,39 +1285,19 @@ object DedupOps {
     * so the rebuild is what a fresh index build would produce). Gate
     * economics only: the repair path never builds this; `matches_full`
     * is the audit column that prices delta-vs-rebuild divergence. */
-  private[graft] def s15SurvivorKnn(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    SimilarityOps.s03Statics(s, d)
+  private[graft] def s15SurvivorKnn(s: SparkSession, d: String): DataFrame = {
+    s03Statics(s, d)
     staged("d27_rknn", d) {
-      s.sql(s"""
-        WITH sn AS (SELECT vec_id, v, nrm FROM s03_n WHERE NOT ($d27TombPred)),
-        c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM sn
-              WHERE vec_id % 50 = 7 AND vec_id < 3200),
-        sc0 AS (SELECT /*+ BROADCAST(c) */ t.vec_id, cid,
-                  row_number() OVER (PARTITION BY t.vec_id
-                    ORDER BY dot_product(t.v, cv) / (t.nrm * cn) DESC,
-                             cid) AS rn
-                FROM sn t CROSS JOIN c),
-        qp AS (SELECT a.vec_id AS src, a.cid AS cluster, n.v AS qv, n.nrm AS qn
-               FROM sc0 a JOIN sn n ON n.vec_id = a.vec_id
-               WHERE a.rn <= ${SimilarityOps.ivfProbes}),
-        mem AS (SELECT a.vec_id AS nb, a.cid AS cluster, n.v, n.nrm
-                FROM sc0 a JOIN sn n ON n.vec_id = a.vec_id
-                WHERE a.rn = 1),
-        sc AS (SELECT src, nb, dot_product(qv, v) / (qn * nrm) AS cos
-               FROM qp JOIN mem ON mem.cluster = qp.cluster
-               WHERE nb <> src),
-        r AS (SELECT src, nb, cos,
-                row_number() OVER (PARTITION BY src
-                                   ORDER BY cos DESC, nb) AS rn
-              FROM sc)
-        SELECT src, nb, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= $knnGraphK""")
+      s.sql(s"SELECT vec_id, v, nrm FROM s03_n WHERE NOT ($d27TombPred)")
+        .createOrReplaceTempView("d27_sn")
+      probeAssign(s, "d27_sn", seedCents("d27_sn", ivfSeeds), ivfProbes)
+        .createOrReplaceTempView("d27_sassign")
+      ivfKnn(s, "d27_sassign", "d27_sn", ivfProbes, knnGraphK)
     }
   }
 
-  /** d27 — deletion propagation through the SEMANTIC artifacts (round-13
-    * verdict item 6): d22/d23 repair d06/d13's lexical artifacts, but a
+  /** d27 — deletion propagation through the SEMANTIC artifacts: d22/d23
+    * repair d06/d13's lexical artifacts, but a
     * forgotten document previously SURVIVED as a stored neighbor/
     * representative in s15's k-NN graph and d24's semantic clusters.
     * Same delta-bound pattern, different edge semantics: tombstones →

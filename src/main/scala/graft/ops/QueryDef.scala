@@ -242,6 +242,24 @@ object Q {
   val sNorm = """lower(trim(regexp_replace(text, '\\s+', ' ')))"""
   val oNorm = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
 
+  /** SQL text assembly: the literal text loses its `|` margins (as with
+    * `stripMargin`), and every continuation line of an argument is
+    * indented to the column where the argument starts. Multi-line SQL
+    * fragments (the embedding oracles' dot folds, corpus and top-k CTEs)
+    * then compose at any depth into text laid out as if written by hand. */
+  private[graft] implicit class AlignedSql(private val sc: StringContext) extends AnyVal {
+    def sql(args: Any*): String = {
+      val parts = sc.parts.map(p =>
+        StringContext.processEscapes(p).replaceAll("\n[ \t]*\\|", "\n"))
+      val out = new StringBuilder(parts.head)
+      for ((a, p) <- args.zip(parts.tail)) {
+        val col = out.length - out.lastIndexOf("\n") - 1
+        out ++= a.toString.replace("\n", "\n" + " " * col) ++= p
+      }
+      out.toString
+    }
+  }
+
   /** DuckDB longhand for [[graft.functions.CharFold]]: identical fold, so
     * hash-based dedup queries stay oracle-checkable. */
   def oCharFold(e: String, seed: Int): String =

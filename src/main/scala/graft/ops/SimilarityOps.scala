@@ -1,18 +1,25 @@
 package graft.ops
 
 import Q._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Approximate-nearest-neighbor search over the `embeddings` table.
+/** Search, quantization and clustering over the `embeddings` table:
   *
-  *  - s01: brute-force cosine top-k — the correctness baseline. Query set
-  *    is a small filtered slice, so the "cross join" is |Q| × N with
-  *    broadcastable |Q| — linear in N, parallel over N's partitions.
-  *  - s02: LSH-bucketed variant — the 100 TB scale path. `lshPlanes`
-  *    deterministic hash-derived hyperplanes → 2^planes buckets, plus
-  *    Hamming-1 multi-probe on the query side; candidates come from an
-  *    equality join on the bucket id, never a cross join. Recall vs s01
-  *    is approximate BY DESIGN; the oracle replicates the same planes and
-  *    probe set, so the result is still exact-checkable.
+  *  - exact and approximate k-NN: s01 brute force, s02 multi-table LSH,
+  *    s03 IVF on a sampled quantizer, s17 IVF on a trained one, s16
+  *    filtered k-NN, s04 the LSH recall audit;
+  *  - k-means: s05 one Lloyd update, s06 the full loop, s12 incremental
+  *    IVF maintenance, s13/s14 coreset selection and its recall audit;
+  *  - compression: s07/s08 int8 codes, s09 random projection, s10 PQ.
+  *
+  * The IVF vocabulary is written once per dialect and shared with
+  * [[DedupOps]] (d05, d16, d17, s15, d24, d27): on the engine side
+  * [[probeAssign]] (row-wise top-P centroids), [[ivfKnn]] (probes ×
+  * members → top-k) and the [[centsAgg]] broadcast row; on the DuckDB
+  * side [[oCorpus]], [[oDot]]/[[oL2]], [[oRanked]] and [[oIvfSearch]];
+  * [[rankCte]]/[[topK]] are plain SQL in both. Every oracle is built from
+  * the DuckDB helpers, never derived from the engine SQL, and dots fold
+  * left to right on both engines, so results are exact-checkable.
   */
 object SimilarityOps {
 
@@ -37,7 +44,7 @@ object SimilarityOps {
     * (grid-searched at sf0.01 AND sf0.1; query-directed probing was
     * dominated by plain Hamming-1 everywhere at these distances):
     *
-    *   k=8 L=4  H1: recall@5 0.48, candidates ≈ 15% of corpus (round-5⁺)
+    *   k=8 L=4  H1: recall@5 0.48, candidates ≈ 15% of corpus
     *   k=8 L=8  H1: recall@5 0.60, 24%
     *   k=8 L=14 H1: recall@5 0.68 (min 0.60/query; 0.77 at sf0.1), 35%
     *   k=9 L=16 H1: recall@5 0.64, 25% — more index for less recall
@@ -65,8 +72,7 @@ object SimilarityOps {
     * integer arithmetic + one division by 1000.0 on both engines. */
   private def plane(gp: String) =
     s"(CAST(((($gp)*64 + j) * 2654435761) % 4294967296 % 2001 AS BIGINT) - 1000) / 1000.0"
-  private val planeS = plane(s"tbl*$lshPlanes + p")
-  private val planeO = planeS // identical integer arithmetic in both dialects
+  private val planeS = plane(s"tbl*$lshPlanes + p") // identical in both dialects
 
   /** Shared candidate-generation CTE chain (query probes → unioned,
     * deduped candidate id pairs) over the `s02_n`/`s02_idx` views. Shared
@@ -98,6 +104,162 @@ object SimilarityOps {
         SELECT vec_id, label, v, sqrt(dot_product(v, v)) AS nrm FROM e""")
     }
 
+  /** The sampled IVF quantizer's seeds: `vec_id % 50 = 7`, capped at
+    * |C| ≤ 64 by `vec_id < 3200`. K must not scale with N, or the
+    * broadcast grows without bound and the N×|C| assignment turns O(N²);
+    * at real scale the centroids come from the s06 loop at a K chosen for
+    * list size. s03, s11, s12, s15, d05 and d27's rebuild quantize with it. */
+  private[graft] val ivfSeeds = "vec_id % 50 = 7 AND vec_id < 3200"
+
+  /** k-means seeds: every 125th vec_id, capped at K = `k` (s05, s06, s13,
+    * s17 at the pinned K = 64; the k-NN graph's trained quantizer at K∝N). */
+  private[graft] def kmSeeds(k: Long = 64): String =
+    s"vec_id % 125 = 0 AND vec_id < ${125L * k}"
+
+  /** The centroid table as ONE broadcast value: the `collect_list` of
+    * (cid, cv, cn) structs that `nearest_centroid(s)` reads. `cn` defaults
+    * to the L2 norm of `cv`. */
+  private[graft] def centsAgg(cid: String = "cid", cv: String = "cv", cn: String = ""): String =
+    s"collect_list(named_struct('cid', $cid, 'cv', $cv, 'cn', " +
+      s"${if (cn.isEmpty) s"sqrt(dot_product($cv, $cv))" else cn}))"
+
+  /** One-row `cents` relation over the seed rows `pred` of a normalized
+    * corpus view. */
+  private[graft] def seedCents(view: String, pred: String): String =
+    s"SELECT ${centsAgg("vec_id", "v", "nrm")} AS cents FROM $view WHERE $pred"
+
+  /** One-row `cents` relation over a trained centroid view (cid, cv). */
+  private[graft] def trainedCents(view: String): String =
+    s"SELECT ${centsAgg()} AS cents FROM $view"
+
+  /** The corpus rows (`cols` of `corpus` aliased `t`) with `nc`, the
+    * nearest centroid of the one-row `cents` relation as struct(cid, cos):
+    * one broadcast pass over the scan, no row explosion, no shuffle. */
+  private[graft] def nearestSql(corpus: String, cents: String, cols: String = "t.vec_id"): String =
+    s"""SELECT /*+ BROADCAST(cs) */ $cols, nearest_centroid(t.v, t.nrm, cs.cents) AS nc
+        FROM $corpus t CROSS JOIN ($cents) cs"""
+
+  /** The one probe assignment: every vector of `corpus` (vec_id, v, nrm,
+    * …) against its top-`p` centroids of the one-row `cents` relation, as
+    * rows (vec_id, carry…, cluster, rn INT), rn = 1 the nearest.
+    * `nearest_centroids` selects exactly the rows of `row_number() OVER
+    * (PARTITION BY vec_id ORDER BY cos DESC, cid) <= p` (NearestCentroidSpec)
+    * without exploding N·K scored rows through a per-vec_id exchange.
+    * `carry` lists extra corpus columns, each followed by ", ". */
+  private[graft] def probeAssign(s: SparkSession, corpus: String, cents: String, p: Int,
+      carry: String = ""): DataFrame =
+    s.sql(s"""
+      SELECT vec_id, ${carry}pr.col.cid AS cluster, CAST(pr.pos + 1 AS INT) AS rn
+      FROM (SELECT /*+ BROADCAST(cs) */ t.*, nearest_centroids(t.v, t.nrm, cs.cents, $p) AS nc
+            FROM $corpus t CROSS JOIN ($cents) cs) a
+      LATERAL VIEW posexplode(nc) pr""")
+
+  /** The one IVF k-NN search over an assignment view `assign` (vec_id,
+    * cluster, rn) and its corpus view (vec_id, v, nrm): every source
+    * passing `qPred` probes its rn ≤ `p` clusters, whose members are the
+    * rn = 1 rows, and keeps its top `k` by cosine as (src, nb, cos, rn
+    * BIGINT). Probes and members carry (v, nrm) into the cluster
+    * equi-join and the cosine projects in its output. (src, nb) pairs are
+    * unique by construction (one rn = 1 row per member, distinct clusters
+    * per source), so there is no candidate DISTINCT and no re-join to
+    * score: that spelling was killed unfinished after 20 minutes at 64×
+    * (~10⁹-row distinct plus two vector-carrying re-joins). */
+  private[graft] def ivfKnn(s: SparkSession, assign: String, corpus: String, p: Int,
+      k: Int, qPred: String = "TRUE"): DataFrame =
+    s.sql(sql"""
+      WITH qp AS (SELECT a.vec_id AS src, a.cluster, n.v AS qv, n.nrm AS qn
+                  FROM $assign a JOIN $corpus n ON n.vec_id = a.vec_id
+                  WHERE a.rn <= $p AND ${qPred.replace("vec_id", "a.vec_id")}),
+      mem AS (SELECT a.vec_id AS nb, a.cluster, n.v, n.nrm
+              FROM $assign a JOIN $corpus n ON n.vec_id = a.vec_id
+              WHERE a.rn = 1),
+      sc AS (SELECT src, nb, dot_product(qv, v) / (qn * nrm) AS cos
+             FROM qp JOIN mem ON mem.cluster = qp.cluster
+             WHERE nb <> src),
+      ${rankCte("src", "nb")}
+      ${topK("src", "nb", k)}""")
+
+  /** The top-k rank CTE `r` over the rows of `sc`: `row_number` per `q`
+    * by `score` DESC, then `nb`. Plain SQL, the same text in both
+    * dialects; `carry` lists extra columns, each followed by ", ". */
+  private[graft] def rankCte(q: String, nb: String, score: String = "cos",
+      carry: String = ""): String =
+    sql"""r AS (SELECT $q, $nb, $carry$score,
+         |        row_number() OVER (PARTITION BY $q
+         |                           ORDER BY $score DESC, $nb) AS rn
+         |      FROM sc)"""
+
+  /** The top-`k` rows of [[rankCte]], rn as BIGINT. */
+  private[graft] def topK(q: String, nb: String, k: Int, score: String = "cos",
+      carry: String = ""): String =
+    sql"""SELECT $q, $nb, $carry$score, CAST(rn AS BIGINT) AS rn
+         |FROM r WHERE rn <= $k"""
+
+  /** DuckDB dot product of two double lists: the same left fold as
+    * `dot_product`, so cosines are bit-identical across engines. */
+  private[graft] def oDot(a: String, b: String, zero: String = "CAST(0 AS DOUBLE)"): String =
+    sql"""list_reduce(list_prepend($zero,
+         |  list_transform(list_zip($a, $b), s -> s[1] * s[2])),
+         |  (acc, z) -> acc + z)"""
+
+  /** DuckDB L2 norm of a double list: `sqrt(dot_product(v, v))`'s fold. */
+  private[graft] def oL2(v: String): String =
+    sql"""sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+         |  list_transform($v, x -> x * x)), (a, b) -> a + b))"""
+
+  /** The head of every embedding oracle: `WITH` the double vectors `e` of
+    * the embeddings passing `pred` (all when empty) and the corpus `n`
+    * (vec_id, carry…, v, nrm). `carry` items are select expressions over
+    * `embeddings`; `n` keeps their names. */
+  private[graft] def oCorpus(carry: Seq[String] = Nil, pred: String = ""): String = {
+    val ec = carry.map(_ + ", ").mkString
+    val nc = carry.map(_.split(" AS ").last + ", ").mkString
+    val where = if (pred.isEmpty) "" else s" WHERE $pred"
+    sql"""WITH e AS (SELECT vec_id, ${ec}list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+         |           FROM embeddings$where),
+         |n AS (SELECT vec_id, ${nc}v,
+         |        ${oL2("v")} AS nrm
+         |      FROM e)"""
+  }
+
+  /** DuckDB ranking of every corpus vector against the seed quantizer
+    * `seeds`: centroids `c`, all (vector, centroid) cosines `sc0`, and
+    * `ranked` (vec_id, carry…, cluster[, cos], rn) by cos DESC, cid. */
+  private[graft] def oRanked(seeds: String, carry: Seq[String] = Nil,
+      cos: Boolean = false): String = {
+    val kept = carry.map(_ + ", ").mkString
+    sql"""c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
+         |      WHERE $seeds),
+         |sc0 AS (SELECT t.vec_id, ${carry.map(c => s"t.$c, ").mkString}cid,
+         |          ${oDot("t.v", "cv")} / (t.nrm * cn) AS cos
+         |        FROM n t CROSS JOIN c),
+         |ranked AS (SELECT vec_id, ${kept}cid AS cluster,${if (cos) " cos," else ""}
+         |             row_number() OVER (PARTITION BY vec_id
+         |                                ORDER BY cos DESC, cid) AS rn
+         |           FROM sc0)"""
+  }
+
+  /** The one DuckDB IVF k-NN search (s03, s11, s15, d24, d27): the seed
+    * quantizer over the embeddings passing `corpusPred`; every source
+    * passing `qPred` (a prefix ending in "AND ") probes its
+    * top-[[ivfProbes]] clusters' members and its candidates are ranked in
+    * [[rankCte]] `r` as (`q`, `nb`, cos). */
+  private[graft] def oIvfSearch(q: String, nb: String, corpusPred: String = "",
+      qPred: String = ""): String =
+    sql"""${oCorpus(pred = corpusPred)},
+         |${oRanked(ivfSeeds)},
+         |members AS (SELECT vec_id, cluster FROM ranked WHERE rn = 1),
+         |probes AS (SELECT vec_id AS $q, cluster FROM ranked
+         |           WHERE ${qPred}rn <= $ivfProbes),
+         |cand AS (SELECT DISTINCT p.$q, m.vec_id AS $nb
+         |         FROM probes p JOIN members m ON m.cluster = p.cluster
+         |         WHERE m.vec_id <> p.$q),
+         |sc AS (SELECT $q, $nb,
+         |         ${oDot("q.v", "t.v")} / (q.nrm * t.nrm) AS cos
+         |       FROM cand JOIN n q ON q.vec_id = $q
+         |                 JOIN n t ON t.vec_id = $nb),
+         |${rankCte(q, nb)}"""
+
   val s01 = QueryDef(
     "s01_knn_bruteforce",
     (s, d) => {
@@ -105,39 +267,24 @@ object SimilarityOps {
       // and the corpus side); the tiny query side broadcasts, so the scan
       // over the corpus stays a single parallel pass — linear in N.
       normEmbeddings(s, d).createOrReplaceTempView("s01_n")
-      s.sql(s"""
+      s.sql(sql"""
         WITH q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM s01_n
               WHERE $qSet),
         sc AS (SELECT /*+ BROADCAST(q) */ query_id, t.vec_id AS neighbor_id,
                  dot_product(qv, t.v) / (qn * t.nrm) AS cos
                FROM q JOIN s01_n t ON t.vec_id <> query_id),
-        r AS (SELECT query_id, neighbor_id, cos,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rn
-              FROM sc)
-        SELECT query_id, neighbor_id, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= 5""")
+        ${rankCte("query_id", "neighbor_id")}
+        ${topK("query_id", "neighbor_id", 5)}""")
     },
-    Some(s"""
-      WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
+    Some(sql"""
+      ${oCorpus()},
       q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
             WHERE $qSet),
       sc AS (SELECT query_id, t.vec_id AS neighbor_id,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(qv, t.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (qn * t.nrm) AS cos
+               ${oDot("qv", "t.v")} / (qn * t.nrm) AS cos
              FROM q JOIN n t ON t.vec_id <> query_id),
-      r AS (SELECT query_id, neighbor_id, cos,
-              row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos DESC, neighbor_id) AS rn
-            FROM sc)
-      SELECT query_id, neighbor_id, cos, CAST(rn AS BIGINT) AS rn
-      FROM r WHERE rn <= 5"""),
+      ${rankCte("query_id", "neighbor_id")}
+      ${topK("query_id", "neighbor_id", 5)}"""),
     headline = true)
 
   /** Multi-table LSH KNN. The index is METADATA-WIDTH — (vec_id, tbl,
@@ -166,7 +313,7 @@ object SimilarityOps {
           FROM s02_n LATERAL VIEW explode(sequence(0, ${lshTables - 1})) x AS tbl""")
       }
       idx.createOrReplaceTempView("s02_idx")
-      s.sql(s"""
+      s.sql(sql"""
         WITH $candCte,
         qv AS (SELECT vec_id, v, nrm FROM s02_n WHERE $qSet),
         sc0 AS (SELECT /*+ BROADCAST(qv) */ query_id, neighbor_id,
@@ -175,25 +322,16 @@ object SimilarityOps {
         sc AS (SELECT /*+ BROADCAST(sc0) */ query_id, neighbor_id,
                  dot_product(qvv, t.v) / (qvn * t.nrm) AS cos
                FROM sc0 JOIN s02_n t ON t.vec_id = sc0.neighbor_id),
-        r AS (SELECT query_id, neighbor_id, cos,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rn
-              FROM sc)
-        SELECT query_id, neighbor_id, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= 5""")
+        ${rankCte("query_id", "neighbor_id")}
+        ${topK("query_id", "neighbor_id", 5)}""")
     },
-    Some(s"""
-      WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
+    Some(sql"""
+      ${oCorpus()},
       idx AS (SELECT vec_id, tbl,
                 list_reduce(list_prepend(CAST(0 AS BIGINT),
                   list_transform(range(0, $lshPlanes), p ->
                     CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                      list_transform(range(0, 64), j -> v[j+1] * $planeO)),
+                      list_transform(range(0, 64), j -> v[j+1] * $planeS)),
                       (a, b) -> a + b) >= 0
                     THEN (CAST(1 AS BIGINT) << p) ELSE CAST(0 AS BIGINT) END)),
                   (a, b) -> a + b) AS bkt
@@ -209,17 +347,11 @@ object SimilarityOps {
                FROM pr JOIN idx i ON i.tbl = pr.tbl AND i.bkt = pr.pb
                WHERE i.vec_id <> pr.query_id),
       sc AS (SELECT cand.query_id, cand.neighbor_id,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(q2.v, t.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (q2.nrm * t.nrm) AS cos
+               ${oDot("q2.v", "t.v")} / (q2.nrm * t.nrm) AS cos
              FROM cand JOIN n q2 ON q2.vec_id = cand.query_id
                        JOIN n t ON t.vec_id = cand.neighbor_id),
-      r AS (SELECT query_id, neighbor_id, cos,
-              row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos DESC, neighbor_id) AS rn
-            FROM sc)
-      SELECT query_id, neighbor_id, cos, CAST(rn AS BIGINT) AS rn
-      FROM r WHERE rn <= 5"""))
+      ${rankCte("query_id", "neighbor_id")}
+      ${topK("query_id", "neighbor_id", 5)}"""))
 
   /** IVF probe count: queries search their `ivfProbes` nearest
     * centroids' inverted lists. Measured recall@5 vs
@@ -241,97 +373,34 @@ object SimilarityOps {
     * quantizer change that silently regresses it fails the build. */
   private[graft] val ivfProbes = 4
 
-  /** IVF-flavored ANN: coarse quantizer = deterministically sampled
-    * centroids (vec_id % 50 == 7, CAPPED at |C| ≤ 64 by `vec_id < 3200`
-    * — K must not scale with N or the broadcast grows unboundedly and
-    * the N×|C| assignment pass turns O(N²); same rule as s05's seeds, and
-    * at real scale the centroid set comes from the s06 k-means loop at a
-    * K chosen for list size, never from corpus cardinality); every
-    * vector is assigned to its nearest centroid (one linear broadcast
-    * pass); queries probe their top-[[ivfProbes]] centroids' inverted
-    * lists. At scale the assignment shuffle keys by cluster id, and
-    * search touches only probed lists — the classic IVF trade of recall
-    * for a bounded candidate set. Oracle replicates the same quantizer
-    * and probe count, so results stay exact-checkable. */
   /** Register s03's static IVF structures as temp views (`s03_n`
-    * normalized corpus, `s03_assign` per-vector probe ranking) — shared
-    * by the batch gate row and the s11 streaming twin, ONE definition. */
-  private[graft] def s03Statics(
-      s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+    * normalized corpus, `s03_assign` (vec_id, cluster, rn) probe ranking
+    * over the [[ivfSeeds]] quantizer) — shared by the batch gate row, the
+    * s11 streaming twin and s15's fixed-quantizer k-NN graph. */
+  private[graft] def s03Statics(s: SparkSession, d: String): Unit = {
     normEmbeddings(s, d).createOrReplaceTempView("s03_n")
-    val assign = staged("s03_assign", d) {
-      s.sql(s"""
-        WITH c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM s03_n
-                   WHERE vec_id % 50 = 7 AND vec_id < 3200),
-        sc AS (SELECT /*+ BROADCAST(c) */ t.vec_id, cid,
-                 dot_product(t.v, cv) / (t.nrm * cn) AS cos,
-                 row_number() OVER (PARTITION BY t.vec_id
-                                    ORDER BY dot_product(t.v, cv) / (t.nrm * cn) DESC,
-                                             cid) AS rn
-               FROM s03_n t CROSS JOIN c)
-        SELECT vec_id, cid AS cluster, rn FROM sc WHERE rn <= $ivfProbes""")
-    }
-    assign.createOrReplaceTempView("s03_assign")
+    staged("s03_assign", d) {
+      probeAssign(s, "s03_n", seedCents("s03_n", ivfSeeds), ivfProbes)
+    }.createOrReplaceTempView("s03_assign")
   }
 
+  /** IVF-flavored ANN: the coarse quantizer is the sampled [[ivfSeeds]]
+    * set; every vector is assigned to its top-[[ivfProbes]] centroids in
+    * one row-wise broadcast pass ([[probeAssign]]), its inverted list is
+    * its nearest one, and queries search their probed lists
+    * ([[ivfKnn]]) — the classic IVF trade of recall for a bounded
+    * candidate set. The oracle ([[oIvfSearch]]) replicates the same
+    * quantizer and probe count, so results stay exact-checkable. */
   val s03 = QueryDef(
     "s03_knn_ivf",
     (s, d) => {
       s03Statics(s, d)
-      s.sql(s"""
-        WITH members AS (SELECT vec_id, cluster FROM s03_assign WHERE rn = 1),
-        probes AS (SELECT vec_id AS query_id, cluster FROM s03_assign
-                   WHERE $qSet),
-        cand AS (SELECT DISTINCT p.query_id, m.vec_id AS neighbor_id
-                 FROM probes p JOIN members m ON m.cluster = p.cluster
-                 WHERE m.vec_id <> p.query_id),
-        sc AS (SELECT query_id, neighbor_id,
-                 dot_product(q.v, t.v) / (q.nrm * t.nrm) AS cos
-               FROM cand JOIN s03_n q ON q.vec_id = query_id
-                         JOIN s03_n t ON t.vec_id = neighbor_id),
-        r AS (SELECT query_id, neighbor_id, cos,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rn
-              FROM sc)
-        SELECT query_id, neighbor_id, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= 5""")
+      ivfKnn(s, "s03_assign", "s03_n", ivfProbes, 5, qSet)
+        .toDF("query_id", "neighbor_id", "cos", "rn")
     },
-    Some(s"""
-      WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
-      c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
-            WHERE vec_id % 50 = 7 AND vec_id < 3200),
-      sc0 AS (SELECT t.vec_id, cid,
-                list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                  list_transform(list_zip(t.v, cv), s -> s[1] * s[2])),
-                  (acc, z) -> acc + z) / (t.nrm * cn) AS cos
-              FROM n t CROSS JOIN c),
-      ranked AS (SELECT vec_id, cid AS cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY cos DESC, cid) AS rn
-                 FROM sc0),
-      members AS (SELECT vec_id, cluster FROM ranked WHERE rn = 1),
-      probes AS (SELECT vec_id AS query_id, cluster FROM ranked
-                 WHERE $qSet AND rn <= $ivfProbes),
-      cand AS (SELECT DISTINCT p.query_id, m.vec_id AS neighbor_id
-               FROM probes p JOIN members m ON m.cluster = p.cluster
-               WHERE m.vec_id <> p.query_id),
-      sc AS (SELECT query_id, neighbor_id,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(q.v, t.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (q.nrm * t.nrm) AS cos
-             FROM cand JOIN n q ON q.vec_id = query_id
-                       JOIN n t ON t.vec_id = neighbor_id),
-      r AS (SELECT query_id, neighbor_id, cos,
-              row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos DESC, neighbor_id) AS rn
-            FROM sc)
-      SELECT query_id, neighbor_id, cos, CAST(rn AS BIGINT) AS rn
-      FROM r WHERE rn <= 5"""))
+    Some(sql"""
+      ${oIvfSearch("query_id", "neighbor_id", qPred = s"$qSet AND ")}
+      ${topK("query_id", "neighbor_id", 5)}"""))
 
   /** ANN index evaluation: recall@5 of the LSH index (s02) against the
     * brute-force ground truth (s01), per query — the measurement an ANN
@@ -390,177 +459,146 @@ object SimilarityOps {
     "s05_kmeans_update",
     (s, d) => {
       normEmbeddings(s, d).createOrReplaceTempView("s05_n")
-      // assignment through the native row-wise arg-max (nearest_centroid
-      // over the collected-centroid broadcast row): the previous
-      // cross-join + row_number window shipped every VECTOR k times
-      // through the per-vec_id exchange — this keeps "vectors never
-      // shuffle" true by construction (they stay in their scan
-      // partitions; only (cluster, dim) integer partials move).
-      // ONE corpus pass: the per-cid stats (n_members, mean_cos) are
-      // derived from the SAME (cid, dim) aggregation that computes the
-      // means — carrying cos through the explode and reading each
-      // per-dim group's count — because a separate per-cid aggregate
-      // would re-reference the assignment CTE, and Spark inlines CTEs
-      // per reference (the whole scan + arg-max would run twice;
-      // PlanShapeSpec pins exactly one evaluation).
-      s.sql("""
-        WITH cs AS (SELECT collect_list(named_struct('cid', cid, 'cv', cv,
-                        'cn', cn)) AS cents
-                    FROM (SELECT vec_id AS cid, v AS cv, nrm AS cn
-                          FROM s05_n
-                          WHERE vec_id % 125 = 0 AND vec_id < 8000)),
-        a AS (SELECT /*+ BROADCAST(cs) */ t.vec_id, t.v,
-                nearest_centroid(t.v, t.nrm, cents) AS nc
-              FROM s05_n t CROSS JOIN cs),
-        e AS (SELECT nc.cid AS cid, dim,
-                CAST(floor(nc.cos * CAST(1000000 AS DOUBLE)) AS BIGINT) AS ci,
-                CAST(floor(xv * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS xi
-              FROM a LATERAL VIEW posexplode(v) t AS dim, xv)
-        SELECT cid AS cluster_id, CAST(dim AS BIGINT) AS dim,
-               CAST(sum(xi) AS DOUBLE)
-                 / CAST(count(*) * 1000000000000 AS DOUBLE) AS mean_component,
-               CAST(count(*) AS BIGINT) AS n_members,
-               CAST(sum(ci) AS DOUBLE)
-                 / CAST(count(*) * 1000000 AS DOUBLE) AS mean_cos
-        FROM e GROUP BY cid, dim""")
+      kmeansReport(s, "s05_n", seedCents("s05_n", kmSeeds()))
     },
-    Some(s"""
-      WITH e0 AS (SELECT vec_id,
-                    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e0),
-      c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
-            WHERE vec_id % 125 = 0 AND vec_id < 8000),
-      sc AS (SELECT t.vec_id, t.v, c.cid,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(c.cv, t.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (c.cn * t.nrm) AS cos
-             FROM n t CROSS JOIN c),
-      a AS (SELECT vec_id, v, cid, cos,
-              row_number() OVER (PARTITION BY vec_id
-                ORDER BY cos DESC, cid) AS rk
-            FROM sc),
-      asg AS (SELECT vec_id, v, cid, cos FROM a WHERE rk = 1),
-      g AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
-              CAST(sum(CAST(floor(cos * CAST(1000000 AS DOUBLE)) AS BIGINT))
-                     AS DOUBLE)
-                / CAST(count(*) * 1000000 AS DOUBLE) AS mean_cos
-            FROM asg GROUP BY cid),
-      ix AS (SELECT cid, v, unnest(range(len(v))) AS dim FROM asg),
-      e AS (SELECT cid, dim,
-              CAST(floor(v[dim + 1] * CAST(1000000000000 AS DOUBLE)) AS BIGINT)
-                AS xi
-            FROM ix),
-      m AS (SELECT cid, CAST(dim AS BIGINT) AS dim,
-              CAST(sum(xi) AS DOUBLE)
-                / CAST(count(*) * 1000000000000 AS DOUBLE) AS mean_component
-            FROM e GROUP BY cid, dim)
-      SELECT m.cid AS cluster_id, m.dim, m.mean_component,
-             g.n_members, g.mean_cos
-      FROM m JOIN g ON m.cid = g.cid"""))
+    Some(sql"""
+      ${oCorpus()},
+      cF AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
+             WHERE ${kmSeeds()}),
+      $oReport"""))
+
+  /** A component floored to 12 decimals as an exact integer, and the mean
+    * of such integers `xi` as ONE IEEE division: the k-means arithmetic of
+    * [[s05]], shared by the report and the Lloyd update. */
+  private def scaled12(x: String) = s"CAST(floor($x * CAST(1000000000000 AS DOUBLE)) AS BIGINT)"
+  private val mean12 = "CAST(sum(xi) AS DOUBLE) / CAST(count(*) * 1000000000000 AS DOUBLE)"
+
+  /** The k-means report of s05 and s06: every vector of `corpus` assigned
+    * to its nearest centroid of the one-row `cents` relation through the
+    * row-wise `nearest_centroid` (the cross-join + window spelling
+    * shipped every vector K times through a per-vec_id exchange), then
+    * one row per (cluster, dim): mean component, member count and
+    * floor-scaled mean cosine. ONE corpus pass: the per-cluster stats come
+    * out of the same (cid, dim) aggregation as the means, cos carried
+    * through the explode, because a separate per-cid aggregate would
+    * re-reference the assignment and Spark inlines CTEs per reference
+    * (PlanShapeSpec pins one evaluation). Only (cluster, dim) integer
+    * partials move. */
+  private def kmeansReport(s: SparkSession, corpus: String, cents: String): DataFrame =
+    s.sql(s"""
+      WITH a AS (${nearestSql(corpus, cents, "t.v")}),
+      e AS (SELECT nc.cid AS cid, dim,
+              CAST(floor(nc.cos * CAST(1000000 AS DOUBLE)) AS BIGINT) AS ci,
+              ${scaled12("xv")} AS xi
+            FROM a LATERAL VIEW posexplode(v) t AS dim, xv)
+      SELECT cid AS cluster_id, CAST(dim AS BIGINT) AS dim,
+             $mean12 AS mean_component,
+             CAST(count(*) AS BIGINT) AS n_members,
+             CAST(sum(ci) AS DOUBLE) / CAST(count(*) * 1000000 AS DOUBLE) AS mean_cos
+      FROM e GROUP BY cid, dim""")
+
+  /** The DuckDB k-means report against the centroid CTE `cF` (cid, cv,
+    * cn): arg-max assignment (ties to the smaller cid), per-cluster count
+    * and mean cosine, per-(cluster, dim) mean component. */
+  private def oReport: String =
+    sql"""scF AS (SELECT t.vec_id, t.v, c.cid,
+         |          ${oDot("c.cv", "t.v")} / (c.cn * t.nrm) AS cos
+         |        FROM n t CROSS JOIN cF c),
+         |aF AS (SELECT vec_id, v, cid, cos,
+         |         row_number() OVER (PARTITION BY vec_id
+         |           ORDER BY cos DESC, cid) AS rk
+         |       FROM scF),
+         |asgF AS (SELECT vec_id, v, cid, cos FROM aF WHERE rk = 1),
+         |gF AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
+         |         CAST(sum(CAST(floor(cos * CAST(1000000 AS DOUBLE)) AS BIGINT))
+         |                AS DOUBLE)
+         |           / CAST(count(*) * 1000000 AS DOUBLE) AS mean_cos
+         |       FROM asgF GROUP BY cid),
+         |ixF AS (SELECT cid, v, unnest(range(len(v))) AS dim FROM asgF),
+         |eF AS (SELECT cid, dim,
+         |         CAST(floor(v[dim + 1] * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS xi
+         |       FROM ixF),
+         |mF AS (SELECT cid, CAST(dim AS BIGINT) AS dim,
+         |         CAST(sum(xi) AS DOUBLE)
+         |           / CAST(count(*) * 1000000000000 AS DOUBLE) AS mean_component
+         |       FROM eF GROUP BY cid, dim)
+         |SELECT mF.cid AS cluster_id, mF.dim, mF.mean_component,
+         |       gF.n_members, gF.mean_cos
+         |FROM mF JOIN gF ON mF.cid = gF.cid"""
 
   /** One Lloyd round in the oracle dialect: centroid table `c$r`
     * (cid, cv) → `c${r+1}`. Exactly the s05 update arithmetic: cosine
     * argmax assignment (ties → smaller cid), per-(cluster, dim) means of
     * 12-decimal-floored components, arrays reassembled in dim order. */
-  private def oRound(r: Int): String = s"""
-      cn$r AS (SELECT cid, cv,
-                 sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                   list_transform(cv, x -> x * x)), (a, b) -> a + b)) AS cn
-               FROM c$r),
-      sc$r AS (SELECT t.vec_id, t.v, c.cid,
-                 row_number() OVER (PARTITION BY t.vec_id
-                   ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                     list_transform(list_zip(c.cv, t.v), s -> s[1] * s[2])),
-                     (acc, z) -> acc + z) / (c.cn * t.nrm) DESC, c.cid) AS rk
-               FROM n t CROSS JOIN cn$r c),
-      asg$r AS (SELECT vec_id, v, cid FROM sc$r WHERE rk = 1),
-      ix$r AS (SELECT cid, v, unnest(range(len(v))) AS dim FROM asg$r),
-      e$r AS (SELECT cid, dim,
-                CAST(floor(v[dim + 1] * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS xi
-              FROM ix$r),
-      m$r AS (SELECT cid, dim,
-                CAST(sum(xi) AS DOUBLE)
-                  / CAST(count(*) * 1000000000000 AS DOUBLE) AS mc
-              FROM e$r GROUP BY cid, dim),
-      c${r + 1} AS (SELECT cid, list(mc ORDER BY dim) AS cv FROM m$r GROUP BY cid)"""
+  private def oRound(r: Int): String =
+    sql"""cn$r AS (SELECT cid, cv,
+         |           ${oL2("cv")} AS cn
+         |         FROM c$r),
+         |sc$r AS (SELECT t.vec_id, t.v, c.cid,
+         |           row_number() OVER (PARTITION BY t.vec_id
+         |             ORDER BY ${oDot("c.cv", "t.v")} / (c.cn * t.nrm) DESC, c.cid) AS rk
+         |         FROM n t CROSS JOIN cn$r c),
+         |asg$r AS (SELECT vec_id, v, cid FROM sc$r WHERE rk = 1),
+         |ix$r AS (SELECT cid, v, unnest(range(len(v))) AS dim FROM asg$r),
+         |e$r AS (SELECT cid, dim,
+         |          CAST(floor(v[dim + 1] * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS xi
+         |        FROM ix$r),
+         |m$r AS (SELECT cid, dim,
+         |          CAST(sum(xi) AS DOUBLE)
+         |            / CAST(count(*) * 1000000000000 AS DOUBLE) AS mc
+         |        FROM e$r GROUP BY cid, dim),
+         |c${r + 1} AS (SELECT cid, list(mc ORDER BY dim) AS cv FROM m$r GROUP BY cid)"""
 
-  /** The same Lloyd round on the engine side (`s06_c` view → next
-    * centroid frame). `sort_array(collect_list(struct(dim, mc)))` is the
-    * deterministic array reassembly: dim is unique per group, so the
-    * struct sort IS the dim sort on both engines. */
-  private def sRound(s: org.apache.spark.sql.SparkSession,
-      src: String = "s06_n"): org.apache.spark.sql.DataFrame =
+  /** DuckDB k-means training as s06 runs it: seeds `c1`, [[lloydRounds]]
+    * unrolled [[oRound]]s, and the trained centroids with their norms as
+    * `name` (cid, cv, cn). */
+  private def oTrained(name: String): String =
+    sql"""c1 AS (SELECT vec_id AS cid, v AS cv FROM n
+         |       WHERE ${kmSeeds()}),
+         |${(1 to lloydRounds).map(oRound).mkString(",\n")},
+         |$name AS (SELECT cid, cv,
+         |            ${oL2("cv")} AS cn
+         |          FROM c${lloydRounds + 1})"""
+
+  /** The exact Lloyd mean update, shared by [[s06CentsWith]]'s rounds and
+    * [[DedupOps.hierCents]]' per-supercell rounds: `assigned` rows
+    * (keys…, cid, v) → one centroid (keys…, cid, cv) per group, every
+    * mean the s05 arithmetic, the array reassembled in dim order
+    * (`sort_array` of (dim, mc) structs: dim is unique per group, so the
+    * struct sort IS the dim sort). `keys` end in ", ". */
+  private[graft] def meanUpdate(s: SparkSession, assigned: String, keys: String = ""): DataFrame =
     s.sql(s"""
-      WITH c AS (SELECT cid, cv, sqrt(dot_product(cv, cv)) AS cn FROM s06_c),
-      cs AS (SELECT collect_list(named_struct('cid', cid, 'cv', cv,
-                      'cn', cn)) AS cents FROM c),
-      asg AS (SELECT /*+ BROADCAST(cs) */ t.vec_id, t.v,
-                nearest_centroid(t.v, t.nrm, cents).cid AS cid
-              FROM $src t CROSS JOIN cs),
-      e AS (SELECT cid, CAST(dim AS BIGINT) AS dim,
-              CAST(floor(xv * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS xi
-            FROM asg LATERAL VIEW posexplode(v) t AS dim, xv),
-      m AS (SELECT cid, dim,
-              CAST(sum(xi) AS DOUBLE)
-                / CAST(count(*) * 1000000000000 AS DOUBLE) AS mc
-            FROM e GROUP BY cid, dim)
-      SELECT cid, transform(sort_array(collect_list(struct(dim, mc))), x -> x.mc) AS cv
-      FROM m GROUP BY cid""")
+      WITH e AS (SELECT ${keys}cid, CAST(dim AS BIGINT) AS dim, ${scaled12("xv")} AS xi
+                 FROM ($assigned) a LATERAL VIEW posexplode(v) t AS dim, xv),
+      m AS (SELECT ${keys}cid, dim, $mean12 AS mc FROM e GROUP BY ${keys}cid, dim)
+      SELECT ${keys}cid, transform(sort_array(collect_list(struct(dim, mc))), x -> x.mc) AS cv
+      FROM m GROUP BY ${keys}cid""")
 
-  /** Full distributed k-means: `lloydRounds` Lloyd iterations composed
-    * from the s05 update (capped K=64 deterministic seeds, broadcast
-    * centroids, (cluster, dim) partial sums — the vectors never shuffle),
-    * then the s05-style report against the final centroids (so the
-    * output schema and exactness story are identical to s05's).
-    *
-    * Driver loop mechanics: each round's centroid frame is TINY (K×64
-    * doubles) but its plan references the previous round twice —
-    * [[Q.roundCheckpoint]] truncates lineage per round exactly as d06's
-    * label propagation does (reliable checkpoint dir when configured,
-    * localCheckpoint otherwise). The iteration count is FIXED, not
-    * convergence-driven: the DuckDB oracle must run the identical
-    * unrolled computation, and a fixed count is what keeps the two
-    * engines' outputs hash-comparable (an early-stop at a detected
-    * fixpoint would still be oracle-safe — one extra Lloyd round at a
-    * fixpoint is idempotent — but buys nothing at a fixed small count).
-    * Scale: per round one broadcast assignment pass over N + one
-    * metadata-width (cluster, dim) shuffle; K is a config, never f(N). */
+  /** Lloyd iterations per training run. The count is FIXED, not
+    * convergence-driven: the DuckDB oracle runs the identical unrolled
+    * computation, which keeps the engines hash-comparable. */
   private val lloydRounds = 2
 
-  /** s06's CONVERGED centroid frame (cid, cv) — the Lloyd loop factored
-    * out and staged so the s06 gate row and s17's trained-quantizer
-    * search share ONE training run per pipeline (the model-artifact
-    * seam: in deployment this frame is written once and read by every
-    * index build). Each round checkpoints (lineage truncation, d06's
-    * rule); the final frame is a LogicalRDD leaf, safe to self-join and
-    * view-hop. Registers the `s06_n` normalized view as a side effect. */
-  private[graft] def s06Cents(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
+  /** s06's trained centroid frame (cid, cv), staged so the s06 gate row
+    * and s17's trained-quantizer search share ONE training run (the
+    * model-artifact seam: in deployment this frame is written once and
+    * read by every index build). Registers the `s06_n` view. */
+  private[graft] def s06Cents(s: SparkSession, d: String): DataFrame =
     s06CentsWith(s, d, 64, "s06_cents")
 
-  /** [[s06Cents]] at an explicit centroid budget K — the K∝N seam the
-    * s15 SCALE note names: the gate rows train at the pinned K=64
-    * (`vec_id < 125·64 = 8000`, bit-identical to the original rule), and
-    * the k-NN graph's quantizer rule ([[DedupOps.knnQuantizerFor]])
-    * trains at a K chosen for CELL SIZE (K∝N ⇒ E[cell] = N/K stays
-    * constant as the corpus grows — the linear-regime leg of the candidate-load law).
-    * Seeds stay the deterministic `vec_id % 125 = 0` ladder so the
-    * training run is oracle-reproducible at any K. */
-  /** `trainStride` (round 15, default 1 = every gate path bit-identical):
-    * run the Lloyd UPDATE passes over the `vec_id % stride = 0` sample
-    * instead of the whole corpus. Centroid quality needs tens of points
-    * per cell, not the corpus — at the K∝N operating point (E[cell]=125)
-    * a stride of 6 keeps ~20 sample points per expected cell while
-    * cutting both training passes 6×. Seeds are unchanged (the
-    * deterministic ladder is an id rule, not a sample member rule), so
-    * stride 1 reproduces the original training bit-for-bit. */
-  private[graft] def s06CentsWith(
-      s: org.apache.spark.sql.SparkSession, d: String, k: Int,
-      stageKey: String, trainStride: Int = 1): org.apache.spark.sql.DataFrame = {
+  /** [[s06Cents]] at an explicit centroid budget `k`: the gate rows train
+    * at the pinned K = 64; the k-NN graph's quantizer
+    * ([[DedupOps.knnQuantizerFor]]) trains at K∝N, so E[cell] = N/K stays
+    * constant as the corpus grows. Seeds stay the deterministic
+    * [[kmSeeds]] ladder, so training is oracle-reproducible at any K.
+    * `trainStride` (default 1: every gate path bit-identical) runs the
+    * update passes over the `vec_id % stride = 0` sample: centroid
+    * quality needs tens of points per cell, not the corpus, and at
+    * E[cell] = 125 a stride of 6 keeps ~20 per cell for 6× cheaper
+    * passes. Each round checkpoints (lineage truncation, as d06's
+    * fixpoint does); the final frame is a leaf, safe to self-join. */
+  private[graft] def s06CentsWith(s: SparkSession, d: String, k: Int,
+      stageKey: String, trainStride: Int = 1): DataFrame = {
     normEmbeddings(s, d).createOrReplaceTempView("s06_n")
     val trainView =
       if (trainStride <= 1) "s06_n"
@@ -570,12 +608,13 @@ object SimilarityOps {
         "s06_train"
       }
     staged(stageKey, d) {
-      var cents = s.sql(
-        s"SELECT vec_id AS cid, v AS cv FROM s06_n WHERE vec_id % 125 = 0 AND vec_id < ${125L * k}")
+      var cents = s.sql(s"SELECT vec_id AS cid, v AS cv FROM s06_n WHERE ${kmSeeds(k)}")
       withAdvisoryCoalesce(s) {
         for (_ <- 1 to lloydRounds) {
           cents.createOrReplaceTempView("s06_c")
-          val next = roundCheckpoint(sRound(s, trainView))
+          val assigned = nearestSql(trainView, trainedCents("s06_c"), "t.v")
+          val next = roundCheckpoint(
+            meanUpdate(s, s"SELECT nc.cid AS cid, v FROM ($assigned)"))
           releaseCheckpointBlocks(cents, blocking = false)
           cents = next
         }
@@ -584,90 +623,22 @@ object SimilarityOps {
     }
   }
 
+  /** Full distributed k-means: [[lloydRounds]] Lloyd iterations of the
+    * s05 update from the capped K = 64 seeds ([[s06Cents]]), then the s05
+    * report against the trained centroids, so the output schema and
+    * exactness story are s05's. Per round: one broadcast assignment pass
+    * over N and one metadata-width (cluster, dim) shuffle. */
   val s06 = QueryDef(
     "s06_kmeans_lloyd",
     (s, d) => {
       s06Cents(s, d).createOrReplaceTempView("s06_c")
-      // final report: s05's update query against the converged centroids
-      // (same row-wise nearest_centroid assignment — vectors never
-      // shuffle in the report either)
-      s.sql("""
-        WITH cs AS (SELECT collect_list(named_struct('cid', cid, 'cv', cv,
-                        'cn', cn)) AS cents
-                    FROM (SELECT cid, cv, sqrt(dot_product(cv, cv)) AS cn
-                          FROM s06_c)),
-        a AS (SELECT /*+ BROADCAST(cs) */ t.vec_id, t.v,
-                nearest_centroid(t.v, t.nrm, cents) AS nc
-              FROM s06_n t CROSS JOIN cs),
-        e AS (SELECT nc.cid AS cid, dim,
-                CAST(floor(nc.cos * CAST(1000000 AS DOUBLE)) AS BIGINT) AS ci,
-                CAST(floor(xv * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS xi
-              FROM a LATERAL VIEW posexplode(v) t AS dim, xv)
-        SELECT cid AS cluster_id, CAST(dim AS BIGINT) AS dim,
-               CAST(sum(xi) AS DOUBLE)
-                 / CAST(count(*) * 1000000000000 AS DOUBLE) AS mean_component,
-               CAST(count(*) AS BIGINT) AS n_members,
-               CAST(sum(ci) AS DOUBLE)
-                 / CAST(count(*) * 1000000 AS DOUBLE) AS mean_cos
-        FROM e GROUP BY cid, dim""")
+      kmeansReport(s, "s06_n", trainedCents("s06_c"))
     },
-    Some(s"""
-      WITH e0 AS (SELECT vec_id,
-                    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e0),
-      c1 AS (SELECT vec_id AS cid, v AS cv FROM n
-             WHERE vec_id % 125 = 0 AND vec_id < 8000),
-      ${(1 to lloydRounds).map(oRound).mkString(",")},
-      cF AS (SELECT cid, cv,
-               sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(cv, x -> x * x)), (a, b) -> a + b)) AS cn
-             FROM c${lloydRounds + 1}),
-      scF AS (SELECT t.vec_id, t.v, c.cid,
-                list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                  list_transform(list_zip(c.cv, t.v), s -> s[1] * s[2])),
-                  (acc, z) -> acc + z) / (c.cn * t.nrm) AS cos
-              FROM n t CROSS JOIN cF c),
-      aF AS (SELECT vec_id, v, cid, cos,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY cos DESC, cid) AS rk
-             FROM scF),
-      asgF AS (SELECT vec_id, v, cid, cos FROM aF WHERE rk = 1),
-      gF AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_members,
-               CAST(sum(CAST(floor(cos * CAST(1000000 AS DOUBLE)) AS BIGINT))
-                      AS DOUBLE)
-                 / CAST(count(*) * 1000000 AS DOUBLE) AS mean_cos
-             FROM asgF GROUP BY cid),
-      ixF AS (SELECT cid, v, unnest(range(len(v))) AS dim FROM asgF),
-      eF AS (SELECT cid, dim,
-               CAST(floor(v[dim + 1] * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS xi
-             FROM ixF),
-      mF AS (SELECT cid, CAST(dim AS BIGINT) AS dim,
-               CAST(sum(xi) AS DOUBLE)
-                 / CAST(count(*) * 1000000000000 AS DOUBLE) AS mean_component
-             FROM eF GROUP BY cid, dim)
-      SELECT mF.cid AS cluster_id, mF.dim, mF.mean_component,
-             gF.n_members, gF.mean_cos
-      FROM mF JOIN gF ON mF.cid = gF.cid"""))
+    Some(sql"""
+      ${oCorpus()},
+      ${oTrained("cF")},
+      $oReport"""))
 
-  /** s07: per-vector symmetric int8 quantization — the storage half of a
-    * 100 TB embedding pipeline (4× smaller than float32, 8× smaller than
-    * the double working form; IVF/PQ stacks start exactly here). Each
-    * vector gets `scale = max|x|/127`, codes `q_i = clamp(round(x_i /
-    * scale))`, and the output audits the codes: reconstruction error
-    * (max + mean of |x_i − q_i·scale|) and an order-weighted integer
-    * checksum of the codes themselves, so the oracle verifies the actual
-    * quantization, not just summary stats.
-    *
-    * Scale shape: perfectly row-wise — higher-order array functions only
-    * (transform/zip_with/aggregate), no explode, no aggregation, ZERO
-    * shuffles (pinned in PlanShapeSpec). Bit-exact: scale is one IEEE
-    * division; codes are floor(x/scale + 0.5) — identical IEEE ops in
-    * both engines; error sums ride long-scaled integers with one final
-    * division, the house numeric discipline. */
   /** Shared quantized-vector frame (vec_id, v, scale, qv) — one spelling
     * for s07 (the audit) and s08 (retrieval over the codes), so the two
     * can never quantize differently. */
@@ -703,6 +674,21 @@ object SimilarityOps {
               ELSE list_transform(v, x -> CAST(0 AS BIGINT)) END AS qv
             FROM m)"""
 
+  /** s07: per-vector symmetric int8 quantization — the storage half of a
+    * 100 TB embedding pipeline (4× smaller than float32, 8× smaller than
+    * the double working form; IVF/PQ stacks start exactly here). Each
+    * vector gets `scale = max|x|/127`, codes `q_i = clamp(round(x_i /
+    * scale))`, and the output audits the codes: reconstruction error
+    * (max + mean of |x_i − q_i·scale|) and an order-weighted integer
+    * checksum of the codes themselves, so the oracle verifies the actual
+    * quantization, not just summary stats.
+    *
+    * Scale shape: perfectly row-wise — higher-order array functions only
+    * (transform/zip_with/aggregate), no explode, no aggregation, ZERO
+    * shuffles (pinned in PlanShapeSpec). Bit-exact: scale is one IEEE
+    * division; codes are floor(x/scale + 0.5) — identical IEEE ops in
+    * both engines; error sums ride long-scaled integers with one final
+    * division, the house numeric discipline. */
   val s07 = QueryDef(
     "s07_embedding_quantize",
     (s, d) => withViews(s, d, "embeddings")(s"""
@@ -793,7 +779,7 @@ object SimilarityOps {
           ON b.query_id = r.query_id AND b.neighbor_id = r.neighbor_id
         WHERE r.rn <= 5""")
     },
-    Some(s"""
+    Some(sql"""
       WITH $oQuantCtes,
       z AS (SELECT vec_id,
               list_transform(qv, c -> CAST(c AS DOUBLE)) AS w FROM q),
@@ -805,14 +791,9 @@ object SimilarityOps {
       qs AS (SELECT vec_id AS query_id, w AS qw, qd AS qqd FROM n
              WHERE $qSet),
       sc AS (SELECT query_id, t.vec_id AS neighbor_id,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(qw, t.w), s -> s[1] * s[2])),
-                 (acc, z2) -> acc + z2) / sqrt(qqd * t.qd) AS qcos
+               ${oDot("qw", "t.w")} / sqrt(qqd * t.qd) AS qcos
              FROM qs JOIN n t ON t.vec_id <> query_id),
-      r AS (SELECT query_id, neighbor_id, qcos,
-              row_number() OVER (PARTITION BY query_id
-                                 ORDER BY qcos DESC, neighbor_id) AS rn
-            FROM sc)
+      ${rankCte("query_id", "neighbor_id", "qcos")}
       SELECT r.query_id, r.neighbor_id, r.qcos, CAST(r.rn AS BIGINT) AS rn,
              b.neighbor_id IS NOT NULL AS in_exact_top5
       FROM r LEFT JOIN (${s01.oracle.get}) b
@@ -1049,30 +1030,23 @@ object SimilarityOps {
       SELECT query_id, neighbor_id, score, CAST(rn AS BIGINT) AS rn
       FROM rr WHERE rn <= 5""")
     },
-    Some(s"""
-      WITH v0 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings),
-      v AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, y -> y * y)), (a, b) -> a + b)) AS nrm
-            FROM v0),
-      e AS (SELECT vec_id,
-              list_transform(v, x -> CAST(floor(x / nrm * 1000000.0) AS BIGINT)) AS x6
-            FROM v WHERE nrm > 0),
-      c AS (SELECT vec_id AS cid, x6 AS cv FROM e WHERE $pqSeeds),
+    Some(sql"""
+      ${oCorpus()},
+      e6 AS (SELECT vec_id,
+               list_transform(v, x -> CAST(floor(x / nrm * 1000000.0) AS BIGINT)) AS x6
+             FROM n WHERE nrm > 0),
+      c AS (SELECT vec_id AS cid, x6 AS cv FROM e6 WHERE $pqSeeds),
       sc AS (SELECT t.vec_id,
-               ${(0 until pqSub).map(oPqDist).mkString(",\n               ")}
-             FROM e t CROSS JOIN c),
+               ${(0 until pqSub).map(oPqDist).mkString(",\n")}
+             FROM e6 t CROSS JOIN c),
       codes AS (SELECT vec_id, $pqMins FROM sc GROUP BY vec_id),
       recon AS (SELECT codes.vec_id,
                   ${pqRecon((m, lo, hi) => s"list_slice(k$m.cv, $lo, $hi)",
                             ss => ss.mkString(" || "))} AS rv
                 FROM codes $pqJoins),
-      q AS (SELECT vec_id, x6 FROM e WHERE $qSet),
+      q AS (SELECT vec_id, x6 FROM e6 WHERE $qSet),
       adc AS (SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-                list_reduce(list_prepend(CAST(0 AS BIGINT),
-                  list_transform(list_zip(q.x6, r.rv), s2 -> s2[1] * s2[2])),
-                  (a, b) -> a + b) AS adc_score
+                ${oDot("q.x6", "r.rv", "CAST(0 AS BIGINT)")} AS adc_score
               FROM recon r CROSS JOIN q
               WHERE r.vec_id <> q.vec_id),
       cand AS (SELECT query_id, neighbor_id,
@@ -1080,11 +1054,9 @@ object SimilarityOps {
                                     ORDER BY adc_score DESC, neighbor_id) AS arn
                FROM adc),
       ex AS (SELECT cand.query_id, cand.neighbor_id,
-               list_reduce(list_prepend(CAST(0 AS BIGINT),
-                 list_transform(list_zip(q.x6, t.x6), s2 -> s2[1] * s2[2])),
-                 (a, b) -> a + b) AS score
-             FROM cand JOIN e q ON q.vec_id = cand.query_id
-                       JOIN e t ON t.vec_id = cand.neighbor_id
+               ${oDot("q.x6", "t.x6", "CAST(0 AS BIGINT)")} AS score
+             FROM cand JOIN e6 q ON q.vec_id = cand.query_id
+                       JOIN e6 t ON t.vec_id = cand.neighbor_id
              WHERE cand.arn <= $pqRerank),
       rr AS (SELECT query_id, neighbor_id, score,
                row_number() OVER (PARTITION BY query_id
@@ -1097,10 +1069,10 @@ object SimilarityOps {
   private[graft] val s12DeltaPred = "vec_id % 16 = 5"
 
   /** Incremental IVF index maintenance — q67's materialized-view pattern
-    * applied to the ANN index (the round-10 capability list's next rung:
-    * a 100 TB corpus grows daily; rebuilding the IVF index per batch is
-    * the full-recompute anti-pattern). The quantizer is FROZEN (centroids
-    * drawn from the BASE slice only — an index build artifact), so
+    * applied to the ANN index (a 100 TB corpus grows daily; rebuilding
+    * the IVF index per batch is the full-recompute anti-pattern). The
+    * quantizer is FROZEN (centroids drawn from the BASE slice only — an
+    * index build artifact), so
     * assigning a vector is a pure per-row function of the centroid set:
     * the MAINTAINED path scans only the delta slice and unions with the
     * stored base assignment, and the gate PROVES maintained ≡ full
@@ -1119,38 +1091,20 @@ object SimilarityOps {
   val s12 = QueryDef(
     "s12_ivf_incremental",
     (s, d) => {
-      // `n` feeds the centroid set and three assignment passes
-      // (base/delta/full — the full pass is the operator's own recompute
-      // proof, deliberate)
       normEmbeddings(s, d).createOrReplaceTempView("s12_n")
+      // three assignment passes (base/delta/full): the full pass is the
+      // operator's own recompute proof, deliberate
+      val cents = seedCents("s12_n", s"$ivfSeeds AND NOT ($s12DeltaPred)")
+      def members(cte: String, n: String, sum: String, slice: String) = s"""
+        $cte AS (SELECT cid, CAST(count(*) AS BIGINT) AS $n,
+                   sum(CAST(cos AS DECIMAL(18,6))) AS $sum
+                 FROM (SELECT nc.cid AS cid, nc.cos AS cos FROM (${nearestSql(
+                   s"(SELECT * FROM s12_n WHERE $slice)", cents)}))
+                 GROUP BY cid)"""
       s.sql(s"""
-        WITH n AS (SELECT vec_id, v, nrm, ($s12DeltaPred) AS is_delta FROM s12_n),
-        c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
-              WHERE vec_id % 50 = 7 AND vec_id < 3200 AND NOT is_delta),
-        ab AS (SELECT /*+ BROADCAST(c) */ vec_id, cid,
-                 dot_product(v, cv) / (nrm * cn) AS cos,
-                 row_number() OVER (PARTITION BY vec_id
-                   ORDER BY dot_product(v, cv) / (nrm * cn) DESC, cid) AS rn
-               FROM n CROSS JOIN c WHERE NOT is_delta),
-        ad AS (SELECT /*+ BROADCAST(c) */ vec_id, cid,
-                 dot_product(v, cv) / (nrm * cn) AS cos,
-                 row_number() OVER (PARTITION BY vec_id
-                   ORDER BY dot_product(v, cv) / (nrm * cn) DESC, cid) AS rn
-               FROM n CROSS JOIN c WHERE is_delta),
-        af AS (SELECT /*+ BROADCAST(c) */ vec_id, cid,
-                 dot_product(v, cv) / (nrm * cn) AS cos,
-                 row_number() OVER (PARTITION BY vec_id
-                   ORDER BY dot_product(v, cv) / (nrm * cn) DESC, cid) AS rn
-               FROM n CROSS JOIN c),
-        mb AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_base,
-                 sum(CAST(cos AS DECIMAL(18,6))) AS sb
-               FROM ab WHERE rn = 1 GROUP BY cid),
-        md AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_delta,
-                 sum(CAST(cos AS DECIMAL(18,6))) AS sd
-               FROM ad WHERE rn = 1 GROUP BY cid),
-        mf AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_full,
-                 sum(CAST(cos AS DECIMAL(18,6))) AS sf
-               FROM af WHERE rn = 1 GROUP BY cid)
+        WITH ${members("mb", "n_base", "sb", s"NOT ($s12DeltaPred)")},
+        ${members("md", "n_delta", "sd", s12DeltaPred)},
+        ${members("mf", "n_full", "sf", "TRUE")}
         SELECT mf.cid AS cluster,
                coalesce(mb.n_base, 0L) AS n_base,
                coalesce(md.n_delta, 0L) AS n_delta,
@@ -1168,38 +1122,20 @@ object SimilarityOps {
         FROM mf LEFT JOIN mb ON mf.cid = mb.cid
                 LEFT JOIN md ON mf.cid = md.cid""")
     },
-    Some(s"""
-      WITH e AS (SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-                   ($s12DeltaPred) AS is_delta
-                 FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm,
-              is_delta
-            FROM e),
-      c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
-            WHERE vec_id % 50 = 7 AND vec_id < 3200 AND NOT is_delta),
-      sc0 AS (SELECT t.vec_id, t.is_delta, cid,
-                list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                  list_transform(list_zip(t.v, cv), s -> s[1] * s[2])),
-                  (acc, z) -> acc + z) / (t.nrm * cn) AS cos
-              FROM n t CROSS JOIN c),
-      ranked AS (SELECT vec_id, is_delta, cid, cos,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY cos DESC, cid) AS rn
-                 FROM sc0),
-      m AS (SELECT cid, is_delta, cos FROM ranked WHERE rn = 1),
-      mb AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_base,
+    Some(sql"""
+      ${oCorpus(Seq(s"($s12DeltaPred) AS is_delta"))},
+      ${oRanked(s"$ivfSeeds AND NOT is_delta", Seq("is_delta"), cos = true)},
+      m AS (SELECT cluster, is_delta, cos FROM ranked WHERE rn = 1),
+      mb AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_base,
                sum(CAST(cos AS DECIMAL(18,6))) AS sb
-             FROM m WHERE NOT is_delta GROUP BY cid),
-      md AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_delta,
+             FROM m WHERE NOT is_delta GROUP BY cluster),
+      md AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_delta,
                sum(CAST(cos AS DECIMAL(18,6))) AS sd
-             FROM m WHERE is_delta GROUP BY cid),
-      mf AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_full,
+             FROM m WHERE is_delta GROUP BY cluster),
+      mf AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_full,
                sum(CAST(cos AS DECIMAL(18,6))) AS sf
-             FROM m GROUP BY cid)
-      SELECT mf.cid AS cluster,
+             FROM m GROUP BY cluster)
+      SELECT mf.cluster AS cluster,
              coalesce(mb.n_base, 0) AS n_base,
              coalesce(md.n_delta, 0) AS n_delta,
              mf.n_full AS n_total,
@@ -1213,8 +1149,8 @@ object SimilarityOps {
               AND coalesce(mb.sb, CAST(0 AS DECIMAL(18,6)))
                   + coalesce(md.sd, CAST(0 AS DECIMAL(18,6))) = mf.sf)
                AS matches_full
-      FROM mf LEFT JOIN mb ON mf.cid = mb.cid
-              LEFT JOIN md ON mf.cid = md.cid"""),
+      FROM mf LEFT JOIN mb ON mf.cluster = mb.cluster
+              LEFT JOIN md ON mf.cluster = md.cluster"""),
     headline = true)
 
   /** s13 — diversity coreset selection over the embedding space (the
@@ -1245,15 +1181,8 @@ object SimilarityOps {
     "s13_coreset_select",
     (s, d) => {
       normEmbeddings(s, d).createOrReplaceTempView("s13_n")
-      s.sql("""
-        WITH cs AS (SELECT collect_list(named_struct('cid', cid, 'cv', cv,
-                        'cn', cn)) AS cents
-                    FROM (SELECT vec_id AS cid, v AS cv, nrm AS cn
-                          FROM s13_n
-                          WHERE vec_id % 125 = 0 AND vec_id < 8000)),
-        a AS (SELECT /*+ BROADCAST(cs) */ t.vec_id,
-                nearest_centroid(t.v, t.nrm, cents) AS nc
-              FROM s13_n t CROSS JOIN cs),
+      s.sql(s"""
+        WITH a AS (${nearestSql("s13_n", seedCents("s13_n", kmSeeds()))}),
         r AS (SELECT vec_id, cid AS cluster_id, cos,
                 row_number() OVER (PARTITION BY cid
                   ORDER BY cos ASC, vec_id) AS rk_div,
@@ -1272,20 +1201,12 @@ object SimilarityOps {
         FROM r
         WHERE rk_proto = 1 OR rk_div <= greatest(1, n_cell div 4)""")
     },
-    Some(s"""
-      WITH e0 AS (SELECT vec_id,
-                    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e0),
+    Some(sql"""
+      ${oCorpus()},
       c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM n
-            WHERE vec_id % 125 = 0 AND vec_id < 8000),
+            WHERE ${kmSeeds()}),
       sc AS (SELECT t.vec_id, c.cid,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(c.cv, t.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (c.cn * t.nrm) AS cos
+               ${oDot("c.cv", "t.v")} / (c.cn * t.nrm) AS cos
              FROM n t CROSS JOIN c),
       asg AS (SELECT vec_id, cid, cos
               FROM (SELECT vec_id, cid, cos,
@@ -1368,21 +1289,13 @@ object SimilarityOps {
         FROM f1 JOIN c1 ON f1.query_id = c1.query_id
         LEFT JOIN ov ON f1.query_id = ov.query_id""")
     },
-    Some(s"""
-      WITH e AS (SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
+    Some(sql"""
+      ${oCorpus()},
       core AS (SELECT vec_id FROM (${s13.oracle.get.trim}) cs),
       q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
             WHERE $qSet),
       sc AS (SELECT query_id, t.vec_id AS neighbor_id,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(qv, t.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (qn * t.nrm) AS cos,
+               ${oDot("qv", "t.v")} / (qn * t.nrm) AS cos,
                t.vec_id IN (SELECT vec_id FROM core) AS in_core
              FROM q JOIN n t ON t.vec_id <> query_id),
       rf AS (SELECT query_id, neighbor_id, cos,
@@ -1440,7 +1353,7 @@ object SimilarityOps {
     "s16_filtered_knn",
     (s, d) => {
       normEmbeddings(s, d).createOrReplaceTempView("s16_n")
-      s.sql(s"""
+      s.sql(sql"""
         WITH q AS (SELECT vec_id AS query_id, label AS qlab, v AS qv,
                           nrm AS qn
                    FROM s16_n WHERE $qSet),
@@ -1449,35 +1362,19 @@ object SimilarityOps {
                  dot_product(qv, t.v) / (qn * t.nrm) AS cos
                FROM q JOIN s16_n t ON t.label = q.qlab
                WHERE t.vec_id <> q.query_id),
-        r AS (SELECT query_id, neighbor_id, label, cos,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rn
-              FROM sc)
-        SELECT query_id, neighbor_id, label, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= 5""")
+        ${rankCte("query_id", "neighbor_id", carry = "label, ")}
+        ${topK("query_id", "neighbor_id", 5, carry = "label, ")}""")
     },
-    Some(s"""
-      WITH e AS (SELECT vec_id, label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                 FROM embeddings),
-      n AS (SELECT vec_id, label, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e),
+    Some(sql"""
+      ${oCorpus(Seq("label"))},
       q AS (SELECT vec_id AS query_id, label AS qlab, v AS qv, nrm AS qn
             FROM n WHERE $qSet),
       sc AS (SELECT query_id, t.vec_id AS neighbor_id, t.label,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(qv, t.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (qn * t.nrm) AS cos
+               ${oDot("qv", "t.v")} / (qn * t.nrm) AS cos
              FROM q JOIN n t ON t.label = q.qlab
              WHERE t.vec_id <> q.query_id),
-      r AS (SELECT query_id, neighbor_id, label, cos,
-              row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos DESC, neighbor_id) AS rn
-            FROM sc)
-      SELECT query_id, neighbor_id, label, cos, CAST(rn AS BIGINT) AS rn
-      FROM r WHERE rn <= 5"""),
+      ${rankCte("query_id", "neighbor_id", carry = "label, ")}
+      ${topK("query_id", "neighbor_id", 5, carry = "label, ")}"""),
     headline = true)
 
   /** s17's probe budget — deliberately its OWN constant, and smaller
@@ -1514,70 +1411,31 @@ object SimilarityOps {
     "s17_knn_ivf_trained",
     (s, d) => {
       s06Cents(s, d).createOrReplaceTempView("s17_c")
-      s.sql(s"""
-        WITH c AS (SELECT cid, cv, sqrt(dot_product(cv, cv)) AS cn FROM s17_c),
-        sc0 AS (SELECT /*+ BROADCAST(c) */ t.vec_id, c.cid,
-                  row_number() OVER (PARTITION BY t.vec_id
-                    ORDER BY dot_product(t.v, c.cv) / (t.nrm * c.cn) DESC,
-                             c.cid) AS rn
-                FROM s06_n t CROSS JOIN c),
-        qp AS (SELECT a.vec_id AS query_id, a.cid, n.v AS qv, n.nrm AS qn
-               FROM sc0 a JOIN s06_n n ON n.vec_id = a.vec_id
-               WHERE ${qSet.replace("vec_id", "a.vec_id")}
-                 AND a.rn <= $trainedProbes),
-        mem AS (SELECT a.vec_id AS nb, a.cid, n.v, n.nrm
-                FROM sc0 a JOIN s06_n n ON n.vec_id = a.vec_id
-                WHERE a.rn = 1),
-        sc AS (SELECT query_id, nb, dot_product(qv, v) / (qn * nrm) AS cos
-               FROM qp JOIN mem ON mem.cid = qp.cid
-               WHERE nb <> query_id),
-        r AS (SELECT query_id, nb, cos,
-                row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, nb) AS rn
-              FROM sc)
-        SELECT query_id, nb AS neighbor_id, cos, CAST(rn AS BIGINT) AS rn
-        FROM r WHERE rn <= 5""")
+      probeAssign(s, "s06_n", trainedCents("s17_c"), trainedProbes)
+        .createOrReplaceTempView("s17_assign")
+      ivfKnn(s, "s17_assign", "s06_n", trainedProbes, 5, qSet)
+        .toDF("query_id", "neighbor_id", "cos", "rn")
     },
-    Some(s"""
-      WITH e0 AS (SELECT vec_id,
-                    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings),
-      n AS (SELECT vec_id, v,
-              sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-            FROM e0),
-      c1 AS (SELECT vec_id AS cid, v AS cv FROM n
-             WHERE vec_id % 125 = 0 AND vec_id < 8000),
-      ${(1 to lloydRounds).map(oRound).mkString(",")},
-      cT AS (SELECT cid, cv,
-               sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(cv, x -> x * x)), (a, b) -> a + b)) AS cn
-             FROM c${lloydRounds + 1}),
+    Some(sql"""
+      ${oCorpus()},
+      ${oTrained("cT")},
       sc0 AS (SELECT t.vec_id, c.cid,
                 row_number() OVER (PARTITION BY t.vec_id
-                  ORDER BY list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                    list_transform(list_zip(t.v, c.cv), s -> s[1] * s[2])),
-                    (acc, z) -> acc + z) / (t.nrm * c.cn) DESC, c.cid) AS rn
+                  ORDER BY ${oDot("t.v", "c.cv")} / (t.nrm * c.cn) DESC, c.cid) AS rn
               FROM n t CROSS JOIN cT c),
       qp AS (SELECT a.vec_id AS query_id, a.cid, n.v AS qv, n.nrm AS qn
              FROM sc0 a JOIN n ON n.vec_id = a.vec_id
              WHERE ${qSet.replace("vec_id", "a.vec_id")}
                AND a.rn <= $trainedProbes),
-      mem AS (SELECT a.vec_id AS nb, a.cid, n.v, n.nrm
+      mem AS (SELECT a.vec_id AS neighbor_id, a.cid, n.v, n.nrm
               FROM sc0 a JOIN n ON n.vec_id = a.vec_id
               WHERE a.rn = 1),
-      sc AS (SELECT query_id, nb,
-               list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(list_zip(qp.qv, mem.v), s -> s[1] * s[2])),
-                 (acc, z) -> acc + z) / (qp.qn * mem.nrm) AS cos
+      sc AS (SELECT query_id, neighbor_id,
+               ${oDot("qp.qv", "mem.v")} / (qp.qn * mem.nrm) AS cos
              FROM qp JOIN mem ON mem.cid = qp.cid
-             WHERE nb <> query_id),
-      r AS (SELECT query_id, nb, cos,
-              row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cos DESC, nb) AS rn
-            FROM sc)
-      SELECT query_id, nb AS neighbor_id, cos, CAST(rn AS BIGINT) AS rn
-      FROM r WHERE rn <= 5"""),
+             WHERE neighbor_id <> query_id),
+      ${rankCte("query_id", "neighbor_id")}
+      ${topK("query_id", "neighbor_id", 5)}"""),
     headline = true)
 
   val all: Seq[QueryDef] =

@@ -564,7 +564,7 @@ object StreamingGate {
                         FROM s11_batch WHERE ${SimilarityOps.qSet}),
             nq AS (SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM bq),
             c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM s03_n
-                  WHERE vec_id % 50 = 7 AND vec_id < 3200),
+                  WHERE ${SimilarityOps.ivfSeeds}),
             pr AS (SELECT /*+ BROADCAST(c) */ t.vec_id AS query_id, cid,
                      row_number() OVER (PARTITION BY t.vec_id
                        ORDER BY dot_product(t.v, cv) / (t.nrm * cn) DESC,

@@ -126,6 +126,24 @@ class PlanShapeSpec extends AnyFunSuite {
         .sum
       assert(evals == 1, s"$n evaluates nearest_centroid $evals times")
     }
+    // the IVF family assigns through the same kernels (nearest_centroids
+    // for probe lists): a window partitioned by vec_id anywhere in their
+    // plans, staged builds included, is the cross-join spelling come back
+    for (n <- Seq("s03_knn_ivf", "d05_embedding_neardup", "s12_ivf_incremental",
+        "s15_knn_graph", "s17_knn_ivf_trained")) {
+      val deep = deepNodes(n)
+      val byVec = deep.collect { case w: WindowExecBase => w }
+        .filter(_.partitionSpec.exists {
+          case a: AttributeReference => a.name == "vec_id"
+          case _ => false
+        })
+      assert(byVec.isEmpty, s"$n ranks per vec_id in a window: ${byVec.map(_.simpleStringWithNodeId())}")
+      val kernels = deep.flatMap(_.expressions).map(_.collect {
+        case c: graft.functions.NearestCentroid => c
+        case c: graft.functions.NearestCentroids => c
+      }.size).sum
+      assert(kernels > 0, s"$n assigns without nearest_centroid(s)")
+    }
   }
 
   test("q46/q50 evaluate corpus_features exactly once per row") {
