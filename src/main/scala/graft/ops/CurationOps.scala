@@ -603,8 +603,8 @@ object CurationOps {
           SELECT l.cluster_id, l.doc_id, doc.n_chars
           FROM d22_lab l JOIN documents doc ON l.doc_id = doc.doc_id""")
       }.createOrReplaceTempView("d22_mem")
-      s.sql("""
-        WITH tomb AS (SELECT doc_id FROM d22_mem WHERE doc_id % 13 = 4),
+      s.sql(s"""
+        WITH tomb AS (SELECT doc_id FROM d22_mem WHERE ${DedupOps.tombPred("doc_id")}),
         base AS (SELECT cluster_id,
                    max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
                    max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
@@ -656,7 +656,7 @@ object CurationOps {
     },
     Some(s"""
       WITH lab AS (${DedupOps.d06.oracle.get.trim}),
-      tomb AS (SELECT doc_id FROM documents WHERE doc_id % 13 = 4),
+      tomb AS (SELECT doc_id FROM documents WHERE ${DedupOps.tombPred("doc_id")}),
       base AS (SELECT cluster_id,
                  max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
                  max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,

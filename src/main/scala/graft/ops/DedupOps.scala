@@ -33,6 +33,18 @@ object DedupOps {
   private[graft] val minhashRows = 2
   private[graft] val minhashK = minhashBands * minhashRows
 
+  /** Band `bj`'s key of the signature `sg`, the one engine spelling (d02,
+    * q58): unrolled element_at's (r is a load-time constant), NOT a
+    * transform(...) lambda. d02's band frame self-joins in the candidate
+    * step, and Spark's DeduplicateRelations trips an analyzer bug
+    * (UnresolvedException on exprId) when a duplicated relation's plan
+    * carries lambda functions — same landmine s04 dodges with
+    * localCheckpoint. Unrolled scalar exprs also stay inside whole-stage
+    * codegen. */
+  private[graft] val bandKey: String = (1 to minhashRows)
+    .map(i => s"CAST(element_at(sg, bj*$minhashRows + $i) AS STRING)")
+    .mkString("concat_ws(',', ", ", ", ")")
+
   /** The ONE DuckDB spelling of documents → (doc_id, bj, bkey) LSH band
     * rows (normalize → 3-shingles → 2-hash affine MinHash signature →
     * banding), shared by every oracle that consumes band keys (d02's
@@ -83,20 +95,10 @@ object DedupOps {
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
     staged("d02_cand", d) {
       d02Shingles(s, d)
-      // band key spelled as unrolled element_at's (r is a load-time
-      // constant), NOT a transform(...) lambda: this frame self-joins in
-      // the candidate step, and Spark's DeduplicateRelations trips an
-      // analyzer bug (UnresolvedException on exprId) when a duplicated
-      // relation's plan carries lambda functions — same landmine s04
-      // dodges with localCheckpoint. Unrolled scalar exprs also stay
-      // inside whole-stage codegen.
-      val rowRefs = (1 to minhashRows)
-        .map(i => s"CAST(element_at(sg, bj*$minhashRows + $i) AS STRING)")
-        .mkString(", ")
       val bands = staged("d02_bands", d) {
         s.sql(s"""
           WITH sig AS (SELECT doc_id, minhash_sig(sset, $minhashK) AS sg FROM d02_sh)
-          SELECT doc_id, bj, concat_ws(',', $rowRefs) AS bkey
+          SELECT doc_id, bj, $bandKey AS bkey
           FROM sig LATERAL VIEW explode(sequence(0, ${minhashBands - 1})) x AS bj""")
       }
       import s.implicits._
@@ -1274,10 +1276,11 @@ object DedupOps {
       FROM embeddings v LEFT JOIN lab ON lab.id = v.vec_id"""),
     headline = true)
 
-  /** d27's tombstone rule — d22/d23's request-batch stand-in on the
-    * vector id space (swap the predicate for a real deletion feed and
-    * nothing else moves). */
-  private[graft] val d27TombPred = "vec_id % 13 = 4"
+  /** The one tombstone rule: a row whose `id` passes is a deletion
+    * request. It stands in for a day's deletion feed in d22, d23, d27,
+    * d28 and q68, on doc or vector ids (swap the predicate for a real
+    * feed and nothing else moves). */
+  private[graft] def tombPred(id: String): String = s"$id % 13 = 4"
 
   /** From-scratch survivor k-NN graph — d27's PROOF leg: s15's exact
     * pipeline re-run over the tombstone survivors, survivor-only
@@ -1288,7 +1291,7 @@ object DedupOps {
   private[graft] def s15SurvivorKnn(s: SparkSession, d: String): DataFrame = {
     s03Statics(s, d)
     staged("d27_rknn", d) {
-      s.sql(s"SELECT vec_id, v, nrm FROM s03_n WHERE NOT ($d27TombPred)")
+      s.sql(s"SELECT vec_id, v, nrm FROM s03_n WHERE NOT (${tombPred("vec_id")})")
         .createOrReplaceTempView("d27_sn")
       probeAssign(s, "d27_sn", seedCents("d27_sn", ivfSeeds), ivfProbes)
         .createOrReplaceTempView("d27_sassign")
@@ -1333,10 +1336,10 @@ object DedupOps {
       staged("d27_lab", d) { d24.run(s, d) }.createOrReplaceTempView("d27_lab")
       staged("d27_mem", d) {
         s.sql(s"""
-          WITH tomb AS (SELECT vec_id FROM d27_lab WHERE $d27TombPred),
+          WITH tomb AS (SELECT vec_id FROM d27_lab WHERE ${tombPred("vec_id")}),
           aff AS (SELECT DISTINCT l.sem_cluster_id AS oc
                   FROM d27_lab l JOIN tomb t ON l.vec_id = t.vec_id)
-          SELECT l.vec_id, l.sem_cluster_id AS oc, ($d27TombPred) AS is_tomb
+          SELECT l.vec_id, l.sem_cluster_id AS oc, (${tombPred("l.vec_id")}) AS is_tomb
           FROM d27_lab l JOIN aff a ON l.sem_cluster_id = a.oc""")
       }.createOrReplaceTempView("d27_mem")
       // delta edges: stored mutual τ-edges with BOTH endpoints surviving —
@@ -1388,12 +1391,12 @@ object DedupOps {
       WITH RECURSIVE
       lab AS (${d24.oracle.get.trim}),
       knn AS (${s15OracleSql("TRUE").trim}),
-      rknn AS (${s15OracleSql(s"NOT ($d27TombPred)").trim}),
-      tomb AS (SELECT vec_id FROM embeddings WHERE $d27TombPred),
+      rknn AS (${s15OracleSql(s"NOT (${tombPred("vec_id")})").trim}),
+      tomb AS (SELECT vec_id FROM embeddings WHERE ${tombPred("vec_id")}),
       aff AS (SELECT DISTINCT l.sem_cluster_id AS oc
               FROM lab l JOIN tomb t ON l.vec_id = t.vec_id),
       mem AS (SELECT l.vec_id, l.sem_cluster_id AS oc,
-                (l.$d27TombPred) AS is_tomb
+                (${tombPred("l.vec_id")}) AS is_tomb
               FROM lab l JOIN aff a ON l.sem_cluster_id = a.oc),
       surv AS (SELECT vec_id, oc FROM mem WHERE NOT is_tomb),
       sedges AS (SELECT k.vec_id AS a, k.neighbor_id AS b

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import Q._
 
 /** Multimodal-column plumbing: media payloads ride as opaque `binary`
@@ -456,6 +457,7 @@ object MultimodalOps {
 
   private[graft] case class PBandRow(
       doc_id: Long, bi: Long, bv: String, ahash: String)
+      extends StreamingGate.Claimant
   private[graft] case class POwner(owner: Long, ahash: String)
   private[graft] case class PerceptualHit(
       bi: Long, owner_doc: Long, dup_doc: Long)
@@ -466,29 +468,28 @@ object MultimodalOps {
     n
   }
 
-  /** m07's stream, factored from the gate staging (q58's
-    * [[StreamingGate.neardupHits]] pattern) so StreamingSpec can drive it
-    * under the RocksDB provider: media batches arrive as a file stream,
+  /** m07's stream, parameterized on the state-store provider so
+    * StreamingSpec can drive it under RocksDB: media batches arrive as a
+    * parity-staged file stream ([[StreamingGate.parityReplay]]),
     * each image row-wise aHashes ([[perceptualHash]] — a stateless typed
     * map, streaming-legal), explodes into its `m06Bands` band keys, and
-    * `flatMapGroupsWithState` keyed by (band, band-value) keeps ONE owner
-    * per bucket — the first batch's min-doc claimant WITH its full hash.
-    * A later-batch doc colliding in a band is emitted as a suppression
-    * hit only if its full-hash Hamming distance to the owner is within
-    * `m06MaxHam` — m06's verify step executed in-state, so the streaming
-    * operator has banding's exact recall (pigeonhole) AND its precision.
+    * `flatMapGroupsWithState` keyed by (band, band-value) runs q58's
+    * bucket [[StreamingGate.registry]]: ONE owner per bucket, the first
+    * batch's min-doc claimant WITH its full hash. A later-batch doc
+    * colliding in a band is emitted as a suppression hit only if its
+    * full-hash Hamming distance to the owner is within `m06MaxHam` —
+    * m06's verify step executed in-state, so the streaming operator has
+    * banding's exact recall (pigeonhole) AND its precision.
     *
     * Scale: state is one (owner, 64-char hash) row per DISTINCT live band
     * key ≪ corpus; per batch one band-key shuffle of the new docs only.
     * Unbounded deployments bound the registry exactly like q58 (RocksDB
     * provider + the arrival-time TTL of [[StreamingGate.neardupHits]]);
     * the bounded gate run uses NoTimeout. */
-  private[graft] def perceptualHitsStream(
-      s: SparkSession, inDir: java.nio.file.Path,
-      sch: org.apache.spark.sql.types.StructType,
-      provider: Option[String]): DataFrame = {
+  private[graft] def perceptualStream(
+      s: SparkSession, d: String, provider: Option[String]): DataFrame = {
     import s.implicits._
-    StreamingGate.replay(s, inDir, sch, provider) { docs =>
+    StreamingGate.parityReplay(s, d, "documents", provider) { docs =>
       perceptualHash(s, mediaOf(docs))
         .selectExpr("doc_id", "ahash",
           s"explode(transform(sequence(0, ${m06Bands - 1}), " +
@@ -497,31 +498,14 @@ object MultimodalOps {
         .selectExpr("doc_id", "b.bi AS bi", "b.bv AS bv", "ahash")
         .as[PBandRow]
         .groupByKey(r => (r.bi, r.bv))
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (key: (Long, String), rows: Iterator[PBandRow],
-           st: org.apache.spark.sql.streaming.GroupState[POwner]) =>
-            val rs = rows.toSeq
-            if (st.exists) {
-              val o = st.get
-              rs.filter(r => hammingStr(r.ahash, o.ahash) <= m06MaxHam)
-                .map(_.doc_id).sorted.iterator
-                .map(id => PerceptualHit(key._1, o.owner, id))
-            } else {
-              val first = rs.minBy(_.doc_id)
-              st.update(POwner(first.doc_id, first.ahash))
-              Iterator.empty
-            }
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (key: (Long, String), rows: Iterator[PBandRow], st: GroupState[POwner]) =>
+            StreamingGate.registry(rows, st)(r => POwner(r.doc_id, r.ahash),
+                (r, o) => hammingStr(r.ahash, o.ahash) <= m06MaxHam)
+              .map { case (o, r) => PerceptualHit(key._1, o.owner, r.doc_id) }
         }
     }
   }
-
-  private[graft] def perceptualStream(
-      s: SparkSession, d: String, provider: Option[String]): DataFrame =
-    perceptualHitsStream(s,
-      StreamingGate.stageParityBatches(s, d, "documents"),
-      table(s, d, "documents").schema, provider)
 
   /** Streaming perceptual near-dup — m06's banded image key running
     * through q58's ingest-time bucket-registry FSM: the composition a

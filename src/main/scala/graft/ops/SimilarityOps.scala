@@ -163,12 +163,16 @@ object SimilarityOps {
     * unique by construction (one rn = 1 row per member, distinct clusters
     * per source), so there is no candidate DISTINCT and no re-join to
     * score: that spelling was killed unfinished after 20 minutes at 64×
-    * (~10⁹-row distinct plus two vector-carrying re-joins). */
+    * (~10⁹-row distinct plus two vector-carrying re-joins). The sources
+    * come from the views `qAssign` and `qCorpus`, by default `assign` and
+    * `corpus` themselves; s11 passes a micro-batch's own. */
   private[graft] def ivfKnn(s: SparkSession, assign: String, corpus: String, p: Int,
-      k: Int, qPred: String = "TRUE"): DataFrame =
+      k: Int, qPred: String = "TRUE", qAssign: Option[String] = None,
+      qCorpus: Option[String] = None): DataFrame =
     s.sql(sql"""
       WITH qp AS (SELECT a.vec_id AS src, a.cluster, n.v AS qv, n.nrm AS qn
-                  FROM $assign a JOIN $corpus n ON n.vec_id = a.vec_id
+                  FROM ${qAssign.getOrElse(assign)} a
+                  JOIN ${qCorpus.getOrElse(corpus)} n ON n.vec_id = a.vec_id
                   WHERE a.rn <= $p AND ${qPred.replace("vec_id", "a.vec_id")}),
       mem AS (SELECT a.vec_id AS nb, a.cluster, n.v, n.nrm
               FROM $assign a JOIN $corpus n ON n.vec_id = a.vec_id

@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 
 /** Streaming rows of the oracle gate — the reference is FUNDAMENTALLY an
@@ -55,7 +55,7 @@ object StreamingGate {
   }
 
   /** A staged input dir as a file stream: one file per micro-batch, taken
-    * in file-mtime order (the staging helpers set the mtimes). */
+    * in file-mtime order ([[stage]] sets the mtimes). */
   private[graft] def fileStream(
       s: SparkSession, inDir: Path, sch: StructType): DataFrame =
     s.readStream.schema(sch).option("maxFilesPerTrigger", "1")
@@ -90,33 +90,48 @@ object StreamingGate {
     s.read.schema(out.schema).parquet(sink)
   }
 
-  private val SENTINEL = "__sentinel__"
-  private val SENT_NS: Long = 4102444800L * 1000000000L // 2100-01-01T00:00Z
+  /** One batch of a staged stream input ([[stage]]). */
+  private[graft] sealed trait Batch
+  /** The table's part files, linked (copied if the filesystem refuses
+    * links). A link keeps its source's mtime, so only batch 0 links. */
+  private[graft] final case class Linked(d: String, table: String) extends Batch
+  /** The table's part files, copied. */
+  private[graft] final case class Copied(d: String, table: String) extends Batch
+  /** This frame, written as one file. */
+  private[graft] final case class Written(df: DataFrame) extends Batch
 
-  /** Write a one-row events file with the given raw schema directly into
-    * `dest` (Spark writes directories; the part file is moved out). */
-  private def writeSentinel(
-      s: SparkSession,
-      sch: org.apache.spark.sql.types.StructType,
-      tsNs: Long,
-      dest: Path): Unit = {
-    // the sentinel must be written in the RAW input schema (it lands in the
-    // same streaming input dir as the driver's files) — so each supported
-    // ts encoding needs its matching external JVM type
-    val tsVal: Any = sch("ts").dataType match {
-      case LongType => tsNs
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        java.time.LocalDateTime.ofEpochSecond(
-          tsNs / 1000000000L, (tsNs % 1000000000L).toInt,
-          java.time.ZoneOffset.UTC)
-      case _ => new java.sql.Timestamp(tsNs / 1000000L)
+  /** The one stream-input stager: a fresh input dir holding `batches` in
+    * order. Batch i's files are named `i_…` and, from batch 1 on, dated
+    * i minutes after staging began, so a [[fileStream]] (mtime order, one
+    * file per trigger) takes the batches in the order given. The date is
+    * never set through a link: it would land on the source file. */
+  private[graft] def stage(name: String, batches: Batch*): Path = {
+    val inDir = tempDir(s"graft-$name-in")
+    val now = System.currentTimeMillis()
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val (src, tag) = b match {
+        case Linked(d, t) => (Paths.get(s"$d/$t.parquet").toAbsolutePath, t)
+        case Copied(d, t) => (Paths.get(s"$d/$t.parquet").toAbsolutePath, t)
+        case Written(df) =>
+          val tmp = tempDir(s"graft-$name-b")
+          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          (tmp, "batch")
+      }
+      val parts = if (Files.isDirectory(src)) parquetParts(src) else Seq(src)
+      parts.zipWithIndex.foreach { case (p, j) =>
+        val dest = inDir.resolve(f"${i}_${tag}_$j%04d.parquet")
+        b match {
+          case _: Linked =>
+            require(i == 0, s"$name: only batch 0 may link (batch $i)")
+            try Files.createSymbolicLink(dest, p)
+            catch { case _: Throwable => Files.copy(p, dest) }
+          case _: Copied => Files.copy(p, dest)
+          case _: Written => Files.move(p, dest)
+        }
+        if (i > 0) Files.setLastModifiedTime(dest, FileTime.fromMillis(now + 60000L * i))
+      }
     }
-    val row = Row(-1L, tsVal, -1L, SENTINEL, 0.0, "{}")
-    val tmp = tempDir("graft-q42-sent")
-    s.createDataFrame(java.util.Collections.singletonList(row), sch)
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = parquetParts(tmp).head
-    Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
+    inDir
   }
 
   /** The `.parquet` part files of a directory. `Files.list` holds an open
@@ -130,35 +145,24 @@ object StreamingGate {
     finally st.close()
   }
 
-  /** Symlink (or copy) every part file of `table`.parquet into `inDir`
-    * under an ordered name prefix. */
-  private def linkParts(d: String, table: String, inDir: Path): Unit = {
-    val src = Paths.get(s"$d/$table.parquet").toAbsolutePath
-    val parts: Seq[Path] =
-      if (Files.isDirectory(src)) parquetParts(src)
-      else Seq(src)
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val link = inDir.resolve(f"0_${table}_$i%04d.parquet")
-      try Files.createSymbolicLink(link, p)
-      catch { case _: Throwable => Files.copy(p, link) }
-    }
-  }
+  private val SENTINEL = "__sentinel__"
+  private val SENT_NS: Long = 4102444800L * 1000000000L // 2100-01-01T00:00Z
 
-  /** Populate a streaming input dir: the real events file(s) symlinked
-    * (copied if the filesystem refuses links) plus two sentinel files
-    * whose mtimes force them to batch AFTER the real data. */
-  private def stageInput(s: SparkSession, d: String): Path = {
-    val inDir = tempDir("graft-q42-in")
-    linkParts(d, "events", inDir)
-    val sch = Q.table(s, d, "events").schema
-    val now = System.currentTimeMillis()
-    val s1 = inDir.resolve("1_sentinel.parquet")
-    val s2 = inDir.resolve("2_sentinel.parquet")
-    writeSentinel(s, sch, SENT_NS, s1)
-    writeSentinel(s, sch, SENT_NS + 86400L * 1000000000L, s2)
-    Files.setLastModifiedTime(s1, FileTime.fromMillis(now + 60000))
-    Files.setLastModifiedTime(s2, FileTime.fromMillis(now + 120000))
-    inDir
+  /** A one-row SENTINEL events batch at `tsNs`. The row is written in the
+    * RAW input schema `sch` (it lands in the same streaming input dir as
+    * the events files), so each supported ts encoding needs its matching
+    * external JVM type. */
+  private def sentinel(s: SparkSession, sch: StructType, tsNs: Long): Batch = {
+    val tsVal: Any = sch("ts").dataType match {
+      case LongType => tsNs
+      case org.apache.spark.sql.types.TimestampNTZType =>
+        java.time.LocalDateTime.ofEpochSecond(
+          tsNs / 1000000000L, (tsNs % 1000000000L).toInt,
+          java.time.ZoneOffset.UTC)
+      case _ => new java.sql.Timestamp(tsNs / 1000000L)
+    }
+    val row = Row(-1L, tsVal, -1L, SENTINEL, 0.0, "{}")
+    Written(s.createDataFrame(java.util.Collections.singletonList(row), sch))
   }
 
   val q42 = QueryDef(
@@ -168,7 +172,10 @@ object StreamingGate {
       // one file per batch keeps the sentinels in their own batches:
       // watermark emission in Append mode is always one batch behind the
       // data that advanced it
-      replay(s, stageInput(s, d), Q.table(s, d, "events").schema) { raw =>
+      val sch = Q.table(s, d, "events").schema
+      val inDir = stage("q42", Linked(d, "events"), sentinel(s, sch, SENT_NS),
+        sentinel(s, sch, SENT_NS + 86400L * 1000000000L))
+      replay(s, inDir, sch) { raw =>
         // same encoding normalization as Q.events (batch side)
         Q.normalizeTs(raw)
           .withWatermark("ts", "10 minutes")
@@ -223,20 +230,10 @@ object StreamingGate {
     * spill-to-disk provider is the deployment setting. */
   private[graft] def dedupStream(
       s: SparkSession, d: String, provider: Option[String]): DataFrame = {
-    val sch = Q.table(s, d, "documents").schema
-    val inDir = tempDir("graft-q49-in")
-    linkParts(d, "documents", inDir)
-    // replay: same bytes under a later name — batch 2 is all duplicates.
-    // A copy, not a link: the later mtime that orders it second would
-    // otherwise be set through the link on the source file itself.
-    val src = Paths.get(s"$d/documents.parquet").toAbsolutePath
-    if (Files.isRegularFile(src)) {
-      val replay = inDir.resolve("1_documents_replay.parquet")
-      Files.copy(src, replay)
-      Files.setLastModifiedTime(replay,
-        FileTime.fromMillis(System.currentTimeMillis() + 60000))
-    }
-    replay(s, inDir, sch, provider) {
+    // replay: the same bytes again as a later batch, all duplicates; a
+    // copy, so the later date never lands on the source file
+    val inDir = stage("q49", Linked(d, "documents"), Copied(d, "documents"))
+    replay(s, inDir, Q.table(s, d, "documents").schema, provider) {
       _.select(expr(s"md5(${Q.sNorm})").as("fp")).dropDuplicates("fp")
     }
   }
@@ -272,16 +269,11 @@ object StreamingGate {
     (s, d) => {
       import s.implicits._
       val ev = Q.events(s, d) // batch read, ns→us normalized
-      val pDir = tempDir("graft-q53-p")
-      val cDir = tempDir("graft-q53-c")
-      ev.where($"event_type" === "purchase").coalesce(1)
-        .write.mode("overwrite").parquet(pDir.toString)
+      val pDir = stage("q53-p", Written(ev.where($"event_type" === "purchase")))
       // two click files => two source batches => cross-batch join state
       val clicks = ev.where($"event_type" === "click")
-      clicks.where($"event_id" % 2 === 0).coalesce(1)
-        .write.mode("append").parquet(cDir.toString)
-      clicks.where($"event_id" % 2 =!= 0).coalesce(1)
-        .write.mode("append").parquet(cDir.toString)
+      val cDir = stage("q53-c", Written(clicks.where($"event_id" % 2 === 0)),
+        Written(clicks.where($"event_id" % 2 =!= 0)))
       // Watermark delay must exceed the EVENT-TIME SPAN of the replay, not
       // a deployment-realistic lateness: batch N's late-record filter uses
       // the watermark from before batch N-1, so with a short delay a third
@@ -312,17 +304,42 @@ object StreamingGate {
       WHERE p.event_type = 'purchase' AND c.event_type = 'click'
         AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts"""))
 
+  /** A row of a bucket [[registry]]: the document claiming or hitting
+    * its bucket. */
+  private[graft] trait Claimant { def doc_id: Long }
+
+  /** The one bucket registry body (q58, m07 and d20), for one bucket's
+    * rows of one micro-batch. On the bucket's first batch its min-doc_id
+    * row claims it: `claim` makes the owner state, folded in one pass
+    * with O(1) memory, and nothing is emitted. On a later batch the rows
+    * passing `verify` against the owner stream back lazily as (owner,
+    * row) hits, touching neither the iterator up front nor the state.
+    * Hits are strictly cross-batch; same-batch collisions are the batch
+    * query's job. The runtime calls a group only with rows, except on a
+    * timeout, which the caller handles first. */
+  private[graft] def registry[R <: Claimant, S](rows: Iterator[R], st: GroupState[S])(
+      claim: R => S, verify: (R, S) => Boolean = (_: R, _: S) => true): Iterator[(S, R)] =
+    if (st.exists) {
+      val o = st.get
+      rows.filter(verify(_, o)).map(o -> _)
+    } else {
+      var first = rows.next()
+      rows.foreach(r => if (r.doc_id < first.doc_id) first = r)
+      st.update(claim(first))
+      Iterator.empty
+    }
+
   /** One LSH band-key group's streaming state: the first-arriving
     * (min-id within its batch) document owning this bucket. A band row
     * carries its input file's arrival time, the TTL clock. */
   private[graft] case class BandRow(
       doc_id: Long, bj: Long, bkey: String, arrival: java.sql.Timestamp)
+      extends Claimant
   private[graft] case class BucketOwner(owner: Long)
   private[graft] case class DupHit(bj: Long, owner_doc: Long, dup_doc: Long)
 
-  /** Stage `table` into a fresh streaming input dir as two doc_id-parity
-    * batches with ordered names + mtimes and `maxFilesPerTrigger=1` on
-    * the reader — batch membership is a pure function of the DATA
+  /** Stage `table` into a fresh streaming input dir ([[stage]]) as two
+    * doc_id-parity batches, even then odd — batch membership is a pure function of the DATA
     * (batch = doc_id % 2), which is what makes a cross-batch streaming
     * operator's output oracle-checkable. Shared by q58, m07, s11, d20,
     * d23, q71 and d28. */
@@ -330,28 +347,24 @@ object StreamingGate {
       s: SparkSession, d: String, table: String,
       parity: String = "doc_id % 2"): Path = {
     val rows = Q.table(s, d, table)
-    val inDir = tempDir(s"graft-$table-parity-in")
-    def writeBatch(par: Int, name: String, mtPlus: Long): Unit = {
-      val tmp = tempDir(s"graft-$table-parity-b")
-      rows.where(expr(parity) === par).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = parquetParts(tmp).head
-      val dest = inDir.resolve(name)
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest,
-        FileTime.fromMillis(System.currentTimeMillis() + mtPlus))
-    }
-    writeBatch(0, "0_even.parquet", 0)
-    writeBatch(1, "1_odd.parquet", 60000)
-    inDir
+    stage(s"$table-parity", Written(rows.where(expr(parity) === 0)),
+      Written(rows.where(expr(parity) === 1)))
   }
+
+  /** [[replay]] over `table` staged as two parity batches
+    * ([[stageParityBatches]]), read with the table's own schema. */
+  private[graft] def parityReplay(s: SparkSession, d: String, table: String,
+      provider: Option[String], parity: String = "doc_id % 2")(
+      plan: DataFrame => Dataset[_]): DataFrame =
+    replay(s, stageParityBatches(s, d, table, parity), Q.table(s, d, table).schema,
+      provider)(plan)
 
   /** Streaming NEAR-duplicate suppression — the ingest-time twin of d02:
     * documents arrive in batches, each explodes into its MinHash/LSH band
     * keys (the identical `shingle_set`/`minhash_sig` native expressions
     * and banding dial as d02), and `flatMapGroupsWithState` keyed by
-    * (band, band-key) keeps ONE owner per bucket: the first batch's
-    * min-doc_id claimant. A document colliding with a bucket owned by an
+    * (band, band-key) runs the bucket [[registry]]: ONE owner per bucket,
+    * the first batch's min-doc_id claimant. A document colliding with a bucket owned by an
     * EARLIER batch is emitted as a suppression hit (band, owner, dup) —
     * exactly the candidate edge d02's batch self-join finds, discovered
     * incrementally with no self-join and no reprocessing of old batches.
@@ -389,7 +402,7 @@ object StreamingGate {
     * `ttlMs` is the bucket TTL — the bounded-state dial the scaladoc
     * above promises — on the ARRIVAL clock: a row's event time is its
     * input file's modification time (`_metadata.file_modification_time`,
-    * the order the staging helpers already batch by), under a zero-delay
+    * the order [[stage]] already batches by), under a zero-delay
     * watermark. `Some(ms)` switches the registry to `EventTimeTimeout`;
     * every touch (ownership claim OR a suppressed duplicate) re-arms the
     * bucket at its batch's arrival + `ms`, so only genuinely cold buckets
@@ -417,47 +430,34 @@ object StreamingGate {
       dir: Path): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     import s.implicits._
-    val k = DedupOps.minhashK
-    val rowRefs = (1 to DedupOps.minhashRows)
-      .map(i => s"CAST(element_at(sg, bj*${DedupOps.minhashRows} + $i) AS STRING)")
-      .mkString(", ")
     val timeoutConf =
-      if (ttlMs.isDefined)
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout
-      else org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout
+      if (ttlMs.isDefined) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout
     replay(s, inDir, sch, provider, dir) {
       _.selectExpr("doc_id", "shingle_set(text, 3) AS sset",
           "_metadata.file_modification_time AS arrival")
         .withWatermark("arrival", "0 seconds")
         .where("size(sset) >= 1")
-        .selectExpr("doc_id", s"minhash_sig(sset, $k) AS sg", "arrival")
+        .selectExpr("doc_id", s"minhash_sig(sset, ${DedupOps.minhashK}) AS sg", "arrival")
         .selectExpr("doc_id", "sg", "arrival",
           s"explode(sequence(0, ${DedupOps.minhashBands - 1})) AS bj")
         .selectExpr("doc_id", "CAST(bj AS BIGINT) AS bj",
-          s"concat_ws(',', $rowRefs) AS bkey", "arrival")
+          s"${DedupOps.bandKey} AS bkey", "arrival")
         .as[BandRow]
         .groupByKey(r => (r.bj, r.bkey))
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append, timeoutConf) {
-          (key: (Long, String), rows: Iterator[BandRow],
-           st: org.apache.spark.sql.streaming.GroupState[BucketOwner]) =>
+        .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
+          (key: (Long, String), rows: Iterator[BandRow], st: GroupState[BucketOwner]) =>
             if (st.hasTimedOut) {
               st.remove()
               buckets.foreach(_.add(-1))
               Iterator.empty
             } else {
               val rs = rows.toSeq
-              val out = if (st.exists) {
-                val o = st.get.owner
-                rs.map(_.doc_id).sorted.iterator.map(id => DupHit(key._1, o, id))
-              } else {
-                st.update(BucketOwner(rs.map(_.doc_id).min))
-                buckets.foreach(_.add(1))
-                Iterator.empty
-              }
+              if (!st.exists) buckets.foreach(_.add(1))
+              val hits = registry(rs.iterator, st)(r => BucketOwner(r.doc_id))
               ttlMs.foreach(t =>
                 st.setTimeoutTimestamp(rs.map(_.arrival.getTime).max + t))
-              out
+              hits.map { case (o, r) => DupHit(key._1, o.owner, r.doc_id) }
             }
         }
     }
@@ -490,8 +490,7 @@ object StreamingGate {
     "q64_streaming_enrich",
     (s, d) => {
       import s.implicits._
-      val inDir = tempDir("graft-q64-in")
-      linkParts(d, "events", inDir)
+      val inDir = stage("q64", Linked(d, "events"))
       val cust = Q.table(s, d, "customer")
         .select($"c_custkey", $"c_nationkey", $"c_mktsegment")
       replay(s, inDir, Q.table(s, d, "events").schema) {
@@ -511,12 +510,12 @@ object StreamingGate {
     * batch's QUERY vectors (s02/s03's `qSet`) probe the STATIC corpus
     * IVF index ([[SimilarityOps.s03Statics]]: normalized corpus + probe
     * assignments, staged once before the stream starts) for their top-5
-    * cosine neighbors. Per batch the logic is stateless — assign the
-    * streamed vector to its probe centroids (same broadcast-centroid
-    * arg-max as the batch row), join the probed inverted lists, score,
-    * rank — so the emitted SET is batch-split invariant and the oracle
-    * is s03's UNCHANGED batch oracle: the streaming pipeline must
-    * reproduce the batch result exactly.
+    * cosine neighbors. Per batch the logic is stateless — the batch's
+    * vectors take their probe lists through the batch row's
+    * [[SimilarityOps.probeAssign]] and search the static members through
+    * its [[SimilarityOps.ivfKnn]] — so the emitted SET is batch-split
+    * invariant and the oracle is s03's UNCHANGED batch oracle: the
+    * streaming pipeline must reproduce the batch result exactly.
     *
     * Spelled with `foreachBatch` (the production pattern for
     * stream-static joins needing per-batch ranking: append-mode
@@ -527,6 +526,7 @@ object StreamingGate {
   val s11 = QueryDef(
     "s11_streaming_knn",
     (s, d) => {
+      import SimilarityOps.{ivfProbes, ivfSeeds}
       graft.functions.GraftFunctions.register(s)
       SimilarityOps.s03Statics(s, d)
       // hand the static index to the micro-batch session as FILES: the
@@ -539,7 +539,6 @@ object StreamingGate {
       val aPath = tempDir("graft-s11-assign").toString
       s.table("s03_n").write.mode("overwrite").parquet(nPath)
       s.table("s03_assign").write.mode("overwrite").parquet(aPath)
-      val sch = Q.table(s, d, "embeddings").schema
       // batch membership = (vec_id div 100) % 2: the query set is
       // vec_id % 100 = 0 (all even ids), so a plain id-parity split would
       // land every query in one batch — this split alternates QUERIES
@@ -547,51 +546,33 @@ object StreamingGate {
       val inDir = stageParityBatches(s, d, "embeddings",
         parity = "(vec_id div 100) % 2")
       val (outDir, ckpt) = sinkDirs(tempDir("graft-s11"))
-      val q = fileStream(s, inDir, sch)
+      fileStream(s, inDir, Q.table(s, d, "embeddings").schema)
         .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
           // the micro-batch Dataset lives in a session CLONED at stream
           // start (temp views + functions inherited) — register and query
           // there, not on the outer session, or the view is invisible
           val bs = batch.sparkSession
           graft.functions.GraftFunctions.register(bs)
-          batch.createOrReplaceTempView("s11_batch")
           bs.read.parquet(nPath).createOrReplaceTempView("s03_n")
           bs.read.parquet(aPath).createOrReplaceTempView("s03_assign")
-          bs.sql(s"""
-            WITH bq AS (SELECT vec_id,
-                          transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                        FROM s11_batch WHERE ${SimilarityOps.qSet}),
-            nq AS (SELECT vec_id, v, sqrt(dot_product(v, v)) AS nrm FROM bq),
-            c AS (SELECT vec_id AS cid, v AS cv, nrm AS cn FROM s03_n
-                  WHERE ${SimilarityOps.ivfSeeds}),
-            pr AS (SELECT /*+ BROADCAST(c) */ t.vec_id AS query_id, cid,
-                     row_number() OVER (PARTITION BY t.vec_id
-                       ORDER BY dot_product(t.v, cv) / (t.nrm * cn) DESC,
-                                cid) AS rn
-                   FROM nq t CROSS JOIN c),
-            probes AS (SELECT query_id, cid AS cluster FROM pr
-                       WHERE rn <= ${SimilarityOps.ivfProbes}),
-            members AS (SELECT vec_id, cluster FROM s03_assign WHERE rn = 1),
-            cand AS (SELECT DISTINCT p.query_id, m.vec_id AS neighbor_id
-                     FROM probes p JOIN members m ON m.cluster = p.cluster
-                     WHERE m.vec_id <> p.query_id),
-            sc AS (SELECT cand.query_id, cand.neighbor_id,
-                     dot_product(q.v, t.v) / (q.nrm * t.nrm) AS cos
-                   FROM cand JOIN nq q ON q.vec_id = cand.query_id
-                             JOIN s03_n t ON t.vec_id = cand.neighbor_id),
-            r AS (SELECT query_id, neighbor_id, cos,
-                    row_number() OVER (PARTITION BY query_id
-                                       ORDER BY cos DESC, neighbor_id) AS rn
-                  FROM sc)
-            SELECT query_id, neighbor_id, cos, CAST(rn AS BIGINT) AS rn,
-                   CAST($batchId AS BIGINT) AS batch_id
-            FROM r WHERE rn <= 5""")
+          batch.where(SimilarityOps.qSet)
+            .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
+            .selectExpr("vec_id", "v", "sqrt(dot_product(v, v)) AS nrm")
+            .createOrReplaceTempView("s11_q")
+          SimilarityOps.probeAssign(bs, "s11_q",
+            SimilarityOps.seedCents("s03_n", ivfSeeds), ivfProbes)
+            .createOrReplaceTempView("s11_assign")
+          SimilarityOps.ivfKnn(bs, "s03_assign", "s03_n", ivfProbes, 5,
+              qAssign = Some("s11_assign"), qCorpus = Some("s11_q"))
+            .toDF("query_id", "neighbor_id", "cos", "rn")
+            .withColumn("batch_id", lit(batchId))
             // foreachBatch is at-least-once: a replayed micro-batch must
             // not duplicate rows in the sink. Standard idempotence
             // pattern — partition by batchId + dynamic-partition
             // overwrite, so a retry REPLACES its own batch's output and
-            // never touches other batches' (round-10 advice item).
+            // never touches other batches' (SCALE.md "One stream
+            // vocabulary").
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
@@ -601,39 +582,26 @@ object StreamingGate {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+        .awaitTermination()
       s.read.parquet(outDir).drop("batch_id")
     },
     // the streaming pipeline must reproduce the batch result exactly
     SimilarityOps.s03.oracle)
 
-  private[graft] case class SpanRow(doc_id: Long, p: Long, h: String)
+  private[graft] case class SpanRow(doc_id: Long, p: Long, h: String) extends Claimant
   private[graft] case class SpanHit(doc_id: Long, p: Long)
 
-  /** d20's per-shingle FSM body, extracted so the spec pins its ONE
-    * load-bearing memory property: per-group memory is O(1) in the
-    * batch, NEVER O(occurrences). The round-11 spelling did
-    * `rows.toSeq.sortBy(...)` — a universal-boilerplate shingle
-    * occurring millions of times in one batch landed in one in-memory
-    * Seq in one task (round-11 verdict item 3). Now: a hash already
-    * owned (state exists) streams its occurrences out LAZILY without
-    * touching the iterator up front (the sort existed only for
-    * deterministic output order, which the parquet sink + sorted oracle
-    * compare never needed); an unseen hash folds the iterator into a
-    * running min — one Long of state, no buffering either way. State
-    * updates stay inside the function call (the lazy branch performs
-    * none), as `flatMapGroupsWithState` requires. */
-  private[graft] def spanFsm(
-      rows: Iterator[SpanRow],
-      st: org.apache.spark.sql.streaming.GroupState[BucketOwner])
+  /** d20's per-shingle FSM body: the bucket [[registry]], extracted so
+    * the spec pins its ONE load-bearing memory property: per-group
+    * memory is O(1) in the batch, NEVER O(occurrences), however often a
+    * universal-boilerplate shingle occurs in one batch (SCALE.md "One
+    * stream vocabulary"). An owned hash streams its occurrences out
+    * lazily; an unseen hash folds the iterator into its min-doc_id row.
+    * State updates stay inside the function call (the lazy branch
+    * performs none), as `flatMapGroupsWithState` requires. */
+  private[graft] def spanFsm(rows: Iterator[SpanRow], st: GroupState[BucketOwner])
       : Iterator[SpanHit] =
-    if (st.exists) rows.map(r => SpanHit(r.doc_id, r.p))
-    else {
-      var mn = Long.MaxValue
-      while (rows.hasNext) { val r = rows.next(); if (r.doc_id < mn) mn = r.doc_id }
-      st.update(BucketOwner(mn))
-      Iterator.empty
-    }
+    registry(rows, st)(r => BucketOwner(r.doc_id)).map { case (_, r) => SpanHit(r.doc_id, r.p) }
 
   /** Streaming ingest-time SUBSTRING dedup — d19's variable-length exact
     * span removal at the point of ingest (the place a production pipeline
@@ -662,8 +630,7 @@ object StreamingGate {
     graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val W = CurationOps.W
-    replay(s, stageParityBatches(s, d, "documents"),
-        Q.table(s, d, "documents").schema, provider) {
+    parityReplay(s, d, "documents", provider) {
       _.where("length(text) >= 1")
         .selectExpr("doc_id", s"split(${Q.sNorm}, ' ') AS t")
         .where(s"size(t) >= $W")
@@ -673,11 +640,8 @@ object StreamingGate {
           s"md5(array_join(slice(t, p + 1, $W), ' ')) AS h")
         .as[SpanRow]
         .groupByKey(_.h)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (_: String, rows: Iterator[SpanRow],
-           st: org.apache.spark.sql.streaming.GroupState[BucketOwner]) =>
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (_: String, rows: Iterator[SpanRow], st: GroupState[BucketOwner]) =>
             spanFsm(rows, st)
         }
     }.createOrReplaceTempView("d20_hits")
@@ -719,31 +683,86 @@ object StreamingGate {
       ${CurationOps.oCoverageTail}"""
     })
 
+  /** Fold one micro-batch's rows (of one group) into `f` and return the
+    * batch number `bno` they all carry, -1 for no rows. The parity-staged
+    * `maxFilesPerTrigger=1` layout makes every micro-batch parity-uniform,
+    * and the fold enforces that rather than assuming it: a mixed batch (a
+    * config change, a file compaction, a different trigger) would fold
+    * two snapshots into one emission under an arbitrary bno, so it throws
+    * before the caller touches its state (q71, d23 and d28; SCALE.md "One
+    * stream vocabulary"). `key` names the group in the error. */
+  private[graft] def parityFold[R](key: => String, rows: Iterator[R])(bno: R => Long)(
+      f: R => Unit): Long = {
+    var b = -1L
+    rows.foreach { r =>
+      val rb = bno(r)
+      if (b == -1L) b = rb
+      else if (rb != b)
+        throw new IllegalStateException(s"mixed-parity micro-batch for $key " +
+          s"(bno $rb after bno $b) — the parity-staged maxFilesPerTrigger=1 " +
+          "layout was violated")
+      f(r)
+    }
+    b
+  }
+
+  /** One deletion request of a [[tombstoneStream]]: member `id` of
+    * `cluster_id`, requested in micro-batch `bno`. */
+  final case class Tomb(cluster_id: Long, id: Long, bno: Long)
+
+  /** A cluster's tombstones of one micro-batch as (bno, deleted ids). */
+  private def tombBatch(key: Long, rows: Iterator[Tomb]): (Long, Set[Long]) = {
+    val del = Set.newBuilder[Long]
+    val bno = parityFold(s"cluster $key", rows)(_.bno)(del += _.id)
+    (bno, del.result())
+  }
+
+  /** The one tombstone stream (d23, d28): deletion requests — the rows
+    * of `table` passing [[DedupOps.tombPred]] on the id column of the
+    * static `members` artifact (id, cluster_id) — are staged even ids
+    * then odd ids (the rule folded into the parity expression, so other
+    * rows land in neither batch), map to their cluster through `members`
+    * (a stream-static join; an unclustered request touches no cluster),
+    * and `fsm` repairs each touched cluster's state, seeded per cluster
+    * from `init` through the initial-state seam. */
+  private[graft] def tombstoneStream[S: Encoder, O: Encoder](
+      s: SparkSession, d: String, table: String, members: DataFrame,
+      init: Dataset[(Long, S)], provider: Option[String])(
+      fsm: (Long, Iterator[Tomb], GroupState[S]) => Iterator[O]): DataFrame = {
+    import s.implicits._
+    val id = members.columns.head
+    parityReplay(s, d, table, provider,
+        s"CASE WHEN ${DedupOps.tombPred(id)} THEN CAST($id % 2 AS INT) ELSE -1 END") {
+      _.select(id).join(members, id)
+        .selectExpr("cluster_id", s"$id AS id", s"CAST($id % 2 AS BIGINT) AS bno")
+        .as[Tomb]
+        .groupByKey(_.cluster_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout,
+          init.groupByKey(_._1).mapValues(_._2))(fsm)
+    }
+  }
+
   final case class D23Mem(doc_id: Long, n_chars: Long)
-  final case class D23Member(cluster_id: Long, doc_id: Long, n_chars: Long)
-  final case class D23Tomb(cluster_id: Long, doc_id: Long, bno: Long)
   final case class D23ClusterState(members: Seq[D23Mem])
   final case class D23Out(bno: Long, cluster_id: Long, canonical_doc: Long,
       canonical_chars: Long, n_members: Long)
 
   /** d23's per-cluster FSM, extracted for the spec (d20's pattern): fold
     * the batch's tombstones for this cluster into a deletion set (bounded
-    * by the batch's requests for ONE cluster), strip them from the
-    * surviving-member state, and emit the re-elected canonical — or the
-    * `(-1, -1, 0)` sentinel when the cluster empties. A key invoked with
-    * no batch rows (possible when the runtime touches seeded initial
-    * state) emits nothing and leaves state untouched — the delta
-    * contract: silence means "stored base row still valid". State is the
-    * cluster's surviving member list — the same per-group bound d13's
-    * election window already has. */
-  private[graft] def deleteFsm(key: Long, rows: Iterator[D23Tomb],
-      st: org.apache.spark.sql.streaming.GroupState[D23ClusterState])
-      : Iterator[D23Out] =
+    * by the batch's requests for ONE cluster; a mixed-parity batch fails
+    * loudly, [[parityFold]]), strip them from the surviving-member state,
+    * and emit the re-elected canonical — or the `(-1, -1, 0)` sentinel
+    * when the cluster empties. A key invoked with no batch rows
+    * (possible when the runtime touches seeded initial state) emits
+    * nothing and leaves state untouched — the delta contract: silence
+    * means "stored base row still valid". State is the cluster's
+    * surviving member list — the same per-group bound d13's election
+    * window already has. */
+  private[graft] def deleteFsm(key: Long, rows: Iterator[Tomb],
+      st: GroupState[D23ClusterState]): Iterator[D23Out] =
     if (!rows.hasNext) Iterator.empty
     else {
-      var bno = 0L
-      val del = scala.collection.mutable.HashSet.empty[Long]
-      while (rows.hasNext) { val r = rows.next(); bno = r.bno; del += r.doc_id }
+      val (bno, del) = tombBatch(key, rows)
       val cur = st.getOption.map(_.members).getOrElse(Seq.empty)
       val rest = cur.filterNot(m => del.contains(m.doc_id))
       st.update(D23ClusterState(rest))
@@ -762,20 +781,17 @@ object StreamingGate {
   /** STREAMING deletion propagation — d22 at the point the deletion
     * requests actually arrive (GDPR/opt-out feeds are streams, and the
     * SLA is "stop serving the data promptly", not "wait for the nightly
-    * batch"): tombstone requests arrive as micro-batches, map to their
-    * dedup cluster through the STATIC member artifact (stream-static
-    * join, q64's shape), and a `flatMapGroupsWithState` FSM keyed by
-    * cluster — INITIALIZED from the stored artifact via the initial-state
-    * seam — strips the deleted members and emits the re-elected canonical
-    * row per touched cluster per batch. Untouched clusters emit nothing
-    * (their stored base row stays valid — d22's delta contract,
-    * incrementally); an emptied cluster emits the `(-1,-1,0)` retirement
-    * sentinel. Batch membership is a pure function of the data
-    * ([[stageParityBatches]] with the tombstone rule folded into the
-    * parity expression: even requests then odd requests), so the DuckDB
-    * oracle reproduces the exact per-batch emission set in batch SQL — a
-    * cluster hit in both batches emits twice with strictly shrinking
-    * membership, and the hash checks both snapshots.
+    * batch"): the [[tombstoneStream]] over d06's STATIC member artifact
+    * (stream-static join, q64's shape), its FSM keyed by cluster and
+    * INITIALIZED from the stored artifact, strips the deleted members and
+    * emits the re-elected canonical row per touched cluster per batch.
+    * Untouched clusters emit nothing (their stored base row stays valid —
+    * d22's delta contract, incrementally); an emptied cluster emits the
+    * `(-1,-1,0)` retirement sentinel. Batch membership is a pure function
+    * of the data (even requests then odd requests), so the DuckDB oracle
+    * reproduces the exact per-batch emission set in batch SQL — a cluster
+    * hit in both batches emits twice with strictly shrinking membership,
+    * and the hash checks both snapshots.
     *
     * Scale: state = surviving member list per cluster (bounded by
     * cluster size — d13's existing per-group bound; RocksDB provider via
@@ -796,23 +812,8 @@ object StreamingGate {
       .agg(collect_list(struct($"doc_id", $"n_chars")).as("members"))
       .as[(Long, Seq[D23Mem])]
       .map { case (cid, ms) => (cid, D23ClusterState(ms)) }
-      .groupByKey(_._1).mapValues(_._2)
-    // the request feed: documents restricted to the tombstone rule, split
-    // even-requests-then-odd-requests (rule folded into the parity expr
-    // so non-tombstoned docs land in neither batch)
-    val inDir = stageParityBatches(s, d, "documents",
-      parity = "CASE WHEN doc_id % 13 = 4 THEN CAST(doc_id % 2 AS INT) ELSE -1 END")
-    replay(s, inDir, Q.table(s, d, "documents").schema, provider) {
-      _.select($"doc_id")
-        .join(mem, "doc_id") // unclustered requests touch no cluster row
-        .selectExpr("cluster_id", "doc_id", "CAST(doc_id % 2 AS BIGINT) AS bno")
-        .as[D23Tomb]
-        .groupByKey(_.cluster_id)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          initialState = init)(deleteFsm _)
-    }
+    tombstoneStream(s, d, "documents", mem.select("doc_id", "cluster_id"), init,
+      provider)(deleteFsm)
   }
 
   val d23 = QueryDef(
@@ -824,7 +825,7 @@ object StreamingGate {
               FROM lab l JOIN documents doc ON l.doc_id = doc.doc_id),
       tomb AS (SELECT m.cluster_id, m.doc_id,
                  CAST(m.doc_id % 2 AS BIGINT) AS bno
-               FROM mem m WHERE m.doc_id % 13 = 4),
+               FROM mem m WHERE ${DedupOps.tombPred("m.doc_id")}),
       aff AS (SELECT DISTINCT cluster_id, bno FROM tomb),
       surv AS (SELECT a.bno, m.cluster_id, m.doc_id, m.n_chars
                FROM aff a JOIN mem m ON a.cluster_id = m.cluster_id
@@ -859,27 +860,14 @@ object StreamingGate {
     * occurrence counts into the running (cnt_a, cnt_b) pair and emit ONE
     * row with the updated totals — O(1) state and O(1) memory per group
     * regardless of how often a token occurs in a batch (the iterator is
-    * folded, never buffered). The batch number rides the rows themselves:
-    * the staging layout (maxFilesPerTrigger=1 over parity-staged files)
-    * makes every micro-batch parity-uniform, and the fold ENFORCES that
-    * invariant rather than assuming it (round-13 advice) — a mixed-parity
-    * batch (config change, file compaction, a different trigger) would
-    * otherwise fold both snapshots into one emission with an arbitrary
-    * bno and silently miscompute the NA/NB alarm post-pass, so it fails
-    * loudly here instead. */
+    * folded, never buffered). The batch number rides the rows themselves
+    * ([[parityFold]]): a mixed-parity batch would silently miscompute the
+    * NA/NB alarm post-pass, so it fails loudly instead. */
   private[graft] def driftFsm(
-      tok: String, rows: Iterator[DriftRow],
-      st: org.apache.spark.sql.streaming.GroupState[DriftState])
+      tok: String, rows: Iterator[DriftRow], st: GroupState[DriftState])
       : Iterator[DriftOut] = {
-    var a = 0L; var b = 0L; var bno = -1L
-    while (rows.hasNext) {
-      val r = rows.next()
-      if (bno == -1L) bno = r.snap
-      else if (r.snap != bno)
-        throw new IllegalStateException(
-          s"driftFsm: mixed-parity micro-batch for token '$tok' " +
-            s"(snap ${r.snap} after snap $bno) — the parity-staged " +
-            "maxFilesPerTrigger=1 layout was violated")
+    var a = 0L; var b = 0L
+    val bno = parityFold(s"token '$tok'", rows)(_.snap) { r =>
       if (r.snap == 0L) a += r.cnt else b += r.cnt
     }
     val prev = st.getOption.getOrElse(DriftState(0L, 0L))
@@ -905,21 +893,14 @@ object StreamingGate {
       s: SparkSession, d: String, provider: Option[String]): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     import s.implicits._
-    val hits = replay(s, stageParityBatches(s, d, "documents"),
-        Q.table(s, d, "documents").schema, provider) {
+    val hits = parityReplay(s, d, "documents", provider) {
       _.where("length(text) >= 1")
         .selectExpr("doc_id % 2 AS snap",
           s"explode(space_token_histogram(${Q.sNorm})) AS (tok, cnt)")
         .selectExpr("tok", "CAST(snap AS BIGINT) AS snap", "CAST(cnt AS BIGINT) AS cnt")
         .as[DriftRow]
         .groupByKey(_.tok)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          (tok: String, rs: Iterator[DriftRow],
-           st: org.apache.spark.sql.streaming.GroupState[DriftState]) =>
-            driftFsm(tok, rs, st)
-        }
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(driftFsm _)
     }
     // alarm post-pass over the metadata-width emissions: NA = the full
     // baseline total (known after batch 0), NB = the running incoming
@@ -962,7 +943,6 @@ object StreamingGate {
 
   final case class D28Edge(a: Long, b: Long)
   final case class D28State(members: Seq[Long], edges: Seq[D28Edge])
-  final case class D28Tomb(cluster_id: Long, vec_id: Long, bno: Long)
   final case class D28Out(bno: Long, old_cluster: Long, vec_id: Long,
       new_cluster: Long, is_pruned_new: Boolean)
 
@@ -977,28 +957,15 @@ object StreamingGate {
     * [[DedupOps.minLabelComponents]]' one-task path, over the cluster's
     * surviving stored edges, exact because the state holds the WHOLE
     * cluster's edges (cluster-bounded: ≤ members·k rows — d13/d23's
-    * per-group bound). Mixed-parity batches fail loudly (q71's hardened
-    * convention, round-14): the parity-staged maxFilesPerTrigger=1
-    * layout is ENFORCED, not assumed. A key invoked with no batch rows
-    * emits nothing and leaves state untouched — the delta contract:
-    * silence means "stored labels still valid". */
-  private[graft] def semDeleteFsm(key: Long, rows: Iterator[D28Tomb],
-      st: org.apache.spark.sql.streaming.GroupState[D28State])
-      : Iterator[D28Out] =
+    * per-group bound). Mixed-parity batches fail loudly ([[parityFold]]).
+    * A key invoked with no batch rows emits nothing and leaves state
+    * untouched — the delta contract: silence means "stored labels still
+    * valid". */
+  private[graft] def semDeleteFsm(key: Long, rows: Iterator[Tomb],
+      st: GroupState[D28State]): Iterator[D28Out] =
     if (!rows.hasNext) Iterator.empty
     else {
-      var bno = -1L
-      val del = scala.collection.mutable.HashSet.empty[Long]
-      while (rows.hasNext) {
-        val r = rows.next()
-        if (bno == -1L) bno = r.bno
-        else if (r.bno != bno)
-          throw new IllegalStateException(
-            s"semDeleteFsm: mixed-parity micro-batch for cluster $key " +
-              s"(bno ${r.bno} after bno $bno) — the parity-staged " +
-              "maxFilesPerTrigger=1 layout was violated")
-        del += r.vec_id
-      }
+      val (bno, del) = tombBatch(key, rows)
       val cur = st.getOption.getOrElse(D28State(Seq.empty, Seq.empty))
       val ms = cur.members.filterNot(del.contains)
       val es = cur.edges.filter(e => !del.contains(e.a) && !del.contains(e.b))
@@ -1012,15 +979,13 @@ object StreamingGate {
     }
 
   /** STREAMING deletion propagation through the SEMANTIC artifacts —
-    * d27 at the point the requests actually arrive (round-14 verdict
-    * item 5): d23 proves request-arrival-latency repair for d06's
+    * d27 at the point the requests actually arrive: d23 proves request-arrival-latency repair for d06's
     * LEXICAL clusters, but a forgotten document also survives as a
     * stored neighbor/representative in s15's k-NN graph and d24's
     * semantic clusters, and waiting for d27's batch repair leaves the
     * semantic artifacts serving the deleted vector until the next run.
-    * Same seam as d23: tombstones arrive as micro-batches, map to their
-    * semantic cluster through the STATIC d24 label artifact
-    * (stream-static join), and a `flatMapGroupsWithState` FSM keyed by
+    * Same [[tombstoneStream]] as d23: tombstones map to their semantic
+    * cluster through the STATIC d24 label artifact, and the FSM keyed by
     * `sem_cluster_id` — initialized from the stored artifact (members +
     * the cluster's mutual-τ edge subgraph, both cluster-bounded) —
     * emits the repaired per-member labels for each touched cluster per
@@ -1069,21 +1034,8 @@ object StreamingGate {
         Seq("cluster_id"), "left")
       .as[(Long, Seq[Long], Option[Seq[D28Edge]])]
       .map { case (cid, ms, es) => (cid, D28State(ms, es.getOrElse(Seq.empty))) }
-      .groupByKey(_._1).mapValues(_._2)
-    val inDir = stageParityBatches(s, d, "embeddings",
-      parity = "CASE WHEN vec_id % 13 = 4 THEN CAST(vec_id % 2 AS INT) ELSE -1 END")
-    val labKey = lab.selectExpr("vec_id", "sem_cluster_id AS cluster_id")
-    replay(s, inDir, Q.table(s, d, "embeddings").schema, provider) {
-      _.select($"vec_id")
-        .join(labKey, "vec_id")
-        .selectExpr("cluster_id", "vec_id", "CAST(vec_id % 2 AS BIGINT) AS bno")
-        .as[D28Tomb]
-        .groupByKey(_.cluster_id)
-        .flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append,
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout,
-          initialState = init)(semDeleteFsm _)
-    }
+    tombstoneStream(s, d, "embeddings",
+      lab.selectExpr("vec_id", "sem_cluster_id AS cluster_id"), init, provider)(semDeleteFsm)
   }
 
   val d28 = QueryDef(
@@ -1094,7 +1046,7 @@ object StreamingGate {
       lab AS (${DedupOps.d24.oracle.get.trim}),
       knn AS (${DedupOps.s15OracleSql("TRUE").trim}),
       tomb AS (SELECT vec_id, CAST(vec_id % 2 AS BIGINT) AS bno
-               FROM embeddings WHERE ${DedupOps.d27TombPred}),
+               FROM embeddings WHERE ${DedupOps.tombPred("vec_id")}),
       aff AS (SELECT DISTINCT l.sem_cluster_id AS oc, t.bno
               FROM lab l JOIN tomb t ON l.vec_id = t.vec_id),
       mem AS (SELECT l.vec_id, l.sem_cluster_id AS oc FROM lab l),

@@ -78,7 +78,7 @@ object TrainingPipeline {
                           AS rep
                       FROM documents),
         j AS (SELECT m.lang, m.source, t.n_tokens,
-                CASE WHEN m.doc_id % 13 = 4 THEN 'deleted'
+                CASE WHEN ${DedupOps.tombPred("m.doc_id")} THEN 'deleted'
                      WHEN m.rep IN (SELECT contained_rep FROM q68_d21)
                        THEN 'contained'
                      WHEN NOT t.pred_keep THEN 'low_quality'
@@ -105,7 +105,7 @@ object TrainingPipeline {
                  min(doc_id) OVER (PARTITION BY md5(${Q.oNorm})) AS rep
                FROM documents),
       j AS (SELECT m.lang, m.source, t.n_tokens,
-              CASE WHEN m.doc_id % 13 = 4 THEN 'deleted'
+              CASE WHEN ${DedupOps.tombPred("m.doc_id")} THEN 'deleted'
                    WHEN m.rep IN (SELECT contained_rep FROM d21)
                      THEN 'contained'
                    WHEN NOT t.pred_keep THEN 'low_quality'

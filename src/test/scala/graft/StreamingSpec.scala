@@ -386,6 +386,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(fresh.get == BucketOwner(1000L)) // min doc_id across the batch
   }
 
+  test("d23 FSM: a mixed-parity micro-batch fails loudly, state untouched") {
+    // q71's rule for d23: bno came from the last row, so a mixed batch (a
+    // config change, a compaction, a different trigger) was folded into
+    // one emission under an arbitrary bno
+    import graft.ops.StreamingGate.{deleteFsm, D23ClusterState, D23Mem, Tomb}
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    val seeded = D23ClusterState(Seq(D23Mem(4L, 10L), D23Mem(5L, 9L), D23Mem(17L, 8L)))
+    val st = TestGroupState.create[D23ClusterState](
+      org.apache.spark.api.java.Optional.of(seeded),
+      GroupStateTimeout.NoTimeout, 0L,
+      org.apache.spark.api.java.Optional.empty[Long](), false)
+    val mixed = Iterator(Tomb(4L, 4L, 0L), Tomb(4L, 17L, 1L))
+    val e = intercept[IllegalStateException] { deleteFsm(4L, mixed, st) }
+    assert(e.getMessage.contains("mixed-parity"))
+    assert(st.get == seeded)
+  }
+
+  test("d28 FSM: a mixed-parity micro-batch fails loudly, state untouched") {
+    import graft.ops.StreamingGate.{semDeleteFsm, D28Edge, D28State, Tomb}
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    val seeded = D28State(Seq(9L, 10L, 43L), Seq(D28Edge(9L, 43L), D28Edge(10L, 43L)))
+    val st = TestGroupState.create[D28State](
+      org.apache.spark.api.java.Optional.of(seeded),
+      GroupStateTimeout.NoTimeout, 0L,
+      org.apache.spark.api.java.Optional.empty[Long](), false)
+    val mixed = Iterator(Tomb(9L, 43L, 1L), Tomb(9L, 10L, 0L))
+    val e = intercept[IllegalStateException] { semDeleteFsm(9L, mixed, st) }
+    assert(e.getMessage.contains("mixed-parity"))
+    assert(st.get == seeded)
+  }
+
   test("d28 streaming semantic deletes: per-batch repair, converges to d27, RocksDB agrees") {
     val dir = "/root/testdata/sf0.001"
     def runWith(p: Option[String]): Seq[(Long, Long, Long, Long, Boolean)] =
@@ -742,9 +773,50 @@ class StreamingSpec extends AnyFunSuite {
 
   test("s11 streaming KNN: both micro-batches emit, union == the s03 batch result") {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.window.WindowExecBase
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     val d = "/root/testdata/sf0.001"
-    val out = SparkEntry.queries("s11_streaming_knn")(spark, d).cache()
+    // the micro-batch executions: foreachBatch runs in the stream's clone
+    // of the session, whose listener manager copies this one's at start
+    val batchPlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.sparkSession ne spark) batchPlans.add(qe.executedPlan)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out =
+      try SparkEntry.queries("s11_streaming_knn")(spark, d).cache()
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
     try {
+      // the per-batch search is the batch row's IVF vocabulary: the probe
+      // lists come from nearest_centroids, and no window ranks centroids
+      // per vec_id (the cross-join spelling's N·K exchange)
+      def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => q +: walk(q.plan)
+        case _ => p +: p.children.flatMap(walk)
+      }
+      val nodes = batchPlans.asScala.toSeq.flatMap(walk)
+      assert(nodes.nonEmpty, "no micro-batch execution was seen")
+      val byVec = nodes.collect { case w: WindowExecBase => w }
+        .filter(_.partitionSpec.exists {
+          case a: AttributeReference => a.name == "vec_id"
+          case _ => false
+        })
+      assert(byVec.isEmpty,
+        s"s11 ranks per vec_id in a window: ${byVec.map(_.simpleStringWithNodeId())}")
+      val kernels = nodes.flatMap(_.expressions).map(_.collect {
+        case c: graft.functions.NearestCentroids => c
+      }.size).sum
+      assert(kernels > 0, "s11's micro-batches assign without nearest_centroids")
       // queries are parity-split across the two staged batches — results
       // from BOTH parities prove the stream really ran multi-batch
       val parities = out.select(expr("(query_id div 100) % 2").as("p"))
