@@ -1,134 +1,60 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import java.nio.file.{Files, Paths}
+import graft.QueryRunner.{json, obj}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * The batch runs as a SUPERVISED stage ([[runBatch]]): one
-  * Worker/StageMachine whose work units are the gate queries, with the
-  * engine's own workload observable through the reference's metrics
-  * story — per-query row counts land in the stage registry via
-  * `Dataset.observe` (executor-side, zero extra pass), ok/failed
-  * counters and the runtime's per-unit ticks ride the same registry, and
-  * everything is scrapeable live over [[graft.runtime.PrometheusHttp]]
-  * (`/root/reference/gasket-prometheus/src/lib.rs:51-77` applied to the
-  * verify batch itself — RuntimeSpec scrapes it mid-run). */
+  * The batch runs on [[QueryRunner]]: one supervised stage whose work
+  * units are the gate queries. Each query's row count comes back from
+  * `Dataset.observe` (executor-side, zero extra pass) into the stage's
+  * row gauge, and the stage is scrapeable live over
+  * [[graft.runtime.PrometheusHttp]] (RuntimeSpec scrapes it mid-run).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [queryName...]
+  * (no query names = every query; `__none__` names none, so only the
+  * oracle texts and the two run records are written) */
 object Verify {
 
-  /** Run the dump batch under supervision. Returns (errors, final stage
+  /** Dump the queries `names` select (all when empty) under supervision
+    * and write the run's JSON records. Returns (errors, final stage
     * readings); `onServe` receives the live metrics endpoint's port. */
   def runBatch(spark: SparkSession, sfDir: String, outDir: String,
       names: Set[String], onServe: Int => Unit = _ => ())
-      : (scala.collection.mutable.LinkedHashMap[String, String], Map[String, Long]) = {
-    import graft.runtime.{PrometheusHttp, StageRuntime, Worker, WorkSchedule}
+      : (scala.collection.mutable.LinkedHashMap[String, String], Map[String, Long]) =
+    dump(spark, sfDir, outDir, QueryRunner.select(names.toSeq, SparkEntry.registry), onServe)
+
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[graft.ops.QueryDef], onServe: Int => Unit = _ => ()) = {
     new java.io.File(outDir).mkdirs()
-    // a throwing query must be LOUD in the round's artifacts, not just in
-    // driver stderr: collect name → exception and dump _errors.json
-    // (round 7's events re-encode silently dropped 4 queries this way)
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val queue = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
-    SparkEntry.queries
-      .filter { case (name, _) => names.isEmpty || names(name) }
-      .foreach(queue.add)
-    // installed against the stage registry; unregistered only AFTER the
-    // final readings are taken (the listener bus is asynchronous — an
-    // eager teardown unregister can drop the last query's row gauge)
-    var listener: org.apache.spark.sql.util.QueryExecutionListener = null
-    val total = queue.size()
-    val tether = StageRuntime.spawnInstrumented("verify", registry => {
-      listener = graft.runtime.ObservedMetrics.install(spark, registry)
-      new Worker[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] {
-        def schedule() = Option(queue.poll())
-          .map(WorkSchedule.Unit(_)).getOrElse(WorkSchedule.Done)
-        def execute(unit: (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)): Unit = {
-          val (name, fn) = unit
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir)
-              .observe(s"verify_$name",
-                org.apache.spark.sql.functions.count(
-                  org.apache.spark.sql.functions.lit(1)).as("rows"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-            registry.counter("queries_ok").inc()
-            System.err.println(
-              f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          } catch { case e: Throwable =>
-            errors.synchronized {
-              errors(name) = s"${e.getClass.getName}: ${e.getMessage}" }
-            registry.counter("queries_failed").inc()
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          }
-        }
-      }
-    })
-    val http = PrometheusHttp.serve(Seq(tether))
-    onServe(http.port)
-    try {
-      // the batch is long; poll phase rather than a fixed join timeout
-      // (Dropped backstop: execute() swallows query failures, so the FSM
-      // only drops on a fatal runtime error — don't spin forever then)
-      while (!tether.waitEnded(timeout =
-          scala.concurrent.duration.Duration(60, "s")) &&
-        tether.checkState() != graft.runtime.StageState.Dropped) ()
-      // drain the async listener bus: every query that SUCCEEDED must
-      // have its observed row gauge before the final snapshot (bounded
-      // wait). Count from the stage's own ok counter, not total−errors —
-      // a Dropped stage leaves un-attempted queries that would otherwise
-      // force the full deadline sleep on every fatal-error path.
-      val okCount = tether.readMetrics().getOrElse("counter.queries_ok", 0L)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (tether.readMetrics().keys.count(_.startsWith("gauge.verify_"))
-          < okCount && System.nanoTime() < deadline)
-        Thread.sleep(10)
-    } finally {
-      http.stop()
-      if (listener != null) spark.listenerManager.unregister(listener)
+    val result @ (errors, _) = QueryRunner.run(spark, "verify", queries, onServe) { q =>
+      val rows = Observation(s"verify_${q.name}")
+      q.run(spark, sfDir).observe(rows, count(lit(1)).as("rows"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
+      rows.get("rows").asInstanceOf[Long]
     }
-    (errors, tether.readMetrics())
+    def write(file: String, text: String): Unit = Files.writeString(Paths.get(outDir, file), text)
+    def strings(m: Iterable[(String, String)]): String =
+      obj(m.map { case (k, v) => k -> json(v) }, ": ")
+    write("oracle_sql.json", strings(SparkEntry.oracleSql))
+    // a throwing query is loud in the artifacts, not only on stderr; the
+    // exit code stays 0 so the oracle compare still covers the rest
+    write("_errors.json", strings(errors))
+    // _run.json: the master this dump ran under, so tools/verify_local.py
+    // can tell a multi-JVM leg from a local one (SCALE.md "One query runner")
+    write("_run.json",
+      s"""{"master": ${json(spark.sparkContext.master)}, "sf_dir": ${json(sfDir)}, """ +
+        s""""queries_attempted": ${queries.size}, "queries_failed": ${errors.size}}""")
+    if (errors.nonEmpty)
+      System.err.println(s"[verify] ${errors.size} FAILED: ${errors.keys.mkString(", ")}")
+    result
   }
 
   def main(args: Array[String]): Unit = {
-    // extra args (optional) = query-name filter for fast local iteration;
-    // the driver's two-arg invocation dumps everything
     val Array(sfDir, outDir) = args.take(2)
-    val names = args.drop(2).toSet
     val spark = Sessions.local()
-    val (errors, _) = runBatch(spark, sfDir, outDir, names,
-      port => System.err.println(s"[verify] metrics at 127.0.0.1:$port/metrics"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
-    // _run.json: which MASTER this dump ran under (round-15 verdict item
-    // 5 — the local-cluster leg must be diffable, not remembered).
-    // tools/verify_local.py copies it into its artifact so a
-    // VERIFY_LC.json reader can tell a multi-JVM leg from a local[32] one.
-    Files.writeString(Paths.get(s"$outDir/_run.json"),
-      s"""{"master": ${q(spark.sparkContext.master)}, "sf_dir": ${q(sfDir)}, """ +
-        s""""queries_attempted": ${SparkEntry.queries.count {
-          case (n, _) => names.isEmpty || names(n) }}, """ +
-        s""""queries_failed": ${errors.size}}""")
-    // deliberately still exit 0: the driver must keep comparing the queries
-    // that DID run — _errors.json is the loud in-repo signal
-    if (errors.nonEmpty)
-      System.err.println(
-        s"[verify] ${errors.size} FAILED: ${errors.keys.mkString(", ")}")
+    runBatch(spark, sfDir, outDir, args.drop(2).toSet)
     spark.stop()
   }
 }

@@ -49,36 +49,6 @@ final class Registry {
       accumulators.asScala.map { case (k, a) => s"accum.$k" -> a.value.longValue }.toMap
 }
 
-/** Bridge from Spark's `Dataset.observe` named metrics into a [[Registry]]:
-  * aggregates computed inside the query (executor-side, zero extra pass)
-  * land as gauges when the action completes — the Spark-native analogue of
-  * gasket's per-stage counters read through the Tether
-  * (`/root/reference/gasket/src/metrics.rs:96-110`). */
-object ObservedMetrics {
-  /** Install once per session; all observation points feed `registry`
-    * as gauges named `<observation>.<column>`. Returns the listener for
-    * optional removal. */
-  def install(spark: org.apache.spark.sql.SparkSession, registry: Registry):
-      org.apache.spark.sql.util.QueryExecutionListener = {
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (name, row) =>
-          row.schema.fieldNames.foreach { f =>
-            row.getAs[Any](f) match {
-              case n: java.lang.Number => registry.gauge(s"$name.$f").set(n.longValue())
-              case _ => ()
-            }
-          }
-        }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    listener
-  }
-}
-
 /** Prometheus text rendering of stage readings — the render half of
   * `gasket-prometheus/src/lib.rs:30-77` ([[PrometheusHttp]] is the
   * transport half). */

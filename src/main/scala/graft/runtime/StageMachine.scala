@@ -76,9 +76,11 @@ final class Tether(private[runtime] val anchor: Anchor) {
     if (t != null) t.interrupt()
   }
 
-  def join(timeout: FiniteDuration = 30.seconds): Unit = {
+  /** Wait for the stage thread to end; `Duration.Inf` waits for as long
+    * as it runs. */
+  def join(timeout: Duration = 30.seconds): Unit = {
     val t = anchor.thread
-    if (t != null) t.join(timeout.toMillis)
+    if (t != null) t.join(if (timeout.isFinite) timeout.toMillis else 0L)
   }
 
   def waitEnded(timeout: FiniteDuration = 30.seconds): Boolean = {

@@ -43,4 +43,16 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.loadSuspect(None, 0.81, 4) && Bench.loadSuspect(None, 1.6, 4))
     assert(Bench.loadSuspect(Some(0.3), 0.0, 4) && !Bench.loadSuspect(Some(0.2), 0.0, 4))
   }
+
+  test("the metric line is valid JSON for a data dir holding a quote, a backslash and a tab") {
+    val dir = "/data/a\"b\\c\td"
+    val runs = Seq("q02_filter_project" -> Some(Seq(0.5, 0.4, 0.6, 0.4, 0.7)), "boom" -> None)
+    val line = Bench.line(Seq("cpus" -> QueryRunner.json("4")), runs, dir)
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(tree.get("sf").asText == dir)
+    assert(tree.get("cpus").asText == "4")
+    assert(tree.get("queries").get("q02_filter_project").asDouble == 0.4)
+    assert(tree.get("queries").get("boom").asDouble == -1.0)
+    assert(tree.get("value").asDouble == 0.4)
+  }
 }

@@ -9,12 +9,9 @@ object OnceRun {
     val (dir, names) = (args.head, args.tail.toSeq)
     val spark = Sessions.local()
     graft.functions.GraftFunctions.register(spark)
-    for (name <- names) {
-      val q = SparkEntry.registry.find(_.name == name).get
-      graft.ops.Q.releaseAllPersisted(spark)
-      val t0 = System.nanoTime()
-      val n = q.run(spark, dir).queryExecution.toRdd.count()
-      println(f"[once] $name at $dir: ${(System.nanoTime() - t0) / 1e9}%.1f s, $n rows")
+    for (q <- QueryRunner.select(names, Nil)) {
+      val r = QueryRunner.cold(spark)(q.run(spark, dir))
+      println(f"[once] ${q.name} at $dir: ${r.sec}%.1f s, ${r.rows} rows")
     }
     spark.stop()
   }

@@ -236,26 +236,6 @@ class RuntimeSpec extends AnyFunSuite {
     assertThrows[Panic](boom.orPanic())
   }
 
-  test("observe-metrics bridge: in-query aggregates land in the registry") {
-    val spark = TestSpark.spark
-    import org.apache.spark.sql.functions._
-    val registry = new Registry
-    val listener = ObservedMetrics.install(spark, registry)
-    try {
-      spark.range(0, 100)
-        .observe("gen_stage", count(lit(1)).as("rows"), sum(col("id")).as("id_sum"))
-        .collect()
-      // listener fires asynchronously post-action; poll until BOTH gauges
-      // are set (they're written field-by-field in the callback)
-      val deadline = System.nanoTime() + 10e9.toLong
-      def ready() = registry.readings().getOrElse("gauge.gen_stage.rows", 0L) != 0L &&
-        registry.readings().getOrElse("gauge.gen_stage.id_sum", 0L) != 0L
-      while (!ready() && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(registry.readings()("gauge.gen_stage.rows") == 100L)
-      assert(registry.readings()("gauge.gen_stage.id_sum") == 4950L)
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   test("prometheus text rendering (gasket-prometheus/src/lib.rs:51-77)") {
     val out = PrometheusText.render("s1", Map("units" -> 5L, "errors" -> 0L))
     assert(out ==

@@ -56,25 +56,15 @@ object StageProfile {
           stageSite.getOrElse(si.stageId, "-"))
       }
     })
-    for (name <- names) {
-      val q = SparkEntry.queries(name)
-      // full execution of the query's own plan (count() would let the
-      // optimizer prune the payload — see Bench.exec)
-      def exec(): org.apache.spark.sql.execution.SparkPlan = {
-        val qe = q(spark, dir).queryExecution
-        qe.toRdd.count()
-        qe.executedPlan
-      }
-      // warm once (JIT), then profile a cold-cache run
-      graft.ops.Q.releaseAllPersisted(spark); exec()
-      graft.ops.Q.releaseAllPersisted(spark); System.gc()
+    for (q <- QueryRunner.select(names, Nil)) {
+      // warm once (JIT), then profile a cold run of the query's own plan
+      // (see QueryRunner.cold)
+      QueryRunner.cold(spark)(q.run(spark, dir))
       stages.clear()
-      val t0 = System.nanoTime()
-      val plan = exec()
-      val total = (System.nanoTime() - t0) / 1e9
-      println(f"==== $name: $total%.2f s total ====")
+      val run = QueryRunner.cold(spark)(q.run(spark, dir))
+      println(f"==== ${q.name}: ${run.sec}%.2f s total ====")
       // each operator's own spill metric, across every query stage
-      val spills = SpillMetrics.collect(plan) {
+      val spills = SpillMetrics.collect(run.qe.executedPlan) {
         case p if p.metrics.get("spillSize").exists(_.value > 0) =>
           f"${p.nodeName} ${p.metrics("spillSize").value / 1e6}%.1f MB"
       }
