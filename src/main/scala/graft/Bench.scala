@@ -115,7 +115,9 @@ object Bench {
       // the shuffle partitions from it)
       "cpus" -> json(spark.conf.get("spark.sql.shuffle.partitions")),
       "heap_mb" -> (Runtime.getRuntime.maxMemory >> 20).toString,
-      "git_head" -> json(gitHead(repoRoot)), "full_run" -> full.toString)
+      "git_head" -> json(git(repoRoot, "rev-parse", "HEAD").getOrElse("unknown")),
+      "git_dirty" -> gitDirty(git(repoRoot, "status", "--porcelain")).fold("null")(_.toString),
+      "full_run" -> full.toString)
   }
 
   /** The 1-min load average above which a run is stamped `load_suspect`:
@@ -165,9 +167,15 @@ object Bench {
     else Seq(side)
   }
 
-  /** The commit the bench ran, or "unknown" outside a git checkout. */
-  private def gitHead(repoRoot: String): String =
-    scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"),
-      new java.io.File(repoRoot)).!!(scala.sys.process.ProcessLogger(_ => ())).trim)
-      .getOrElse("unknown")
+  /** The trimmed output of `git <args>` run in `repoRoot`, None outside a
+    * git checkout (or without git). */
+  private def git(repoRoot: String, args: String*): Option[String] =
+    scala.util.Try(scala.sys.process.Process("git" +: args,
+      new java.io.File(repoRoot)).!!(scala.sys.process.ProcessLogger(_ => ())).trim).toOption
+
+  /** Whether the measured tree differs from `git_head`: `git status
+    * --porcelain` lists a changed or untracked path. None (no git) stamps
+    * null, so a run never claims a commit it cannot name. */
+  private[graft] def gitDirty(porcelain: Option[String]): Option[Boolean] =
+    porcelain.map(_.trim.nonEmpty)
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.udf
 
 import Q._
@@ -46,7 +46,7 @@ object CurationOps {
         expr("CAST(sum(spanhead) AS BIGINT)").as("n_spans"))
   }
 
-  /** DuckDB spelling of [[sCoverageTail]]. */
+  /** DuckDB spelling of [[coverageTail]]. */
   private[graft] val oCoverageTail: String = s"""
       cov AS (SELECT doc_id, p, tok,
                 max(sb) OVER (PARTITION BY doc_id ORDER BY p
@@ -65,10 +65,14 @@ object CurationOps {
              CAST(sum(spanhead) AS BIGINT) AS n_spans
       FROM tr GROUP BY doc_id"""
 
+  /** The tokenization CTE `toks(<cols>, t)`: each non-empty document's
+    * normalized text as its array of space-separated tokens. */
+  private def toks(dl: Dialect, cols: String): String = s"""
+    toks AS (SELECT $cols, ${dl.split(dl.norm)} AS t FROM documents
+             WHERE length(text) >= 1)"""
+
   /** Spark SQL for (doc_id, source, i, chunk) over normalized text. */
-  private[graft] val sChunks = s"""
-    toks AS (SELECT doc_id, source, split($sNorm, ' ') AS t FROM documents
-             WHERE length(text) >= 1),
+  private[graft] val sChunks = s"""${toks(Dialect.Spark, "doc_id, source")},
     n AS (SELECT doc_id, source, t,
             CAST((size(t) + ${W - 1}) div $W AS INT) AS nch FROM toks),
     chunks AS (SELECT doc_id, source, i,
@@ -76,15 +80,32 @@ object CurationOps {
                FROM n LATERAL VIEW explode(sequence(0, nch - 1)) x AS i)"""
 
   /** DuckDB spelling of [[sChunks]] (range + list_slice; `//` int div). */
-  private val oChunks = s"""
-    toks AS (SELECT doc_id, source, string_split($oNorm, ' ') AS t
-             FROM documents WHERE length(text) >= 1),
+  private val oChunks = s"""${toks(Dialect.DuckDB, "doc_id, source")},
     n AS (SELECT doc_id, source, t, (len(t) + ${W - 1}) // $W AS nch FROM toks),
     ix AS (SELECT doc_id, source, t, unnest(range(nch)) AS i FROM n),
     chunks AS (SELECT doc_id, source, i,
                  array_to_string(list_slice(t, i * $W + 1, (i + 1) * $W), ' ')
                    AS chunk
                FROM ix)"""
+
+  /** The DuckDB shingle frame `pr(doc_id, p, tok, h)` of d19's and d20's
+    * oracles: every token at its 0-based position, with the md5 of the
+    * W-token shingle starting there (null within W − 1 of the end). */
+  private[graft] val oShingles = s"""${toks(Dialect.DuckDB, "doc_id")},
+      pr AS (SELECT doc_id, CAST(p1 - 1 AS BIGINT) AS p, t[CAST(p1 AS INT)] AS tok,
+               CASE WHEN p1 + $W - 1 <= len(t)
+                    THEN md5(array_to_string(
+                      list_slice(t, CAST(p1 AS INT), CAST(p1 + $W - 1 AS INT)), ' '))
+               END AS h
+             FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS p1
+                   FROM toks))"""
+
+  /** A query over `documents` whose one SQL text `sql` is written for
+    * both dialects. */
+  private def docQuery(name: String, headline: Boolean = false)(
+      sql: Dialect => String): QueryDef =
+    QueryDef(name, (s, d) => withViews(s, d, "documents")(sql(Dialect.Spark)),
+      Some(sql(Dialect.DuckDB)), headline)
 
   /** Weighted priority sampling: each document draws a deterministic
     * "uniform" u from a portable hash of its id (NO rand() — re-running
@@ -96,11 +117,9 @@ object CurationOps {
     * Priority is ONE IEEE division of two exact integers — bit-identical
     * across engines. Row-wise + per-stratum top-K (WindowGroupLimit:
     * partial top-K before the lang shuffle), same scale shape as d09. */
-  val d10 = QueryDef(
-    "d10_weighted_sample",
-    (s, d) => withViews(s, d, "documents")(s"""
+  val d10 = docQuery("d10_weighted_sample") { dl => s"""
       WITH h AS (SELECT doc_id, lang, greatest(n_chars, 1) AS w,
-                   CAST(char_fold(CAST(doc_id AS STRING), 303) % 1000000
+                   CAST(${dl.fold(s"CAST(doc_id AS ${dl.str})", 303)} % 1000000
                      AS BIGINT) AS u
                  FROM documents),
       p AS (SELECT doc_id, lang, w,
@@ -109,19 +128,8 @@ object CurationOps {
               CAST(row_number() OVER (PARTITION BY lang
                 ORDER BY priority, doc_id) AS BIGINT) AS rnk
             FROM p)
-      SELECT doc_id, lang, priority, rnk FROM r WHERE rnk <= 20"""),
-    Some(s"""
-      WITH h AS (SELECT doc_id, lang, greatest(n_chars, 1) AS w,
-                   CAST(${oCharFold("CAST(doc_id AS VARCHAR)", 303)} % 1000000
-                     AS BIGINT) AS u
-                 FROM documents),
-      p AS (SELECT doc_id, lang, w,
-              CAST(u AS DOUBLE) / CAST(w AS DOUBLE) AS priority FROM h),
-      r AS (SELECT doc_id, lang, priority,
-              CAST(row_number() OVER (PARTITION BY lang
-                ORDER BY priority, doc_id) AS BIGINT) AS rnk
-            FROM p)
-      SELECT doc_id, lang, priority, rnk FROM r WHERE rnk <= 20"""))
+      SELECT doc_id, lang, priority, rnk FROM r WHERE rnk <= 20"""
+  }
 
   /** Cross-document span dedup (CCNet/RefinedWeb line-dedup shape): any
     * 8-token span appearing in ≥2 DISTINCT documents is boilerplate —
@@ -194,12 +202,10 @@ object CurationOps {
     * ≥ 2 DISTINCT docs rule, d11's semantics).
     *
     * The shingle frame `pr` (tokenize + posexplode + md5 over the full
-    * corpus) feeds BOTH the frequency aggregate and the coverage join;
-    * as a CTE Catalyst inlined it into each consumer and the physical
-    * plan paid the corpus explode + md5 TWICE (two posexplode Generates
-    * — q61's disease, confirmed by Explain in the round-11 verdict; at
-    * 64× that was 2 × 15.4 M shingle md5s). Staging it once (d12's
-    * pattern) leaves ONE Generate in the plan. */
+    * corpus) feeds BOTH the frequency aggregate and the coverage join, so
+    * it is staged: as a CTE, Catalyst inlined it into each consumer and
+    * paid the corpus explode + md5 twice (SCALE.md "One curation
+    * vocabulary"). */
   val d19 = QueryDef(
     "d19_substring_dedup",
     (s, d) => {
@@ -207,8 +213,7 @@ object CurationOps {
       import org.apache.spark.sql.functions.{countDistinct, when}
       val pr = staged("d19_pr", d) {
         withViews(s, d, "documents")(s"""
-          WITH toks AS (SELECT doc_id, split($sNorm, ' ') AS t FROM documents
-                        WHERE length(text) >= 1)
+          WITH ${toks(Dialect.Spark, "doc_id")}
           SELECT doc_id, pos AS p, tok,
                  CASE WHEN pos + $W <= size(t)
                       THEN md5(array_join(slice(t, pos + 1, $W), ' ')) END AS h
@@ -223,15 +228,7 @@ object CurationOps {
       coverageTail(mk)
     },
     Some(s"""
-      WITH toks AS (SELECT doc_id, string_split($oNorm, ' ') AS t
-                    FROM documents WHERE length(text) >= 1),
-      pr AS (SELECT doc_id, CAST(p1 - 1 AS BIGINT) AS p, t[CAST(p1 AS INT)] AS tok,
-               CASE WHEN p1 + $W - 1 <= len(t)
-                    THEN md5(array_to_string(
-                      list_slice(t, CAST(p1 AS INT), CAST(p1 + $W - 1 AS INT)), ' '))
-               END AS h
-             FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS p1
-                   FROM toks)),
+      WITH $oShingles,
       rep AS (SELECT h FROM pr WHERE h IS NOT NULL
               GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
       mk AS (SELECT pr.doc_id, pr.p, pr.tok,
@@ -291,9 +288,7 @@ object CurationOps {
     * the decision. Scale shape: the per-source aggregate is tiny (domains
     * ≪ documents) and broadcasts back onto the corpus scan — two jobs, one
     * full scan, no wide shuffle of document text. */
-  val q51 = QueryDef(
-    "q51_domain_quality_gate",
-    (s, d) => withViews(s, d, "documents")(s"""
+  val q51 = docQuery("q51_domain_quality_gate") { _ => """
       WITH st AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                     CAST(sum(n_chars) AS BIGINT) AS sum_chars
                   FROM documents GROUP BY source),
@@ -301,15 +296,8 @@ object CurationOps {
             WHERE sum_chars >= n_docs * 295)
       SELECT /*+ BROADCAST(g) */ d.doc_id, d.source,
              g.n_docs AS src_docs, g.sum_chars AS src_chars
-      FROM documents d JOIN g ON d.source = g.source"""),
-    Some(s"""
-      WITH st AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                    CAST(sum(n_chars) AS BIGINT) AS sum_chars
-                  FROM documents GROUP BY source),
-      g AS (SELECT source, n_docs, sum_chars FROM st
-            WHERE sum_chars >= n_docs * 295)
-      SELECT d.doc_id, d.source, g.n_docs AS src_docs, g.sum_chars AS src_chars
-      FROM documents d JOIN g ON d.source = g.source"""))
+      FROM documents d JOIN g ON d.source = g.source"""
+  }
 
   /** Rare-token surprisal: an information-theoretic quality signal with the
     * transcendentals stripped out. Per token, surprisal ∝ N/count(token)
@@ -322,19 +310,16 @@ object CurationOps {
   val t09 = QueryDef(
     "t09_token_surprisal",
     (s, d) => {
-      // ONE corpus pass: the `toks` CTE (tokenize + occurrence explode)
-      // was referenced by the vocab count, the total, and the scoring
-      // join — three corpus tokenizations per run (PlanAudit round 12).
-      // The per-doc token histogram collapses all three: occurrences
+      // ONE corpus pass: the vocab count, the total and the scoring join
+      // all read the staged per-doc token histogram, so occurrences
       // never explode (surprisal depends only on the token, so per-doc
-      // sums are count-weighted over DISTINCT words — t12's shape), and
-      // the staged map frame is the cheap cacheable form (round-11
-      // economics: map rows beat exploded rows at doc granularity).
+      // sums are count-weighted over DISTINCT words — t12's shape; why
+      // not a `toks` CTE: SCALE.md "One curation vocabulary").
       // space_token_histogram over the normalized text counts exactly
       // split(text, ' ')'s tokens (maximal non-space runs). Pinned edge
-      // case (round-12 advice): a doc whose normalized text is all
-      // whitespace has zero tokens and is EXCLUDED from the output in
-      // both engines — the oracle filters tok <> '' so DuckDB's
+      // case: a doc whose normalized text is all whitespace has zero
+      // tokens and is EXCLUDED from the output in both engines — the
+      // oracle filters tok <> '' so DuckDB's
       // string_split('') one-empty-token artifact never re-admits it
       // (TextSpec pins the engine half on a planted whitespace doc).
       staged("t09_dh", d) {
@@ -523,39 +508,86 @@ object CurationOps {
     },
     headline = true)
 
+  /** The canonical election over the member rows `(keys…, doc_id,
+    * n_chars)` of `src` (a relation, optionally aliased and filtered):
+    * per `keys` group the longest member, doc_id breaking ties, and the
+    * group size. One spelling in both dialects, for d13, d22's stored
+    * base, repair and full re-election, and d23's oracle. */
+  private[graft] def elect(src: String, keys: String): String = s"""
+      SELECT $keys,
+             max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
+             max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
+             CAST(count(*) AS BIGINT) AS n_members
+      FROM (SELECT $keys, doc_id, n_chars,
+              row_number() OVER (PARTITION BY $keys
+                ORDER BY n_chars DESC, doc_id) AS rk
+            FROM $src) t
+      GROUP BY $keys"""
+
+  /** Cluster members `(cluster_id, doc_id, n_chars)` of the d06 labels
+    * relation `lab`, in both dialects. */
+  private[graft] def memberSql(lab: String): String = s"""
+      SELECT l.cluster_id, l.doc_id, doc.n_chars
+      FROM $lab l JOIN documents doc ON l.doc_id = doc.doc_id"""
+
+  /** The one staged cluster-member frame ([[memberSql]] over d06's
+    * labels), read by d22 and d23's tombstone stream. It is
+    * cluster-edge-set-sized (≪ corpus), and every d22 repair CTE composes
+    * on it, so the corpus scans once. */
+  private[graft] def clusterMembers(s: SparkSession, d: String): DataFrame =
+    staged("cluster_mem", d) {
+      DedupOps.d06.run(s, d).createOrReplaceTempView("cluster_lab")
+      withViews(s, d, "documents")(memberSql("cluster_lab"))
+    }
+
+  /** d13's text over the d06 labels relation `lab`. */
+  private def d13Sql(lab: String): String =
+    s"WITH mem AS (${memberSql(lab)})${elect("mem", "cluster_id")}"
+
   /** Canonical-document selection — the retention policy that rides on
     * dedup clustering: within every near-dup cluster (d06's connected
     * components) keep the HIGHEST-QUALITY member (longest document,
     * doc_id tie-break), not d06's arbitrary min-id representative. The
     * cluster set is tiny relative to the corpus (only docs with a near-dup
     * edge), so the labels→documents join broadcasts and the per-cluster
-    * argmax is a window over a bounded group. */
+    * argmax is a window over a bounded group. The join stays unstaged: d13
+    * reads it once. */
   val d13 = QueryDef(
     "d13_canonical_selection",
     (s, d) => {
       DedupOps.d06.run(s, d).createOrReplaceTempView("d13_lab")
-      withViews(s, d, "documents")("""
-        WITH r AS (SELECT l.cluster_id, l.doc_id, doc.n_chars,
-                     row_number() OVER (PARTITION BY l.cluster_id
-                       ORDER BY doc.n_chars DESC, l.doc_id) AS rk
-                   FROM d13_lab l JOIN documents doc ON l.doc_id = doc.doc_id)
-        SELECT cluster_id,
-               max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
-               max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
-               CAST(count(*) AS BIGINT) AS n_members
-        FROM r GROUP BY cluster_id""")
+      withViews(s, d, "documents")(d13Sql("d13_lab"))
     },
-    Some(s"""
-      WITH r AS (SELECT l.cluster_id, l.doc_id, doc.n_chars,
-                   row_number() OVER (PARTITION BY l.cluster_id
-                     ORDER BY doc.n_chars DESC, l.doc_id) AS rk
-                 FROM (${DedupOps.d06.oracle.get.trim}) l
-                 JOIN documents doc ON l.doc_id = doc.doc_id)
-      SELECT cluster_id,
-             max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
-             max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
-             CAST(count(*) AS BIGINT) AS n_members
-      FROM r GROUP BY cluster_id"""))
+    Some(d13Sql(s"(${DedupOps.d06.oracle.get.trim})")))
+
+  /** d22's CTEs and select over the member relation `mem`, with
+    * tombstones drawn from `tomb`. */
+  private def d22Sql(mem: String, tomb: String): String = s"""
+      tomb AS (SELECT doc_id FROM $tomb WHERE ${DedupOps.tombPred("doc_id")}),
+      base AS (${elect(mem, "cluster_id")}),
+      aff AS (SELECT DISTINCT cluster_id FROM $mem
+              WHERE doc_id IN (SELECT doc_id FROM tomb)),
+      surv AS (SELECT m.cluster_id, m.doc_id, m.n_chars FROM $mem m
+               WHERE m.doc_id NOT IN (SELECT doc_id FROM tomb)),
+      re AS (${elect("surv s WHERE s.cluster_id IN (SELECT cluster_id FROM aff)",
+                     "cluster_id")}),
+      maint AS (SELECT b.cluster_id, b.canonical_doc, b.canonical_chars,
+                  b.n_members, false AS was_affected
+                FROM base b
+                WHERE b.cluster_id NOT IN (SELECT cluster_id FROM aff)
+                UNION ALL
+                SELECT r.cluster_id, r.canonical_doc, r.canonical_chars,
+                  r.n_members, true AS was_affected
+                FROM re r),
+      fullr AS (${elect("surv s", "cluster_id")})
+      SELECT coalesce(m.cluster_id, f.cluster_id) AS cluster_id,
+             m.canonical_doc, m.canonical_chars, m.n_members,
+             m.was_affected,
+             m.cluster_id IS NOT NULL AND f.cluster_id IS NOT NULL
+               AND m.canonical_doc = f.canonical_doc
+               AND m.canonical_chars = f.canonical_chars
+               AND m.n_members = f.n_members AS matches_full
+      FROM maint m FULL OUTER JOIN fullr f ON m.cluster_id = f.cluster_id"""
 
   /** d22 — deletion propagation through the dedup artifacts (the
     * right-to-be-forgotten / publisher-opt-out path every production
@@ -585,127 +617,24 @@ object CurationOps {
     * only over affected clusters' surviving members (bounded per-cluster
     * groups, d13's economics); the stored base for unaffected clusters
     * moves through one anti-join and is never re-derived per refresh.
-    * Every repair CTE composes on ONE staged member frame (labels ⋈
-    * chars, cluster-edge-set-sized ≪ corpus) — the corpus scans once;
-    * without the staged leaf Catalyst's CTE inlining expanded the plan
-    * to NINE live corpus scans (PlanAudit, this round). Tombstones are
-    * filtered to LABELED docs on the engine side — a deletion of an
-    * unclustered doc cannot affect any cluster row, so the output is
-    * identical (the oracle keeps the unfiltered spelling; the gate hash
-    * proves the equivalence). At 100 TB the difference between a day's
-    * deletions and the corpus. */
+    * Every repair CTE composes on the one staged [[clusterMembers]]
+    * frame: without the staged leaf Catalyst's CTE inlining expanded the
+    * plan to nine live corpus scans (SCALE.md "One curation vocabulary").
+    * Tombstones are read from `tomb`: the labeled members on the engine
+    * side — a deletion of an unclustered doc cannot affect any cluster
+    * row, so the output is identical (the oracle keeps the unfiltered
+    * `documents`; the gate hash proves the equivalence). At 100 TB the
+    * difference between a day's deletions and the corpus. */
   val d22 = QueryDef(
     "d22_delete_propagation",
     (s, d) => {
-      DedupOps.d06.run(s, d).createOrReplaceTempView("d22_lab")
-      staged("d22_mem", d) {
-        withViews(s, d, "documents")("""
-          SELECT l.cluster_id, l.doc_id, doc.n_chars
-          FROM d22_lab l JOIN documents doc ON l.doc_id = doc.doc_id""")
-      }.createOrReplaceTempView("d22_mem")
-      s.sql(s"""
-        WITH tomb AS (SELECT doc_id FROM d22_mem WHERE ${DedupOps.tombPred("doc_id")}),
-        base AS (SELECT cluster_id,
-                   max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
-                   max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
-                   CAST(count(*) AS BIGINT) AS n_members
-                 FROM (SELECT m.cluster_id, m.doc_id, m.n_chars,
-                         row_number() OVER (PARTITION BY m.cluster_id
-                           ORDER BY m.n_chars DESC, m.doc_id) AS rk
-                       FROM d22_mem m)
-                 GROUP BY cluster_id),
-        aff AS (SELECT DISTINCT cluster_id FROM d22_mem
-                WHERE doc_id IN (SELECT doc_id FROM tomb)),
-        surv AS (SELECT m.cluster_id, m.doc_id, m.n_chars FROM d22_mem m
-                 WHERE m.doc_id NOT IN (SELECT doc_id FROM tomb)),
-        re AS (SELECT cluster_id,
-                 max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
-                 max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
-                 CAST(count(*) AS BIGINT) AS n_members
-               FROM (SELECT s.cluster_id, s.doc_id, s.n_chars,
-                       row_number() OVER (PARTITION BY s.cluster_id
-                         ORDER BY s.n_chars DESC, s.doc_id) AS rk
-                     FROM surv s
-                     WHERE s.cluster_id IN (SELECT cluster_id FROM aff))
-               GROUP BY cluster_id),
-        maint AS (SELECT b.cluster_id, b.canonical_doc, b.canonical_chars,
-                    b.n_members, false AS was_affected
-                  FROM base b
-                  WHERE b.cluster_id NOT IN (SELECT cluster_id FROM aff)
-                  UNION ALL
-                  SELECT r.cluster_id, r.canonical_doc, r.canonical_chars,
-                    r.n_members, true AS was_affected
-                  FROM re r),
-        fullr AS (SELECT cluster_id,
-                    max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
-                    max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
-                    CAST(count(*) AS BIGINT) AS n_members
-                  FROM (SELECT s.cluster_id, s.doc_id, s.n_chars,
-                          row_number() OVER (PARTITION BY s.cluster_id
-                            ORDER BY s.n_chars DESC, s.doc_id) AS rk
-                        FROM surv s)
-                  GROUP BY cluster_id)
-        SELECT coalesce(m.cluster_id, f.cluster_id) AS cluster_id,
-               m.canonical_doc, m.canonical_chars, m.n_members,
-               m.was_affected,
-               m.cluster_id IS NOT NULL AND f.cluster_id IS NOT NULL
-                 AND m.canonical_doc = f.canonical_doc
-                 AND m.canonical_chars = f.canonical_chars
-                 AND m.n_members = f.n_members AS matches_full
-        FROM maint m FULL OUTER JOIN fullr f ON m.cluster_id = f.cluster_id""")
+      clusterMembers(s, d).createOrReplaceTempView("cluster_mem")
+      s.sql(s"WITH ${d22Sql("cluster_mem", "cluster_mem")}")
     },
     Some(s"""
       WITH lab AS (${DedupOps.d06.oracle.get.trim}),
-      tomb AS (SELECT doc_id FROM documents WHERE ${DedupOps.tombPred("doc_id")}),
-      base AS (SELECT cluster_id,
-                 max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
-                 max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
-                 CAST(count(*) AS BIGINT) AS n_members
-               FROM (SELECT l.cluster_id, l.doc_id, doc.n_chars,
-                       row_number() OVER (PARTITION BY l.cluster_id
-                         ORDER BY doc.n_chars DESC, l.doc_id) AS rk
-                     FROM lab l JOIN documents doc ON l.doc_id = doc.doc_id)
-               GROUP BY cluster_id),
-      aff AS (SELECT DISTINCT cluster_id FROM lab
-              WHERE doc_id IN (SELECT doc_id FROM tomb)),
-      surv AS (SELECT l.cluster_id, l.doc_id, doc.n_chars
-               FROM lab l JOIN documents doc ON l.doc_id = doc.doc_id
-               WHERE l.doc_id NOT IN (SELECT doc_id FROM tomb)),
-      re AS (SELECT cluster_id,
-               max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
-               max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
-               CAST(count(*) AS BIGINT) AS n_members
-             FROM (SELECT s.cluster_id, s.doc_id, s.n_chars,
-                     row_number() OVER (PARTITION BY s.cluster_id
-                       ORDER BY s.n_chars DESC, s.doc_id) AS rk
-                   FROM surv s
-                   WHERE s.cluster_id IN (SELECT cluster_id FROM aff)) t
-             GROUP BY cluster_id),
-      maint AS (SELECT b.cluster_id, b.canonical_doc, b.canonical_chars,
-                  b.n_members, false AS was_affected
-                FROM base b
-                WHERE b.cluster_id NOT IN (SELECT cluster_id FROM aff)
-                UNION ALL
-                SELECT r.cluster_id, r.canonical_doc, r.canonical_chars,
-                  r.n_members, true AS was_affected
-                FROM re r),
-      fullr AS (SELECT cluster_id,
-                  max(CASE WHEN rk = 1 THEN doc_id END) AS canonical_doc,
-                  max(CASE WHEN rk = 1 THEN n_chars END) AS canonical_chars,
-                  CAST(count(*) AS BIGINT) AS n_members
-                FROM (SELECT s.cluster_id, s.doc_id, s.n_chars,
-                        row_number() OVER (PARTITION BY s.cluster_id
-                          ORDER BY s.n_chars DESC, s.doc_id) AS rk
-                      FROM surv s) t
-                GROUP BY cluster_id)
-      SELECT coalesce(m.cluster_id, f.cluster_id) AS cluster_id,
-             m.canonical_doc, m.canonical_chars, m.n_members,
-             m.was_affected,
-             m.cluster_id IS NOT NULL AND f.cluster_id IS NOT NULL
-               AND m.canonical_doc = f.canonical_doc
-               AND m.canonical_chars = f.canonical_chars
-               AND m.n_members = f.n_members AS matches_full
-      FROM maint m FULL OUTER JOIN fullr f ON m.cluster_id = f.cluster_id"""))
+      mem AS (${memberSql("lab")}),
+      ${d22Sql("mem", "documents")}"""))
 
   /** Data-mixture sampling: hit a per-language token BUDGET (the Pile /
     * DoReMi-style static mixture weights) with a deterministic hash
@@ -715,12 +644,10 @@ object CurationOps {
     * float ever entering the decision, and re-running reproduces the
     * sample. Scale shape: pass 1 is a tiny per-lang aggregate that
     * broadcasts back onto the scan; pass 2 is row-wise. */
-  val q52 = QueryDef(
-    "q52_mixture_sample",
-    (s, d) => withViews(s, d, "documents")(s"""
+  val q52 = docQuery("q52_mixture_sample") { dl => s"""
       WITH t AS (SELECT doc_id, lang,
-                   CAST(size(split($sNorm, ' ')) AS BIGINT) AS n_tokens,
-                   CAST(char_fold(CAST(doc_id AS STRING), 404) % 1000
+                   CAST(${dl.len(dl.split(dl.norm))} AS BIGINT) AS n_tokens,
+                   CAST(${dl.fold(s"CAST(doc_id AS ${dl.str})", 404)} % 1000
                      AS BIGINT) AS bucket
                  FROM documents),
       lt AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS lang_tokens
@@ -737,27 +664,40 @@ object CurationOps {
       SELECT lang, lang_tokens, budget,
              CAST(count(*) AS BIGINT) AS n_kept,
              CAST(sum(n_tokens) AS BIGINT) AS kept_tokens
-      FROM k GROUP BY lang, lang_tokens, budget"""),
-    Some(s"""
-      WITH t AS (SELECT doc_id, lang,
-                   CAST(len(string_split($oNorm, ' ')) AS BIGINT) AS n_tokens,
-                   CAST(${oCharFold("CAST(doc_id AS VARCHAR)", 404)} % 1000
-                     AS BIGINT) AS bucket
-                 FROM documents),
-      lt AS (SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS lang_tokens
-             FROM t GROUP BY lang),
-      b AS (SELECT lang, lang_tokens,
-              CASE lang WHEN 'en' THEN 5000 WHEN 'es' THEN 3000
-                        WHEN 'de' THEN 3000 WHEN 'fr' THEN 2000
-                        ELSE 4000 END AS budget
-            FROM lt),
-      k AS (SELECT t.doc_id, t.lang, t.n_tokens, b.lang_tokens, b.budget
-            FROM t JOIN b ON t.lang = b.lang
-            WHERE t.bucket * b.lang_tokens < 1000 * b.budget)
-      SELECT lang, lang_tokens, budget,
-             CAST(count(*) AS BIGINT) AS n_kept,
-             CAST(sum(n_tokens) AS BIGINT) AS kept_tokens
-      FROM k GROUP BY lang, lang_tokens, budget"""))
+      FROM k GROUP BY lang, lang_tokens, budget"""
+  }
+
+  /** d15's fingerprint frame: the md5 of each document's normalized text. */
+  private def d15Fps(dl: Dialect): String =
+    s"SELECT doc_id, md5(${dl.norm}) AS fp FROM documents"
+
+  /** d15's new/old split `t` and old fingerprint set `oldf` over the
+    * fingerprint relation `fps`. */
+  private def d15Split(fps: String): String = s"""
+      mx AS (SELECT max(doc_id) AS mxid FROM $fps),
+      t AS (SELECT f.doc_id, f.fp, (f.doc_id * 5 >= mx.mxid * 4) AS is_new
+            FROM $fps f CROSS JOIN mx),
+      oldf AS (SELECT DISTINCT fp FROM t WHERE NOT is_new)"""
+
+  /** d15's new docs with a near-dup pair (either orientation) into the
+    * old side, and the output select, over the pair relation `pairs`.
+    * The union takes its column name `nid` from the first arm. */
+  private def d15Flags(pairs: String): String = {
+    def arm(nw: String, old: String, as: String) = s"""
+               SELECT p.doc_$nw$as FROM $pairs p
+                 JOIN t a ON p.doc_a = a.doc_id
+                 JOIN t b ON p.doc_b = b.doc_id
+               WHERE $nw.is_new AND NOT $old.is_new"""
+    s"""
+      near AS (${arm("b", "a", " AS nid")}
+               UNION${arm("a", "b", "")})
+      SELECT n.doc_id,
+             (o.fp IS NOT NULL) AS exact_dup,
+             (nr.nid IS NOT NULL) AS near_dup
+      FROM (SELECT doc_id, fp FROM t WHERE is_new) n
+      LEFT JOIN oldf o ON n.fp = o.fp
+      LEFT JOIN near nr ON n.doc_id = nr.nid"""
+  }
 
   /** Incremental (new-batch-vs-corpus) dedup — the ingestion-time shape:
     * the newest 20% of documents (integer cross-multiplied id threshold
@@ -773,55 +713,33 @@ object CurationOps {
     (s, d) => {
       // staged: the fingerprint frame feeds the new/old split, both
       // near-dup join sides, and the output join
-      val fps = staged("d15_fps", d) {
-        withViews(s, d, "documents")(s"""
-          SELECT doc_id, md5($sNorm) AS fp FROM documents""")
-      }
-      fps.createOrReplaceTempView("d15_fps")
+      staged("d15_fps", d) {
+        withViews(s, d, "documents")(d15Fps(Dialect.Spark))
+      }.createOrReplaceTempView("d15_fps")
       DedupOps.d02Pairs(s, d).createOrReplaceTempView("d15_pairs")
-      s.sql("""
-        WITH mx AS (SELECT max(doc_id) AS mxid FROM d15_fps),
-        t AS (SELECT f.doc_id, f.fp, (f.doc_id * 5 >= mx.mxid * 4) AS is_new
-              FROM d15_fps f CROSS JOIN mx),
-        oldf AS (SELECT DISTINCT fp FROM t WHERE NOT is_new),
-        near AS (SELECT p.doc_b AS nid FROM d15_pairs p
-                   JOIN t a ON p.doc_a = a.doc_id
-                   JOIN t b ON p.doc_b = b.doc_id
-                 WHERE b.is_new AND NOT a.is_new
-                 UNION
-                 SELECT p.doc_a FROM d15_pairs p
-                   JOIN t a ON p.doc_a = a.doc_id
-                   JOIN t b ON p.doc_b = b.doc_id
-                 WHERE a.is_new AND NOT b.is_new)
-        SELECT n.doc_id,
-               (o.fp IS NOT NULL) AS exact_dup,
-               (nr.nid IS NOT NULL) AS near_dup
-        FROM (SELECT doc_id, fp FROM t WHERE is_new) n
-        LEFT JOIN oldf o ON n.fp = o.fp
-        LEFT JOIN near nr ON n.doc_id = nr.nid""")
+      s.sql(s"WITH ${d15Split("d15_fps")},${d15Flags("d15_pairs")}")
     },
     Some(s"""
-      WITH fps AS (SELECT doc_id, md5($oNorm) AS fp FROM documents),
-      mx AS (SELECT max(doc_id) AS mxid FROM fps),
-      t AS (SELECT f.doc_id, f.fp, (f.doc_id * 5 >= mx.mxid * 4) AS is_new
-            FROM fps f CROSS JOIN mx),
-      oldf AS (SELECT DISTINCT fp FROM t WHERE NOT is_new),
-      prs AS (${DedupOps.d02.oracle.get.trim}),
-      near AS (SELECT p.doc_b AS nid FROM prs p
-                 JOIN t a ON p.doc_a = a.doc_id
-                 JOIN t b ON p.doc_b = b.doc_id
-               WHERE b.is_new AND NOT a.is_new
-               UNION
-               SELECT p.doc_a FROM prs p
-                 JOIN t a ON p.doc_a = a.doc_id
-                 JOIN t b ON p.doc_b = b.doc_id
-               WHERE a.is_new AND NOT b.is_new)
-      SELECT n.doc_id,
-             (o.fp IS NOT NULL) AS exact_dup,
-             (nr.nid IS NOT NULL) AS near_dup
-      FROM (SELECT doc_id, fp FROM t WHERE is_new) n
-      LEFT JOIN oldf o ON n.fp = o.fp
-      LEFT JOIN near nr ON n.doc_id = nr.nid"""))
+      WITH fps AS (${d15Fps(Dialect.DuckDB)}),${d15Split("fps")},
+      prs AS (${DedupOps.d02.oracle.get.trim}),${d15Flags("prs")}"""))
+
+  /** The split rule of q54 and d26: the 0–99 hash bucket of a split key,
+    * and the 80/10/10 train/val/test assignment of a bucket. */
+  private def splitBucket(dl: Dialect, key: String): String =
+    s"CAST(${dl.fold(s"CAST($key AS ${dl.str})", 505)} % 100 AS BIGINT)"
+  private def splitOf(bucket: String): String =
+    s"CASE WHEN $bucket < 80 THEN 'train' WHEN $bucket < 90 THEN 'val' ELSE 'test' END"
+
+  /** q54's text over the d06 labels relation `lab`. */
+  private def q54Sql(dl: Dialect, lab: String): String = s"""
+      WITH k AS (SELECT /*+ BROADCAST(l) */ doc.doc_id,
+                   coalesce(l.cluster_id, doc.doc_id) AS split_key
+                 FROM documents doc
+                 LEFT JOIN $lab l ON doc.doc_id = l.doc_id),
+      b AS (SELECT doc_id, split_key, ${splitBucket(dl, "split_key")} AS bucket
+            FROM k)
+      SELECT doc_id, split_key, ${splitOf("bucket")} AS split
+      FROM b"""
 
   /** Leakage-safe train/val/test split: the split is assigned by hashing
     * the DEDUP-CLUSTER key, not the document id — near-duplicates always
@@ -835,36 +753,9 @@ object CurationOps {
     "q54_leakage_safe_split",
     (s, d) => {
       DedupOps.d06.run(s, d).createOrReplaceTempView("q54_lab")
-      withViews(s, d, "documents")("""
-        WITH k AS (SELECT /*+ BROADCAST(l) */ doc.doc_id,
-                     coalesce(l.cluster_id, doc.doc_id) AS split_key
-                   FROM documents doc
-                   LEFT JOIN q54_lab l ON doc.doc_id = l.doc_id),
-        b AS (SELECT doc_id, split_key,
-                CAST(char_fold(CAST(split_key AS STRING), 505) % 100
-                  AS BIGINT) AS bucket
-              FROM k)
-        SELECT doc_id, split_key,
-               CASE WHEN bucket < 80 THEN 'train'
-                    WHEN bucket < 90 THEN 'val'
-                    ELSE 'test' END AS split
-        FROM b""")
+      withViews(s, d, "documents")(q54Sql(Dialect.Spark, "q54_lab"))
     },
-    Some(s"""
-      WITH k AS (SELECT doc.doc_id,
-                   coalesce(l.cluster_id, doc.doc_id) AS split_key
-                 FROM documents doc
-                 LEFT JOIN (${DedupOps.d06.oracle.get.trim}) l
-                   ON doc.doc_id = l.doc_id),
-      b AS (SELECT doc_id, split_key,
-              CAST(${oCharFold("CAST(split_key AS VARCHAR)", 505)} % 100
-                AS BIGINT) AS bucket
-            FROM k)
-      SELECT doc_id, split_key,
-             CASE WHEN bucket < 80 THEN 'train'
-                  WHEN bucket < 90 THEN 'val'
-                  ELSE 'test' END AS split
-      FROM b"""))
+    Some(q54Sql(Dialect.DuckDB, s"(${DedupOps.d06.oracle.get.trim})")))
 
   /** Intra-document repetition removal (d11's cross-document twin — the
     * C4/trafilatura "drop repeated lines WITHIN a page" stage): inside
@@ -885,8 +776,7 @@ object CurationOps {
   val d14 = QueryDef(
     "d14_intradoc_dedup",
     (s, d) => withViews(s, d, "documents")(s"""
-      WITH toks AS (SELECT doc_id, split($sNorm, ' ') AS t FROM documents
-                    WHERE length(text) >= 1),
+      WITH ${toks(Dialect.Spark, "doc_id")},
       n AS (SELECT doc_id, t,
               CAST((size(t) + 1) div 2 AS INT) AS nch FROM toks),
       sp AS (SELECT doc_id,
@@ -902,8 +792,7 @@ object CurationOps {
              CAST(size(sp) - size(kept) AS BIGINT) AS n_removed
       FROM k"""),
     Some(s"""
-      WITH toks AS (SELECT doc_id, string_split($oNorm, ' ') AS t
-                    FROM documents WHERE length(text) >= 1),
+      WITH ${toks(Dialect.DuckDB, "doc_id")},
       n AS (SELECT doc_id, t, (len(t) + 1) // 2 AS nch FROM toks),
       sp AS (SELECT doc_id,
                list_transform(range(nch),
@@ -936,9 +825,7 @@ object CurationOps {
     * shuffles; survivors and upserts union without an exchange. A
     * same-order-of-magnitude merge would flip to a shuffle join on
     * doc_id — AQE makes that call at runtime if the hint is dropped. */
-  val q57 = QueryDef(
-    "q57_incremental_merge",
-    (s, d) => withViews(s, d, "documents")("""
+  val q57 = docQuery("q57_incremental_merge") { _ => """
       WITH del AS (SELECT doc_id FROM documents WHERE doc_id % 11 = 3),
       up AS (SELECT doc_id, concat(text, ' [rev2]') AS text, lang, source
              FROM documents WHERE doc_id % 7 = 0 AND doc_id % 11 <> 3),
@@ -950,7 +837,7 @@ object CurationOps {
                 UNION ALL SELECT doc_id FROM ins),
       kept AS (SELECT /*+ BROADCAST(k) */ b.doc_id, b.text, b.lang,
                       b.source, 'base' AS op
-               FROM documents b LEFT ANTI JOIN dkeys k
+               FROM documents b ANTI JOIN dkeys k
                  ON b.doc_id = k.doc_id),
       merged AS (SELECT * FROM kept
                  UNION ALL SELECT doc_id, text, lang, source, 'upsert' AS op
@@ -959,29 +846,8 @@ object CurationOps {
                            FROM ins)
       SELECT doc_id, lang, source,
              CAST(length(text) AS BIGINT) AS n_chars_final, op
-      FROM merged"""),
-    Some("""
-      WITH del AS (SELECT doc_id FROM documents WHERE doc_id % 11 = 3),
-      up AS (SELECT doc_id, concat(text, ' [rev2]') AS text, lang, source
-             FROM documents WHERE doc_id % 7 = 0 AND doc_id % 11 <> 3),
-      ins AS (SELECT doc_id + 10000000 AS doc_id,
-                     concat('new ', text) AS text, lang, source
-              FROM documents WHERE doc_id % 13 = 5),
-      dkeys AS (SELECT doc_id FROM del
-                UNION ALL SELECT doc_id FROM up
-                UNION ALL SELECT doc_id FROM ins),
-      kept AS (SELECT b.doc_id, b.text, b.lang, b.source, 'base' AS op
-               FROM documents b
-               WHERE NOT EXISTS (SELECT 1 FROM dkeys k
-                                 WHERE b.doc_id = k.doc_id)),
-      merged AS (SELECT * FROM kept
-                 UNION ALL SELECT doc_id, text, lang, source, 'upsert' AS op
-                           FROM up
-                 UNION ALL SELECT doc_id, text, lang, source, 'insert' AS op
-                           FROM ins)
-      SELECT doc_id, lang, source,
-             CAST(length(text) AS BIGINT) AS n_chars_final, op
-      FROM merged"""))
+      FROM merged"""
+  }
 
   /** Bigram-LM geometry, shared engine↔oracle (same rule as the corpus
     * chunk/pack constants): vocab cap, the add-1 smoothing denominator's
@@ -1209,15 +1075,11 @@ object CurationOps {
     * spec can exercise the cap directly without touching the staged
     * default frame.
     *
-    * Round 16 (guide §7.2 / d19's lesson applied here): as one WITH
-    * statement the `sh` CTE (the corpus chunk explode + DISTINCT — the
-    * only corpus-scale pass in the build) was inlined into BOTH its
-    * consumers (`hf` and `sf`), and `sf` was additionally inlined into
-    * both sides of the pair self-join — the physical plan paid the
-    * explode + distinct up to four times. Staging `sh` (metadata-width:
-    * (source, md5) — exactly the frame the scale note above prices) and
-    * `sf` (keyed by cap: `hf` depends on it) leaves ONE explode and one
-    * filter pass; the pair join reads the `sf` cache twice. */
+    * `sh` (the corpus chunk explode + DISTINCT, metadata-width (source,
+    * md5)) and `sf` (keyed by cap) are staged, so the build pays one
+    * explode and one filter pass and the pair join reads `sf` twice; as
+    * one WITH statement Catalyst inlined them up to four times (SCALE.md
+    * "One curation vocabulary"). */
   private[graft] def pagerankEdges(s: org.apache.spark.sql.SparkSession,
       d: String, cap: Int): DataFrame = {
     // plain subqueries, no WITH, below this point: a staged view whose
@@ -1262,38 +1124,37 @@ object CurationOps {
   private val prTele = "150000000000"   // mass · 15%
   private val prIters = 3
 
-  /** One unrolled PageRank iteration CTE: `dv` is the integer-division
-    * spelling ("div" Spark / "//" DuckDB). new_r(v) = teleport/n +
+  /** One unrolled PageRank iteration CTE in dialect `dl`. new_r(v) = teleport/n +
     * Σ_u ((r(u)·85) div 100 · pw(u,v)) div 10^6; dangling sources keep
     * only teleport mass (constant-teleport power iteration — division
     * dust and dangling loss shrink total mass, never reorder ranks). */
-  private def prIter(k: Int, prev: String, dv: String): String = s"""
+  private def prIter(k: Int, prev: String, dl: Dialect): String = s"""
       it$k AS (SELECT n.source,
-                 CAST(($prTele $dv cnt.n)
-                   + coalesce(CAST(sum((((r.r * 85) $dv 100) * ep.pw)
-                       $dv 1000000) AS BIGINT), CAST(0 AS BIGINT))
+                 CAST(($prTele ${dl.div} cnt.n)
+                   + coalesce(CAST(sum((((r.r * 85) ${dl.div} 100) * ep.pw)
+                       ${dl.div} 1000000) AS BIGINT), CAST(0 AS BIGINT))
                    AS BIGINT) AS r
                FROM nodes n CROSS JOIN cnt
                LEFT JOIN ep ON ep.dst = n.source
                LEFT JOIN $prev r ON r.source = ep.src
                GROUP BY n.source, cnt.n)"""
 
-  private def prIterChain(dv: String): String =
-    (1 to prIters).map(k => prIter(k, if (k == 1) "r0" else s"it${k - 1}", dv))
+  private def prIterChain(dl: Dialect): String =
+    (1 to prIters).map(k => prIter(k, if (k == 1) "r0" else s"it${k - 1}", dl))
       .mkString(",")
 
   /** Shared iteration + readout SQL over `edges`/`nodes` CTEs (or views). */
-  private def prBody(dv: String): String = s"""
+  private def prBody(dl: Dialect): String = s"""
       cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
       ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS outw,
                     CAST(count(*) AS BIGINT) AS odeg
              FROM edges GROUP BY src),
       ind AS (SELECT dst, CAST(count(*) AS BIGINT) AS ideg
               FROM edges GROUP BY dst),
-      ep AS (SELECT e.src, e.dst, ((e.w * 1000000) $dv ow.outw) AS pw
+      ep AS (SELECT e.src, e.dst, ((e.w * 1000000) ${dl.div} ow.outw) AS pw
              FROM edges e JOIN ow ON ow.src = e.src),
-      r0 AS (SELECT source, ($prMass $dv n) AS r FROM nodes CROSS JOIN cnt),
-      ${prIterChain(dv)}
+      r0 AS (SELECT source, ($prMass ${dl.div} n) AS r FROM nodes CROSS JOIN cnt),
+      ${prIterChain(dl)}
       SELECT n.source, it$prIters.r AS pr_scaled,
              CAST(it$prIters.r AS DOUBLE) / $prMass.0 AS pr,
              CAST(coalesce(ow.odeg, 0) AS BIGINT) AS n_out,
@@ -1335,7 +1196,7 @@ object CurationOps {
       s.sql(s"""
         WITH nodes AS (SELECT source FROM q69_nodes),
         edges AS (SELECT src, dst, w FROM q69_edges),
-        ${prBody("div")}""")
+        ${prBody(Dialect.Spark)}""")
     },
     Some(s"""
       WITH $oChunks,
@@ -1348,8 +1209,19 @@ object CurationOps {
       edges AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS w
                 FROM e0 GROUP BY src, dst),
       nodes AS (SELECT DISTINCT source FROM documents),
-      ${prBody("//")}"""),
+      ${prBody(Dialect.DuckDB)}"""),
     headline = true)
+
+  /** t20's text over the chunk CTEs `chunks` ([[sChunks]] or its DuckDB
+    * spelling). */
+  private def t20Sql(chunks: String): String = s"""
+      WITH $chunks,
+      c AS (SELECT chunk, CAST(count(*) AS BIGINT) AS n_occurrences,
+                   CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+            FROM chunks GROUP BY chunk
+            HAVING count(DISTINCT doc_id) >= 2)
+      SELECT chunk, n_occurrences, n_docs
+      FROM c ORDER BY n_occurrences DESC, chunk LIMIT 100"""
 
   /** Corpus-wide most-duplicated n-gram chunks — the memorization risk
     * list (the table Lee et al.'s dedup paper reports: the exact
@@ -1368,23 +1240,27 @@ object CurationOps {
     * boundary deterministic in both engines. */
   val t20 = QueryDef(
     "t20_memorized_ngrams",
-    (s, d) => withViews(s, d, "documents")(s"""
-      WITH $sChunks,
-      c AS (SELECT chunk, CAST(count(*) AS BIGINT) AS n_occurrences,
-                   CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-            FROM chunks GROUP BY chunk
-            HAVING count(DISTINCT doc_id) >= 2)
-      SELECT chunk, n_occurrences, n_docs
-      FROM c ORDER BY n_occurrences DESC, chunk LIMIT 100"""),
-    Some(s"""
-      WITH $oChunks,
-      c AS (SELECT chunk, count(*)::BIGINT AS n_occurrences,
-                   count(DISTINCT doc_id)::BIGINT AS n_docs
-            FROM chunks GROUP BY chunk
-            HAVING count(DISTINCT doc_id) >= 2)
-      SELECT chunk, n_occurrences, n_docs
-      FROM c ORDER BY n_occurrences DESC, chunk LIMIT 100"""),
+    (s, d) => withViews(s, d, "documents")(t20Sql(sChunks)),
+    Some(t20Sql(oChunks)),
     headline = true)
+
+  /** d26's audit over the q54 split relation `split` and the verified
+    * pair relation `pairs`. */
+  private def d26Sql(dl: Dialect, split: String, pairs: String): String = s"""
+      doc_split AS (SELECT doc_id, ${splitOf(splitBucket(dl, "doc_id"))} AS split
+                    FROM $split),
+      bth AS (
+        SELECT 'cluster_hash' AS rule, p.doc_a, p.doc_b,
+               a.split AS split_a, b.split AS split_b
+        FROM $pairs p JOIN $split a ON p.doc_a = a.doc_id
+                      JOIN $split b ON p.doc_b = b.doc_id
+        UNION ALL
+        SELECT 'doc_hash', p.doc_a, p.doc_b, a.split, b.split
+        FROM $pairs p JOIN doc_split a ON p.doc_a = a.doc_id
+                      JOIN doc_split b ON p.doc_b = b.doc_id)
+      SELECT rule, doc_a, doc_b, split_a, split_b,
+             (split_a <> split_b) AS is_leaked
+      FROM bth"""
 
   /** SPLIT-LEAKAGE AUDIT — the measurement that tells a team whether
     * their held-out evaluation is honest: for every VERIFIED near-dup
@@ -1413,51 +1289,14 @@ object CurationOps {
         .createOrReplaceTempView("d26_split")
       DedupOps.d02Pairs(s, d).createOrReplaceTempView("d26_pairs")
       graft.functions.GraftFunctions.register(s)
-      s.sql("""
-        WITH doc_split AS (SELECT doc_id,
-                CASE WHEN CAST(char_fold(CAST(doc_id AS STRING), 505) % 100
-                       AS BIGINT) < 80 THEN 'train'
-                     WHEN CAST(char_fold(CAST(doc_id AS STRING), 505) % 100
-                       AS BIGINT) < 90 THEN 'val'
-                     ELSE 'test' END AS split
-              FROM d26_split),
-        both AS (
-          SELECT 'cluster_hash' AS rule, p.doc_a, p.doc_b,
-                 a.split AS split_a, b.split AS split_b
-          FROM d26_pairs p JOIN d26_split a ON p.doc_a = a.doc_id
-                           JOIN d26_split b ON p.doc_b = b.doc_id
-          UNION ALL
-          SELECT 'doc_hash', p.doc_a, p.doc_b, a.split, b.split
-          FROM d26_pairs p JOIN doc_split a ON p.doc_a = a.doc_id
-                           JOIN doc_split b ON p.doc_b = b.doc_id)
-        SELECT rule, doc_a, doc_b, split_a, split_b,
-               (split_a <> split_b) AS is_leaked
-        FROM both""")
+      s.sql(s"WITH ${d26Sql(Dialect.Spark, "d26_split", "d26_pairs")}")
     },
     Some(s"""
       WITH sp AS (
         ${q54.oracle.get.trim}
       ),
       pairs AS (SELECT doc_a, doc_b FROM (${DedupOps.d02.oracle.get.trim})),
-      doc_split AS (SELECT doc_id,
-              CASE WHEN CAST(${oCharFold("CAST(doc_id AS VARCHAR)", 505)} % 100
-                     AS BIGINT) < 80 THEN 'train'
-                   WHEN CAST(${oCharFold("CAST(doc_id AS VARCHAR)", 505)} % 100
-                     AS BIGINT) < 90 THEN 'val'
-                   ELSE 'test' END AS split
-            FROM sp),
-      bth AS (
-        SELECT 'cluster_hash' AS rule, p.doc_a, p.doc_b,
-               a.split AS split_a, b.split AS split_b
-        FROM pairs p JOIN sp a ON p.doc_a = a.doc_id
-                     JOIN sp b ON p.doc_b = b.doc_id
-        UNION ALL
-        SELECT 'doc_hash', p.doc_a, p.doc_b, a.split, b.split
-        FROM pairs p JOIN doc_split a ON p.doc_a = a.doc_id
-                     JOIN doc_split b ON p.doc_b = b.doc_id)
-      SELECT rule, doc_a, doc_b, split_a, split_b,
-             (split_a <> split_b) AS is_leaked
-      FROM bth"""))
+      ${d26Sql(Dialect.DuckDB, "sp", "pairs")}"""))
 
   val all: Seq[QueryDef] =
     Seq(d10, d11, d19, d12, q51, t09, t19, d13, d22, q52, d15, q54, d14, q57,

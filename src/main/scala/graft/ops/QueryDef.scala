@@ -242,6 +242,43 @@ object Q {
   val sNorm = """lower(trim(regexp_replace(text, '\\s+', ' ')))"""
   val oNorm = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
 
+  /** The two dialects one query text is written in: Spark SQL (the
+    * engine) and DuckDB (the oracle). Each carries only the spellings
+    * that differ between them in texts written once for both. */
+  private[graft] sealed trait Dialect {
+    /** Normalized document text ([[sNorm]] / [[oNorm]]). */
+    def norm: String
+    /** The array of `e`'s space-separated tokens. */
+    def split(e: String): String
+    /** The element count of array `e`. */
+    def len(e: String): String
+    /** The integer-division operator. */
+    def div: String
+    /** The string type name. */
+    def str: String
+    /** [[graft.functions.CharFold]] of `e` from `seed`. */
+    def fold(e: String, seed: Int): String
+  }
+
+  private[graft] object Dialect {
+    case object Spark extends Dialect {
+      def norm: String = sNorm
+      def split(e: String): String = s"split($e, ' ')"
+      def len(e: String): String = s"size($e)"
+      def div: String = "div"
+      def str: String = "STRING"
+      def fold(e: String, seed: Int): String = s"char_fold($e, $seed)"
+    }
+    case object DuckDB extends Dialect {
+      def norm: String = oNorm
+      def split(e: String): String = s"string_split($e, ' ')"
+      def len(e: String): String = s"len($e)"
+      def div: String = "//"
+      def str: String = "VARCHAR"
+      def fold(e: String, seed: Int): String = oCharFold(e, seed)
+    }
+  }
+
   /** SQL text assembly: the literal text loses its `|` margins (as with
     * `stripMargin`), and every continuation line of an argument is
     * indented to the column where the argument starts. Multi-line SQL

@@ -662,26 +662,15 @@ object StreamingGate {
   val d20 = QueryDef(
     "d20_streaming_span_dedup",
     (s, d) => spanDedupStream(s, d, None),
-    Some {
-      val W = CurationOps.W
-      s"""
-      WITH toks AS (SELECT doc_id, string_split(${Q.oNorm}, ' ') AS t
-                    FROM documents WHERE length(text) >= 1),
-      pr AS (SELECT doc_id, CAST(p1 - 1 AS BIGINT) AS p, t[CAST(p1 AS INT)] AS tok,
-               CASE WHEN p1 + $W - 1 <= len(t)
-                    THEN md5(array_to_string(
-                      list_slice(t, CAST(p1 AS INT), CAST(p1 + $W - 1 AS INT)), ' '))
-               END AS h
-             FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS p1
-                   FROM toks)),
+    Some(s"""
+      WITH ${CurationOps.oShingles},
       rep AS (SELECT DISTINCT h FROM pr
               WHERE h IS NOT NULL AND doc_id % 2 = 0),
       mk AS (SELECT pr.doc_id, pr.p, pr.tok,
                CASE WHEN r.h IS NOT NULL THEN 1 ELSE 0 END AS sb
              FROM pr LEFT JOIN rep r ON pr.h = r.h
              WHERE pr.doc_id % 2 = 1),
-      ${CurationOps.oCoverageTail}"""
-    })
+      ${CurationOps.oCoverageTail}"""))
 
   /** Fold one micro-batch's rows (of one group) into `f` and return the
     * batch number `bno` they all carry, -1 for no rows. The parity-staged
@@ -802,12 +791,7 @@ object StreamingGate {
   private[graft] def deletePropagationStream(
       s: SparkSession, d: String, provider: Option[String]): DataFrame = {
     import s.implicits._
-    DedupOps.d06.run(s, d).createOrReplaceTempView("d23_lab")
-    val mem = Q.staged("d23_mem", d) {
-      Q.withViews(s, d, "documents")("""
-        SELECT l.cluster_id, l.doc_id, doc.n_chars
-        FROM d23_lab l JOIN documents doc ON l.doc_id = doc.doc_id""")
-    }
+    val mem = CurationOps.clusterMembers(s, d)
     val init = mem.groupBy($"cluster_id")
       .agg(collect_list(struct($"doc_id", $"n_chars")).as("members"))
       .as[(Long, Seq[D23Mem])]
@@ -821,8 +805,7 @@ object StreamingGate {
     (s, d) => deletePropagationStream(s, d, None),
     Some(s"""
       WITH lab AS (${DedupOps.d06.oracle.get.trim}),
-      mem AS (SELECT l.cluster_id, l.doc_id, doc.n_chars
-              FROM lab l JOIN documents doc ON l.doc_id = doc.doc_id),
+      mem AS (${CurationOps.memberSql("lab")}),
       tomb AS (SELECT m.cluster_id, m.doc_id,
                  CAST(m.doc_id % 2 AS BIGINT) AS bno
                FROM mem m WHERE ${DedupOps.tombPred("m.doc_id")}),
@@ -832,17 +815,8 @@ object StreamingGate {
                LEFT JOIN tomb t
                  ON m.doc_id = t.doc_id AND t.bno <= a.bno
                WHERE t.doc_id IS NULL),
-      re AS (SELECT bno, cluster_id,
-               max(CASE WHEN rk = 1 THEN doc_id END) AS cd,
-               max(CASE WHEN rk = 1 THEN n_chars END) AS cc,
-               CAST(count(*) AS BIGINT) AS n
-             FROM (SELECT s.bno, s.cluster_id, s.doc_id, s.n_chars,
-                     row_number() OVER (PARTITION BY s.bno, s.cluster_id
-                       ORDER BY s.n_chars DESC, s.doc_id) AS rk
-                   FROM surv s) t
-             GROUP BY bno, cluster_id)
-      SELECT bno, cluster_id, cd AS canonical_doc, cc AS canonical_chars,
-             n AS n_members
+      re AS (${CurationOps.elect("surv s", "bno, cluster_id")})
+      SELECT bno, cluster_id, canonical_doc, canonical_chars, n_members
       FROM re
       UNION ALL
       SELECT a.bno, a.cluster_id, CAST(-1 AS BIGINT) AS canonical_doc,

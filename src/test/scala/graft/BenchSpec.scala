@@ -44,6 +44,12 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.loadSuspect(Some(0.3), 0.0, 4) && !Bench.loadSuspect(Some(0.2), 0.0, 4))
   }
 
+  test("git_dirty: clean tree, changed tree, no git") {
+    assert(Bench.gitDirty(Some("")) == Some(false))
+    assert(Bench.gitDirty(Some(" M src/main/scala/graft/Bench.scala\n?? notes.txt")) == Some(true))
+    assert(Bench.gitDirty(None) == None)
+  }
+
   test("the metric line is valid JSON for a data dir holding a quote, a backslash and a tab") {
     val dir = "/data/a\"b\\c\td"
     val runs = Seq("q02_filter_project" -> Some(Seq(0.5, 0.4, 0.6, 0.4, 0.7)), "boom" -> None)

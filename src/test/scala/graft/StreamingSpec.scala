@@ -347,6 +347,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(runWith(Some(graft.streaming.StateStores.RocksDB)) == out)
   }
 
+  test("d23 then d22 in one session checkpoint the cluster-member frame once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = "/root/testdata/sf0.001"
+    val memberCols = Seq("cluster_id", "doc_id", "n_chars")
+    val builds = new AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        if ((action == "checkpoint" || action == "localCheckpoint") &&
+          qe.analyzed.output.map(_.name) == memberCols) builds.incrementAndGet()
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    graft.ops.Q.clearStaged()
+    spark.listenerManager.register(listener)
+    try {
+      graft.ops.StreamingGate.deletePropagationStream(spark, dir, None).collect()
+      SparkEntry.queries("d22_delete_propagation")(spark, dir).collect()
+    } finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(builds.get == 1,
+      s"the (cluster_id, doc_id, n_chars) member frame was checkpointed ${builds.get} times")
+  }
+
   test("d20 FSM: hot-shingle batch streams lazily — per-group memory O(1), not O(occurrences)") {
     import graft.ops.StreamingGate.{spanFsm, BucketOwner, SpanRow}
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}

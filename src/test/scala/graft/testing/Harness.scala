@@ -1,12 +1,10 @@
 package graft.testing
 
-import org.apache.spark.sql.Dataset
-
-/** Test harness — the reference's `compare_inbound_sequence` /
-  * `quick_output_test!` (`/root/reference/gasket/src/testing.rs:3-27`):
-  * sequence-exact assertions where ordering is defined, multiset
-  * assertions for fan-in edges (mpsc interleaving is nondeterministic
-  * across producers, `messaging.rs:413-423` — FIXTURES.md §1 caveat). */
+/** Test harness — gasket's `compare_inbound_sequence` /
+  * `quick_output_test!` (gasket `src/testing.rs`): sequence-exact
+  * assertions where ordering is defined, multiset assertions for fan-in
+  * edges (mpsc interleaving is nondeterministic across producers,
+  * gasket `messaging.rs` — FIXTURES.md §1 caveat). */
 object Harness {
 
   /** Exact ordered comparison (use only on ordered outputs). */
@@ -20,8 +18,4 @@ object Harness {
     val e = expected.groupBy(identity).view.mapValues(_.size).toMap
     require(a == e, s"multiset mismatch:\n  actual:   $a\n  expected: $e")
   }
-
-  /** Drain a dataset and compare as a multiset. */
-  def assertOutput[T](ds: Dataset[T], expected: Seq[T]): Unit =
-    assertMultiset(ds.collect().toSeq, expected)
 }
