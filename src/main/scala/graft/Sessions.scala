@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One place for engine session defaults so Verify, Bench, and tests agree.
   * Every session carries [[graft.functions.GraftExtensions]]: the native
-  * functions and the packed-key sort rule. */
+  * functions and the packed-key sort rule, and reads and writes local files
+  * through [[graft.io.GraftLocalFileSystem]] and [[graft.io.GraftLocalFs]]. */
 object Sessions {
 
   /** `SPARK_GRAFT_MASTER` overrides the master for multi-JVM validation:
@@ -34,6 +35,10 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // the `file` scheme on both Hadoop APIs: no OS process per chmod or
+      // readlink on the streaming commit path (graft.io.GraftLocalFs)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.GraftLocalFs].getName)
     if (master.startsWith("local-cluster")) {
       val classes = Seq("target/scala-2.13/classes", "target/scala-2.13/test-classes")
         .map(p => new java.io.File(p).getAbsolutePath)

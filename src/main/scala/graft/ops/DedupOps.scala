@@ -1252,7 +1252,9 @@ object DedupOps {
         }
         minLabelComponents(s, edges)
       } }
-      table(s, d, "embeddings").select($"vec_id")
+      // every vec_id, from the staged normalized corpus the k-NN frame
+      // already built (no second scan of the embeddings parquet)
+      normEmbeddings(s, d).select($"vec_id")
         .join(labels, $"vec_id" === labels("id"), "left")
         .select($"vec_id",
           coalesce($"cluster", $"vec_id").as("sem_cluster_id"),

@@ -263,6 +263,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(Files.getLastModifiedTime(src) == before)
   }
 
+  test("q49 starts no OS process: checkpoint, state store and sink stay in the JVM") {
+    // stock RawLocalFileSystem forks chmod per file create and readlink per
+    // rename when no native-hadoop library is loaded (graft.io.LocalFs)
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val out = graft.ops.StreamingGate.tempDir("graft-q49-noproc")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val rows =
+      try {
+        val n = graft.ops.StreamingGate.q49.run(spark, "/root/testdata/sf0.001").count()
+        Seq(1, 2, 3).toDF("x").coalesce(1).write.parquet(out.resolve("one").toString)
+        n
+      } finally rec.stop()
+    val file = out.resolve("q49.jfr")
+    rec.dump(file)
+    rec.close()
+    val starts = RecordingFile.readAllEvents(file).asScala.toSeq
+    val fromHadoop = starts.filter(e => Option(e.getStackTrace).exists(
+      _.getFrames.asScala.exists(_.getMethod.getType.getName.startsWith("org.apache.hadoop"))))
+    assert(rows > 0)
+    assert(fromHadoop.isEmpty, s"${fromHadoop.size} of ${starts.size} process starts came " +
+      s"from Hadoop, e.g. ${fromHadoop.take(3).map(_.getString("command")).mkString("; ")}")
+  }
+
   test("q58 streaming near-dup: hits are strictly cross-batch; RocksDB run agrees") {
     // Owners must come from batch 0 (even doc_ids), dups from batch 1
     // (odd) — any same-batch emission means the bucket state leaked

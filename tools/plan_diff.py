@@ -8,6 +8,12 @@ two dumps of the same plans from different runs or commits compare equal:
   MapPartitionsRDD[367]      RDD ids               -> RDD[N]
   QueryDef.scala:203         checkpoint call site  -> QueryDef.scala:N
   /tmp/graft-stream6211...   temp-dir suffixes     -> /tmp/graft-streamN
+then three counters are renumbered by first appearance, because AQE hands
+them out in the order query stages complete, which differs run to run:
+  operator ids               `Sort (12)`, `(12) Sort`, `Reuses operator id: 12`
+  query stage ids            the `Arguments: N` of a `...QueryStage` node
+  codegen ids                `[codegen id : 7]`
+and the per-operator detail blocks are put back in operator-id order.
 Files are matched by name with the tag (the part after the last `_`)
 stripped, so dumps taken under different tags compare. For each plan it
 prints `identical`, the differing lines (a unified diff of the normalized
@@ -35,10 +41,48 @@ NORMALIZE = [
 ]
 
 
+# an operator id: at the end of a tree line (or before its `, Statistics`),
+# heading a detail block, or named by a reuse or a subquery host
+OP_ID = re.compile(r"(?<= \()(\d+)(?=\)(?:,|$))|^\((\d+)(?=\) )"
+                   r"|(?<=Reuses operator id: )(\d+)|(?<=Hosting operator id = )(\d+)",
+                   re.M)
+DETAIL = re.compile(r"^\((\d+)\) ")
+STAGE_ARG = re.compile(r"^(\(\d+\) \w*QueryStage\n(?:.*\n)*?Arguments: )(\d+)$", re.M)
+CODEGEN = re.compile(r"(?<=\[codegen id : )(\d+)(?=\])")
+
+
+def first_seen(pat, text, group=None):
+    """Replace each number `pat` matches by its rank of first appearance."""
+    ids = {}
+
+    def sub(m):
+        g = group or next(i for i in range(1, len(m.groups()) + 1) if m.group(i))
+        old = m.group(g)
+        new = str(ids.setdefault(old, len(ids) + 1))
+        return m.group(0)[:m.start(g) - m.start(0)] + new + m.group(0)[m.end(g) - m.start(0):]
+    return pat.sub(sub, text)
+
+
+def renumber(text):
+    text = first_seen(OP_ID, text)
+    # detail blocks (one per operator, separated by blank lines) back in id order
+    blocks, run, out = text.split("\n\n"), [], []
+    for b in blocks + [None]:
+        if b is not None and DETAIL.match(b):
+            run.append(b)
+            continue
+        out += sorted(run, key=lambda x: int(DETAIL.match(x).group(1)))
+        run = []
+        if b is not None:
+            out.append(b)
+    text = "\n\n".join(out)
+    return first_seen(CODEGEN, first_seen(STAGE_ARG, text, group=2))
+
+
 def normalize(text):
     for pat, rep in NORMALIZE:
         text = pat.sub(rep, text)
-    return text.splitlines()
+    return renumber(text).splitlines()
 
 
 def plans(d, initial):
