@@ -270,6 +270,8 @@ class StreamingSpec extends AnyFunSuite {
     import jdk.jfr.consumer.RecordingFile
     import scala.jdk.CollectionConverters._
     val out = graft.ops.StreamingGate.tempDir("graft-q49-noproc")
+    // the session (and Hadoop's one start-up probe, `setsid`) exists first
+    assert(!spark.sparkContext.isStopped)
     val rec = new Recording()
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
