@@ -18,7 +18,7 @@ import scala.util.control.NonFatal
   * file create, `.crc` create and `mkdirs` (`setPermission`), and
   * `readlink` on every rename (`getFileLinkStatus`, reached from both
   * `FileSystem.rename(src, dst, Rename*)` and FileContext's
-  * `AbstractFileSystem.rename`). A q49 gate stream started ~290 of them
+  * `AbstractFileSystem.rename`). A q49 gate stream started ~300 of them
   * per run. This raw layer answers both calls in the JVM with the same
   * result; everything else is the stock class. SCALE.md "No process per
   * file" has the recording and the timings. */

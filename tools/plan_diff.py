@@ -28,6 +28,7 @@ Usage: python3 tools/plan_diff.py [--initial] A_dir B_dir
 A dump: `runMain graft.PlanDump <sfDir> <outDir> <tag> [queryName...]`.
 """
 import difflib
+import itertools
 import os
 import re
 import sys
@@ -51,32 +52,25 @@ STAGE_ARG = re.compile(r"^(\(\d+\) \w*QueryStage\n(?:.*\n)*?Arguments: )(\d+)$",
 CODEGEN = re.compile(r"(?<=\[codegen id : )(\d+)(?=\])")
 
 
-def first_seen(pat, text, group=None):
-    """Replace each number `pat` matches by its rank of first appearance."""
+def first_seen(pat, text):
+    """Replace the number each match of `pat` captures (its last matched
+    group) by the rank of that number's first appearance."""
     ids = {}
 
     def sub(m):
-        g = group or next(i for i in range(1, len(m.groups()) + 1) if m.group(i))
-        old = m.group(g)
-        new = str(ids.setdefault(old, len(ids) + 1))
-        return m.group(0)[:m.start(g) - m.start(0)] + new + m.group(0)[m.end(g) - m.start(0):]
+        g = m.lastindex
+        s, e = m.start(g) - m.start(), m.end(g) - m.start()
+        return m.group()[:s] + str(ids.setdefault(m.group(g), len(ids) + 1)) + m.group()[e:]
     return pat.sub(sub, text)
 
 
 def renumber(text):
     text = first_seen(OP_ID, text)
     # detail blocks (one per operator, separated by blank lines) back in id order
-    blocks, run, out = text.split("\n\n"), [], []
-    for b in blocks + [None]:
-        if b is not None and DETAIL.match(b):
-            run.append(b)
-            continue
-        out += sorted(run, key=lambda x: int(DETAIL.match(x).group(1)))
-        run = []
-        if b is not None:
-            out.append(b)
-    text = "\n\n".join(out)
-    return first_seen(CODEGEN, first_seen(STAGE_ARG, text, group=2))
+    out = []
+    for detail, run in itertools.groupby(text.split("\n\n"), lambda b: bool(DETAIL.match(b))):
+        out += sorted(run, key=lambda b: int(DETAIL.match(b).group(1))) if detail else run
+    return first_seen(CODEGEN, first_seen(STAGE_ARG, "\n\n".join(out)))
 
 
 def normalize(text):
